@@ -60,7 +60,7 @@ def calibrate(spark) -> float:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
 
     # Sample BEFORE the session starts — JVM startup's own thread burst

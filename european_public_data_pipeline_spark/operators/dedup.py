@@ -112,24 +112,19 @@ def shingles(docs: DataFrame, n: int = 3) -> DataFrame:
     return docs.select("doc_id", "text").mapInPandas(gen, "doc_id long, shingle string")
 
 
-def minhash_sig(hashed_shingles: DataFrame, with_size: bool = False) -> DataFrame:
-    """(doc_id, m0..m15[, n_shingles]): the 16 portable universal-hash
-    minhash components from a (doc_id, hv) hashed-shingle relation.
+def minhash_sig(hashed_shingles: DataFrame) -> DataFrame:
+    """(doc_id, m0..m15): the 16 portable universal-hash minhash components
+    from a (doc_id, hv) hashed-shingle relation.
 
     ONE definition shared by d04/d14/d23 and
     ``streaming/dedup_admission`` — the persisted admission index must
     stay band-compatible bit-for-bit with the batch operators and their
-    oracles, so the construction must never fork. ``with_size`` rides the
-    shingle-set cardinality along in the SAME aggregation pass: callers
-    that need both the signature and |set| (d04's Jaccard verification)
-    get them for one doc_id shuffle instead of two.
+    oracles, so the construction must never fork.
     """
     aggs = [
         F.min((F.lit(a) * F.col("hv") + F.lit(b)) % MINHASH_PRIME).alias(f"m{i}")
         for i, (a, b) in enumerate(_AB)
     ]
-    if with_size:
-        aggs.append(F.count(F.lit(1)).alias("n_shingles"))
     return hashed_shingles.groupBy("doc_id").agg(*aggs)
 
 

@@ -220,6 +220,15 @@ def g02_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     # task slot busy while bounding concurrent writer buffers to
     # tasks x 2: right on one 32-thread JVM and on a 1000-executor
     # cluster alike (AQE may still coalesce the read side).
+    #
+    # A pinned repartition alone does not hold the width: when EVERY child
+    # of a join is a shuffle narrower than spark.sql.shuffle.partitions,
+    # EnsureRequirements re-partitions them all at the session default
+    # (REPARTITION_BY_NUM included; 200 in a plain session). So each join
+    # below gets one NON-shuffle child at np_w: a distinct() over the
+    # pinned repartition. The oriented edges are already unique, so the
+    # distinct drops no row; its HashAggregate (m-sized, not wedge-sized)
+    # keeps the child's (key, np_w) partitioning and the join adopts it.
     np_w = spark.sparkContext.defaultParallelism * 2
     w1 = ori.select("src", F.col("dst").alias("v"), F.col("dst_deg").alias("dv"))
     w2 = ori.select("src", F.col("dst").alias("w"), F.col("dst_deg").alias("dw"))
@@ -227,24 +236,26 @@ def g02_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     # if present, is then necessarily oriented v -> w. Both sides arrive
     # hash-partitioned (src, np_w), so the join adds no extra Exchange.
     wedges = w1.repartition(np_w, "src").join(
-        w2.repartition(np_w, "src"), "src"
+        w2.repartition(np_w, "src").distinct(), "src"
     ).filter(
         (F.col("dv") < F.col("dw"))
         | ((F.col("dv") == F.col("dw")) & (F.col("v") < F.col("w")))
     )
-    closing = ori.select(F.col("src").alias("v"), F.col("dst").alias("w"))
+    closing = (
+        ori.select(F.col("src").alias("v"), F.col("dst").alias("w"))
+        .repartition(np_w, "v", "w")
+        .distinct()
+    )
     # SHUFFLE_HASH, not the default sort-merge: SMJ would SORT the
     # m^1.5-sized wedge relation (49M rows at sf0.1 — the sort's spill
     # merge OOMed a 1 GiB heap under 32 concurrent tasks), while a
     # shuffled hash join builds only on the m-sized edge relation
     # (KB-scale per partition) and STREAMS the wedges through unsorted —
     # the same asymmetry that makes it the right plan at 100 TB, where
-    # sorting the wedge relation would dominate the whole query. Both
-    # sides co-partitioned (v, w) at the bounded width above.
-    tri = wedges.repartition(np_w, "v", "w").join(
-        closing.repartition(np_w, "v", "w").hint("shuffle_hash"),
-        ["v", "w"],
-        "left_semi",
+    # sorting the wedge relation would dominate the whole query. The
+    # wedges are shuffled to the closing side's (v, w, np_w) partitioning.
+    tri = wedges.join(
+        closing.hint("shuffle_hash"), ["v", "w"], "left_semi"
     ).select("src", "v", "w")
     # explode(array(...)), NOT a 3-way union of tri projections: a union
     # re-executes the wedge join once per branch (measured 3x the cost).

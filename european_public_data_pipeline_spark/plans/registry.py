@@ -14,8 +14,11 @@ column identically.
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import json
+import re
+from collections.abc import Callable, Iterable, Mapping
 from dataclasses import dataclass, replace
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -77,452 +80,60 @@ def _resolve(name: str) -> "QuerySpec":
 
 # The correctness driver verifies queries in dict-iteration order and only
 # reaches ~50 per round, so ``queries_map`` orders names by verification
-# urgency: last round's failures first, then queries whose implementation
-# or oracle changed AFTER their most recent green verdict (a stale verdict
-# is no verdict), then never-checked names, then greens stalest-first.
-# Over consecutive rounds every registered query re-earns a driver row.
+# urgency, derived from the driver's committed verdicts
+# (``CORRECTNESS_r<N>.json`` at the repository root): names whose latest
+# verdict was not green first, then green names in ``_MODIFIED_SINCE_VERDICT``
+# (a stale verdict is no verdict), then never-checked names, then greens
+# stalest-first. Over consecutive rounds every query re-earns a driver row.
+_REPO_ROOT = Path(__file__).resolve().parents[2]
+_VERDICT_FILE = re.compile(r"CORRECTNESS_r(\d+)\.json")
+_GREEN_KEYS = ("rows_match", "schema_match", "hash_match")
 
-# Hash-green in CORRECTNESS_r01.json and never re-checked since (stalest).
-# q25/d07 are rows-only by design there (no_oracle) — kept here as their
-# last driver contact.
-_DRIVER_GREEN_R1 = frozenset({
-    "d07_ml_minhash_lsh", "d10_contamination_check", "d11_chunk_containment",
-    "d12_semantic_dedup", "q25_approx_distinct",
-    "s01_cosine_topk", "s02_lsh_bucket_pairs", "s03_knn_label_vote",
-    "s04_ivf_topk", "s05_lang_centroids", "s06_int8_quantization",
-    "t01_token_stats",
-})
-
-# Hash-green in CORRECTNESS_r02.json, not re-checked in round 3.
-_DRIVER_GREEN_R2 = frozenset({
-    "d13_shingle_novelty", "g01_pagerank", "m01_media_metadata",
-    "m02_frame_sampling", "m04_thumbnail_resize", "p01_quality_report",
-    "p02_hicp_mom_yoy", "q17_events_json_extract", "q19_sessionization",
-    "q22_session_windows", "q23_sliding_windows", "q29_rollup_revenue",
-    "q30_unpivot_measures", "q31_asof_join", "q32_argmax_per_group",
-    "q33_sql_text_surface", "q34_rank_family", "q35_json_map_functions",
-    "q36_local_supplier_volume", "q37_conditional_agg",
-    "q38_large_volume_customers", "q39_range_frame_trailing",
-    "q40_below_average_parts", "q41_promo_revenue_share", "q42_grouping_sets",
-    "q43_stream_enrichment", "q45_funnel_conversion", "q46_retention_cohorts",
-    "q47_salted_skew_agg", "q49_nation_pair_volume",
-    "q53_full_outer_reconciliation", "q54_regexp_functions",
-    "q56_revenue_anomaly_zscore", "sm01_stratified_sample",
-    "sm02_per_stratum_budget", "sm03_sequence_packing",
-    "sm04_source_mixture_weights", "sm05_train_val_test_split",
-    "t02_quality_score", "t03_lang_id", "t04_fingerprint",
-    "t05_term_frequency", "t06_bpe_token_count",
-    "t07_rolling_hash_fingerprint", "t08_chunk_windows",
-    "t09_quality_percentile_filter", "t10_repetition_signals",
-    "t11_tfidf_topk", "t12_corpus_head_mass",
-})
-
-# Hash-green in CORRECTNESS_r03.json (freshest verdicts — checked last).
-_DRIVER_GREEN_R3 = frozenset({
-    "d01_dedup_keep_first", "d02_exact_dedup_fingerprint",
-    "d03_ngram_jaccard_pairs", "d04_minhash_lsh_pairs", "d05_simhash_pairs",
-    "d06_embedding_near_dup", "d08_dup_clusters", "d09_incremental_dedup",
-    "d14_minhash_accuracy_audit", "m03_feature_extraction",
-    "p03_curation_report", "q01_pricing_summary", "q02_filter_project",
-    "q03_revenue_forecast", "q04_top_revenue_orders",
-    "q05_region_customer_rollup", "q06_priority_exists_semi",
-    "q07_segment_anti", "q08_monthly_revenue_mom", "q09_rolling_3m_revenue",
-    "q10_top3_orders_per_customer", "q11_nation_setops", "q12_cube_qty",
-    "q13_pivot_linestatus", "q14_quantiles_by_flag", "q15_moments_exact",
-    "q16_distinct_counts", "q20_time_code_roundtrip",
-    "q21_orders_gap_profile", "q24_string_functions", "q26_shipping_priority",
-    "q27_late_delivery_semi", "q28_try_arithmetic", "q44_price_histogram",
-    "q48_winsorized_mean", "q50_revenue_share", "q51_gap_fill_interpolate",
-    "q57_min_cost_supplier", "q58_customer_order_distribution",
-    "q59_every_quarter_customers", "s07_kmeans_assignments",
-    "s08_power_iteration_pca", "sm06_epoch_shuffle",
-    "sm07_temperature_mixture", "t13_vocab_coverage",
-    "t14_unigram_cross_entropy",
-})
-
-# Hash-green in CORRECTNESS_r04.json (freshest verdicts — checked last).
-# Every name here was green on all three criteria in round 4, including the
-# 13 events queries re-earning their verdict after the round-4 loader fix
-# and q25/d07's first value-checked (bounds-audit) verdicts.
-_DRIVER_GREEN_R4 = frozenset({
-    "d07_ml_minhash_lsh", "d15_cross_source_duplication",
-    "d16_top_repeated_chunks", "d17_cluster_representatives",
-    "d18_threshold_sensitivity", "g02_triangle_count", "g03_degree_powerlaw",
-    "q17_events_json_extract", "q18_event_hourly_windows",
-    "q19_sessionization", "q22_session_windows", "q23_sliding_windows",
-    "q25_approx_distinct", "q31_asof_join", "q35_json_map_functions",
-    "q43_stream_enrichment", "q44_price_histogram", "q45_funnel_conversion",
-    "q46_retention_cohorts", "q47_salted_skew_agg",
-    "q53_full_outer_reconciliation", "q55_sliding_mau",
-    "q62_hourly_ohlc_bars", "q66_user_running_totals",
-    "q74_referential_orphans", "q75_distribution_drift",
-    "q76_longest_daily_streak", "q77_event_transition_matrix",
-    "q78_value_concentration", "q79_cms_heavy_hitters",
-    "q80_bloom_membership_audit", "q81_bloom_pruned_join",
-    "q82_variant_json_path", "q83_sketch_mergeability",
-    "q85_ewma_smoothing", "q87_mad_outliers", "q92_inflight_sweep",
-    "s09_embedding_quality_audit", "s10_ml_brp_lsh_audit",
-    "s11_truncated_dim_recall", "s12_product_quantization",
-    "sm08_quality_budget_mixture", "sm09_weighted_upsampling",
-    "sm10_leakage_safe_split", "t15_pii_redaction", "t16_langid_confusion",
-    "t17_bm25_scoring", "t18_zipf_slope", "t19_heaps_law_fit",
-    "t20_source_kl_divergence",
-})
-
-# Hash-green in CORRECTNESS_r05.json (freshest verdicts — checked last).
-# 49/50 green; the round-4 backlog (q60-q94 tail) plus every round-5
-# registration (d19-d23, g04, m06, q95-q103, s13, sm11, t21) earned a
-# first driver verdict, and d03/g02 re-earned theirs after their skew /
-# orientation rewrites.
-_DRIVER_GREEN_R5 = frozenset({
-    "d03_ngram_jaccard_pairs", "d10_contamination_check",
-    "d11_chunk_containment", "d12_semantic_dedup", "d19_span_contamination",
-    "d20_fuzzy_entity_matching", "d21_cdc_chunk_dedup",
-    "d22_lsh_recall_audit", "d23_incremental_lsh_probe",
-    "g02_triangle_count", "g04_label_propagation", "m05_payload_windows",
-    "m06_payload_cdc_dedup", "q100_changelog_apply",
-    "q101_correlation_exact", "q102_weighted_median",
-    "q103_event_path_mining", "q60_sole_late_supplier",
-    "q61_acquisition_prospects", "q63_top_supplier_with_ties",
-    "q64_part_supplier_variety", "q65_market_share",
-    "q67_small_quantity_revenue", "q68_dominant_supplier_parts",
-    "q69_disjunctive_pushdown", "q70_returned_items", "q71_product_profit",
-    "q72_order_history_strings", "q73_spend_percentile_rank",
-    "q84_recursive_reachability", "q88_rolling_median", "q89_twap",
-    "q91_date_functions", "q93_conversion_latency", "q94_cohort_ltv",
-    "q95_bucketed_market_share", "q96_incremental_agg_maintenance",
-    "q97_snapshot_changelog", "q98_hll_sketch_rollup",
-    "q99_join_size_estimate", "s01_cosine_topk", "s02_lsh_bucket_pairs",
-    "s03_knn_label_vote", "s04_ivf_topk", "s05_lang_centroids",
-    "s06_int8_quantization", "s13_mips_topk", "sm11_temperature_sweep",
-    "t21_bigram_surprisal",
-})
-
-# Hash-green in CORRECTNESS_r06.json (freshest verdicts — checked last).
-# 50/50 green: q90's scalar-serialization fix re-earned its verdict, the
-# round-5 refactor backlog (q97, d03/d04/d14/d22/d23) re-earned theirs,
-# every round-6 registration (d24, g05, m07, p04, p05, q104, q105, s14,
-# sm12) got a first verdict, and the r1/r2-era stalest names (t01-t12,
-# sm01-sm03, m01-m04, q29-q56 families, d13) were refreshed.
-_DRIVER_GREEN_R6 = frozenset({
-    "d03_ngram_jaccard_pairs", "d04_minhash_lsh_pairs",
-    "d13_shingle_novelty", "d14_minhash_accuracy_audit",
-    "d22_lsh_recall_audit", "d23_incremental_lsh_probe",
-    "d24_embedding_decontamination", "g05_dup_graph_kcore",
-    "m01_media_metadata", "m02_frame_sampling", "m04_thumbnail_resize",
-    "m07_payload_simhash_pairs", "p04_surgical_curation_report",
-    "p05_corpus_datacard", "q104_bucketed_changelog",
-    "q105_approx_quantile_audit", "q29_rollup_revenue",
-    "q30_unpivot_measures", "q32_argmax_per_group", "q33_sql_text_surface",
-    "q34_rank_family", "q36_local_supplier_volume", "q37_conditional_agg",
-    "q38_large_volume_customers", "q39_range_frame_trailing",
-    "q40_below_average_parts", "q41_promo_revenue_share",
-    "q42_grouping_sets", "q49_nation_pair_volume", "q54_regexp_functions",
-    "q56_revenue_anomaly_zscore", "q90_array_functions",
-    "q97_snapshot_changelog", "s14_ivf_nprobe_sweep",
-    "sm01_stratified_sample", "sm02_per_stratum_budget",
-    "sm03_sequence_packing", "sm12_curriculum_schedule", "t01_token_stats",
-    "t02_quality_score", "t03_lang_id", "t04_fingerprint",
-    "t05_term_frequency", "t06_bpe_token_count",
-    "t07_rolling_hash_fingerprint", "t08_chunk_windows",
-    "t09_quality_percentile_filter", "t10_repetition_signals",
-    "t11_tfidf_topk", "t12_corpus_head_mass",
-})
-
-# Hash-green in CORRECTNESS_r07.json (freshest verdicts — checked last).
-# 50/50 green: the round-6 ADVICE-touched trio (q95, q104, s14) re-earned
-# theirs, every round-7 registration (d25, d26, g06, q106-q109, s15,
-# sm13, t22, p06) got a first verdict, and the r3/r4-era stalest names
-# (d01/d02/d05/d06/d08/d09, g01, p01/p02, q01-q16 families, q20-q28,
-# q48/q50/q51, sm04/sm05) were refreshed.
-_DRIVER_GREEN_R7 = frozenset({
-    "d01_dedup_keep_first", "d02_exact_dedup_fingerprint",
-    "d05_simhash_pairs", "d06_embedding_near_dup", "d08_dup_clusters",
-    "d09_incremental_dedup", "d25_repeated_span_removal",
-    "d26_span_excision_apply", "g01_pagerank",
-    "g06_star_connected_components", "p01_quality_report",
-    "p02_hicp_mom_yoy", "p06_constrained_curation_report",
-    "q01_pricing_summary", "q02_filter_project", "q03_revenue_forecast",
-    "q04_top_revenue_orders", "q05_region_customer_rollup",
-    "q06_priority_exists_semi", "q07_segment_anti",
-    "q08_monthly_revenue_mom", "q09_rolling_3m_revenue",
-    "q104_bucketed_changelog", "q106_zonemap_pruned_scan",
-    "q107_incremental_version_scan", "q108_bloom_point_lookup",
-    "q109_zorder_dual_pruning", "q10_top3_orders_per_customer",
-    "q11_nation_setops", "q12_cube_qty", "q13_pivot_linestatus",
-    "q14_quantiles_by_flag", "q15_moments_exact", "q16_distinct_counts",
-    "q20_time_code_roundtrip", "q21_orders_gap_profile",
-    "q24_string_functions", "q26_shipping_priority",
-    "q27_late_delivery_semi", "q28_try_arithmetic", "q48_winsorized_mean",
-    "q50_revenue_share", "q51_gap_fill_interpolate",
-    "q95_bucketed_market_share", "s14_ivf_nprobe_sweep",
-    "s15_multiprobe_lsh_topk", "sm04_source_mixture_weights",
-    "sm05_train_val_test_split", "sm13_repetition_capped_mixture",
-    "t22_perplexity_buckets",
-})
-
-# Hash-green in CORRECTNESS_r08.json (freshest verdicts — checked last).
-# 50/50 green: every round-8 registration (q110-q115, d27, d28, p07) got
-# a first verdict, the round-8 modified set (the manifest/Bloom lakehouse
-# quartet q106-q109, t22, g02, q25) re-earned theirs, and the r3-era
-# stalest names (d15-d18, q44/q53/q57-q59, q74/q75, q17-q19, q82/q85/q87,
-# s07-s12, sm06/sm07, t13-t18, m03, p03, d07) were refreshed.
-_DRIVER_GREEN_R8 = frozenset({
-    "d07_ml_minhash_lsh", "d15_cross_source_duplication",
-    "d16_top_repeated_chunks", "d17_cluster_representatives",
-    "d18_threshold_sensitivity", "d27_excision_fixpoint",
-    "d28_incremental_gram_index", "g02_triangle_count",
-    "m03_feature_extraction", "p03_curation_report",
-    "p07_ccnet_curation_report", "q106_zonemap_pruned_scan",
-    "q107_incremental_version_scan", "q108_bloom_point_lookup",
-    "q109_zorder_dual_pruning", "q110_incremental_mv_refresh",
-    "q111_purge_then_read", "q112_clustered_compact_scan",
-    "q113_merge_upsert", "q114_scd2_history", "q115_wap_gated_publish",
-    "q17_events_json_extract", "q18_event_hourly_windows",
-    "q19_sessionization", "q25_approx_distinct", "q44_price_histogram",
-    "q53_full_outer_reconciliation", "q57_min_cost_supplier",
-    "q58_customer_order_distribution", "q59_every_quarter_customers",
-    "q74_referential_orphans", "q75_distribution_drift",
-    "q82_variant_json_path", "q85_ewma_smoothing", "q87_mad_outliers",
-    "s07_kmeans_assignments", "s08_power_iteration_pca",
-    "s09_embedding_quality_audit", "s10_ml_brp_lsh_audit",
-    "s11_truncated_dim_recall", "s12_product_quantization",
-    "sm06_epoch_shuffle", "sm07_temperature_mixture",
-    "t13_vocab_coverage", "t14_unigram_cross_entropy",
-    "t15_pii_redaction", "t16_langid_confusion", "t17_bm25_scoring",
-    "t18_zipf_slope", "t22_perplexity_buckets",
-})
-
-# Hash-green in CORRECTNESS_r09.json (freshest verdicts — checked last).
-# 50/50 green: every round-9 registration (q116-q120) got a first
-# verdict, the round-9 modified set (the d25-d28 excision family, the
-# manifest-riding lakehouse set q106-q112, q110/q114, g02) re-earned
-# theirs, and r4/r5-era stale names (q22/q23/q31/q35/q43/q45-q47,
-# q55/q62/q66/q76-q83, q91/q92/q96/q98/q100-q102, sm08-sm10, t19/t20,
-# d10, g03) were refreshed.
-_DRIVER_GREEN_R9 = frozenset({
-    "d10_contamination_check", "d25_repeated_span_removal",
-    "d26_span_excision_apply", "d27_excision_fixpoint",
-    "d28_incremental_gram_index", "g02_triangle_count",
-    "g03_degree_powerlaw", "q100_changelog_apply",
-    "q101_correlation_exact", "q102_weighted_median",
-    "q106_zonemap_pruned_scan", "q107_incremental_version_scan",
-    "q108_bloom_point_lookup", "q109_zorder_dual_pruning",
-    "q110_incremental_mv_refresh", "q111_purge_then_read",
-    "q112_clustered_compact_scan", "q114_scd2_history",
-    "q116_mv_refresh_rewrite_hazard", "q117_bloom_stale_sidecar_purge",
-    "q118_scd2_partition_scoped", "q119_retention_expire_versions",
-    "q120_manifest_schema_evolution", "q22_session_windows",
-    "q23_sliding_windows", "q31_asof_join", "q35_json_map_functions",
-    "q43_stream_enrichment", "q45_funnel_conversion",
-    "q46_retention_cohorts", "q47_salted_skew_agg", "q55_sliding_mau",
-    "q62_hourly_ohlc_bars", "q66_user_running_totals",
-    "q76_longest_daily_streak", "q77_event_transition_matrix",
-    "q78_value_concentration", "q79_cms_heavy_hitters",
-    "q80_bloom_membership_audit", "q81_bloom_pruned_join",
-    "q83_sketch_mergeability", "q91_date_functions", "q92_inflight_sweep",
-    "q96_incremental_agg_maintenance", "q98_hll_sketch_rollup",
-    "sm08_quality_budget_mixture", "sm09_weighted_upsampling",
-    "sm10_leakage_safe_split", "t19_heaps_law_fit",
-    "t20_source_kl_divergence",
-})
-
-# Hash-green in CORRECTNESS_r10.json (freshest verdicts — checked last).
-# 50/50 green: every round-10 registration (q121-q126) got a first
-# verdict, the round-10 modified set (manifest/MV riders q106-q112,
-# q115-q117, q119-q120) re-earned theirs, and r5-era stale names
-# (d11/d12/d19-d21, m05/m06, q103, q60-q94 tail, s01-s06/s13, t21)
-# were refreshed.
-_DRIVER_GREEN_R10 = frozenset({
-    "d11_chunk_containment", "d12_semantic_dedup", "d19_span_contamination",
-    "d20_fuzzy_entity_matching", "d21_cdc_chunk_dedup",
-    "m05_payload_windows", "m06_payload_cdc_dedup",
-    "q103_event_path_mining", "q106_zonemap_pruned_scan",
-    "q107_incremental_version_scan", "q108_bloom_point_lookup",
-    "q109_zorder_dual_pruning", "q110_incremental_mv_refresh",
-    "q111_purge_then_read", "q112_clustered_compact_scan",
-    "q115_wap_gated_publish", "q116_mv_refresh_rewrite_hazard",
-    "q117_bloom_stale_sidecar_purge", "q119_retention_expire_versions",
-    "q120_manifest_schema_evolution", "q121_declarative_mv_second_shape",
-    "q122_vacuum_orphans", "q123_widen_column_rewrite",
-    "q124_streaming_mv_maintenance", "q125_changelog_applied_mv",
-    "q126_lifecycle_grand_tour", "q60_sole_late_supplier",
-    "q61_acquisition_prospects", "q63_top_supplier_with_ties",
-    "q64_part_supplier_variety", "q65_market_share",
-    "q67_small_quantity_revenue", "q68_dominant_supplier_parts",
-    "q69_disjunctive_pushdown", "q70_returned_items", "q71_product_profit",
-    "q72_order_history_strings", "q84_recursive_reachability",
-    "q88_rolling_median", "q89_twap", "q93_conversion_latency",
-    "q94_cohort_ltv", "s01_cosine_topk", "s02_lsh_bucket_pairs",
-    "s03_knn_label_vote", "s04_ivf_topk", "s05_lang_centroids",
-    "s06_int8_quantization", "s13_mips_topk", "t21_bigram_surprisal",
-})
-
-# Hash-green in CORRECTNESS_r11.json (freshest verdicts — checked last).
-# 50/50 green: every round-11 registration (q127-q131) got a first
-# verdict, the round-11 modified set (manifest/MV riders q106-q112,
-# q115-q117, q119-q126) re-earned theirs, and r7-era stale names
-# (d03/d04/d13/d14/d22-d24, t01-t11, q54/q56/q73/q90/q97/q99/q105,
-# sm11, g04) were refreshed.
-_DRIVER_GREEN_R11 = frozenset({
-    "d03_ngram_jaccard_pairs", "d04_minhash_lsh_pairs",
-    "d13_shingle_novelty", "d14_minhash_accuracy_audit",
-    "d22_lsh_recall_audit", "d23_incremental_lsh_probe",
-    "d24_embedding_decontamination", "g04_label_propagation",
-    "q105_approx_quantile_audit", "q106_zonemap_pruned_scan",
-    "q107_incremental_version_scan", "q108_bloom_point_lookup",
-    "q109_zorder_dual_pruning", "q110_incremental_mv_refresh",
-    "q111_purge_then_read", "q112_clustered_compact_scan",
-    "q115_wap_gated_publish", "q116_mv_refresh_rewrite_hazard",
-    "q117_bloom_stale_sidecar_purge", "q119_retention_expire_versions",
-    "q120_manifest_schema_evolution", "q121_declarative_mv_second_shape",
-    "q122_vacuum_orphans", "q123_widen_column_rewrite",
-    "q124_streaming_mv_maintenance", "q125_changelog_applied_mv",
-    "q126_lifecycle_grand_tour", "q127_mv_safe_compaction",
-    "q128_changelog_minmax_targeted", "q129_read_appended_through_compact",
-    "q130_cow_merge_manifest", "q131_merge_emitted_changelog_mv",
-    "q54_regexp_functions", "q56_revenue_anomaly_zscore",
-    "q73_spend_percentile_rank", "q90_array_functions",
-    "q97_snapshot_changelog", "q99_join_size_estimate",
-    "sm11_temperature_sweep", "t01_token_stats", "t02_quality_score",
-    "t03_lang_id", "t04_fingerprint", "t05_term_frequency",
-    "t06_bpe_token_count", "t07_rolling_hash_fingerprint",
-    "t08_chunk_windows", "t09_quality_percentile_filter",
-    "t10_repetition_signals", "t11_tfidf_topk",
-})
-
-# Hash-green in CORRECTNESS_r12.json (freshest verdicts — checked last).
-# 50/50 green: every round-12 registration (q132-q135) got a first
-# verdict, the round-12 modified set (manifest/MV/merge riders
-# q106-q112, q115-q117, q119-q131) re-earned theirs, and r6/r7-era
-# stale names (g05, m01/m02/m04/m07, q29-q49 block, sm01-sm03, sm12,
-# t12) were refreshed.
-_DRIVER_GREEN_R12 = frozenset({
-    "g05_dup_graph_kcore", "m01_media_metadata", "m02_frame_sampling",
-    "m04_thumbnail_resize", "m07_payload_simhash_pairs",
-    "q106_zonemap_pruned_scan", "q107_incremental_version_scan",
-    "q108_bloom_point_lookup", "q109_zorder_dual_pruning",
-    "q110_incremental_mv_refresh", "q111_purge_then_read",
-    "q112_clustered_compact_scan", "q115_wap_gated_publish",
-    "q116_mv_refresh_rewrite_hazard", "q117_bloom_stale_sidecar_purge",
-    "q119_retention_expire_versions", "q120_manifest_schema_evolution",
-    "q121_declarative_mv_second_shape", "q122_vacuum_orphans",
-    "q123_widen_column_rewrite", "q124_streaming_mv_maintenance",
-    "q125_changelog_applied_mv", "q126_lifecycle_grand_tour",
-    "q127_mv_safe_compaction", "q128_changelog_minmax_targeted",
-    "q129_read_appended_through_compact", "q130_cow_merge_manifest",
-    "q131_merge_emitted_changelog_mv", "q132_persisted_changelog_refresh",
-    "q133_mor_delete_scan", "q134_mor_position_delete",
-    "q135_streaming_cdc_upsert_mv", "q29_rollup_revenue",
-    "q30_unpivot_measures", "q32_argmax_per_group",
-    "q33_sql_text_surface", "q34_rank_family",
-    "q36_local_supplier_volume", "q37_conditional_agg",
-    "q38_large_volume_customers", "q39_range_frame_trailing",
-    "q40_below_average_parts", "q41_promo_revenue_share",
-    "q42_grouping_sets", "q49_nation_pair_volume",
-    "sm01_stratified_sample", "sm02_per_stratum_budget",
-    "sm03_sequence_packing", "sm12_curriculum_schedule",
-    "t12_corpus_head_mass",
-})
-
-# Round 13: 50/50 green — the round-13 modified set (the optimization
-# pass's plan-changed queries q01/q04/q26/d03/d04/d22/d25/d26/s02/q81,
-# the inherited-build lakehouse family q106-q135, and q136) re-earned
-# verdicts, and stale r8/r9-era names (q02-q12 block, p04/p05) refreshed.
-_DRIVER_GREEN_R13 = frozenset({
-    "q110_incremental_mv_refresh", "q116_mv_refresh_rewrite_hazard",
-    "q121_declarative_mv_second_shape", "q124_streaming_mv_maintenance",
-    "q125_changelog_applied_mv", "q126_lifecycle_grand_tour",
-    "q127_mv_safe_compaction", "q128_changelog_minmax_targeted",
-    "q129_read_appended_through_compact", "q130_cow_merge_manifest",
-    "q131_merge_emitted_changelog_mv", "q132_persisted_changelog_refresh",
-    "q133_mor_delete_scan", "q134_mor_position_delete",
-    "q135_streaming_cdc_upsert_mv", "q111_purge_then_read",
-    "q122_vacuum_orphans", "q106_zonemap_pruned_scan",
-    "q107_incremental_version_scan", "q108_bloom_point_lookup",
-    "q109_zorder_dual_pruning", "q112_clustered_compact_scan",
-    "q115_wap_gated_publish", "q117_bloom_stale_sidecar_purge",
-    "q119_retention_expire_versions", "q120_manifest_schema_evolution",
-    "q123_widen_column_rewrite", "q01_pricing_summary",
-    "q04_top_revenue_orders", "q26_shipping_priority",
-    "d03_ngram_jaccard_pairs", "d04_minhash_lsh_pairs",
-    "d22_lsh_recall_audit", "d25_repeated_span_removal",
-    "d26_span_excision_apply", "s02_lsh_bucket_pairs",
-    "q81_bloom_pruned_join", "q136_mor_upsert_merge",
-    "p04_surgical_curation_report", "p05_corpus_datacard",
-    "q02_filter_project", "q03_revenue_forecast",
-    "q05_region_customer_rollup", "q06_priority_exists_semi",
-    "q07_segment_anti", "q08_monthly_revenue_mom",
-    "q09_rolling_3m_revenue", "q10_top3_orders_per_customer",
-    "q11_nation_setops", "q12_cube_qty",
-})
-
-# Round 13 went 50/50 — nothing failed on last driver contact.
-_DRIVER_FAILED_LAST: tuple[str, ...] = ()
-
-# Implementation or oracle modified after the query's latest green verdict
-# (round-14 changes to already-green queries land here as they happen):
+# The one hand-kept input: queries whose plan changed after their last green.
 _MODIFIED_SINCE_VERDICT: tuple[str, ...] = (
-    # Round-14 OPTIMIZATION pass: the candidate-pair Jaccard verification
-    # melted into one pass over the shingle relation (_jaccard_on_pairs —
-    # d04 and d23; d03/d22 ride exact_jaccard_pairs whose sh persist level
-    # changed), the exact cosine rescore folded into the GEMM kernel
-    # (gemm_cosine_pairs — d06, s02), perplexity_scored's doc total read
-    # off the histogram window pass (t22, p04), t17's cached doc-length
-    # relation, q81's dropped filtered-orders cache, and the explicit
-    # MEMORY_AND_DISK storage levels on the corpus-scale caches
-    # (shingles/positioned-gram relations — d03/d04/d14/d22/d23/d25/d26/
-    # d28). Results are oracle-identical (re-proven vs DuckDB locally);
-    # the plans changed, so they re-earn driver verdicts.
-    "d03_ngram_jaccard_pairs",
-    "d04_minhash_lsh_pairs",
-    "d06_embedding_near_dup",
-    "d14_minhash_accuracy_audit",
-    "d22_lsh_recall_audit",
-    "d23_incremental_lsh_probe",
-    "d25_repeated_span_removal",
-    "d26_span_excision_apply",
-    "d28_incremental_gram_index",
-    "s02_lsh_bucket_pairs",
-    "q81_bloom_pruned_join",
-    "t17_bm25_scoring",
-    "t22_perplexity_buckets",
-    "p04_surgical_curation_report",
+    "p03_curation_report",  # embeds d04's Jaccard verification, rewritten r14
+    "p07_ccnet_curation_report",  # embeds d25 + perplexity_scored, rewritten r14
+    "g05_dup_graph_kcore",  # builds its graph from d04's pairs, rewritten r14
 )
 
 
-_NEVER_FIRST: tuple[str, ...] = ()
-_NEVER_LAST: tuple[str, ...] = ()
+def _load_verdicts(root: Path) -> list[dict[str, dict]]:
+    """Every ``CORRECTNESS_r<N>.json`` under ``root``, oldest round first.
+    These are outside input: a malformed file raises, it is never skipped."""
+    found = sorted(
+        (int(m.group(1)), path)
+        for path in root.iterdir()
+        if (m := _VERDICT_FILE.fullmatch(path.name))
+    )
+    rounds = [json.loads(path.read_text()) for _, path in found]
+    for (_, path), verdicts in zip(found, rounds):
+        if not isinstance(verdicts, dict) or not all(
+            isinstance(v, dict) for v in verdicts.values()
+        ):
+            raise ValueError(f"{path}: expected an object of per-query objects")
+    return rounds
+
+
+def _order_from_verdicts(
+    names: Iterable[str], rounds: Iterable[Mapping], modified: Iterable[str]
+) -> list[str]:
+    """Verification order of ``names`` (registration order) from each
+    round's ``{name: verdict}`` dict, oldest round first."""
+    names = list(names)
+    latest: dict[str, int | None] = {}  # freshest green round; None = failed
+    for i, verdicts in enumerate(rounds):
+        for name, v in verdicts.items():
+            latest[name] = i if all(v.get(k) is True for k in _GREEN_KEYS) else None
+    failed = [n for n in names if n in latest and latest[n] is None]
+    stale = [n for n in modified if n in names and latest.get(n) is not None]
+    never = [n for n in names if n not in latest]
+    greens = [n for n in names if latest.get(n) is not None and n not in stale]
+    return failed + stale + never + sorted(greens, key=latest.__getitem__)
 
 
 def _driver_order() -> list[str]:
-    names = list(_REGISTRY)
-    failed = [n for n in _DRIVER_FAILED_LAST if n in _REGISTRY]
-    modified = [n for n in _MODIFIED_SINCE_VERDICT if n in _REGISTRY]
-    head = set(failed) | set(modified)
-    rounds = (
-        _DRIVER_GREEN_R1, _DRIVER_GREEN_R2, _DRIVER_GREEN_R3,
-        _DRIVER_GREEN_R4, _DRIVER_GREEN_R5, _DRIVER_GREEN_R6,
-        _DRIVER_GREEN_R7, _DRIVER_GREEN_R8, _DRIVER_GREEN_R9,
-        _DRIVER_GREEN_R10, _DRIVER_GREEN_R11, _DRIVER_GREEN_R12,
-        _DRIVER_GREEN_R13,
-    )
-    greens = frozenset().union(*rounds)
-    never = [n for n in names if n not in head and n not in greens]
-    n_first = [n for n in _NEVER_FIRST if n in never]
-    n_last = [n for n in _NEVER_LAST if n in never]
-    n_mid = [n for n in never if n not in set(n_first) | set(n_last)]
-    never = n_first + n_mid + n_last
-    # Greens ordered stalest-first; a name re-greened in a later round sits
-    # with its FRESHEST verdict, so earlier rounds exclude later members.
-    ordered_greens: list[str] = []
-    for i, rnd in enumerate(rounds):
-        fresher = frozenset().union(*rounds[i + 1:]) if i + 1 < len(rounds) else frozenset()
-        ordered_greens += [
-            n for n in names
-            if n in rnd and n not in fresher and n not in head
-        ]
-    return failed + modified + never + ordered_greens
+    rounds = _load_verdicts(_REPO_ROOT)
+    return _order_from_verdicts(_REGISTRY, rounds, _MODIFIED_SINCE_VERDICT)
 
 
 def all_specs() -> dict[str, QuerySpec]:
@@ -534,8 +145,5 @@ def queries_map() -> dict[str, Builder]:
 
 
 def oracle_sql_map() -> dict[str, str]:
-    return {
-        name: _resolve(name).oracle
-        for name in _driver_order()
-        if _resolve(name).oracle
-    }
+    specs = [_resolve(name) for name in _driver_order()]
+    return {spec.name: spec.oracle for spec in specs if spec.oracle}

@@ -1,17 +1,18 @@
 #!/usr/bin/env python
 """Per-query timing + plan capture mirroring bench.py methodology.
 
-Usage: python scripts/qtime.py [--passes N] [--plan OUTDIR_SUFFIX] q01_pricing_summary d03_...
+Usage: python scripts/qtime.py [--passes N] [--plan OUTDIR] q01_pricing_summary d03_...
 Times each named query through the noop sink, clearCache after every run,
-min-of-N over interleaved passes. With --plan <suffix>, writes
-plans/r14/<name>_<suffix>.txt explain("formatted") captures.
+min-of-N over interleaved passes. With --plan <dir>, writes
+<dir>/<name>.txt explain("formatted") captures.
 """
 import argparse
 import os
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 p = argparse.ArgumentParser()
 p.add_argument("--passes", type=int, default=3)
@@ -23,7 +24,7 @@ args = p.parse_args()
 from european_public_data_pipeline_spark import plans  # noqa: E402
 from european_public_data_pipeline_spark.session import get_spark  # noqa: E402
 
-cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
 spark = get_spark(app_name="qtime", master=f"local[{cpus}]", shuffle_partitions=int(cpus))
 spark.sparkContext.setLogLevel("ERROR")
 
@@ -35,7 +36,7 @@ for s in sel:
 spark.catalog.clearCache()
 
 if args.plan:
-    os.makedirs("/root/repo/plans/r14", exist_ok=True)
+    os.makedirs(args.plan, exist_ok=True)
     import contextlib
     import io
 
@@ -44,9 +45,10 @@ if args.plan:
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
             df.explain("formatted")
-        with open(f"/root/repo/plans/r14/{s.name}_{args.plan}.txt", "w") as f:
+        out = os.path.join(args.plan, f"{s.name}.txt")
+        with open(out, "w") as f:
             f.write(buf.getvalue())
-        print(f"plan written: {s.name}_{args.plan}.txt")
+        print(f"plan written: {out}")
     spark.catalog.clearCache()
 
 samples = {s.name: [] for s in sel}

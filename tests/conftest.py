@@ -169,11 +169,26 @@ SLOW_TESTS: dict[str, set[str]] = {
 
 
 def pytest_collection_modifyitems(config, items):
+    matched: dict[str, set[str]] = {}
     for item in items:
         fname = Path(str(item.fspath)).name
         func = getattr(item, "originalname", None) or item.name.split("[")[0]
+        matched.setdefault(fname, set())
         if func in SLOW_TESTS.get(fname, ()):
             item.add_marker(pytest.mark.slow)
+            matched[fname].add(func)
+    # A stale entry (renamed or deleted test) would silently drop out of the
+    # slow lane. Only whole collected files can vouch for their entries: a
+    # file narrowed to single tests by node id is not checked.
+    narrowed = {Path(a.split("::")[0]).name for a in config.args if "::" in a}
+    stale = sorted(
+        f"{fname}::{func}"
+        for fname, funcs in SLOW_TESTS.items()
+        if fname in matched and fname not in narrowed
+        for func in funcs - matched[fname]
+    )
+    if stale:
+        raise pytest.UsageError(f"SLOW_TESTS entries match no collected test: {stale}")
 
 
 @pytest.fixture(scope="session")

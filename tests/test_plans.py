@@ -270,9 +270,17 @@ def test_g02_wedge_shuffles_ride_bounded_width(spark, sf_small):
     at 32 concurrent tasks), which OOMed a fresh plain 1 GiB session at
     sf0.1 (round 9). The joins must also add no Exchange of their own on
     top of the pinned repartitions."""
-    df = SPECS["g02_triangle_count"].builder(spark, sf_small)
-    plan = df._jdf.queryExecution().executedPlan().toString()
     np_w = spark.sparkContext.defaultParallelism * 2
+    # Build under a session default that differs from the pinned width at
+    # any core count, so a fallback to the default is visible in the plan.
+    default_w = np_w + 1
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(default_w))
+    try:
+        df = SPECS["g02_triangle_count"].builder(spark, sf_small)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
     # The pinned widths are present on the wedge (src) and closing (v, w)
     # exchanges...
     assert len(re.findall(rf"hashpartitioning\(src#\d+L?, {np_w}\)", plan)) >= 2
@@ -281,8 +289,6 @@ def test_g02_wedge_shuffles_ride_bounded_width(spark, sf_small):
     # the wedge keys (src / v,w) may appear ONLY at the pinned width —
     # a dropped repartition or a join-added Exchange would re-emerge at
     # the session's shuffle-partition count (the round-9 OOM shape).
-    default_w = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    assert default_w != np_w, "test setup: widths must differ to discriminate"
     assert not re.findall(rf"hashpartitioning\(src#\d+L?, {default_w}\)", plan)
     assert not re.findall(
         rf"hashpartitioning\(v#\d+L?, w#\d+L?, {default_w}\)", plan

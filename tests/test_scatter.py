@@ -28,16 +28,24 @@ def test_scatter_preserves_rows_and_values(spark, sf_small):
     )
 
 
-def test_scatter_parallelizes_small_single_file_scan(spark, sf_small):
-    scattered = load_table(spark, sf_small, "lineitem", scatter=True)
+def test_scatter_parallelizes_small_single_file_scan(spark, sf_small, monkeypatch):
+    # Build fresh under a session shuffle width that differs from cluster
+    # parallelism at any core count, so a fallback to it cannot pass.
+    monkeypatch.setattr(tables, "_df_memo", {})
+    width = spark.sparkContext.defaultParallelism
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(width + 1))
+    try:
+        scattered = load_table(spark, sf_small, "lineitem", scatter=True)
+        plan = _plan(scattered)
+        n_partitions = scattered.rdd.getNumPartitions()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
     # Hash-partitioned on the natural key at cluster parallelism: the
     # exchange exists and is keyed (deterministic under task retry — no
     # round-robin sort pass).
-    assert "hashpartitioning(l_orderkey" in _plan(scattered)
-    assert (
-        scattered.rdd.getNumPartitions()
-        == spark.sparkContext.defaultParallelism
-    )
+    assert "hashpartitioning(l_orderkey" in plan
+    assert n_partitions == width
 
 
 def test_scatter_noop_above_size_cutoff(spark, sf_small, monkeypatch):
