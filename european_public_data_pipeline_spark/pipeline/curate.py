@@ -21,15 +21,20 @@ standard one: cheap row-local gates first (they shrink the corpus before
 any shuffle), pairwise dedup next, decontamination last so benchmark
 overlap is judged against the documents that will actually ship.
 
-Scale shape: stages communicate by doc_id anti/semi joins (id-cardinality
-relations, AQE picks broadcast vs shuffle), never by re-shipping text;
-the only non-linear stage is d04's candidate join, which is bucket-local
-by construction. The final write is one pass partitioned by split.
+Scale shape: the stages are filters of one ``(doc_id, reached)`` relation,
+where ``reached`` counts the gates a document has passed in chain order.
+Each gate after the quality column is a left join of an id-cardinality
+relation on doc_id (AQE picks broadcast vs shuffle), never a re-shipping
+of text; the left joins keep one row per document because every id set
+is unique per doc_id. The only non-linear stage is d04's candidate join,
+which is bucket-local by construction. ``curate_corpus`` is ONE Spark
+action, the write partitioned by split: the per-stage and per-split
+counts are observed on the way, so each stage operator runs once.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from european_public_data_pipeline_spark import plans
@@ -50,39 +55,64 @@ def split_label(doc_id_col: F.Column) -> F.Column:
     )
 
 
-def curation_stages(
-    spark: SparkSession, sf_dir: str, quality_min: float = QUALITY_MIN
-) -> dict[str, DataFrame]:
-    """The curation chain as doc_id relations, one entry per stage.
+# Stage names in chain order; ``reached >= k`` means a document passed the
+# first k gates.
+STAGES = ("quality", "exact_dedup", "near_dedup", "decontam")
 
-    Shared by ``curate_corpus`` (which writes the final corpus) and the
-    driver-checked ``p03_curation_report`` query (which counts each stage
-    against a composed-CTE oracle).
+
+def _reached_after_each_gate(
+    spark: SparkSession, sf_dir: str, quality_min: float
+) -> list[DataFrame]:
+    """The ``(doc_id, reached)`` relation as it stands after each gate of
+    ``STAGES``, one entry per gate.
+
+    Every gate after the first is a LEFT join of an id set on ``doc_id``
+    that advances ``reached`` from k-1 to k. The joins keep one row per
+    document only because every id set is unique per ``doc_id``: d02 keeps
+    the min doc_id per fingerprint, d04's losers are ``distinct``, and d10
+    groups by doc_id.
     """
     specs = plans.all_specs()
-    docs = load_table(spark, sf_dir, "documents")
+    reached = F.col("reached")
 
-    # 1. Quality gate: row-local scoring, drops before anything shuffles.
+    # 1. Quality gate: row-local scoring. t02 is a select over documents,
+    # so the start relation has one row per document and the gate is a
+    # column.
     quality = specs["t02_quality_score"].builder(spark, sf_dir)
-    good = quality.filter(F.col("quality_score") >= quality_min).select("doc_id")
+    after = [
+        quality.select(
+            "doc_id",
+            (F.col("quality_score") >= quality_min).cast("int").alias("reached"),
+        )
+    ]
+
+    def gate(ids: DataFrame, present: bool, also: F.Column = F.lit(True)) -> None:
+        k = len(after) + 1
+        hit = F.col("_hit").isNotNull()
+        passes = (reached == k - 1) & (hit if present else ~hit) & also
+        after.append(
+            after[-1]
+            .join(ids.select("doc_id", F.lit(True).alias("_hit")), "doc_id", "left")
+            .select("doc_id", F.when(passes, k).otherwise(reached).alias("reached"))
+        )
 
     # 2. Exact dedup: fingerprint survivors (min doc_id per fingerprint).
-    survivors = (
+    gate(
         specs["d02_exact_dedup_fingerprint"]
         .builder(spark, sf_dir)
-        .select(F.col("survivor_doc_id").alias("doc_id"))
+        .select(F.col("survivor_doc_id").alias("doc_id")),
+        present=True,
     )
-    stage2 = good.join(survivors, "doc_id", "left_semi")
 
     # 3. Near-dedup: for every verified pair (d1 < d2, jaccard >= 0.8) the
     # higher id loses — survivors never pair with each other.
-    near_losers = (
+    gate(
         specs["d04_minhash_lsh_pairs"]
         .builder(spark, sf_dir)
         .select(F.col("d2").alias("doc_id"))
-        .distinct()
+        .distinct(),
+        present=False,
     )
-    stage3 = stage2.join(near_losers, "doc_id", "left_anti")
 
     # 4. Decontamination: drop the held-out benchmark split (a pure hash
     # predicate of doc_id — no join needed) plus every training doc d10
@@ -90,20 +120,37 @@ def curation_stages(
     # semi-joining d10's clean rows: d10 only emits rows for docs that have
     # at least one 5-gram shingle, so docs shorter than 5 words are absent
     # from its output and a semi join would silently discard them.
-    contaminated = (
+    is_bench = base_hash28(F.col("doc_id").cast("string")) % CONTAM_MOD == 0
+    gate(
         specs["d10_contamination_check"]
         .builder(spark, sf_dir)
         .filter(F.col("contaminated"))
-        .select("doc_id")
+        .select("doc_id"),
+        present=False,
+        also=~is_bench,
     )
-    is_bench = base_hash28(F.col("doc_id").cast("string")) % CONTAM_MOD == 0
-    stage4 = stage3.filter(~is_bench).join(contaminated, "doc_id", "left_anti")
+    return after
+
+
+def curation_stages(
+    spark: SparkSession, sf_dir: str, quality_min: float = QUALITY_MIN
+) -> dict[str, DataFrame]:
+    """The curation chain as doc_id relations, one entry per stage.
+
+    Used by the driver-checked ``p03_curation_report`` and
+    ``p04_surgical_curation_report`` queries (which count each stage
+    against a composed-CTE oracle); ``curate_corpus`` observes the same
+    chain on its write. Each stage's entry is taken from the relation as it
+    stands after that stage's gate, so it carries no plan of a later gate.
+    """
+    after = _reached_after_each_gate(spark, sf_dir, quality_min)
+    reached = F.col("reached")
     return {
-        "docs": docs,
-        "quality": good,
-        "exact_dedup": stage2,
-        "near_dedup": stage3,
-        "decontam": stage4,
+        "docs": load_table(spark, sf_dir, "documents"),
+        **{
+            stage: rel.filter(reached >= k).select("doc_id")
+            for k, (stage, rel) in enumerate(zip(STAGES, after), 1)
+        },
     }
 
 
@@ -159,35 +206,34 @@ def curate_corpus(
     """Run the curation chain over ``{sf_dir}/documents.parquet`` and write
     ``{out_dir}/documents.parquet`` partitioned by ``split``.
 
-    Returns per-stage surviving-document counts (the curation report).
+    Returns per-stage surviving-document counts (the curation report). The
+    write is the only Spark action: the counts are observed on its way.
     """
-    stages = curation_stages(spark, sf_dir, quality_min)
-    docs = stages["docs"]
-    n_raw = docs.count()
-    n_quality = stages["quality"].count()
-    n_exact = stages["exact_dedup"].count()
-    n_near = stages["near_dedup"].count()
-    stage4 = stages["decontam"]
-    n_decontam = stage4.count()
+    reached = F.col("reached")
+    chain = Observation()
+    final = _reached_after_each_gate(spark, sf_dir, quality_min)[-1].observe(
+        chain,
+        F.count(F.lit(1)).alias("n_raw"),
+        *[
+            F.count_if(reached >= k).alias(f"n_after_{stage}")
+            for k, stage in enumerate(STAGES, 1)
+        ],
+    )
 
     # 5. Split + write: one pass over the surviving text, partitioned so a
     # training job reads only its split's directories.
-    curated = docs.join(stage4, "doc_id", "left_semi").withColumn(
-        "split", split_label(F.col("doc_id"))
+    splits = Observation()
+    curated = (
+        load_table(spark, sf_dir, "documents")
+        .join(final.filter(reached == len(STAGES)), "doc_id", "left_semi")
+        .withColumn("split", split_label(F.col("doc_id")))
+        .observe(
+            splits,
+            *[F.count_if(F.col("split") == s).alias(f"n_{s}") for s in SPLIT_BP],
+        )
     )
     curated.write.mode("overwrite").partitionBy("split").parquet(
         f"{out_dir}/documents.parquet"
     )
-    out = spark.read.parquet(f"{out_dir}/documents.parquet")
-    splits = {
-        f"n_{r['split']}": r["n"]
-        for r in out.groupBy("split").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    return {
-        "n_raw": n_raw,
-        "n_after_quality": n_quality,
-        "n_after_exact_dedup": n_exact,
-        "n_after_near_dedup": n_near,
-        "n_after_decontam": n_decontam,
-        **splits,
-    }
+    # A split with no documents writes no directory and gets no entry.
+    return {**chain.get, **{k: n for k, n in splits.get.items() if n}}

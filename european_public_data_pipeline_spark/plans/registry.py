@@ -91,7 +91,8 @@ _GREEN_KEYS = ("rows_match", "schema_match", "hash_match")
 
 # The one hand-kept input: queries whose plan changed after their last green.
 _MODIFIED_SINCE_VERDICT: tuple[str, ...] = (
-    "p03_curation_report",  # embeds d04's Jaccard verification, rewritten r14
+    "p03_curation_report",  # embeds d04 (rewritten r14); curation_stages rebuilt as one relation
+    "p04_surgical_curation_report",  # its plan changes through curation_stages
     "p07_ccnet_curation_report",  # embeds d25 + perplexity_scored, rewritten r14
     "g05_dup_graph_kcore",  # builds its graph from d04's pairs, rewritten r14
 )

@@ -22,6 +22,23 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_APP_NAME = "european_public_data_pipeline_spark"
+MAX_DRIVER_MEM_MB = 16 * 1024
+
+
+def default_driver_memory(physical_bytes: int | None) -> str:
+    """``spark.driver.memory`` when ``SPARK_GRAFT_DRIVER_MEM`` is unset:
+    the smaller of 16g and half of physical RAM (16g when RAM is unknown),
+    so a local JVM never asks for more heap than the host can back."""
+    if not physical_bytes:
+        return f"{MAX_DRIVER_MEM_MB}m"
+    return f"{min(MAX_DRIVER_MEM_MB, physical_bytes // 2 // 2**20)}m"
+
+
+def _physical_ram() -> int | None:
+    try:
+        return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):  # no sysconf (Windows)
+        return None
 
 
 def get_spark(
@@ -41,7 +58,9 @@ def get_spark(
     # is far below this class of box and OOMs long before the CPUs are the
     # bottleneck. Only effective for the session that starts the JVM —
     # cluster deployments take memory from spark-submit as usual.
-    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(
+        _physical_ram()
+    )
     builder = (
         SparkSession.builder.appName(app_name)
         .config("spark.driver.memory", driver_mem)

@@ -57,7 +57,6 @@ SLOW_TESTS: dict[str, set[str]] = {
         "test_push_pull_interleave_no_double_apply",
     },
     "test_curate.py": {
-        "test_stages_shrink_monotonically",
         "test_surgical_chain_monotone_and_structural_recomposition",
     },
     "test_dedup_admission.py": {

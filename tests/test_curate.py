@@ -12,18 +12,82 @@ import pytest
 from pyspark.sql import functions as F
 
 from european_public_data_pipeline_spark import plans
-from european_public_data_pipeline_spark.pipeline.curate import curate_corpus
+from european_public_data_pipeline_spark.pipeline.curate import (
+    STAGES,
+    curate_corpus,
+    curation_stages,
+)
+
+
+def _curate_counting_actions(spark, sf_dir, out):
+    """``curate_corpus`` with the session's concrete DataFrame ``count`` /
+    ``collect`` and the writer's ``parquet`` spied on for the call."""
+    calls = {"count": 0, "collect": 0, "parquet": 0}
+    df = spark.range(0)
+    spied = [(type(df), "count"), (type(df), "collect"), (type(df.write), "parquet")]
+    with pytest.MonkeyPatch.context() as mp:
+        for cls, name in spied:
+            real = getattr(cls, name)
+
+            def spy(*args, _real=real, _name=name, **kwargs):
+                calls[_name] += 1
+                return _real(*args, **kwargs)
+
+            mp.setattr(cls, name, spy)
+        stats = curate_corpus(spark, sf_dir, out)
+    return stats, calls
 
 
 @pytest.fixture(scope="module")
 def curated(spark, sf_small, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("curated"))
-    stats = curate_corpus(spark, sf_small, out)
-    return out, stats
+    stats, calls = _curate_counting_actions(spark, sf_small, out)
+    return out, stats, calls
+
+
+def _read_back_splits(spark, out):
+    docs = spark.read.parquet(f"{out}/documents.parquet")
+    return {f"n_{r['split']}": r["count"] for r in docs.groupBy("split").count().collect()}
+
+
+def test_curation_is_one_spark_action(curated):
+    """The report is observed on the write: no stage count, no read-back."""
+    _, _, calls = curated
+    assert calls == {"count": 0, "collect": 0, "parquet": 1}
+
+
+def test_report_equals_independent_recount(spark, sf_small, curated):
+    out, stats, _ = curated
+    stages = curation_stages(spark, sf_small)
+    recount = {
+        "n_raw": stages["docs"].count(),
+        **{f"n_after_{s}": stages[s].count() for s in STAGES},
+        **_read_back_splits(spark, out),
+    }
+    assert stats == recount
+
+
+def test_empty_split_has_no_report_entry(spark, sf_small, curated, tmp_path):
+    """Three curated train docs on their own: every gate keeps them (they
+    are unique, pairwise dissimilar and no benchmark doc is left to
+    contaminate them), so val and test are empty and absent."""
+    out, _, _ = curated
+    train = spark.read.parquet(f"{out}/documents.parquet").filter("split = 'train'")
+    ids = [r["doc_id"] for r in train.orderBy("doc_id").limit(3).collect()]
+    docs = spark.read.parquet(f"{sf_small}/documents.parquet")
+    docs.filter(F.col("doc_id").isin(ids)).write.parquet(f"{tmp_path}/in/documents.parquet")
+
+    stats = curate_corpus(spark, f"{tmp_path}/in", f"{tmp_path}/out")
+    assert stats == {
+        "n_raw": 3,
+        **{f"n_after_{s}": 3 for s in STAGES},
+        "n_train": 3,
+    }
+    assert _read_back_splits(spark, f"{tmp_path}/out") == {"n_train": 3}
 
 
 def test_stages_shrink_monotonically(curated):
-    _, s = curated
+    _, s, _ = curated
     assert (
         s["n_raw"]
         >= s["n_after_quality"]
@@ -36,14 +100,14 @@ def test_stages_shrink_monotonically(curated):
 
 
 def test_no_exact_duplicates_survive(spark, curated):
-    out, _ = curated
+    out, _, _ = curated
     docs = spark.read.parquet(f"{out}/documents.parquet")
     norm = F.md5(F.array_join(F.split(F.trim(F.lower("text")), r"\s+"), " "))
     assert docs.count() == docs.select(norm.alias("fp")).distinct().count()
 
 
 def test_no_near_duplicates_survive(spark, curated):
-    out, _ = curated
+    out, _, _ = curated
     # Re-run the full MinHash+LSH detector over the CURATED corpus: every
     # verified >= 0.8 pair had its higher id dropped, so none may remain.
     pairs = plans.all_specs()["d04_minhash_lsh_pairs"].builder(spark, out)
@@ -51,7 +115,7 @@ def test_no_near_duplicates_survive(spark, curated):
 
 
 def test_no_benchmark_contamination_survives(spark, sf_small, curated):
-    out, _ = curated
+    out, _, _ = curated
     flagged = (
         plans.all_specs()["d10_contamination_check"]
         .builder(spark, sf_small)
@@ -63,7 +127,7 @@ def test_no_benchmark_contamination_survives(spark, sf_small, curated):
 
 
 def test_rerun_is_deterministic(spark, sf_small, curated, tmp_path):
-    _, first = curated
+    _, first, _ = curated
     again = curate_corpus(spark, sf_small, str(tmp_path / "again"))
     assert again == first
 
@@ -73,8 +137,6 @@ def test_short_docs_survive_decontamination(spark, sf_small, tmp_path):
     d10's output; the decontamination stage must RETAIN them (they cannot
     overlap the benchmark), not drop them via a semi join on d10 rows."""
     import hashlib
-
-    from european_public_data_pipeline_spark.pipeline.curate import curation_stages
 
     def is_bench(doc_id: int) -> bool:
         return int(hashlib.md5(str(doc_id).encode()).hexdigest()[:7], 16) % 20 == 0
@@ -91,7 +153,7 @@ def test_short_docs_survive_decontamination(spark, sf_small, tmp_path):
 
 
 def test_report_query_matches_pipeline_stats(spark, sf_small, curated):
-    _, stats = curated
+    _, stats, _ = curated
     report = {
         r["stage"]: r["n"]
         for r in plans.all_specs()["p03_curation_report"]
