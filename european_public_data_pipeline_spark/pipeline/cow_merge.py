@@ -374,6 +374,7 @@ def merge_into_manifest(
             table_path,
             n,
             data_dir,
+            staged_df.schema,
             carried_files=tuple(carried),
             carried_rows=carried_rows,
             meta=m.get("meta"),

@@ -46,6 +46,7 @@ import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from european_public_data_pipeline_spark.pipeline.fs_util import hadoop_fs
 
@@ -146,8 +147,6 @@ def _merge_schemas(prior_json: str | None, staged):
     batch introduces, in prior-first order. A same-name column with a
     DIFFERENT type is an error — silent coercion would corrupt either
     history or the batch; widen explicitly by rewriting instead."""
-    from pyspark.sql.types import StructType
-
     if prior_json is None:
         return staged
     prior = StructType.fromJson(json.loads(prior_json))
@@ -179,8 +178,6 @@ def _read_files(spark: SparkSession, m: dict, files: list | None = None) -> Data
     fl = m["files"] if files is None else files
     sj = m.get("schema")
     if sj:
-        from pyspark.sql.types import StructType
-
         return spark.read.schema(
             StructType.fromJson(json.loads(sj))
         ).parquet(*fl)
@@ -193,8 +190,6 @@ def _schema_names(spark: SparkSession, m: dict, fl: list) -> list[str]:
     homogeneous by construction — see ``_read_files``)."""
     sj = m.get("schema")
     if sj:
-        from pyspark.sql.types import StructType
-
         return StructType.fromJson(json.loads(sj)).names
     return spark.read.parquet(fl[0]).schema.names if fl else []
 
@@ -203,8 +198,10 @@ def _delete_entries(m: dict) -> list[dict]:
     """The manifest's merge-on-read delete sidecars, oldest first — the
     two Iceberg-v2 flavors:
 
-    - EQUALITY: ``{"version": dv, "files": [...], "keys": [cols]}`` —
-      removes every row whose key tuple appears in the sidecar.
+    - EQUALITY: ``{"version": dv, "files": [...], "keys": [cols],
+      "schema": json}`` — removes every row whose key tuple appears in
+      the sidecar (``schema``, the sidecar's written schema, is absent
+      from entries committed before it was recorded).
     - POSITION: ``{"version": dv, "files": [...], "kind": "position"}``
       — the sidecar holds exact ``(__pf, __pr)`` = (normalized file
       path, row index) pairs; removes precisely those physical rows
@@ -220,6 +217,11 @@ def _delete_entries(m: dict) -> list[dict]:
 # file keys with the SAME expression, so scheme/slash rendering can
 # never desynchronize them.
 _PATH_KEY_SQL = r"^[a-z][a-z0-9+.-]*:/+"
+
+# What a position sidecar holds: ``_pos_capture``'s identity columns.
+_POSITION_SIDECAR_SCHEMA = StructType(
+    [StructField("__pf", StringType()), StructField("__pr", LongType())]
+)
 
 
 def _pos_capture(df: DataFrame) -> DataFrame:
@@ -296,8 +298,6 @@ def _read_files_live(
         # zero rows, so no physical identity exists to capture).
         sj = m.get("schema")
         if sj:
-            from pyspark.sql.types import StructType
-
             base = spark.createDataFrame(
                 [], StructType.fromJson(json.loads(sj))
             )
@@ -344,19 +344,21 @@ def _read_files_live(
     # Entries below every bucket's first applicable index are never
     # joined — building their frames would still eagerly read sidecar
     # footers driver-side on every such read (e.g. read_incremental of
-    # files all newer than an old sidecar).
+    # files all newer than an old sidecar). Frames are planned with a
+    # known schema, never a footer-inference job: position sidecars have
+    # a fixed one, equality entries record theirs (entries committed
+    # before that still infer).
     first_needed = min(buckets)
     dks: list = [None] * first_needed
     for e in entries[first_needed:]:
         if e.get("kind") == "position":
-            dk = spark.read.parquet(*e["files"]).select("__pf", "__pr")
+            dk = spark.read.schema(_POSITION_SIDECAR_SCHEMA).parquet(*e["files"])
             dks.append((["__pf", "__pr"], dk, True))
         else:
-            dk = (
-                spark.read.parquet(*e["files"])
-                .select(*e["keys"])
-                .distinct()
-            )
+            reader = spark.read
+            if e.get("schema"):
+                reader = reader.schema(StructType.fromJson(json.loads(e["schema"])))
+            dk = reader.parquet(*e["files"]).select(*e["keys"]).distinct()
             dks.append((list(e["keys"]), dk, False))
     out: DataFrame | None = None
     for i in sorted(buckets):
@@ -424,28 +426,28 @@ def _json_scalar(v, round_toward: str | None = None):
     return str(v)
 
 
-def _file_stats(spark: SparkSession, data_dir: str, stats_cols: tuple) -> dict:
-    """Per-file zone maps for the staged batch: ``{file: {col: [min,
-    max]}}`` in ONE job over the staged directory (grouped by
-    input_file_name — never a per-file job storm). O(batch) like the
-    write that produced the files; at 100 TB the result is KB-sized
-    (files x columns x 2 scalars) and lives in the manifest, so readers
-    prune without touching data. A column whose file slice is all-NULL
-    records [null, null] — provably unmatchable by any range predicate
-    (SQL BETWEEN never matches NULL), which read_where exploits."""
+def _file_stats(staged: DataFrame, stats_cols: tuple) -> tuple[dict, int]:
+    """Per-file zone maps for the staged batch, ``{file: {col: [min,
+    max]}}``, and its row count, in ONE aggregation over the staged batch
+    (grouped by input_file_name — never a per-file job storm). O(batch)
+    like the write that produced the files; at 100 TB the result is
+    KB-sized (files x columns x 2 scalars) and lives in the manifest, so
+    readers prune without touching data. A column whose file slice is
+    all-NULL records [null, null] — provably unmatchable by any range
+    predicate (SQL BETWEEN never matches NULL), which read_where
+    exploits."""
     from pyspark.sql import functions as F
 
-    aggs = []
+    aggs = [F.count(F.lit(1)).alias("__rows")]
     for c in stats_cols:
         aggs.append(F.min(c).alias(f"mn_{c}"))
         aggs.append(F.max(c).alias(f"mx_{c}"))
     rows = (
-        spark.read.parquet(data_dir)
-        .groupBy(F.input_file_name().alias("__file"))
+        staged.groupBy(F.input_file_name().alias("__file"))
         .agg(*aggs)
         .collect()
     )
-    return {
+    stats = {
         _path_key(r["__file"]): {
             c: [
                 _json_scalar(r[f"mn_{c}"], round_toward="down"),
@@ -455,6 +457,7 @@ def _file_stats(spark: SparkSession, data_dir: str, stats_cols: tuple) -> dict:
         }
         for r in rows
     }
+    return stats, sum(r["__rows"] for r in rows)
 
 
 # How long a finished purge's plan stays readable as a ``completed-``
@@ -570,6 +573,7 @@ def _commit(
     table_path: str,
     n: int,
     data_dir: str | None,
+    schema: StructType | None = None,
     *,
     carried_files: tuple[str, ...] = (),
     carried_rows: int = 0,
@@ -593,8 +597,17 @@ def _commit(
     stored in the manifest — O(1) to read back via ``version_meta``,
     which is how streaming state keeps an applied-batch watermark
     without scanning data. ``stats_cols`` adds per-file min/max zone
-    maps (one extra scan of the STAGED batch only); ``carried_stats``
-    (append commits) carries prior files' zone maps by reference.
+    maps; ``carried_stats`` (append commits) carries prior files' zone
+    maps by reference.
+
+    ``schema`` is the schema the staged batch was WRITTEN with (the
+    writer's ``df.schema``), required whenever ``data_dir`` is given: the
+    staged files are read with it instead of inferring it from their
+    footers (file sources read every column nullable, so the recorded
+    schema equals what inference would give). The staged row count then
+    rides the zone-map aggregation (``_file_stats``), and a commit
+    without ``stats_cols`` pays one ``count()``, which parquet answers
+    from row-group metadata.
 
     ``op`` is the commit's OPERATION KIND, recorded as a top-level
     manifest field (Iceberg's snapshot ``operation``) so incremental
@@ -631,6 +644,11 @@ def _commit(
     rewrite and the state resets."""
     jvm, fs, _ = hadoop_fs(spark, table_path)
     if data_dir is not None:
+        if schema is None:
+            raise ValueError(
+                "_commit: a staged commit needs the schema its batch was "
+                "written with"
+            )
         staged = _list_parquet(jvm, fs, data_dir)
     else:
         if carried_schema is None:
@@ -687,11 +705,10 @@ def _commit(
                         fa[_path_key(tgt)] = v_added
         return cf, cr, cs, fa
 
+    staged_rows = 0
+    staged_stats: dict = {}
     if data_dir is not None:
-        # Parquet count() is answered from row-group metadata — no data
-        # read.
-        staged_df = spark.read.parquet(data_dir)
-        staged_rows = staged_df.count()
+        staged_df = spark.read.schema(schema).parquet(data_dir)
         # The manifest owns the schema (readers never infer): prior
         # columns first, the batch's new columns appended — additive
         # evolution, with a loud error on a same-name type conflict
@@ -699,21 +716,21 @@ def _commit(
         version_schema = _merge_schemas(
             carried_schema, staged_df.schema
         ).json()
+        if stats_cols:
+            try:
+                staged_stats, staged_rows = _file_stats(staged_df, stats_cols)
+            except Exception:
+                # A bad stats column (typo, schema drift) aborts the
+                # commit AFTER the batch was written; the uuid-named
+                # staged dir is referenced by no manifest and would
+                # otherwise leak forever — reclaim it before propagating
+                # (same class as the gated-publish failed-audit cleanup).
+                fs.delete(jvm.org.apache.hadoop.fs.Path(data_dir), True)
+                raise
+        else:
+            staged_rows = staged_df.count()
     else:
-        staged_rows = 0
         version_schema = carried_schema
-    staged_stats: dict = {}
-    if stats_cols and data_dir is not None:
-        try:
-            staged_stats = _file_stats(spark, data_dir, stats_cols)
-        except Exception:
-            # A bad stats column (typo, schema drift) aborts the commit
-            # AFTER the batch was written; the uuid-named staged dir is
-            # referenced by no manifest and would otherwise leak forever
-            # — reclaim it before propagating (same class as the gated-
-            # publish failed-audit cleanup).
-            fs.delete(jvm.org.apache.hadoop.fs.Path(data_dir), True)
-            raise
     if carried_files:
         # Fence LAST — after the staged-batch scans above, which are the
         # seconds-long part of a commit; a purge starting during them is
@@ -976,7 +993,14 @@ def publish_version(
     data_dir = _stage_dir(table_path, n)
     df.write.mode("overwrite").parquet(data_dir)
     return _commit(
-        spark, table_path, n, data_dir, meta=meta, stats_cols=stats_cols, op=op
+        spark,
+        table_path,
+        n,
+        data_dir,
+        df.schema,
+        meta=meta,
+        stats_cols=stats_cols,
+        op=op,
     )
 
 
@@ -1025,6 +1049,7 @@ def append_version(
         table_path,
         n,
         data_dir,
+        df.schema,
         carried_files=tuple(prior["files"]),
         carried_rows=int(prior["row_count"]),
         meta=meta if meta is not None else prior.get("meta"),
@@ -1543,7 +1568,6 @@ def read_appended(
     ``segments`` to skip the second walk — on an object store each
     chain link is a per-request metadata round-trip."""
     from pyspark.sql import functions as F
-    from pyspark.sql.types import StructType
 
     to_v = to_version if to_version is not None else current_version(spark, table_path)
     if segments is None:
@@ -1859,7 +1883,7 @@ def publish_version_gated(df: DataFrame, suite, table_path: str) -> int:
         raise
     finally:
         checks.unpersist()
-    return _commit(spark, table_path, n, data_dir)
+    return _commit(spark, table_path, n, data_dir, df.schema)
 
 
 def rollback(spark: SparkSession, table_path: str, version: int) -> None:
@@ -2499,8 +2523,6 @@ def purge_rows(
         # back to the file's own footer. (Files that DO match are
         # rewritten below with their OWN natural schema — a purge must
         # not widen a file it rewrites.)
-        from pyspark.sql.types import StructType
-
         first_ref: dict[str, int] = {}
         for v in vs:  # ascending
             for f in manifests[v]["files"]:

@@ -149,10 +149,10 @@ def delete_rows_mor(
     if candidates and persist_changelog:
         # ONE pruned live scan serves both needs: stage the old images
         # first, then answer the matched count from the staged parquet's
-        # row-group metadata (no second data read — the same trick
-        # _commit uses for staged rows). LIVE read: rows an earlier
-        # sidecar already killed produce no image and never subtract
-        # again, and a bounded batch's images are coalesced (the
+        # row-group metadata (no second data read, and no footer
+        # inference: the read takes the images' schema). LIVE read: rows
+        # an earlier sidecar already killed produce no image and never
+        # subtract again, and a bounded batch's images are coalesced (the
         # small-file discipline the merge changelog write follows).
         cl_dir = _changelog_stage_dir(table_path, n)
         old_images = (
@@ -162,7 +162,7 @@ def delete_rows_mor(
             .coalesce(4)
         )
         old_images.write.mode("overwrite").parquet(cl_dir)
-        matched = spark.read.parquet(cl_dir).count()
+        matched = spark.read.schema(old_images.schema).parquet(cl_dir).count()
     elif candidates:
         matched = (
             _read_files_live(spark, m, candidates)
@@ -193,7 +193,12 @@ def delete_rows_mor(
     dkeys.coalesce(1).write.mode("overwrite").parquet(sidecar_dir)
     sidecar_files = _list_parquet(jvm, fs, sidecar_dir)
     entries = list(m.get("delete_files") or []) + [
-        {"version": n, "files": sidecar_files, "keys": list(keys)}
+        {
+            "version": n,
+            "files": sidecar_files,
+            "keys": list(keys),
+            "schema": dkeys.schema.json(),
+        }
     ]
     # Seed the add-version map on the first delete: every current file
     # predates this sidecar (version 0 = all sidecars apply), and from
@@ -558,15 +563,17 @@ def upsert_rows_mor(
         sidecar_dir = (
             f"{table_path}/deletes/v{n_next:08d}-{uuid.uuid4().hex[:12]}"
         )
+        key_schema = updates.select(*keys).schema
         spark.createDataFrame(
             [tuple(r[k] for k in keys) for r in matched_key_rows],
-            updates.select(*keys).schema,
+            key_schema,
         ).coalesce(1).write.mode("overwrite").parquet(sidecar_dir)
         entries.append(
             {
                 "version": n_next,
                 "files": _list_parquet(jvm, fs, sidecar_dir),
                 "keys": list(keys),
+                "schema": key_schema.json(),
             }
         )
 
@@ -597,6 +604,7 @@ def upsert_rows_mor(
             table_path,
             n_next,
             data_dir,
+            updates.schema,
             carried_files=tuple(m["files"]),
             carried_rows=int(m["row_count"]) - int(matched_rows),
             meta=m.get("meta"),

@@ -7,8 +7,9 @@ Reference lifecycle -> here:
 1. Bronze (`src.ingestion.ingestion_hicp_raw:main`) -> ``bronze_ingest``:
    fetch with param fallback, land enveloped JSON under a partitioned path.
 2. Silver (`src.ingestion.process_hicp_silver:main`) -> ``silver_transform``:
-   distributed JSON-stat parse of ALL landed payloads, period-code parse,
-   canonical projection/sort, lineage columns, partitioned parquet write.
+   distributed JSON-stat parse of the latest landed payload per series,
+   period-code parse, canonical projection, lineage columns, one
+   ``(coicop, time)``-sorted parquet file per geo partition.
 3. Quality (`src.quality.check_hicp_quality:main`) -> ``quality_stage``:
    the constraint suite over the silver table; report returned as a
    DataFrame (the reference's JSON report blob).
@@ -29,6 +30,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from european_public_data_pipeline_spark.functions.timeparse import parse_time_code
 from european_public_data_pipeline_spark.pipeline.gold import ensure_table, load_gold
@@ -88,7 +90,12 @@ def silver_transform(
     """Stage 2: distributed JSON-stat unpivot of the LATEST landed payload
     per series (the reference's latest-blob incremental model,
     blob.py:55-60) -> tidy typed table -> partitioned parquet (by geo,
-    the series prefix)."""
+    the series prefix), one file per geo sorted by ``(coicop, time)``.
+
+    The layout comes from a hash exchange on geo plus a per-partition
+    sort, not a global ``orderBy``: a range sort samples its input for
+    partition bounds, and that sample would run the JSON-stat parse a
+    second time. Each geo lands in one task, hence one file."""
     tidy = read_jsonstat_files(spark, bronze_paths, dims=HICP_DIMS)
     silver = (
         tidy.select(
@@ -99,10 +106,16 @@ def silver_transform(
             "value",
             F.col("src_path").alias("raw_blob"),
         )
-        .orderBy("geo", "coicop", "time")
+        .repartition("geo")
+        .sortWithinPartitions("geo", "coicop", "time")
     )
     write_partitioned(silver, silver_path, ["geo"])
-    return spark.read.parquet(silver_path)
+    # Read back with the schema just written, partition column last as
+    # partition discovery places it: no footer-inference job.
+    data_cols = [f for f in silver.schema.fields if f.name != "geo"]
+    return spark.read.schema(
+        T.StructType(data_cols + [silver.schema["geo"]])
+    ).parquet(silver_path)
 
 
 def hicp_suite(silver: DataFrame) -> CheckSuite:
@@ -146,7 +159,8 @@ def run_pipeline(
     gold_rows = gold_load(spark, silver, gold_table, location=gold_location)
     return PipelineResult(
         bronze_paths=bronze_paths,
-        silver_rows=silver.count(),
+        # The gold load already counted this same silver DataFrame.
+        silver_rows=gold_rows,
         checks=checks_rows,
         gold_rows=gold_rows,
     )

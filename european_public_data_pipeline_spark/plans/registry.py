@@ -95,6 +95,11 @@ _MODIFIED_SINCE_VERDICT: tuple[str, ...] = (
     "p04_surgical_curation_report",  # its plan changes through curation_stages
     "p07_ccnet_curation_report",  # embeds d25 + perplexity_scored, rewritten r14
     "g05_dup_graph_kcore",  # builds its graph from d04's pairs, rewritten r14
+    "q132_persisted_changelog_refresh",  # its COW merge/append commits take the writer's schema
+    "q133_mor_delete_scan",  # reads equality sidecars by their recorded schema
+    "q134_mor_position_delete",  # reads position sidecars by the fixed (__pf, __pr) schema
+    "q135_streaming_cdc_upsert_mv",  # its streamed merge commits take the writer's schema
+    "q136_mor_upsert_merge",  # reads the upsert's equality sidecar by its recorded schema
 )
 
 

@@ -45,6 +45,9 @@ from pyspark.sql import types as T
 # Arrow createDataFrame to the distributed range-based unpivot.
 _DISTRIBUTED_THRESHOLD = 100_000
 
+# Above this many input paths, Spark lists files with a distributed job.
+_DISCOVERY_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+
 
 class JsonStatError(ValueError):
     """Malformed JSON-stat payload (missing keys / length mismatch)."""
@@ -217,7 +220,22 @@ def read_jsonstat_files(
         ]
     )
     paths = [path] if isinstance(path, str) else list(path)
-    files = spark.read.format("binaryFile").load(paths).select("path", "content")
+    # The caller names the payloads (the bronze stage just landed them),
+    # so list them on the driver: past Spark's parallel-discovery
+    # threshold (32 paths by default) load() would otherwise run a
+    # listing job with one task per path just to stat files it was
+    # handed. Only ever raised: a lower threshold would push the listing
+    # of a directory argument's subdirectories into a job instead.
+    prev = spark.conf.get(_DISCOVERY_THRESHOLD, None)
+    threshold = max(len(paths), int(spark.conf.get(_DISCOVERY_THRESHOLD)))
+    spark.conf.set(_DISCOVERY_THRESHOLD, str(threshold))
+    try:
+        files = spark.read.format("binaryFile").load(paths).select("path", "content")
+    finally:
+        if prev is None:
+            spark.conf.unset(_DISCOVERY_THRESHOLD)
+        else:
+            spark.conf.set(_DISCOVERY_THRESHOLD, prev)
 
     def parse_batch(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         import pandas as pd

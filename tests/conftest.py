@@ -1,6 +1,10 @@
 from __future__ import annotations
 
+import functools
 import sys
+from collections.abc import Iterator
+from contextlib import contextmanager
+from dataclasses import dataclass
 from pathlib import Path
 
 import pytest
@@ -204,3 +208,46 @@ def sf_small():
 @pytest.fixture(scope="session")
 def sf_medium():
     return SF001
+
+
+@dataclass(frozen=True)
+class SparkJob:
+    """One Spark job as the driver's status store records it."""
+
+    id: int
+    name: str  # the call site that started it
+    tasks: int
+
+
+@contextmanager
+def _jobs_started(spark) -> Iterator[list[SparkJob]]:
+    sc = spark.sparkContext._jsc.sc()
+
+    def job_infos() -> list:
+        # The status store is fed by the listener bus, asynchronously.
+        sc.listenerBus().waitUntilEmpty()
+        jobs = sc.statusStore().jobsList(None)
+        return [jobs.apply(i) for i in range(jobs.size())]
+
+    before = max((j.jobId() for j in job_infos()), default=-1)
+    started: list[SparkJob] = []
+    yield started
+    started.extend(
+        sorted(
+            (
+                SparkJob(j.jobId(), j.name(), j.numTasks())
+                for j in job_infos()
+                if j.jobId() > before
+            ),
+            key=lambda j: j.id,
+        )
+    )
+
+
+@pytest.fixture
+def spark_jobs(spark):
+    """``with spark_jobs() as jobs:`` — ``jobs`` lists the Spark jobs
+    started inside the block, oldest first, once the block exits. Pins
+    job budgets the way ``tests/test_shuffle_budget.py`` pins shuffle
+    bytes."""
+    return functools.partial(_jobs_started, spark)

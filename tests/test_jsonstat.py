@@ -195,3 +195,62 @@ def test_read_jsonstat_files(spark, tmp_path):
     assert by_key[("DE", "2024M02")] == 200.5
     assert by_key[("DE", "2024M01")] is None
     assert all(r["src_path"].endswith((".json",)) for r in rows)
+
+
+_DISCOVERY = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+
+
+def _landed_series(tmp_path, n):
+    """``n`` one-geo payload files of two months each; returns the paths
+    and the rows the reader must produce."""
+    paths, want = [], []
+    for i in range(n):
+        p = base_payload()
+        geo = f"G{i:02d}"
+        p["size"] = [1, 1, 1, 1, 2]
+        p["dimension"]["geo"]["category"]["index"] = {geo: 0}
+        p["dimension"]["time"]["category"]["index"] = {"2024M01": 0, "2024M02": 1}
+        p["value"] = {"0": float(i), "1": i + 0.5}
+        path = tmp_path / f"{geo}.json"
+        path.write_text(json.dumps({"meta": {}, "data": p}))
+        paths.append(str(path))
+        want += [
+            ("M", "I15", "CP00", geo, "2024M01", float(i), f"{geo}.json"),
+            ("M", "I15", "CP00", geo, "2024M02", i + 0.5, f"{geo}.json"),
+        ]
+    return paths, sorted(want)
+
+
+def test_many_paths_are_listed_on_the_driver(spark, tmp_path, spark_jobs):
+    """Past Spark's 32-path parallel-discovery threshold the reader still
+    lists its payloads on the driver — no listing job — and the session's
+    threshold setting is left as it was."""
+    dims = ("freq", "unit", "coicop", "geo", "time")
+    paths, want = _landed_series(tmp_path, 40)
+    before = spark.conf.get(_DISCOVERY, None)
+    with spark_jobs() as jobs:
+        df = read_jsonstat_files(spark, paths, dims=dims)
+    assert jobs == []
+    assert spark.conf.get(_DISCOVERY, None) == before
+    got = sorted(
+        tuple(r[:-1]) + (r["src_path"].rsplit("/", 1)[-1],) for r in df.collect()
+    )
+    assert got == want
+
+
+def test_discovery_threshold_restored_when_load_fails(spark, tmp_path):
+    dims = ("freq", "unit", "coicop", "geo", "time")
+    paths, _ = _landed_series(tmp_path, 40)
+    before = spark.conf.get(_DISCOVERY, None)
+    spark.conf.set(_DISCOVERY, "17")
+    try:
+        with pytest.raises(Exception, match="PATH_NOT_FOUND|does not exist"):
+            read_jsonstat_files(spark, paths + [str(tmp_path / "missing.json")], dims)
+        assert spark.conf.get(_DISCOVERY) == "17"
+        read_jsonstat_files(spark, paths, dims)
+        assert spark.conf.get(_DISCOVERY) == "17"
+    finally:
+        if before is None:
+            spark.conf.unset(_DISCOVERY)
+        else:
+            spark.conf.set(_DISCOVERY, before)

@@ -119,9 +119,10 @@ def test_concurrent_publish_loser_gets_error_not_clobber(spark, tmp_path):
     # A racing publisher staged its own data for "version 1" and tries to
     # commit after the winner.
     loser_dir = str(tmp_path / "loser")
-    _batch(spark, ["loser"]).write.parquet(loser_dir)
+    loser = _batch(spark, ["loser"])
+    loser.write.parquet(loser_dir)
     with pytest.raises(ConcurrentPublishError):
-        _commit(spark, t, 1, loser_dir)
+        _commit(spark, t, 1, loser_dir, loser.schema)
     # Winner's data intact.
     assert _vals(read_version(spark, t, 1)) == ["w1"]
 
@@ -159,13 +160,15 @@ def test_racing_staged_overwrite_cannot_delete_committed_data(spark, tmp_path):
     winner_dir = _stage_dir(t, 1)
     loser_dir = _stage_dir(t, 1)
     assert winner_dir != loser_dir
-    _batch(spark, ["w1", "w2"]).write.mode("overwrite").parquet(winner_dir)
-    assert _commit(spark, t, 1, winner_dir) == 1
+    winner = _batch(spark, ["w1", "w2"])
+    winner.write.mode("overwrite").parquet(winner_dir)
+    assert _commit(spark, t, 1, winner_dir, winner.schema) == 1
     # The loser's staged overwrite runs AFTER the winner committed — the
     # historical data-loss window. It touches only the loser's prefix.
-    _batch(spark, ["loser"]).write.mode("overwrite").parquet(loser_dir)
+    loser = _batch(spark, ["loser"])
+    loser.write.mode("overwrite").parquet(loser_dir)
     with pytest.raises(ConcurrentPublishError):
-        _commit(spark, t, 1, loser_dir)
+        _commit(spark, t, 1, loser_dir, loser.schema)
     # Winner's committed batch is fully intact and readable.
     assert _vals(read_version(spark, t, 1)) == ["w1", "w2"]
     # The loser's staged files were removed by its failed commit.
@@ -1399,9 +1402,10 @@ def test_post_commit_fence_repairs_append_that_raced_a_whole_purge(
 
     monkeypatch.setattr(M, "_purge_plans", fence_misses_first)
     data_dir = M._stage_dir(t, 2)
-    _users(spark, [(9, "e")]).write.mode("overwrite").parquet(data_dir)
+    batch = _users(spark, [(9, "e")])
+    batch.write.mode("overwrite").parquet(data_dir)
     M._commit(
-        spark, t, 2, data_dir,
+        spark, t, 2, data_dir, batch.schema,
         carried_files=tuple(prior["files"]),
         carried_rows=int(prior["row_count"]),
         carried_schema=prior.get("schema"),
@@ -1485,9 +1489,10 @@ def test_post_commit_fence_applies_chained_purge_plans_in_order(
 
     monkeypatch.setattr(M, "_purge_plans", fence_misses_first)
     data_dir = M._stage_dir(t, 2)
-    _users(spark, [(5, "e")]).write.mode("overwrite").parquet(data_dir)
+    batch = _users(spark, [(5, "e")])
+    batch.write.mode("overwrite").parquet(data_dir)
     M._commit(
-        spark, t, 2, data_dir,
+        spark, t, 2, data_dir, batch.schema,
         carried_files=tuple(prior["files"]),
         carried_rows=int(prior["row_count"]),
         carried_schema=prior.get("schema"),
@@ -1520,10 +1525,11 @@ def test_long_stage_existence_sweep_fails_loudly_not_silently(
         if n.startswith("completed-"):
             os.remove(f"{t}/purge/{n}")
     data_dir = M._stage_dir(t, 2)
-    _users(spark, [(5, "e")]).write.mode("overwrite").parquet(data_dir)
+    batch = _users(spark, [(5, "e")])
+    batch.write.mode("overwrite").parquet(data_dir)
     with pytest.raises(RuntimeError, match="no longer exist"):
         M._commit(
-            spark, t, 2, data_dir,
+            spark, t, 2, data_dir, batch.schema,
             carried_files=tuple(prior["files"]),
             carried_rows=int(prior["row_count"]),
             carried_schema=prior.get("schema"),
@@ -1923,3 +1929,152 @@ def test_purge_rows_erases_persisted_changelogs(spark, tmp_path):
     for root, _dirs, files in os.walk(f"{t}/changelog"):
         leftovers += [f for f in files if f.endswith(".parquet")]
     assert leftovers == []
+
+
+# ---------------------------------------------------------------------------
+# Commit cost: the staged batch's schema comes from the writer and its row
+# count from the zone-map aggregate, never from extra Spark jobs.
+
+
+def _typed_batch(spark, lo, hi):
+    """Decimal, date, timestamp, nested and non-nullable columns, three
+    files."""
+    import datetime
+    import decimal
+
+    from pyspark.sql import types as T
+
+    schema = T.StructType(
+        [
+            T.StructField("k", T.LongType(), False),
+            T.StructField("price", T.DecimalType(12, 3)),
+            T.StructField("day", T.DateType()),
+            T.StructField("at", T.TimestampType()),
+            T.StructField("at_ntz", T.TimestampNTZType()),
+            T.StructField(
+                "tag",
+                T.StructType(
+                    [
+                        T.StructField("id", T.IntegerType(), False),
+                        T.StructField("name", T.StringType()),
+                    ]
+                ),
+            ),
+            T.StructField("xs", T.ArrayType(T.IntegerType())),
+            T.StructField("attrs", T.MapType(T.StringType(), T.LongType())),
+        ]
+    )
+    rows = [
+        (
+            k,
+            decimal.Decimal(k) / 8,
+            datetime.date(2020, 1, 1) + datetime.timedelta(days=k),
+            datetime.datetime(2021, 1, 1) + datetime.timedelta(hours=k),
+            datetime.datetime(2022, 2, 2) + datetime.timedelta(minutes=k),
+            (k, None if k % 5 == 0 else f"n{k}"),
+            [k, k + 1],
+            {"a": k},
+        )
+        for k in range(lo, hi)
+    ]
+    return spark.createDataFrame(rows, schema).repartition(3)
+
+
+def _commit_jobs(monkeypatch, spark_jobs):
+    """Record the jobs each ``_commit`` call starts (the jobs after the
+    batch's write)."""
+    import european_public_data_pipeline_spark.pipeline.manifest as M
+
+    real = M._commit
+    calls: list = []
+
+    def counted(*args, **kwargs):
+        with spark_jobs() as jobs:
+            out = real(*args, **kwargs)
+        calls.append(jobs)
+        return out
+
+    monkeypatch.setattr(M, "_commit", counted)
+    return calls
+
+
+def test_commit_costs_at_most_two_jobs_and_matches_recomputation(
+    spark, tmp_path, monkeypatch, spark_jobs
+):
+    import european_public_data_pipeline_spark.pipeline.manifest as M
+
+    stats = ("k", "price", "day", "at")
+    t = str(tmp_path / "tbl")
+    M.publish_version(_typed_batch(spark, 0, 90), t, stats_cols=stats)
+    calls = _commit_jobs(monkeypatch, spark_jobs)
+    M.append_version(_typed_batch(spark, 90, 150), t, stats_cols=stats)
+    assert len(calls[-1]) <= 2, calls[-1]
+    plain = str(tmp_path / "plain")
+    M.publish_version(_typed_batch(spark, 0, 40), plain)
+    assert len(calls[-1]) <= 2, calls[-1]
+
+    for table, n_rows, cols in ((t, 150, stats), (plain, 40, ())):
+        m = M._read_json(spark, f"{table}/manifest/{M.current_version(spark, table):08d}.json")
+        inferred = spark.read.parquet(*m["files"])
+        assert m["schema"] == inferred.schema.json()
+        assert m["row_count"] == inferred.count() == n_rows
+        if not cols:
+            assert "file_stats" not in m
+            continue
+        expected = {}
+        for f in m["files"]:
+            agg = spark.read.parquet(f).agg(
+                *[F.min(c).alias(f"mn_{c}") for c in cols],
+                *[F.max(c).alias(f"mx_{c}") for c in cols],
+            ).first()
+            expected[M._path_key(f)] = {
+                c: [
+                    M._json_scalar(agg[f"mn_{c}"], round_toward="down"),
+                    M._json_scalar(agg[f"mx_{c}"], round_toward="up"),
+                ]
+                for c in cols
+            }
+        assert m["file_stats"] == expected
+
+
+def test_staged_commit_requires_the_writer_schema(spark, tmp_path):
+    import european_public_data_pipeline_spark.pipeline.manifest as M
+
+    t = str(tmp_path / "tbl")
+    data_dir = M._stage_dir(t, 1)
+    _batch(spark, ["a"]).write.parquet(data_dir)
+    with pytest.raises(ValueError, match="schema its batch was written with"):
+        M._commit(spark, t, 1, data_dir)
+    assert M.versions(spark, t) == []
+
+
+def test_sidecar_reads_start_no_job(spark, tmp_path, spark_jobs):
+    """Planning a live read over equality and position delete sidecars
+    reads them with a known schema — no footer-inference job — and a
+    pre-schema equality entry still reads through inference, to the
+    same rows."""
+    import european_public_data_pipeline_spark.pipeline.manifest as M
+    from european_public_data_pipeline_spark.pipeline.mor_delete import (
+        delete_rows_mor,
+        delete_where_mor,
+    )
+
+    t = str(tmp_path / "tbl")
+    M.publish_version(_ranged(spark, 0, 29), t, stats_cols=("k",))
+    delete_rows_mor(spark, t, spark.createDataFrame([(3,), (7,)], "k long"), ["k"])
+    delete_where_mor(spark, t, "k >= 20")
+    m = M._read_json(spark, f"{t}/manifest/{M.current_version(spark, t):08d}.json")
+    eq = [e for e in m["delete_files"] if e.get("kind") != "position"]
+    assert eq and all("schema" in e for e in eq)
+    with spark_jobs() as jobs:
+        live = M.read_version(spark, t)
+    assert jobs == []
+    want = sorted(set(range(20)) - {3, 7})
+    assert sorted(r["k"] for r in live.collect()) == want
+    legacy = {
+        **m,
+        "delete_files": [
+            {k: v for k, v in e.items() if k != "schema"} for e in m["delete_files"]
+        ],
+    }
+    assert sorted(r["k"] for r in M._read_files_live(spark, legacy).collect()) == want

@@ -108,3 +108,117 @@ def test_pipeline_gate_blocks_bad_data(spark, tmp_path):
         spark.sql("SELECT COUNT(*) AS n FROM gold_hicp_blocked").first()["n"] == 0
     )
     spark.sql("DROP TABLE IF EXISTS gold_hicp_blocked")
+
+
+def _scrambled_transport(url, timeout):
+    """One (geo, coicop) series per request; the payload lists its months
+    newest first, so a sorted silver file is the writer's doing."""
+    from urllib.parse import parse_qs, urlparse
+
+    q = parse_qs(urlparse(url).query)
+    geo, coicop = q["geo"][0], q["coicop"][0]
+    months = [f"2024M{m:02d}" for m in range(1, 7)]
+    payload = {
+        "id": ["freq", "unit", "coicop", "geo", "time"],
+        "size": [1, 1, 1, 1, len(months)],
+        "dimension": {
+            "freq": {"category": {"index": {"M": 0}}},
+            "unit": {"category": {"index": {"I15": 0}}},
+            "coicop": {"category": {"index": {coicop: 0}}},
+            "geo": {"category": {"index": {geo: 0}}},
+            "time": {
+                "category": {
+                    "index": {t: len(months) - 1 - i for i, t in enumerate(months)}
+                }
+            },
+        },
+        "value": [100.0 + i for i in range(len(months))],
+    }
+    return 200, json.dumps(payload).encode()
+
+
+def _sql_executions_since(spark, after: int) -> list:
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    execs = store.executionsList()
+    out = [execs.apply(i) for i in range(execs.size())]
+    return [e for e in out if e.executionId() > after]
+
+
+def _map_in_pandas_rows(spark, execution) -> int:
+    store = spark._jsparkSession.sharedState().statusStore()
+    values = store.executionMetrics(execution.executionId())
+    nodes = store.planGraph(execution.executionId()).allNodes()
+    rows = 0
+    for i in range(nodes.size()):
+        node = nodes.apply(i)
+        if node.name() != "MapInPandas":
+            continue
+        metrics = node.metrics()
+        for j in range(metrics.size()):
+            m = metrics.apply(j)
+            if m.name() == "number of output rows":
+                v = values.get(m.accumulatorId())
+                if v.isDefined():
+                    rows += int(str(v.get()).replace(",", ""))
+    return rows
+
+
+def test_silver_parses_once_into_one_sorted_file_per_geo(spark, tmp_path):
+    """The silver write parses every payload once (the parsed-row count
+    equals the silver row count: no range sort re-running the parse to
+    sample bounds) and lands one file per geo, sorted by (coicop, time)."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    geos, coicops = ("DE", "FR"), ("CP02", "CP00", "CP01")
+    series = [{"geo": g, "coicop": c, "unit": "I15"} for g in geos for c in coicops]
+    spark.sql("DROP TABLE IF EXISTS gold_hicp_layout")
+    prior = _sql_executions_since(spark, -1)
+    after = max((e.executionId() for e in prior), default=-1)
+    try:
+        result = run_pipeline(
+            spark,
+            root=str(tmp_path),
+            dataset="prc_hicp_midx",
+            series=series,
+            gold_table="gold_hicp_layout",
+            transport=_scrambled_transport,
+            gold_location=str(tmp_path / "gold"),
+        )
+    finally:
+        spark.sql("DROP TABLE IF EXISTS gold_hicp_layout")
+    assert result.silver_rows == len(series) * 6
+    execs = _sql_executions_since(spark, after)
+    assert sum(_map_in_pandas_rows(spark, e) for e in execs) == result.silver_rows
+    for e in execs:
+        assert "rangepartitioning" not in e.physicalPlanDescription().lower()
+    for geo in geos:
+        files = glob.glob(str(tmp_path / "silver" / "prc_hicp_midx" / f"geo={geo}" / "*.parquet"))
+        assert len(files) == 1, files
+        t = pq.read_table(files[0]).to_pydict()
+        keys = list(zip(t["coicop"], t["time"]))
+        assert keys == sorted(keys) and len(keys) == len(coicops) * 6
+
+
+def test_silver_stage_costs_only_its_write(spark, tmp_path, spark_jobs):
+    """silver_transform reads its output back with the schema it wrote:
+    the stage runs the write's jobs and nothing else (no listing or
+    footer-inference job), and the read-back equals an inferred read."""
+    from european_public_data_pipeline_spark.pipeline.run_hicp import (
+        bronze_ingest,
+        latest_payload_per_partition,
+        silver_transform,
+    )
+
+    series = [{"geo": g, "coicop": c, "unit": "I15"} for g in ("DE", "FR") for c in ("CP00", "CP01")]
+    bronze_ingest(str(tmp_path), "prc_hicp_midx", series, transport=_scrambled_transport)
+    latest = latest_payload_per_partition(str(tmp_path), "prc_hicp_midx")
+    path = str(tmp_path / "silver")
+    with spark_jobs() as jobs:
+        silver = silver_transform(spark, latest, path)
+    assert len(jobs) <= 2, jobs  # the exchange's map stage and the write
+    inferred = spark.read.parquet(path)
+    assert silver.schema.json() == inferred.schema.json()
+    assert sorted(map(str, silver.collect())) == sorted(map(str, inferred.collect()))
