@@ -128,6 +128,34 @@ def minhash_sig(hashed_shingles: DataFrame) -> DataFrame:
     return hashed_shingles.groupBy("doc_id").agg(*aggs)
 
 
+def minhash_estimate(
+    pairs: DataFrame, left_sig: DataFrame, right_sig: DataFrame
+) -> DataFrame:
+    """(d1, d2, est_jaccard) for candidate (d1, d2) pairs: the Broder
+    estimate, the share of equal minhash components between d1's
+    signature in ``left_sig`` and d2's in ``right_sig``. ONE definition
+    shared by d14 and ``streaming/dedup_admission`` (same bit-for-bit
+    rule as ``minhash_sig``). The signature columns are renamed per side
+    (m<i> -> a<i> / b<i>) so the pair joins need no frame aliases."""
+    k = MINHASH_BANDS * MINHASH_ROWS
+
+    def side(sig: DataFrame, id_alias: str, prefix: str) -> DataFrame:
+        return sig.select(
+            F.col("doc_id").alias(id_alias),
+            *[F.col(f"m{i}").alias(f"{prefix}{i}") for i in range(k)],
+        )
+
+    eq = sum(
+        (F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0) for i in range(k)),
+        F.lit(0),
+    )
+    return (
+        pairs.join(side(left_sig, "d1", "a"), "d1")
+        .join(side(right_sig, "d2", "b"), "d2")
+        .select("d1", "d2", (eq.cast("double") / F.lit(float(k))).alias("est_jaccard"))
+    )
+
+
 def sig_bands(sig: DataFrame) -> DataFrame:
     """(doc_id, band_id, band_sig): the 4x4 LSH band projection of a
     signature relation. Rows without signatures (null m-columns — docs
@@ -157,8 +185,23 @@ def sig_bands(sig: DataFrame) -> DataFrame:
     )
 
 
+def band_candidates(left: DataFrame, right: DataFrame) -> DataFrame:
+    """Distinct (d1, d2) pairs that share an LSH bucket: d1 from ``left``,
+    d2 from ``right``, both ``(doc_id, band_id, band_sig)`` relations
+    (``sig_bands``). The join is keyed on the (band_id, band_sig) bucket,
+    so its cost follows bucket occupancy, not corpus². ONE definition for
+    d04/d14/d23 and ``streaming/dedup_admission``; a self-join caller
+    (``left is right``) filters ``d1 < d2`` itself, which Catalyst pushes
+    into the join condition below the distinct."""
+    b1 = left.select(F.col("doc_id").alias("d1"), "band_id", "band_sig")
+    b2 = right.select(F.col("doc_id").alias("d2"), "band_id", "band_sig")
+    return b1.join(b2, ["band_id", "band_sig"]).select("d1", "d2").distinct()
+
+
 def _jaccard_on_pairs(pairs: DataFrame, sh: DataFrame) -> DataFrame:
-    """Exact Jaccard for candidate (d1, d2) pairs given (doc_id, shingle).
+    """Exact Jaccard for candidate (d1, d2) pairs given (doc_id, shingle)
+    — the candidate verifier of d04, d14 and d23 (``posting_list_jaccard``
+    is the exhaustive one).
 
     Pair-id melt: each candidate pair becomes two (d1, d2, doc_id) rows —
     one per member — and the shingle relation is referenced ONCE, keyed
@@ -174,11 +217,9 @@ def _jaccard_on_pairs(pairs: DataFrame, sh: DataFrame) -> DataFrame:
     them number ``u = |union|``, so ``isect = tot - u`` and
     ``jaccard = isect / union = (tot - u) / u`` — one aggregation, no
     (doc_id, n_shingles) relation, no n1/n2 joins. Same integers, same
-    single double division as the r13 formula, so hash-identical output
-    for every pair with isect >= 1; pairs with NO shared shingle now
-    surface with jaccard 0.0 instead of dropping out of the inner
-    shingle-match join — both callers threshold at >= 0.8, so the
-    registered results are unchanged (oracle re-proven).
+    single double division as the ``isect / (n1 + n2 - isect)`` formula,
+    so hash-identical output; a pair with NO shared shingle gets
+    ``0 / (n1 + n2) = 0.0`` (d14 reports it, d04/d23 threshold it away).
 
     The build side is hint-broadcast: it is two fixed-width rows per
     candidate pair — LSH-bucket-occupancy-bounded, the relation the whole
@@ -276,16 +317,6 @@ def posting_list_pairs(grouped: DataFrame, chunk: int = POSTING_CHUNK) -> DataFr
     corpus-bounded) posting rows — the price of executing the
     posting-list aggregation once instead of once per length branch.
     """
-    # ONE path for every list length: a short list is the degenerate
-    # B = 1 case (a single (0, 0) slice pair), so the short/long split the
-    # r12 code carried is unnecessary — and because it filtered ``grouped``
-    # twice, it executed the posting-list collect_list aggregation (a full
-    # shuffle + ObjectHashAggregate over the shingle relation) TWICE, once
-    # per branch (r13 before-plan). The unified slice path runs it once;
-    # the price is that short lists now ride the slice-pair exchange too,
-    # which redistributes the (already grouped, corpus-bounded) posting
-    # rows — bytes comparable to the aggregation shuffle the split paid
-    # a second time.
     ds_sorted = F.sort_array("ds")
     nb = F.ceil(F.size("ds") / F.lit(chunk)).cast("int")
     slices = F.transform(
@@ -360,10 +391,21 @@ def d03_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def exact_jaccard_pairs(docs: DataFrame) -> DataFrame:
-    """d03's exhaustive exact-Jaccard pair pipeline over an arbitrary
-    document relation — factored out so audits (d22) can run the
-    quadratic truth over a deterministic document SAMPLE at scale while
-    d03 itself stays the full-corpus exact baseline."""
+    """d03's exhaustive exact-Jaccard pairs (jaccard >= 0.8) over an
+    arbitrary document relation — factored out so audits (d22) can run
+    the quadratic truth over a deterministic document SAMPLE at scale
+    while d03 itself stays the full-corpus exact baseline."""
+    return (
+        posting_list_jaccard(docs)
+        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
+        .orderBy("d1", "d2")
+    )
+
+
+def posting_list_jaccard(docs: DataFrame) -> DataFrame:
+    """(d1 < d2, jaccard) for EVERY document pair sharing a shingle,
+    unthresholded — the exhaustive exact-Jaccard relation behind d03/d22
+    (thresholded by ``exact_jaccard_pairs``) and d18's threshold sweep."""
     # The shingle set feeds the posting-list grouping AND the size
     # aggregate; materialize it so the tokenize/shingle kernel runs once.
     # Explicit level: corpus-token-sized relation — serialized in memory
@@ -394,15 +436,9 @@ def exact_jaccard_pairs(docs: DataFrame) -> DataFrame:
     n1 = sizes.select(F.col("doc_id").alias("d1"), F.col("n").alias("n1"))
     n2 = sizes.select(F.col("doc_id").alias("d2"), F.col("n").alias("n2"))
     jac = F.col("isect").cast("double") / (F.col("n1") + F.col("n2") - F.col("isect"))
-    return (
-        # n1/n2 are corpus-cardinality: strategy left to AQE (broadcast at
-        # test scale, shuffle join against the small pair set at 100 TB).
-        pairs.join(n1, "d1")
-        .join(n2, "d2")
-        .select("d1", "d2", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
-        .orderBy("d1", "d2")
-    )
+    # n1/n2 are corpus-cardinality: strategy left to AQE (broadcast at
+    # test scale, shuffle join against the small pair set at 100 TB).
+    return pairs.join(n1, "d1").join(n2, "d2").select("d1", "d2", jac.alias("jaccard"))
 
 
 def _minhash_ctes() -> str:
@@ -473,25 +509,15 @@ def d04_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Shingles feed signature building AND the melted candidate
     # verification — one materialization instead of two kernel passes.
     # Corpus-token-sized: serialized in memory, disk spill at scale (see
-    # exact_jaccard_pairs).
+    # posting_list_jaccard).
     sh = shingles(docs).persist(StorageLevel.MEMORY_AND_DISK)
     h = sh.withColumn("hv", base_hash28(F.col("shingle")))
-    # The signature relation feeds the band self-join twice (b1/b2);
+    # The signature relation feeds both sides of the band self-join;
     # cached so the 16-way minhash aggregation over the shingle relation
-    # runs once. (The r13 shape also rode |shingle set| along for the
-    # verification's n1/n2 size joins — the melted ``_jaccard_on_pairs``
-    # derives both sizes from the verification join itself, so the sizes
-    # ride-along is gone.)
+    # runs once.
     sig = minhash_sig(h).cache()
     bands = sig_bands(sig)
-    b1 = bands.select(F.col("doc_id").alias("d1"), "band_id", "band_sig")
-    b2 = bands.select(F.col("doc_id").alias("d2"), "band_id", "band_sig")
-    cand = (
-        b1.join(b2, ["band_id", "band_sig"])
-        .filter(F.col("d1") < F.col("d2"))
-        .select("d1", "d2")
-        .distinct()
-    )
+    cand = band_candidates(bands, bands).filter(F.col("d1") < F.col("d2"))
     return (
         _jaccard_on_pairs(cand, sh)
         .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
@@ -539,7 +565,22 @@ def d05_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("token")
     )
     h = tok.withColumn("hv", base_hash28(F.col("token")))
-    bitsums = h.groupBy("doc_id").agg(
+    return simhash_pairs(h, SIMHASH_MAX_HAMMING).orderBy("d1", "d2")
+
+
+def simhash_pairs(hashed: DataFrame, max_hamming: int) -> DataFrame:
+    """(d1 < d2, hamming <= max_hamming) SimHash near-duplicate pairs from
+    a (doc_id, hv) relation of 28-bit token hashes — ONE kernel for d05
+    (word tokens) and m07 (byte 4-grams).
+
+    The signature is frequency-weighted: bit b is set when more of the
+    doc's hashes have bit b set than not (one aggregation). Candidates
+    come from pigeonhole banding over 4 bands of 7 bits: with
+    max_hamming < 4 a pair within range keeps at least one band identical,
+    so the band join has guaranteed recall. Hamming is verified exactly
+    on candidates.
+    """
+    bitsums = hashed.groupBy("doc_id").agg(
         *[
             F.sum(
                 F.when(F.shiftright(F.col("hv"), b).bitwiseAND(1) == 1, 1).otherwise(-1)
@@ -555,8 +596,6 @@ def d05_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         simhash = term if simhash is None else simhash + term
     sh = bitsums.select("doc_id", simhash.alias("simhash"))
 
-    # Pigeonhole banding: 7-bit slices; hamming <= 2 over 4 bands ==> at
-    # least one band identical, so the band join has guaranteed recall.
     band_width = SIMHASH_BITS // SIMHASH_BANDS
     band_arr = F.array(
         *[
@@ -584,8 +623,7 @@ def d05_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("d1") < F.col("d2"))
         .select("d1", "d2", ham.alias("hamming"))
         .distinct()
-        .filter(F.col("hamming") <= SIMHASH_MAX_HAMMING)
-        .orderBy("d1", "d2")
+        .filter(F.col("hamming") <= max_hamming)
     )
 
 
@@ -686,8 +724,8 @@ def connected_components(
     MapReduce and Beyond") converges in O(log n) rounds with the same
     per-round shape; the propagation step below is its building block.
     Convergence is detected by counting changed labels (one action per
-    round) and the loop exits early — the ``max_iter`` cap only guards
-    pathological inputs.
+    round) and the loop exits early. Running out of ``max_iter`` rounds
+    raises ``RuntimeError`` rather than returning unconverged labels.
     """
     sym = edges.select(F.col("src"), F.col("dst")).union(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
@@ -715,8 +753,10 @@ def connected_components(
         n_changed = new_labels.filter("changed").limit(1).count()
         labels = new_labels.drop("changed")
         if n_changed == 0:
-            break
-    return labels
+            return labels
+    raise RuntimeError(
+        f"connected_components did not converge in {max_iter} rounds"
+    )
 
 
 @register(
@@ -1131,54 +1171,35 @@ ORDER BY c.d1, c.d2
     "Jaccard and their absolute error — the measurement that justifies "
     "band/row parameters before trusting d04 on a new corpus. Shape: the "
     "same bucketed candidate generation as d04 (corpus-linear), one "
-    "signature self-join on the (tiny) candidate set, exact verification "
-    "only for candidates — never all pairs.",
+    "signature self-join on the (tiny) candidate set, and d04's melted "
+    "exact verification of the candidates (0.0 for a candidate sharing "
+    "no shingle) — never all pairs, no per-doc size relation.",
     oracle=_d14_oracle(),
 )
 def d14_minhash_accuracy_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    k = MINHASH_BANDS * MINHASH_ROWS
-    docs = load_table(spark, sf_dir, "documents")
+    # scatter: parallelizes the shingling kernel feeding the cached shingle
+    # relation, as in d04 (the verification melt streams that cache).
+    docs = load_table(spark, sf_dir, "documents", scatter=True)
     # Corpus-token-sized: serialized in memory, disk spill at scale (see
-    # exact_jaccard_pairs).
+    # posting_list_jaccard).
     sh = shingles(docs).persist(StorageLevel.MEMORY_AND_DISK)
     h = sh.withColumn("hv", base_hash28(F.col("shingle")))
-    sig = minhash_sig(h)
+    # Feeds both band sides and both estimate sides: cached, as in d04,
+    # so the 16-way minhash aggregation runs once.
+    sig = minhash_sig(h).cache()
     bands = sig_bands(sig)
-    cand = (
-        bands.alias("a")
-        .join(bands.alias("b"), ["band_id", "band_sig"])
-        .select(
-            F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2")
-        )
-        .filter(F.col("d1") < F.col("d2"))
-        .distinct()
-    )
-    s1 = sig.select(F.col("doc_id").alias("d1"), *[F.col(f"m{i}").alias(f"a{i}") for i in range(k)])
-    s2 = sig.select(F.col("doc_id").alias("d2"), *[F.col(f"m{i}").alias(f"b{i}") for i in range(k)])
-    eq = sum(
-        (F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0) for i in range(k)),
-        F.lit(0),
-    )
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    inter = (
-        cand.join(sh.select(F.col("doc_id").alias("d1"), "shingle"), "d1")
-        .join(sh.select(F.col("doc_id").alias("d2"), "shingle"), ["d2", "shingle"])
-        .groupBy("d1", "d2")
-        .agg(F.count(F.lit(1)).alias("isect"))
-    )
-    isect = F.coalesce(F.col("isect"), F.lit(0))
-    exact = isect.cast("double") / (F.col("n1") + F.col("n2") - isect)
-    est = eq.cast("double") / F.lit(float(k))
+    cand = band_candidates(bands, bands).filter(F.col("d1") < F.col("d2"))
+    # Every candidate shares a band, so both members have shingles and
+    # the verifier returns one row per candidate (0.0 when disjoint).
+    est = F.col("est_jaccard")
+    exact = F.col("jaccard")
     return (
-        cand.join(s1, "d1")
-        .join(s2, "d2")
-        .join(sizes.select(F.col("doc_id").alias("d1"), F.col("n").alias("n1")), "d1")
-        .join(sizes.select(F.col("doc_id").alias("d2"), F.col("n").alias("n2")), "d2")
-        .join(inter, ["d1", "d2"], "left")
+        minhash_estimate(cand, sig, sig)
+        .join(_jaccard_on_pairs(cand, sh), ["d1", "d2"])
         .select(
             "d1",
             "d2",
-            est.alias("est_jaccard"),
+            est,
             exact.alias("exact_jaccard"),
             F.abs(est - exact).alias("abs_err"),
         )
@@ -1437,7 +1458,8 @@ def d17_cluster_representatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     "d18_threshold_sensitivity",
     category="dedup",
     doc="Dedup-threshold calibration report: exact-Jaccard candidate "
-    "pairs are computed ONCE (d03's posting-list machinery) and then "
+    "pairs are computed ONCE (d03's unthresholded posting-list relation, "
+    "no shingle self-join) and then "
     "counted under a sweep of thresholds (0.5-0.9) together with the "
     "implied removal rate — the report a curation run reads BEFORE "
     "committing to JACCARD_THRESHOLD, since pair volume (and thus "
@@ -1477,46 +1499,22 @@ ORDER BY t.thr
 """,
 )
 def d18_threshold_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    sh = shingles(docs)
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    s1 = sh.select(F.col("doc_id").alias("d1"), "shingle")
-    s2 = sh.select(F.col("doc_id").alias("d2"), "shingle")
-    inter = (
-        s1.join(s2, "shingle")
-        .filter(F.col("d1") < F.col("d2"))
-        .groupBy("d1", "d2")
-        .agg(F.count(F.lit(1)).alias("isect"))
-    )
-    n1 = sizes.select(F.col("doc_id").alias("d1"), F.col("n").alias("n1"))
-    n2 = sizes.select(F.col("doc_id").alias("d2"), F.col("n").alias("n2"))
-    jac = (
-        inter.join(n1, "d1")
-        .join(n2, "d2")
-        .select(
-            "d1",
-            "d2",
-            (
-                F.col("isect").cast("double")
-                / (F.col("n1") + F.col("n2") - F.col("isect"))
-            ).alias("j"),
-        )
-    )
+    # scatter: the shingling kernel otherwise runs on the single-row-group
+    # scan's one task (d03's reason).
+    docs = load_table(spark, sf_dir, "documents", scatter=True)
+    jac = posting_list_jaccard(docs)
     n_docs = docs.count()
     thr_df = spark.createDataFrame(
         [(t,) for t in (0.5, 0.6, 0.7, 0.8, 0.9)], "threshold double"
     )
+    hit = F.col("jaccard") >= F.col("threshold")
     return (
         F.broadcast(thr_df)
         .crossJoin(jac)
         .groupBy("threshold")
         .agg(
-            F.coalesce(
-                F.sum(F.when(F.col("j") >= F.col("threshold"), 1)), F.lit(0)
-            ).alias("n_pairs"),
-            F.countDistinct(
-                F.when(F.col("j") >= F.col("threshold"), F.col("d2"))
-            ).alias("n_docs_removed"),
+            F.coalesce(F.sum(F.when(hit, 1)), F.lit(0)).alias("n_pairs"),
+            F.countDistinct(F.when(hit, F.col("d2"))).alias("n_docs_removed"),
         )
         .select(
             "threshold",
@@ -1968,24 +1966,16 @@ ORDER BY d1, d2
 def d23_incremental_lsh_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     # Corpus-token-sized: serialized in memory, disk spill at scale (see
-    # exact_jaccard_pairs).
+    # posting_list_jaccard).
     sh = shingles(docs).persist(StorageLevel.MEMORY_AND_DISK)
     h = sh.withColumn("hv", base_hash28(F.col("shingle")))
     bands = sig_bands(minhash_sig(h))
     is_batch = F.col("doc_id") % 10 == 0
-    batch = bands.filter(is_batch).select(
-        F.col("doc_id").alias("bd"), "band_id", "band_sig"
-    )
-    # In production this side is the persisted index, read not rebuilt.
-    corpus = bands.filter(~is_batch).select(
-        F.col("doc_id").alias("cd"), "band_id", "band_sig"
-    )
-    cand = (
-        batch.join(corpus, ["band_id", "band_sig"])
-        .select(
-            F.least("bd", "cd").alias("d1"), F.greatest("bd", "cd").alias("d2")
-        )
-        .distinct()
+    # In production the corpus side is the persisted index, read not
+    # rebuilt. The sides are disjoint, so the canonical (least, greatest)
+    # order keeps the candidate pairs distinct.
+    cand = band_candidates(bands.filter(is_batch), bands.filter(~is_batch)).select(
+        F.least("d1", "d2").alias("d1"), F.greatest("d1", "d2").alias("d2")
     )
     return (
         _jaccard_on_pairs(cand, sh)

@@ -439,24 +439,25 @@ def m06_payload_cdc_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Byte-level SimHash of media payloads: 28-bit signature over the
-# multiset of byte 4-grams. 4 bands of 7 bits: hamming <= 3 flips at
-# most 3 bands, so at least one band matches exactly — banding recall
-# is 1.0 by construction for the <= 3 verification threshold.
-PAYLOAD_SIMHASH_BITS = 28
-PAYLOAD_SIMHASH_BANDS = 4
+# Byte-level SimHash of media payloads: d05's 28-bit signature
+# (``dedup.simhash_pairs``) over the multiset of byte 4-grams. 4 bands of
+# 7 bits: hamming <= 3 flips at most 3 bands, so at least one band
+# matches exactly — banding recall is 1.0 by construction for the <= 3
+# verification threshold.
 PAYLOAD_SIMHASH_MAX_HAMMING = 3
 PAYLOAD_SIMHASH_DOCS = 300  # demo grain (same ASCII-payload oracle assumption as m05/m06)
 
 
 def _m07_oracle() -> str:
+    from european_public_data_pipeline_spark.operators.dedup import SIMHASH_BITS
+
     sums = ", ".join(
         f"SUM(CASE WHEN (hv >> {b}) & 1 = 1 THEN 1 ELSE -1 END) AS s{b}"
-        for b in range(PAYLOAD_SIMHASH_BITS)
+        for b in range(SIMHASH_BITS)
     )
     combine = " + ".join(
         f"(CASE WHEN s{b} > 0 THEN (1::BIGINT << {b}) ELSE 0 END)"
-        for b in range(PAYLOAD_SIMHASH_BITS)
+        for b in range(SIMHASH_BITS)
     )
     return f"""
 WITH base AS (
@@ -515,10 +516,13 @@ def m07_payload_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx = F.when(
         F.col("n") >= 4, F.sequence(F.lit(1), (F.col("n") - 3).cast("int"))
     ).otherwise(F.array().cast("array<int>"))
-    # Canonical portable 28-bit hash — imported lazily (dedup imports the
-    # plans package, so a module-top import would re-enter plans/__init__
-    # when multimodal loads first).
-    from european_public_data_pipeline_spark.operators.dedup import base_hash28
+    # Canonical portable 28-bit hash and d05's SimHash kernel — imported
+    # lazily (dedup imports the plans package, so a module-top import
+    # would re-enter plans/__init__ when multimodal loads first).
+    from european_public_data_pipeline_spark.operators.dedup import (
+        base_hash28,
+        simhash_pairs,
+    )
 
     grams = base.select(
         "doc_id",
@@ -528,56 +532,4 @@ def m07_payload_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         base_hash28(F.expr("substring(text, i, 4)")).alias("hv"),
     )
-    bitsums = grams.groupBy("doc_id").agg(
-        *[
-            F.sum(
-                F.when(
-                    F.shiftright(F.col("hv"), b).bitwiseAND(1) == 1, 1
-                ).otherwise(-1)
-            ).alias(f"s{b}")
-            for b in range(PAYLOAD_SIMHASH_BITS)
-        ]
-    )
-    simhash = None
-    for b in range(PAYLOAD_SIMHASH_BITS):
-        term = F.when(
-            F.col(f"s{b}") > 0, F.lit(1 << b).cast("bigint")
-        ).otherwise(F.lit(0).cast("bigint"))
-        simhash = term if simhash is None else simhash + term
-    sh = bitsums.select("doc_id", simhash.alias("simhash"))
-
-    band_width = PAYLOAD_SIMHASH_BITS // PAYLOAD_SIMHASH_BANDS
-    band_arr = F.array(
-        *[
-            F.struct(
-                F.lit(band).alias("band_id"),
-                F.shiftright(F.col("simhash"), band * band_width)
-                .bitwiseAND((1 << band_width) - 1)
-                .alias("band_val"),
-            )
-            for band in range(PAYLOAD_SIMHASH_BANDS)
-        ]
-    )
-    bands = sh.select("doc_id", "simhash", F.explode(band_arr).alias("b")).select(
-        "doc_id",
-        "simhash",
-        F.col("b.band_id").alias("band_id"),
-        F.col("b.band_val").alias("band_val"),
-    )
-    b1 = bands.select(
-        F.col("doc_id").alias("d1"), F.col("simhash").alias("sh1"),
-        "band_id", "band_val",
-    )
-    b2 = bands.select(
-        F.col("doc_id").alias("d2"), F.col("simhash").alias("sh2"),
-        "band_id", "band_val",
-    )
-    ham = F.bit_count(F.col("sh1").bitwiseXOR(F.col("sh2"))).cast("int")
-    return (
-        b1.join(b2, ["band_id", "band_val"])
-        .filter(F.col("d1") < F.col("d2"))
-        .select("d1", "d2", ham.alias("hamming"))
-        .distinct()
-        .filter(F.col("hamming") <= PAYLOAD_SIMHASH_MAX_HAMMING)
-        .orderBy("d1", "d2")
-    )
+    return simhash_pairs(grams, PAYLOAD_SIMHASH_MAX_HAMMING).orderBy("d1", "d2")

@@ -95,6 +95,9 @@ _MODIFIED_SINCE_VERDICT: tuple[str, ...] = (
     "p04_surgical_curation_report",  # its plan changes through curation_stages
     "p07_ccnet_curation_report",  # embeds d25 + perplexity_scored, rewritten r14
     "g05_dup_graph_kcore",  # builds its graph from d04's pairs, rewritten r14
+    "d14_minhash_accuracy_audit",  # verifies through _jaccard_on_pairs, no sizes relation
+    "d18_threshold_sensitivity",  # reads d03's posting-list Jaccard, no shingle self-join
+    "d23_incremental_lsh_probe",  # band_candidates: distinct before the least/greatest order
     "q132_persisted_changelog_refresh",  # its COW merge/append commits take the writer's schema
     "q133_mor_delete_scan",  # reads equality sidecars by their recorded schema
     "q134_mor_position_delete",  # reads position sidecars by the fixed (__pf, __pr) schema

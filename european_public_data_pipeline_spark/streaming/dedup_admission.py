@@ -27,10 +27,12 @@ columns: they pass both exact gates normally, and the band projection
 (``operators.dedup.sig_bands``) excludes them from near-dup pairing on
 either side — exact-only admission, never silent loss.
 
-The signature/band construction is imported from ``operators/dedup``
-(``minhash_sig`` / ``sig_bands``) — the SAME definition d04/d14/d23 and
-their oracles use, so the persisted index stays band-compatible with the
-batch operators bit-for-bit.
+The signature/band construction, the band-bucket candidate join and
+the Broder estimate are imported from ``operators/dedup``
+(``minhash_sig`` / ``sig_bands`` / ``band_candidates`` /
+``minhash_estimate``) — the SAME definitions d04/d14/d23 and their
+oracles use, so the persisted index stays band-compatible with the batch
+operators bit-for-bit.
 
 State is the admitted index: one row per admitted doc carrying its
 fingerprint and 16 minhash components — CONSTANT bytes per doc, no
@@ -72,9 +74,9 @@ from pyspark.sql import functions as F
 
 from european_public_data_pipeline_spark.operators.dedup import (
     JACCARD_THRESHOLD,
-    MINHASH_BANDS,
-    MINHASH_ROWS,
+    band_candidates,
     base_hash28,
+    minhash_estimate,
     minhash_sig,
     shingles,
     sig_bands,
@@ -85,9 +87,6 @@ from european_public_data_pipeline_spark.pipeline.manifest import (
     version_meta,
     versions,
 )
-
-_K = MINHASH_BANDS * MINHASH_ROWS
-
 
 def _fingerprint() -> F.Column:
     """d02's normalized-text md5 fingerprint."""
@@ -107,29 +106,12 @@ def _signatures(docs: DataFrame) -> DataFrame:
     return fp.join(sig, "doc_id", "left")
 
 
-def _bands(sig: DataFrame, id_alias: str) -> DataFrame:
-    """(id_alias, band_id, band_sig) — sig-less rows excluded by
-    ``sig_bands``."""
-    return sig_bands(sig).withColumnRenamed("doc_id", id_alias)
-
-
-def _renamed_sig(sig: DataFrame, id_alias: str, prefix: str) -> DataFrame:
-    """Signature columns renamed (doc_id -> id_alias, m<i> -> <prefix><i>)
-    so pair joins need no frame aliases — d04's self-join-safe pattern."""
-    return sig.select(
-        F.col("doc_id").alias(id_alias),
-        *[F.col(f"m{i}").alias(f"{prefix}{i}") for i in range(_K)],
+def _near_dups(cand: DataFrame, left: DataFrame, right: DataFrame) -> DataFrame:
+    """The candidate pairs whose signature-estimated Jaccard reaches the
+    threshold."""
+    return minhash_estimate(cand, left, right).filter(
+        F.col("est_jaccard") >= JACCARD_THRESHOLD
     )
-
-
-def _est_ge_threshold(l_prefix: str, r_prefix: str) -> F.Column:
-    """Broder estimate (mean of equal components) at/above threshold, on
-    a pair row carrying both renamed signature column sets."""
-    eq = sum(
-        F.when(F.col(f"{l_prefix}{i}") == F.col(f"{r_prefix}{i}"), 1).otherwise(0)
-        for i in range(_K)
-    )
-    return eq.cast("double") / F.lit(float(_K)) >= F.lit(JACCARD_THRESHOLD)
 
 
 def _admit_against(
@@ -160,34 +142,18 @@ def _admit_against(
     if caches is not None:
         caches.append(sig)
     # 3. within-batch near-dup (pair-dominance; module docstring).
-    b1 = _bands(sig, "d1")
-    b2 = _bands(sig, "d2")
-    cand_in = (
-        b1.join(b2, ["band_id", "band_sig"])
-        .filter(F.col("d1") < F.col("d2"))
-        .select("d1", "d2")
-        .distinct()
-    )
+    bands = sig_bands(sig)
+    cand_in = band_candidates(bands, bands).filter(F.col("d1") < F.col("d2"))
     dropped = (
-        cand_in.join(_renamed_sig(sig, "d1", "a"), "d1")
-        .join(_renamed_sig(sig, "d2", "b"), "d2")
-        .filter(_est_ge_threshold("a", "b"))
-        .select(F.col("d2").alias("doc_id"))
-        .distinct()
+        _near_dups(cand_in, sig, sig).select(F.col("d2").alias("doc_id")).distinct()
     )
     sig = sig.join(dropped, "doc_id", "left_anti")
     if state_sig is None:
         return sig
     # 4. corpus near-dup: batch-vs-corpus candidates only (d23's shape).
-    sb = _bands(sig, "d1")
-    cb = _bands(state_sig, "d2")
-    cand_x = (
-        sb.join(cb, ["band_id", "band_sig"]).select("d1", "d2").distinct()
-    )
+    cand_x = band_candidates(sig_bands(sig), sig_bands(state_sig))
     rejected = (
-        cand_x.join(_renamed_sig(sig, "d1", "a"), "d1")
-        .join(_renamed_sig(state_sig, "d2", "b"), "d2")
-        .filter(_est_ge_threshold("a", "b"))
+        _near_dups(cand_x, sig, state_sig)
         .select(F.col("d1").alias("doc_id"))
         .distinct()
     )

@@ -8,6 +8,7 @@ separation.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from european_public_data_pipeline_spark.operators.dedup import connected_components
@@ -26,6 +27,15 @@ def test_long_chain_converges(spark):
     got = _components(spark, 12, [(i, i + 1) for i in range(10)])
     assert all(got[i] == 0 for i in range(11))
     assert got[11] == 11
+
+
+def test_unconverged_propagation_raises(spark):
+    # A 12-vertex chain needs 11 propagation rounds; 5 cannot finish it,
+    # and returning the half-propagated labels would be silently wrong.
+    vertices = spark.range(12).select(F.col("id"))
+    edges = spark.createDataFrame([(i, i + 1) for i in range(11)], "src long, dst long")
+    with pytest.raises(RuntimeError, match="did not converge in 5 rounds"):
+        connected_components(vertices, edges, max_iter=5)
 
 
 def test_two_components_and_direction_independence(spark):

@@ -84,15 +84,14 @@ def test_hot_list_fanout_is_distributed(spark):
     assert biggest < total / 4
 
 
-def test_short_lists_skip_the_extra_exchange(spark):
-    """Lists at or under the chunk threshold keep the original row-local
-    path: no repartition Exchange in their plan branch."""
+def test_short_list_rides_the_single_slice_pair_repartition(spark):
+    """A list at or under the chunk size is the degenerate one-slice case:
+    its single (0, 0) slice-pair row goes through the same one slice-pair
+    repartition as a long list's (never a second exchange), and the pair
+    explosion after it yields exactly the list's pairs."""
     pairs = posting_list_pairs(_grouped(spark, [[1, 2, 3]]), chunk=64)
     plan = pairs._jdf.queryExecution().executedPlan().toString()
-    # The union's long branch is empty at runtime but present in the plan;
-    # assert the SHORT branch exists by checking results flow with the
-    # expected rows (plan-level: exactly one hashpartitioning repartition
-    # — the long branch's — never two).
+    # At most one repartition in the plan: the slice-pair one.
     assert plan.lower().count("repartitionbyexpression") <= 1
     assert sorted((r["d1"], r["d2"]) for r in pairs.collect()) == [
         (1, 2), (1, 3), (2, 3),
