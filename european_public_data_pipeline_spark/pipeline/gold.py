@@ -29,7 +29,8 @@ N executors commit through the file committer without coordination.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 
 def run_sql(spark: SparkSession, sql: str) -> DataFrame:
@@ -64,7 +65,8 @@ def load_gold(
     replaces exactly the partitions present in ``df`` (the reference's
     DELETE+INSERT at load_hicp_to_sql.py:54-62 without the DELETE).
 
-    Returns the number of rows loaded.
+    Returns the number of rows loaded, counted on the insert itself (an
+    observed metric): no second scan of ``df``.
     """
     prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
@@ -72,7 +74,10 @@ def load_gold(
         # insertInto matches columns by POSITION with partition columns
         # last, per Spark semantics — reorder explicitly.
         cols = [c for c in df.columns if c not in partition_cols] + list(partition_cols)
-        df.select(*cols).write.insertInto(table, overwrite=True)
+        rows = Observation()
+        df.select(*cols).observe(rows, F.count(F.lit(1)).alias("n")).write.insertInto(
+            table, overwrite=True
+        )
     finally:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    return df.count()
+    return rows.get["n"]

@@ -91,13 +91,21 @@ _GREEN_KEYS = ("rows_match", "schema_match", "hash_match")
 
 # The one hand-kept input: queries whose plan changed after their last green.
 _MODIFIED_SINCE_VERDICT: tuple[str, ...] = (
-    "p03_curation_report",  # embeds d04 (rewritten r14); curation_stages rebuilt as one relation
-    "p04_surgical_curation_report",  # its plan changes through curation_stages
+    "p03_curation_report",  # curation_stages as one relation; embeds d04 and d10 (JVM shingles)
+    "p04_surgical_curation_report",  # its plan changes through curation_stages and the JVM shingler
+    "p05_corpus_datacard",  # embeds d10, whose shingles are now a JVM expression
     "p07_ccnet_curation_report",  # embeds d25 + perplexity_scored, rewritten r14
-    "g05_dup_graph_kcore",  # builds its graph from d04's pairs, rewritten r14
-    "d14_minhash_accuracy_audit",  # verifies through _jaccard_on_pairs, no sizes relation
-    "d18_threshold_sensitivity",  # reads d03's posting-list Jaccard, no shingle self-join
-    "d23_incremental_lsh_probe",  # band_candidates: distinct before the least/greatest order
+    "g05_dup_graph_kcore",  # builds its graph from d04's pairs, rewritten r14, now JVM-shingled
+    "d03_ngram_jaccard_pairs",  # shingles are a split/arrays_zip/explode expression, no mapInPandas
+    "d04_minhash_lsh_pairs",  # shingles are a JVM expression
+    "d07_ml_minhash_lsh",  # its counts run over JVM shingles (the returned plan is a local row)
+    "d10_contamination_check",  # 5-gram shingles are a JVM expression
+    "d13_shingle_novelty",  # shingles are a JVM expression
+    "d14_minhash_accuracy_audit",  # verifies through _jaccard_on_pairs; JVM shingles
+    "d15_cross_source_duplication",  # shingles are a JVM expression
+    "d18_threshold_sensitivity",  # reads d03's posting-list Jaccard; JVM shingles
+    "d22_lsh_recall_audit",  # embeds d03 and d04, both JVM-shingled
+    "d23_incremental_lsh_probe",  # distinct before the least/greatest order; JVM shingles
     "q132_persisted_changelog_refresh",  # its COW merge/append commits take the writer's schema
     "q133_mor_delete_scan",  # reads equality sidecars by their recorded schema
     "q134_mor_position_delete",  # reads position sidecars by the fixed (__pf, __pr) schema

@@ -13,6 +13,12 @@ scales:
   oracle and are stable across machines.
 - Arrow enabled: every pandas interchange (createDataFrame, toPandas,
   pandas UDFs) goes through columnar batches instead of pickled rows.
+- PySpark's DataFrame call-site capture off: with it on, every ``F.col``
+  and every ``Column`` method records its Python call site in the JVM
+  (extra py4j round trips and an ``import IPython`` attempt per call):
+  building the five perfbench headline plans took 0.49 s with it on and
+  0.34 s off (median of 8, 4-core host). The trade-off: Spark error
+  messages lose the Python call site in their DataFrame query context.
 """
 
 from __future__ import annotations
@@ -70,6 +76,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # The generated-code cache defaults to 100 classes; a session that
         # cycles through this engine's full query surface holds far more
         # distinct codegen units, so the default thrashes and every re-plan

@@ -59,8 +59,8 @@ _SCATTER_KEYS = {
 # q18 2.2x worse), while queries whose pre-exchange stage does heavy
 # per-row work win big (q01 0.57x, d03 0.58x, q04 0.69x, d25 0.76x).
 # Callers ask for it exactly where the serialized first stage is the
-# measured bottleneck: decimal aggregation over lineitem, tokenize/md5/
-# mapInPandas kernels over documents.
+# measured bottleneck: decimal aggregation over lineitem, tokenize/
+# shingle/md5 kernels over documents.
 _SCATTER_MAX_BYTES = 256 * 1024 * 1024
 _input_bytes_memo: dict[str, int | None] = {}
 

@@ -66,3 +66,7 @@ def test_sql_surface_over_gold(spark, gold_table):
     ).collect()
     assert mom[0]["mom"] is None
     assert mom[1]["mom"] == pytest.approx(1 / 101.0)
+
+
+def test_empty_load_counts_zero(spark, gold_table):
+    assert load_gold(spark, series(spark, "LU").limit(0), gold_table, ["geo"]) == 0

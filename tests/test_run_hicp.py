@@ -222,3 +222,27 @@ def test_silver_stage_costs_only_its_write(spark, tmp_path, spark_jobs):
     inferred = spark.read.parquet(path)
     assert silver.schema.json() == inferred.schema.json()
     assert sorted(map(str, silver.collect())) == sorted(map(str, inferred.collect()))
+
+
+def test_gold_stage_costs_only_its_insert(spark, tmp_path, spark_jobs):
+    """gold_load counts the loaded rows on the insert itself: the stage
+    runs the insert's jobs and no second scan of silver."""
+    from european_public_data_pipeline_spark.pipeline.run_hicp import (
+        bronze_ingest,
+        gold_load,
+        latest_payload_per_partition,
+        silver_transform,
+    )
+
+    series = [{"geo": g, "coicop": c, "unit": "I15"} for g in ("DE", "FR") for c in ("CP00", "CP01")]
+    bronze_ingest(str(tmp_path), "prc_hicp_midx", series, transport=_scrambled_transport)
+    latest = latest_payload_per_partition(str(tmp_path), "prc_hicp_midx")
+    silver = silver_transform(spark, latest, str(tmp_path / "silver"))
+    spark.sql("DROP TABLE IF EXISTS gold_hicp_jobs")
+    try:
+        with spark_jobs() as jobs:
+            n = gold_load(spark, silver, "gold_hicp_jobs", location=str(tmp_path / "gold"))
+        assert n == len(series) * 6
+        assert [j.name.split(" at ")[0] for j in jobs] == ["insertInto"], jobs
+    finally:
+        spark.sql("DROP TABLE IF EXISTS gold_hicp_jobs")

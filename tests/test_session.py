@@ -1,4 +1,5 @@
-"""The local driver-heap default: min(16g, half of physical RAM)."""
+"""Session defaults: the local driver-heap default, min(16g, half of
+physical RAM), and PySpark's per-call call-site capture switched off."""
 
 from __future__ import annotations
 
@@ -20,3 +21,7 @@ def test_large_host_is_capped_at_16g():
 def test_unknown_ram_keeps_16g():
     assert default_driver_memory(None) == "16384m"
     assert default_driver_memory(0) == "16384m"
+
+
+def test_dataframe_call_site_capture_is_off(spark):
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
