@@ -49,6 +49,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from european_public_data_pipeline_spark.pipeline.fs_util import hadoop_fs
+from european_public_data_pipeline_spark.session import local_frame
 
 
 def _list_parquet(jvm, fs, d: str) -> list[str]:
@@ -298,9 +299,7 @@ def _read_files_live(
         # zero rows, so no physical identity exists to capture).
         sj = m.get("schema")
         if sj:
-            base = spark.createDataFrame(
-                [], StructType.fromJson(json.loads(sj))
-            )
+            base = local_frame(spark, [], StructType.fromJson(json.loads(sj)))
         elif m["files"]:
             base = _read_files(spark, m, [m["files"][0]]).where(F.lit(False))
         else:
@@ -1616,7 +1615,7 @@ def read_appended(
     if out is None:
         # Replace-only (or empty) chain: nothing appended — an empty
         # result AT the head schema.
-        return spark.createDataFrame([], head_schema)
+        return local_frame(spark, [], head_schema)
     return out
 
 
@@ -1900,13 +1899,13 @@ def table_history(spark: SparkSession, table_path: str) -> DataFrame:
     HISTORY shape): one row per committed version with row count, file
     count, publish time, and whether LATEST points at it. KB-sized
     regardless of table size — manifests, not data, are read."""
-    schema = (
+    schema = StructType.fromDDL(
         "version int, row_count long, n_files int, "
         "published_at double, is_current boolean"
     )
     vs = versions(spark, table_path)
     if not vs:
-        return spark.createDataFrame([], schema)  # no commits yet
+        return local_frame(spark, [], schema)  # no commits yet
     cur = current_version(spark, table_path)
     rows = []
     for v in vs:
@@ -1914,7 +1913,7 @@ def table_history(spark: SparkSession, table_path: str) -> DataFrame:
         rows.append(
             (v, m["row_count"], len(m["files"]), float(m["published_at"]), v == cur)
         )
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 def _referenced_files(

@@ -81,6 +81,7 @@ from european_public_data_pipeline_spark.pipeline.manifest import (
     refuse_null_keys,
     versions,
 )
+from european_public_data_pipeline_spark.session import local_frame
 
 # Sidecars are broadcast on EVERY read until the next compact (see
 # _read_files_live) — both MOR writers bound them to this many rows.
@@ -564,7 +565,8 @@ def upsert_rows_mor(
             f"{table_path}/deletes/v{n_next:08d}-{uuid.uuid4().hex[:12]}"
         )
         key_schema = updates.select(*keys).schema
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [tuple(r[k] for k in keys) for r in matched_key_rows],
             key_schema,
         ).coalesce(1).write.mode("overwrite").parquet(sidecar_dir)

@@ -77,6 +77,7 @@ from european_public_data_pipeline_spark.pipeline.manifest import (
     version_meta,
     versions,
 )
+from european_public_data_pipeline_spark.session import local_frame
 
 _META_KEY = "applied_src_version"
 _META_FILES_MD5 = "applied_src_files_md5"
@@ -448,7 +449,8 @@ def _chain_changelog(
             return None  # legacy schema-less head: no frame to derive
         from pyspark.sql.types import IntegerType, StructField
 
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [],
             StructType(
                 list(head_schema.fields)

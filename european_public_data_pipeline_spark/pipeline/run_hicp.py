@@ -7,9 +7,10 @@ Reference lifecycle -> here:
 1. Bronze (`src.ingestion.ingestion_hicp_raw:main`) -> ``bronze_ingest``:
    fetch with param fallback, land enveloped JSON under a partitioned path.
 2. Silver (`src.ingestion.process_hicp_silver:main`) -> ``silver_transform``:
-   distributed JSON-stat parse of the latest landed payload per series,
-   period-code parse, canonical projection, lineage columns, one
-   ``(coicop, time)``-sorted parquet file per geo partition.
+   distributed JSON-stat parse of the latest landed payload per series
+   (Catalyst expressions over a ``binaryFile`` scan), period-code parse,
+   canonical projection, lineage columns, one ``(coicop, time)``-sorted
+   parquet file per geo partition.
 3. Quality (`src.quality.check_hicp_quality:main`) -> ``quality_stage``:
    the constraint suite over the silver table; report returned as a
    DataFrame (the reference's JSON report blob).
@@ -21,7 +22,9 @@ The reference crosses a process boundary between every stage and re-reads
 everything from blob storage; here the stages compose in one session with
 files only where durability matters (bronze landing, silver table) — but
 each stage still works standalone on the at-rest artifacts, so the
-operational model (re-run any stage independently) is preserved.
+operational model (re-run any stage independently) is preserved. No stage
+starts a Python worker: the parse, the checks and the quality report's
+rows all stay in the JVM.
 """
 
 from __future__ import annotations

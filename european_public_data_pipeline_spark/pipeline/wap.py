@@ -39,6 +39,7 @@ from european_public_data_pipeline_spark.quality.checks import (
     CheckSuite,
     gate,
 )
+from european_public_data_pipeline_spark.session import local_frame
 
 
 def stage_with_audit(df: DataFrame, suite: CheckSuite, staging: str) -> DataFrame:
@@ -66,9 +67,7 @@ def stage_with_audit(df: DataFrame, suite: CheckSuite, staging: str) -> DataFram
     if suite._expected_columns is not None:
         missing = [c for c in suite._expected_columns if c not in df.columns]
         parts.append(
-            spark.createDataFrame(
-                [("columns_present", not missing, len(missing))], RESULT_SCHEMA
-            )
+            local_frame(spark, [("columns_present", not missing, len(missing))], RESULT_SCHEMA)
         )
 
     # Row-level checks ride the write job as observed metrics.
@@ -90,7 +89,8 @@ def stage_with_audit(df: DataFrame, suite: CheckSuite, staging: str) -> DataFram
     if obs is not None:
         metrics = obs.get
         parts.append(
-            spark.createDataFrame(
+            local_frame(
+                spark,
                 [
                     (name, metrics[f"v{i}"] == 0, metrics[f"v{i}"])
                     for i, (name, _) in enumerate(suite._scalar_checks)

@@ -96,9 +96,21 @@ _MODIFIED_SINCE_VERDICT: tuple[str, ...] = (
     "p05_corpus_datacard",  # embeds d10, whose shingles are now a JVM expression
     "p07_ccnet_curation_report",  # embeds d25 + perplexity_scored, rewritten r14
     "g05_dup_graph_kcore",  # builds its graph from d04's pairs, rewritten r14, now JVM-shingled
+    "p01_quality_report",  # its columns_present row is a LocalRelation, not a Python RDD
+    "p06_constrained_curation_report",  # tokenizes on WORD_SPLIT (RE2's whitespace)
+    "d02_exact_dedup_fingerprint",  # fingerprint splits on WORD_SPLIT, not Java's \s
+    "d05_simhash_pairs",  # tokenizes on WORD_SPLIT
+    "d09_incremental_dedup",  # fingerprint splits on WORD_SPLIT
+    "d11_chunk_containment",  # tokenizes on WORD_SPLIT
+    "d16_top_repeated_chunks",  # tokenizes on WORD_SPLIT
+    "d19_span_contamination",  # tokenizes on WORD_SPLIT
+    "d21_cdc_chunk_dedup",  # tokenizes on WORD_SPLIT
+    "d25_repeated_span_removal",  # tokenizes on WORD_SPLIT
+    "d26_span_excision_apply",  # tokenizes on WORD_SPLIT
+    "d28_incremental_gram_index",  # tokenizes on WORD_SPLIT
     "d03_ngram_jaccard_pairs",  # shingles are a split/arrays_zip/explode expression, no mapInPandas
     "d04_minhash_lsh_pairs",  # shingles are a JVM expression
-    "d07_ml_minhash_lsh",  # its counts run over JVM shingles (the returned plan is a local row)
+    "d07_ml_minhash_lsh",  # one lazy row: a full outer join of d03's and the ML pair sets
     "d10_contamination_check",  # 5-gram shingles are a JVM expression
     "d13_shingle_novelty",  # shingles are a JVM expression
     "d14_minhash_accuracy_audit",  # verifies through _jaccard_on_pairs; JVM shingles

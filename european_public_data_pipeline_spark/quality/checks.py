@@ -15,7 +15,8 @@ Execution shape (scale notes):
   (the reference makes one pass per check).
 - Key-uniqueness and per-series continuity each need one keyed aggregation
   (map-side combined, shuffle on the key).
-- Schema presence is metadata-only: no job at all.
+- Schema presence is metadata-only: no job at all, and its row is a
+  ``LocalTableScan`` (no Python worker).
 - The result is a tiny DataFrame (rows == checks), cheap to collect,
   union, or write as a report table.
 """
@@ -27,6 +28,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from european_public_data_pipeline_spark.session import local_frame
 
 RESULT_SCHEMA = T.StructType(
     [
@@ -135,8 +138,8 @@ class CheckSuite:
         if self._expected_columns is not None:
             missing = [c for c in self._expected_columns if c not in self.df.columns]
             parts.append(
-                spark.createDataFrame(
-                    [("columns_present", not missing, len(missing))], RESULT_SCHEMA
+                local_frame(
+                    spark, [("columns_present", not missing, len(missing))], RESULT_SCHEMA
                 )
             )
 
@@ -198,7 +201,7 @@ class CheckSuite:
             parts.append(gaps)
 
         if not parts:
-            return spark.createDataFrame([], RESULT_SCHEMA)
+            return local_frame(spark, [], RESULT_SCHEMA)
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)

@@ -24,8 +24,10 @@ scales:
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 DEFAULT_APP_NAME = "european_public_data_pipeline_spark"
 MAX_DRIVER_MEM_MB = 16 * 1024
@@ -101,3 +103,24 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows: Iterable[tuple], schema: StructType) -> DataFrame:
+    """``rows`` (tuples in ``schema``'s field order, with the Python values
+    ``collect()`` returns) as a DataFrame planned as a ``LocalTableScan``.
+
+    ``createDataFrame`` over a Python list plans a Python-RDD scan
+    (``Scan ExistingRDD``), and its first action starts the PySpark daemon
+    and its workers, even for one row or none. An Arrow table goes to the
+    JVM whole and starts no Python process.
+    """
+    from pyspark.sql.conversion import LocalDataToArrowConversion
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    rows = list(rows)
+    table = (
+        LocalDataToArrowConversion.convert(rows, schema, False)
+        if rows
+        else to_arrow_schema(schema).empty_table()
+    )
+    return spark.createDataFrame(table, schema)

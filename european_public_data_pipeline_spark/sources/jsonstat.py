@@ -25,14 +25,21 @@ Spark-first architecture — two scale paths, chosen by data shape:
 2. ``read_jsonstat_files``: MANY payload files -> DataFrame. Real Eurostat
    volume is thousands of small-to-medium cubes, so parallelism belongs
    ACROSS payloads: a ``binaryFile`` scan distributes whole payloads to
-   executors and ``mapInPandas`` parses each one with plain ``json`` —
-   one task per file, no shuffle, lineage column ``src_path`` for free
-   (the reference's ``raw_blob`` column, process_hicp_silver.py:139).
+   executors and Catalyst expressions parse each one — ``from_json``,
+   per-payload codes/strides/checks, then ``inline`` over the cells — so
+   no Python worker starts. One task per file, no shuffle, lineage column
+   ``src_path`` for free (the reference's ``raw_blob`` column,
+   process_hicp_silver.py:139). The expressions are built as SQL text:
+   through the Column API their py4j calls alone took 0.67 s per call.
+   As ``selectExpr`` text, on 64 enveloped payloads of 96 months (noop
+   sink, ``local[2]``, 4-core host, median of 7 warm calls, 5 alternating
+   process pairs) they build in 0.22–0.24 s and run in 0.29–0.32 s; the
+   pandas-UDF parser they replaced built in 0.09–0.12 s and ran in
+   0.37–0.42 s, and kept Python workers resident beside the JVM.
 """
 
 from __future__ import annotations
 
-import json
 import math
 from collections.abc import Iterable, Iterator
 from typing import Any
@@ -198,6 +205,118 @@ def _iter_rows(
         yield coords + (values.get(i),)
 
 
+def _ident(name: str) -> str:
+    """``name`` as a backticked SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _literal(text: str) -> str:
+    """``text`` as a SQL string literal, spelled as UTF-8 hex so that no
+    quote, backslash or parser setting changes what it reads."""
+    return f"CAST(X'{text.encode().hex()}' AS STRING)"
+
+
+def _first(array: str, pred: str) -> str:
+    """The first element of ``array`` that the lambda ``pred`` holds for, or NULL."""
+    return f"get(filter({array}, {pred}), 0)"
+
+
+# One JSON parse per file reads the payload and, for the bronze layer's
+# {"meta": ..., "data": payload} envelope, the wrapped payload. A nested
+# value kept in a STRING field comes back as its JSON text, re-serialized
+# by Spark's JSON reader (no leading whitespace), so a list and a dict
+# tell apart by their first character; each form has its own from_json.
+_PAYLOAD = (
+    "id: ARRAY<STRING>, size: ARRAY<BIGINT>, "
+    "dimension: MAP<STRING, STRUCT<category: STRUCT<index: STRING, label: STRING>>>, "
+    "value: STRING"
+)
+_DOC_SCHEMA = f"STRUCT<{_PAYLOAD}, data: STRUCT<{_PAYLOAD}>>"
+
+# decode_category over a dimension spec ``s``: a dict index sorted by
+# position (array_sort is stable, as sorted() is), a list index as it is,
+# else the label's keys in document order; NULL when there are none.
+_CODES = (
+    "CASE WHEN left(s.category.index, 1) = '[' "
+    "THEN from_json(s.category.index, 'ARRAY<STRING>') "
+    "WHEN left(s.category.index, 1) = '{' THEN transform(array_sort("
+    "map_entries(from_json(s.category.index, 'MAP<STRING, DOUBLE>')), "
+    "(a, b) -> CASE WHEN a.value < b.value THEN -1 WHEN a.value > b.value THEN 1 "
+    "ELSE 0 END), e -> e.key) "
+    "WHEN s.category.index IS NULL AND size(json_object_keys(s.category.label)) > 0 "
+    "THEN json_object_keys(s.category.label) END"
+)
+
+# parse_payload's first error, in its order and with its wording, or NULL.
+# coalesce stops at the first message; concat is NULL while the element
+# it names is. Values are try_cast, then checked here: what float() or
+# int() would refuse fails the query whatever the session's ANSI setting.
+# A scalar ``value`` is named by the type its text spells (a JSON string
+# "1.5" reads as float).
+_ERROR = ", ".join(
+    [
+        "CASE WHEN _ids IS NULL THEN 'JSON-stat payload missing required key ''id'''"
+        " WHEN _sizes IS NULL THEN 'JSON-stat payload missing required key ''size'''"
+        " WHEN _no_dimension"
+        " THEN 'JSON-stat payload missing required key ''dimension'''"
+        " WHEN _value IS NULL THEN 'JSON-stat payload missing required key ''value''' END",
+        "CASE WHEN size(_ids) != size(_sizes) "
+        "THEN concat('id/size length mismatch: ', size(_ids), ' vs ', size(_sizes)) END",
+        _first(
+            "transform(_ids, (d, j) -> CASE WHEN get(_specs, j) IS NULL "
+            "THEN concat('dimension ''', d, ''' declared in id but missing') "
+            "WHEN get(_cats, j) IS NULL "
+            "THEN 'dimension has neither category.index nor category.label' "
+            "WHEN size(get(_cats, j)) != get(_sizes, j) "
+            "THEN concat('dimension ''', d, ''': category has ', size(get(_cats, j)), "
+            "' codes, size says ', get(_sizes, j)) END)",
+            "m -> m IS NOT NULL",
+        ),
+        "CASE WHEN _dense IS NOT NULL AND size(_dense) != _cells "
+        "THEN concat('value length ', size(_dense), ' != prod(size) ', _cells) END",
+        "CASE WHEN _dense IS NULL AND _sparse IS NULL "
+        "THEN concat('value must be list or dict, got ', "
+        "CASE WHEN _value IN ('true', 'false') THEN 'bool' "
+        "WHEN _value RLIKE '^-?[0-9]+$' THEN 'int' "
+        "WHEN try_cast(_value AS DOUBLE) IS NOT NULL THEN 'float' ELSE 'str' END) END",
+        "concat('invalid literal for int() with base 10: ''', "
+        f"{_first('_sparse', 'e -> e.i IS NULL')}.k, '''')",
+        "concat('sparse value index ', "
+        f"{_first('_sparse', 'e -> e.i < 0 OR e.i >= _cells')}.i, "
+        "' out of range [0,', _cells, ')')",
+        "concat('could not convert string to float: ''', "
+        f"{_first('_sparse', 'e -> e.s IS NOT NULL AND e.v IS NULL')}.s, '''')",
+        "concat('could not convert string to float: ''', "
+        f"{_first('_dense_raw', '(s, j) -> s IS NOT NULL AND _dense[j] IS NULL')}, '''')",
+    ]
+)
+
+# Per declared dimension ``d``: its codes, size and stride in the payload,
+# NULL when the payload lacks it. None of these fails on a malformed
+# payload: _error reports that.
+_DIM = (
+    "transform(transform({names}, d -> CAST(array_position(_ids, d) AS INT)), "
+    "j -> CASE WHEN j > 0 THEN named_struct("
+    "'codes', get(_cats, j - 1), "
+    "'size', get(_sizes, j - 1), "
+    "'stride', aggregate(slice(_sizes, j + 1, greatest(size(_sizes) - j, 0)), "
+    "1L, (a, n) -> a * n)) END)"
+)
+
+# (flat index, value) of every cell. Sparse: the present cells (a repeated
+# index keeps its last value, as parse_payload's dict does; _sorted is a
+# stable sort by index), then every other index with a NULL value.
+_CELL_VALUES = (
+    "CASE WHEN _dense IS NOT NULL "
+    "THEN transform(_dense, (v, i) -> struct(CAST(i AS BIGINT) AS i, v AS v)) "
+    "ELSE concat("
+    "transform(filter(_sorted, (e, j) -> coalesce(get(_sorted, j + 1).i != e.i, true)), "
+    "e -> struct(e.i AS i, e.v AS v)), "
+    "transform(array_except(sequence(0L, _cells - 1), transform(_sparse, e -> e.i)), "
+    "i -> struct(i AS i, CAST(NULL AS DOUBLE) AS v))) END"
+)
+
+
 def read_jsonstat_files(
     spark: SparkSession,
     path: str | list[str],
@@ -211,14 +330,16 @@ def read_jsonstat_files(
     extra dimensions keep them collapsed into the cartesian expansion but
     the extra codes are not projected (mirrors the presence-tolerant
     projection at process_hicp_silver.py:115).
+
+    The parse is Catalyst expressions over a ``binaryFile`` scan and
+    starts no Python worker: one ``from_json`` per file; then, once per
+    payload, every ``parse_payload`` check and the codes, size and stride
+    of each declared dimension; then ``inline`` over one small struct per
+    cell. The rows equal ``_iter_rows(*parse_payload(...))``, and a
+    malformed payload fails the query with ``parse_payload``'s message.
+    The expressions are ``selectExpr`` text: built through the Column API
+    they spent 0.67 s in py4j calls on every call (4-core host).
     """
-    schema = T.StructType(
-        [T.StructField(d, T.StringType(), True) for d in dims]
-        + [
-            T.StructField(value_column, T.DoubleType(), True),
-            T.StructField("src_path", T.StringType(), True),
-        ]
-    )
     paths = [path] if isinstance(path, str) else list(path)
     # The caller names the payloads (the bronze stage just landed them),
     # so list them on the driver: past Spark's parallel-discovery
@@ -230,27 +351,67 @@ def read_jsonstat_files(
     threshold = max(len(paths), int(spark.conf.get(_DISCOVERY_THRESHOLD)))
     spark.conf.set(_DISCOVERY_THRESHOLD, str(threshold))
     try:
-        files = spark.read.format("binaryFile").load(paths).select("path", "content")
+        files = spark.read.format("binaryFile").load(paths)
     finally:
         if prev is None:
             spark.conf.unset(_DISCOVERY_THRESHOLD)
         else:
             spark.conf.set(_DISCOVERY_THRESHOLD, prev)
 
-    def parse_batch(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in batches:
-            out: dict[str, list] = {c: [] for c in schema.fieldNames()}
-            for file_path, content in zip(pdf["path"], pdf["content"]):
-                payload = json.loads(bytes(content).decode("utf-8"))
-                p_dims, cats, vals, n_cells = parse_payload(payload)
-                dim_pos = {d: j for j, d in enumerate(p_dims)}
-                for row in _iter_rows(p_dims, cats, vals, n_cells):
-                    for d in dims:
-                        out[d].append(row[dim_pos[d]] if d in dim_pos else None)
-                    out[value_column].append(row[-1])
-                    out["src_path"].append(file_path)
-            yield pd.DataFrame(out)
-
-    return files.mapInPandas(parse_batch, schema=schema)
+    names = f"array({', '.join(_literal(d) for d in dims)})"
+    coords = [
+        f"element_at(_dims[{k}].codes, CAST((c.i DIV _dims[{k}].stride) % _dims[{k}].size "
+        f"AS INT) + 1) AS {_ident(d)}"
+        for k, d in enumerate(dims)
+    ]
+    cell = f"struct({', '.join(coords)}, c.v AS {_ident(value_column)})"
+    return (
+        files.selectExpr(
+            "path AS src_path",
+            f"from_json(CAST(content AS STRING), '{_DOC_SCHEMA}') AS _e",
+        )
+        .selectExpr(
+            "src_path",
+            "CASE WHEN _e.id IS NULL AND _e.data IS NOT NULL THEN _e.data "
+            "ELSE struct(_e.id, _e.size, _e.dimension, _e.value) END AS _p",
+        )
+        .selectExpr(
+            "src_path",
+            "_p.id AS _ids",
+            "_p.size AS _sizes",
+            "_p.dimension IS NULL AS _no_dimension",
+            "transform(_p.id, d -> try_element_at(_p.dimension, d)) AS _specs",
+            "_p.value AS _value",
+            "CASE WHEN left(_p.value, 1) = '[' "
+            "THEN from_json(_p.value, 'ARRAY<STRING>') END AS _dense_raw",
+            "CASE WHEN left(_p.value, 1) = '{' "
+            "THEN map_entries(from_json(_p.value, 'MAP<STRING, STRING>')) END AS _sparse_raw",
+        )
+        .selectExpr(
+            "*",
+            f"transform(_specs, s -> {_CODES}) AS _cats",
+            "CASE WHEN size(_sizes) = 0 THEN 0L "
+            "ELSE aggregate(_sizes, 1L, (a, n) -> a * n) END AS _cells",
+            "transform(_dense_raw, s -> try_cast(s AS DOUBLE)) AS _dense",
+            "transform(_sparse_raw, e -> struct(try_cast(e.key AS BIGINT) AS i, "
+            "try_cast(e.value AS DOUBLE) AS v, e.key AS k, e.value AS s)) AS _sparse",
+        )
+        .selectExpr(
+            "src_path",
+            "_cells",
+            "_dense",
+            "_sparse",
+            f"coalesce({_ERROR}) AS _error",
+            f"{_DIM.format(names=names)} AS _dims",
+            # A bad key sorts as -1; _error reports it.
+            "array_sort(_sparse, (a, b) -> CASE WHEN coalesce(a.i, -1) < coalesce(b.i, -1) "
+            "THEN -1 WHEN coalesce(a.i, -1) > coalesce(b.i, -1) THEN 1 ELSE 0 END) AS _sorted",
+        )
+        # The cells come from the checked payload, so no column pruning
+        # drops a check; sequence(0, -1) would count down, hence _cells > 0.
+        .selectExpr(
+            "inline(CASE WHEN _error IS NOT NULL THEN raise_error(_error) "
+            f"WHEN _cells > 0 THEN transform({_CELL_VALUES}, c -> {cell}) END)",
+            "src_path",
+        )
+    )

@@ -74,6 +74,7 @@ from pyspark.sql import functions as F
 
 from european_public_data_pipeline_spark.operators.dedup import (
     JACCARD_THRESHOLD,
+    WORD_SPLIT,
     band_candidates,
     base_hash28,
     minhash_estimate,
@@ -91,7 +92,7 @@ from european_public_data_pipeline_spark.pipeline.manifest import (
 def _fingerprint() -> F.Column:
     """d02's normalized-text md5 fingerprint."""
     return F.md5(
-        F.array_join(F.split(F.trim(F.lower(F.col("text"))), r"\s+"), " ")
+        F.array_join(F.split(F.trim(F.lower(F.col("text"))), WORD_SPLIT), " ")
     )
 
 

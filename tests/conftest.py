@@ -74,7 +74,7 @@ SLOW_TESTS: dict[str, set[str]] = {
         "test_time_travel_shows_admission_history",
     },
     "test_jsonstat_datasource.py": {
-        "test_matches_mapinpandas_reader",
+        "test_matches_read_jsonstat_files",
     },
     "test_manifest.py": {
         "test_all_null_zone_is_unmatchable",

@@ -8,11 +8,13 @@ cartesian order, envelope unwrap, corrupt payloads.
 from __future__ import annotations
 
 import json
+from collections import Counter
 
 import pytest
 
 from european_public_data_pipeline_spark.sources.jsonstat import (
     JsonStatError,
+    _iter_rows,
     jsonstat_to_dataframe,
     parse_payload,
     read_jsonstat_files,
@@ -254,3 +256,147 @@ def test_discovery_threshold_restored_when_load_fails(spark, tmp_path):
             spark.conf.unset(_DISCOVERY)
         else:
             spark.conf.set(_DISCOVERY, before)
+
+
+# --- read_jsonstat_files equals the Python decoder ---------------------------
+
+_DIMS = ("freq", "unit", "coicop", "geo", "time")
+
+
+def _decoded(texts: dict[str, str], dims: tuple[str, ...]) -> Counter:
+    """``parse_payload`` + ``_iter_rows`` over the files, projected onto
+    ``dims`` the way the reader is documented to (NULL for an absent one)."""
+    out: Counter = Counter()
+    for name, text in texts.items():
+        p_dims, cats, vals, n = parse_payload(json.loads(text))
+        pos = {d: j for j, d in enumerate(p_dims)}
+        for row in _iter_rows(p_dims, cats, vals, n):
+            coords = tuple(row[pos[d]] if d in pos else None for d in dims)
+            out[coords + (row[-1], name)] += 1
+    return out
+
+
+def _read(spark, tmp_path, texts: dict[str, str], dims=_DIMS):
+    for name, text in texts.items():
+        (tmp_path / name).write_text(text)
+    return read_jsonstat_files(spark, [str(tmp_path / n) for n in texts], dims)
+
+
+def _parity_fixtures() -> dict[str, str]:
+    unordered = base_payload()
+    unordered["dimension"]["time"]["category"]["index"] = {
+        "2024M04": 3, "2024M01": 0, "2024M03": 2, "2024M02": 1,
+    }
+    listed = base_payload()
+    listed["dimension"]["time"]["category"]["index"] = ["2024M03", "2024M01", "2024M02", "2024M04"]
+    label_only = base_payload()
+    label_only["size"] = [1, 1, 1, 1, 3]
+    label_only["dimension"]["time"]["category"] = {
+        "label": {"2024M03": "March", "2024M01": "January", "2024M02": "February"}
+    }
+    label_only["value"] = [1.5, 2.5, 3.5]
+    cartesian = {
+        "id": ["geo", "time"],
+        "size": [2, 3],
+        "dimension": {
+            "geo": {"category": {"index": {"LU": 0, "DE": 1}}},
+            "time": {"category": {"index": {"T1": 0, "T2": 1, "T3": 2}}},
+        },
+        "value": [1.0, 2.0, 3.0, 4.0, 5.0, 6.0],
+    }
+    # freq is declared by the reader but absent here; extra is not declared.
+    absent_and_extra = {
+        "id": ["unit", "extra", "coicop", "geo", "time"],
+        "size": [1, 2, 1, 1, 2],
+        "dimension": {
+            "unit": {"category": {"index": {"I15": 0}}},
+            "extra": {"category": {"index": ["X1", "X0"]}},
+            "coicop": {"category": {"index": {"CP00": 0}}},
+            "geo": {"category": {"index": {"FR": 0}}},
+            "time": {"category": {"index": {"2024M01": 0, "2024M02": 1}}},
+        },
+        "value": {"0": 0.1, "3": 1e-7},
+    }
+    envelope = {"meta": {"dataset": "prc_hicp_midx"}, "data": base_payload()}
+    # Integer-valued JSON numbers, a float needing every bit, and sparse
+    # keys with a leading zero ("1" and "01" name one cell: the last wins).
+    integers = base_payload()
+    integers["value"] = {"00": 100, "01": 7, "3": 12345678901234567890, "1": 2.675}
+    return {
+        "unordered.json": json.dumps(unordered),
+        "listed.json": json.dumps(listed),
+        "label_only.json": json.dumps(label_only),
+        "cartesian.json": json.dumps(cartesian),
+        "absent_and_extra.json": json.dumps(absent_and_extra),
+        "envelope.json": json.dumps(envelope),
+        "integers.json": json.dumps(integers),
+        "whitespace.json": (
+            '{"id": ["geo", "time"], "size": [1, 2], "dimension": {"geo": '
+            '{"category": {"index":  \n\t {"LU": 0}}}, "time": {"category": '
+            '{"index": \r\n  ["T2", "T1"]}}}, "value": \n  [ 1.25 ,\t null ]}'
+        ),
+    }
+
+
+def test_read_jsonstat_files_equals_the_python_decoder(spark, tmp_path):
+    texts = _parity_fixtures()
+    got = Counter(
+        tuple(r[:-1]) + (r["src_path"].rsplit("/", 1)[-1],)
+        for r in _read(spark, tmp_path, texts).collect()
+    )
+    want = _decoded(texts, _DIMS)
+    assert got == want
+    # The fixtures reach what they are for: label keys in document order,
+    # the absent dimension as NULL, the repeated sparse index once.
+    assert ("M", "I15", "CP00", "LU", "2024M03", 1.5, "label_only.json") in got
+    assert (None, "I15", "CP00", "FR", "2024M02", 1e-7, "absent_and_extra.json") in got
+    assert got[("M", "I15", "CP00", "LU", "2024M02", 2.675, "integers.json")] == 1
+    assert sum(got.values()) == 4 * 4 + 3 + 6 + 4 + 2
+
+
+def _malformed() -> list[dict]:
+    cases = []
+    for key in ("id", "size", "dimension", "value"):
+        p = base_payload()
+        del p[key]
+        cases.append(p)
+    p = base_payload()
+    p["size"] = [1, 1, 1, 4]
+    cases.append(p)  # id/size length mismatch
+    p = base_payload()
+    del p["dimension"]["geo"]
+    cases.append(p)  # declared in id, missing from dimension
+    p = base_payload()
+    p["dimension"]["unit"] = {"category": {}}
+    cases.append(p)  # neither index nor label
+    p = base_payload()
+    p["size"] = [1, 1, 1, 1, 5]
+    p["value"] = [1.0] * 5
+    cases.append(p)  # code count differs from size
+    p = base_payload()
+    p["value"] = 101.2
+    cases.append(p)  # neither list nor dict
+    p = base_payload()
+    p["value"] = [1.0, 2.0]
+    cases.append(p)  # dense length differs from prod(size)
+    p = base_payload()
+    p["value"] = {"0": 1.0, "4": 2.0}
+    cases.append(p)  # sparse index out of range
+    p = base_payload()
+    p["value"] = [1.0, "n/a", 3.0, 4.0]
+    cases.append(p)  # non-numeric dense value
+    p = base_payload()
+    p["value"] = {"0": 1.0, "2": "n/a"}
+    cases.append(p)  # non-numeric sparse value
+    return cases
+
+
+@pytest.mark.parametrize("case", range(len(_malformed())))
+def test_read_jsonstat_files_keeps_every_check(spark, tmp_path, case):
+    payload = _malformed()[case]
+    with pytest.raises((JsonStatError, ValueError)) as decoder_error:
+        parse_payload(payload)
+    df = _read(spark, tmp_path, {"bad.json": json.dumps(payload)})
+    with pytest.raises(Exception) as reader_error:
+        df.count()
+    assert str(decoder_error.value) in str(reader_error.value)

@@ -31,7 +31,7 @@ def _registered(spark):
     return spark
 
 
-def test_matches_mapinpandas_reader(spark, landing):
+def test_matches_read_jsonstat_files(spark, landing):
     _registered(spark)
     dims = ("freq", "unit", "coicop", "geo", "time")
     via_ds = (

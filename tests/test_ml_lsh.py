@@ -8,6 +8,7 @@ from __future__ import annotations
 
 from european_public_data_pipeline_spark import plans
 from european_public_data_pipeline_spark.operators.dedup import ml_minhash_pairs
+from european_public_data_pipeline_spark.tables import load_table
 
 
 def test_ml_lsh_matches_exact_pairs(spark, sf_medium):
@@ -27,3 +28,25 @@ def test_d07_audit_row(spark, sf_medium):
     assert r["n_exact_pairs"] > 0
     assert r["recall_ok"] is True
     assert r["precision_ok"] is True
+
+
+def test_d07_builds_without_a_job_and_counts_in_its_plan(spark, sf_small, spark_jobs):
+    specs = plans.all_specs()
+    for scatter in (False, True):  # d07 reads both; a first read infers the schema in a job
+        load_table(spark, sf_small, "documents", scatter=scatter)
+    with spark_jobs() as jobs:
+        audit = specs["d07_ml_minhash_lsh"].builder(spark, sf_small)
+    assert jobs == []
+    exact = {
+        (r["d1"], r["d2"])
+        for r in specs["d03_ngram_jaccard_pairs"].builder(spark, sf_small).collect()
+    }
+    ml = {(r["d1"], r["d2"]) for r in ml_minhash_pairs(spark, sf_small).collect()}
+    hit = len(exact & ml)
+    assert [tuple(r) for r in audit.collect()] == [
+        (
+            len(exact),
+            hit / len(exact) >= 0.9 if exact else True,
+            hit / len(ml) >= 0.9 if ml else True,
+        )
+    ]

@@ -100,3 +100,28 @@ def test_shingle_paths_run_no_python_node(spark, sf_small, tmp_path):
         if _PYTHON_NODE.search(node)
     ]
     assert python == []
+
+
+def test_fingerprints_split_words_like_the_duckdb_oracle(spark, tmp_path):
+    """d02's fingerprint and the admission index's ``_fingerprint`` split
+    on RE2's whitespace, as the oracle does: \\x0B joins two words."""
+    from european_public_data_pipeline_spark.streaming.dedup_admission import _fingerprint
+
+    rows = [(0, "one\x0btwo three"), (1, "one two three"), (2, "One\ttwo  three")]
+    pd.DataFrame(rows, columns=["doc_id", "text"]).to_parquet(tmp_path / "documents.parquet")
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{tmp_path}/documents.parquet'")
+
+    d02 = plans.all_specs()["d02_exact_dedup_fingerprint"]
+    got = sorted(tuple(r) for r in d02.builder(spark, str(tmp_path)).collect())
+    assert got == sorted(con.execute(d02.oracle).fetchall())
+    assert sorted(n for _, _, n in got) == [1, 2]  # doc 0 is no copy of 1 and 2
+
+    admission = spark.createDataFrame(rows, "doc_id long, text string").select(
+        "doc_id", _fingerprint().alias("fp")
+    )
+    want = con.execute(
+        "SELECT doc_id, md5(array_to_string("
+        "string_split_regex(trim(lower(text)), '\\s+'), ' ')) FROM documents"
+    ).fetchall()
+    assert sorted(tuple(r) for r in admission.collect()) == sorted(want)
