@@ -24,15 +24,21 @@ an append); the emitted changelog is exactly the row-level delta those
 consumers need instead (Delta CDF's Change Data Feed, emitted by the
 writer rather than re-derived by q97's snapshot diff).
 
-Algorithm (one metadata read + two bounded scans + one batch write):
+Algorithm (one batch profile, one metadata read, two bounded scans, one
+batch write):
 
+0. ``profile_key_batch``: one ``groupBy(keys)`` over the update and
+   delete keys, collected up to the key cap, refuses duplicate update
+   keys (two images for one key corrupt the result and the changelog's
+   refcounts), NULL keys and keys in both clauses, in that order. Its
+   rows are step 1's key set; an empty batch commits nothing.
 1. Zone-map candidate pruning: files whose recorded [min, max] on the
-   first merge key cannot intersect the update batch's key range are
-   carried without being read (``prune_candidates`` — conservative: files
+   merge keys cannot hold one of the batch's key values are carried
+   without being read (``prune_candidates`` — conservative: files
    without stats stay candidates).
 2. ONE scan of the candidate files, grouped by ``input_file_name``
    (never a per-file job storm), counts each file's total rows and
-   matched rows against the broadcast update-key set. Files with zero
+   matched rows against the broadcast batch profile. Files with zero
    matches join the carried set.
 3. Affected files' surviving rows (anti join on the keys) UNION the
    full update batch are written as the staged batch; the new manifest
@@ -44,9 +50,7 @@ rows at weight -1 (read lazily from the PRIOR version's affected files,
 which the prior manifest still references — consume before expiring
 it), update rows at weight +1. Per-key weight sums are 0 (update) or
 +1 (insert) by construction, satisfying ``apply_changelog_mv``'s
-invariant. Duplicate keys in one update batch are refused loudly (the
-same guard ``merge_by_key`` applies): two images for one key would
-corrupt both the merge result and the changelog's refcounts.
+invariant.
 """
 
 from __future__ import annotations
@@ -70,34 +74,11 @@ from european_public_data_pipeline_spark.pipeline.manifest import (
     _read_files_live,
     _read_json,
     _stage_dir,
-    current_version,
     prune_candidates,
+    profile_key_batch,
     read_changelog,
-    refuse_null_keys,
     versions,
 )
-
-
-def _refuse_duplicate_keys(updates: DataFrame, keys: list[str]) -> None:
-    dup = (
-        updates.groupBy(*keys)
-        .count()
-        .filter(F.col("count") > 1)
-        .limit(3)
-        .collect()
-    )
-    if dup:
-        raise ValueError(
-            "merge_into_manifest: update batch carries duplicate merge "
-            "keys (first offenders: "
-            + ", ".join(str(tuple(r[k] for k in keys)) for r in dup)
-            + ") — resolve to one row per key upstream (latest-wins "
-            "window), or the merge result and changelog are ambiguous"
-        )
-
-
-# NULL-key refusal is shared with the MOR delete writer
-# (manifest.refuse_null_keys) — one guard, one message, no drift.
 
 
 def merge_into_manifest(
@@ -123,7 +104,9 @@ def merge_into_manifest(
     ``emit_changelog``) is a lazy DataFrame of weighted row images
     (+1 insert/new image, -1 old/deleted image) for
     ``apply_changelog_mv``; consume it before the PRIOR version is
-    expired (its old files back the -1 images).
+    expired (its old files back the -1 images). An empty batch (no
+    update rows, no delete keys) commits nothing: ``version`` is the
+    unchanged head, every count is 0 and ``changelog`` is empty.
 
     ``persist_changelog`` additionally MATERIALIZES those images under
     ``{table}/changelog/v{version}-<uuid>/`` and records the file list
@@ -144,38 +127,45 @@ def merge_into_manifest(
     vs = versions(spark, table_path)
     if not vs:
         raise FileNotFoundError(f"no committed manifests at {table_path}")
-    # ONE stable snapshot of the batch for its many uses (dup check,
-    # prune collect, counting scan, staged write, post-commit changelog
-    # images): a non-deterministic or expensive updates plan would
-    # otherwise re-evaluate per use — the staged write could commit
-    # different rows than the changelog reports (the hazard merge.py
-    # handles the same way). Eager, batch-sized.
+    # ONE stable snapshot of the batch for its many uses (profile,
+    # counting scan, staged write, post-commit changelog images): a
+    # non-deterministic or expensive updates plan would otherwise
+    # re-evaluate per use — the staged write could commit different rows
+    # than the changelog reports (the hazard merge.py handles the same
+    # way). Eager, batch-sized.
     updates = updates.localCheckpoint()
-    _refuse_duplicate_keys(updates, keys)
-    refuse_null_keys(updates, keys, "merge_into_manifest: update batch")
     if deletes is not None:
-        deletes = deletes.select(*keys).distinct().localCheckpoint()
-        refuse_null_keys(deletes, keys, "merge_into_manifest: delete batch")
-        # No broadcast hint: the batch size is UNKNOWN at this point
-        # (the full-tuple cap collect happens later) — an unconditional
-        # hint on a 100M-key update batch would force the same
-        # multi-GB broadcast build the counting scan's cap exists to
-        # prevent. Catalyst picks broadcast itself off the checkpointed
-        # sizes when the sides are small.
-        overlap = (
-            deletes.join(updates.select(*keys), on=keys, how="left_semi")
-            .limit(3)
-            .collect()
+        deletes = deletes.select(*keys).localCheckpoint()
+    batch = profile_key_batch(keys, updates, deletes)
+    batch.refuse(
+        "dup",
+        "merge_into_manifest: update batch carries duplicate merge keys",
+        "resolve to one row per key upstream (latest-wins window), or the "
+        "merge result and changelog are ambiguous",
+    )
+    for fault, clause in (("null_upd", "update"), ("null_del", "delete")):
+        batch.refuse(
+            fault, f"merge_into_manifest: {clause} batch carries NULL merge keys"
         )
-        if overlap:
-            raise ValueError(
-                "merge_into_manifest: keys present in BOTH updates and "
-                "deletes (first offenders: "
-                + ", ".join(str(tuple(r[k] for k in keys)) for r in overlap)
-                + ") — one clause per key; resolve the intent upstream"
-            )
-    t_read = time.time()  # carried-list read time (purge-fence TTL)
+    batch.refuse(
+        "overlap",
+        "merge_into_manifest: keys present in BOTH updates and deletes",
+        "one clause per key; resolve the intent upstream",
+    )
     head = vs[-1]
+    if batch.rows == []:
+        out = {
+            "version": head,
+            "files_rewritten": 0,
+            "files_carried": 0,
+            "files_pruned": 0,
+            "rows_matched": 0,
+            "rows_deleted": 0,
+        }
+        if emit_changelog or persist_changelog:
+            out["changelog"] = updates.select("*", F.lit(1).alias("__w"))
+        return out
+    t_read = time.time()  # carried-list read time (purge-fence TTL)
     m = _read_json(spark, f"{table_path}/manifest/{head:08d}.json")
 
     # 1. Zone-map pruning on EVERY merge key with recorded stats,
@@ -186,29 +176,19 @@ def merge_into_manifest(
     # the common mixed batch (updates in one range + inserts far above
     # the table's max stretch it over every file), so each file is
     # probed against the SORTED distinct value set (bisect — any value
-    # inside the interval keeps the file). The batch's distinct key
-    # TUPLES are collected only up to a cap; past it, fall back to
-    # per-key envelopes (a batch that large touches most files anyway).
+    # inside the interval keeps the file): the profile's rows. Past the
+    # key cap, fall back to per-key envelopes (a batch that large
+    # touches most files anyway).
     # Conservative throughout: files without stats for a key pass that
     # key's test, all-NULL zones can hold no value (NULL keys were
     # refused above).
-    all_keys = updates.select(*keys)
-    if deletes is not None:
-        all_keys = all_keys.unionByName(deletes)
-    # 256k key tuples ≈ a few MB driver-side — cheap next to the scan a
-    # failed prune costs (measured: a 170k-key batch over the old 64k
-    # cap fell back to the envelope, pruned nothing, and paid a full-
-    # table counting scan). The count is over the FULL key tuple, not
-    # keys[0] alone: broadcast safety below rides on this flag, and a
-    # composite key whose leading column is low-cardinality could pass
-    # a key0-only cap while the probe relation (distinct full tuples)
-    # is orders of magnitude larger — exactly the OOM the cap prevents.
-    cap = 262144
-    tuple_rows = all_keys.distinct().limit(cap + 1).collect()
-    small_batch = len(tuple_rows) <= cap
+    small_batch = batch.rows is not None
     if small_batch:
-        candidates = prune_candidates(m, keys, key_tuples=tuple_rows)
+        candidates = prune_candidates(m, keys, key_tuples=batch.rows)
     else:
+        all_keys = updates.select(*keys)
+        if deletes is not None:
+            all_keys = all_keys.unionByName(deletes)
         aggs = []
         for k in keys:
             aggs += [F.min(k).alias(f"lo_{k}"), F.max(k).alias(f"hi_{k}")]
@@ -222,25 +202,17 @@ def merge_into_manifest(
     pruned = [f for f in m["files"] if f not in cand_set]
 
     # 2. One counting scan over the candidates: per-file totals +
-    # matched update/delete counts against the key set (one flagged
-    # relation — overlap was refused, so each key carries exactly one
-    # flag). The broadcast hint is applied only when the FULL-TUPLE
-    # distinct count is known small (the prune collect above bounded
-    # it): an unconditional hint on a 100M-key batch would force a
-    # multi-GB broadcast build instead of letting the join shuffle.
-    upd_probe = updates.select(*keys).distinct().select(
-        "*", F.lit(1).alias("__mu"), F.lit(None).cast("int").alias("__md")
+    # matched update/delete counts against the profile's key tuples
+    # (overlap was refused, so each carries one flag). The broadcast
+    # hint is applied only when the profile — FULL tuples, not keys[0],
+    # whose low cardinality could hide a huge probe — fit under the key
+    # cap: a hint on a 100M-key batch would force a multi-GB broadcast
+    # build instead of letting the join shuffle.
+    probe = batch.relation.select(
+        *keys,
+        F.when(F.col("__n") > 0, 1).alias("__mu"),
+        F.when(F.col("__d"), 1).alias("__md"),
     )
-    if deletes is not None:
-        probe = upd_probe.unionByName(
-            deletes.select(
-                "*",
-                F.lit(None).cast("int").alias("__mu"),
-                F.lit(1).alias("__md"),
-            )
-        )
-    else:
-        probe = upd_probe
     key_set = F.broadcast(probe) if small_batch else probe
     affected: list[str] = []
     by_key: dict[str, tuple[int, int, int]] = {}

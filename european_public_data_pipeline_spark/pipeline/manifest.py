@@ -44,6 +44,7 @@ from __future__ import annotations
 import json
 import time
 import uuid
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import LongType, StringType, StructField, StructType
@@ -1727,28 +1728,81 @@ def prune_files(
     return keep, len(manifest["files"])
 
 
-def refuse_null_keys(batch: DataFrame, keys: list[str], ctx: str) -> None:
-    """Shared keyed-writer guard (COW merge, MOR delete): a NULL merge
-    key is a silent corruption machine, not an edge case — it passes a
-    duplicate check (groupBy treats NULLs as one group) and never
-    matches any target row (the match joins are not null-safe), so a
-    merge would re-INSERT it every run and a delete would no-op while
-    claiming the key. Refuse loudly; ``ctx`` names the operation and
-    clause for the error."""
+# Most distinct key tuples a keyed writer collects (256k ≈ a few MB),
+# and most rows in a MOR sidecar (broadcast on every read until the next
+# compact).
+KEY_BATCH_CAP = 262144
+
+_NULL_KEY_REMEDY = (
+    "a NULL key can never match a target row; filter or key these rows upstream"
+)
+
+
+class KeyBatch(NamedTuple):
+    """``profile_key_batch``'s result: ``relation`` (one row per distinct
+    key tuple), ``rows`` (all of it; None past ``KEY_BATCH_CAP``) and at
+    most three offending key tuples per fault."""
+
+    relation: DataFrame
+    rows: list | None
+    offenders: dict[str, list[tuple]]
+
+    def refuse(self, fault: str, what: str, remedy: str = _NULL_KEY_REMEDY) -> None:
+        if bad := self.offenders[fault]:
+            raise ValueError(
+                f"{what} (first offenders: {', '.join(map(str, bad))}) — {remedy}"
+            )
+
+
+def profile_key_batch(
+    keys: list[str], updates: DataFrame | None = None, deletes: DataFrame | None = None
+) -> KeyBatch:
+    """Validate and bound a keyed write's batch: a ``groupBy(keys)`` over
+    the update keys (``__n`` counts their rows) and the delete keys
+    (``__d`` flags them), collected up to ``KEY_BATCH_CAP + 1`` rows (a
+    CollectLimit: it stops early). Within the cap those rows are the
+    whole profile and ``prune_candidates``' key tuples; past it, one
+    more action (a ``limit(3)`` per fault, unioned) finds offenders.
+    Faults: ``dup`` (groupBy puts NULLs in one group), ``null_upd`` and
+    ``null_del`` (a NULL key never matches a target row, so a merge
+    would re-insert it every run and a delete would no-op), ``overlap``
+    (a tuple both updated and deleted)."""
+    from functools import reduce
+
     from pyspark.sql import functions as F
 
-    cond = None
-    for k in keys:
-        c = F.col(k).isNull()
-        cond = c if cond is None else (cond | c)
-    bad = batch.filter(cond).select(*keys).limit(3).collect()
-    if bad:
-        raise ValueError(
-            f"{ctx} carries NULL merge keys (first offenders: "
-            + ", ".join(str(tuple(r[k] for k in keys)) for r in bad)
-            + ") — a NULL key can never match a target row; filter or "
-            "key these rows upstream"
-        )
+    parts = [
+        b.select(*keys, F.lit(n).alias("__n"), F.lit(d).alias("__d"))
+        for b, n, d in ((updates, 1, False), (deletes, 0, True))
+        if b is not None
+    ]
+    null = reduce(lambda a, b: a | b, [F.col(k).isNull() for k in keys])
+    updated, deleted = F.col("__n") > 0, F.col("__d")
+    faults = {
+        "dup": F.col("__n") > 1,
+        "null_upd": null & updated,
+        "null_del": null & deleted,
+        "overlap": updated & deleted,
+    }
+    relation = (
+        reduce(DataFrame.unionByName, parts)
+        .groupBy(*keys)
+        .agg(F.sum("__n").alias("__n"), F.max("__d").alias("__d"))
+        .select(*keys, "__n", "__d", *(c.alias(f"__{f}") for f, c in faults.items()))
+    )
+    rows = relation.limit(KEY_BATCH_CAP + 1).collect()
+    if len(rows) <= KEY_BATCH_CAP:
+        nk, at = len(keys), {f: relation.columns.index(f"__{f}") for f in faults}
+        offenders = {f: [r[:nk] for r in rows if r[i]][:3] for f, i in at.items()}
+        return KeyBatch(relation, rows, offenders)
+    offenders = {f: [] for f in faults}
+    probes = [
+        relation.filter(F.col(f"__{f}")).select(*keys, F.lit(f).alias("__f")).limit(3)
+        for f in faults
+    ]
+    for r in reduce(DataFrame.union, probes).collect():
+        offenders[r["__f"]].append(r[: len(keys)])
+    return KeyBatch(relation, None, offenders)
 
 
 def prune_candidates(
@@ -1762,10 +1816,10 @@ def prune_candidates(
     stats: a file survives only if, for each such key, its [min, max]
     interval can hold one of the batch's values for that key.
 
-    ``key_tuples`` (collected distinct key rows, when the batch was
-    small enough to collect): each file is probed against the SORTED
-    per-key value set by bisect — any value inside the interval keeps
-    the file; this is what beats a [lo, hi] envelope for the common
+    ``key_tuples`` (``profile_key_batch``'s rows, within its cap): each
+    file is probed against the SORTED per-key value set by bisect — any
+    value inside the interval keeps the file; this is what beats a [lo,
+    hi] envelope for the common
     mixed batch (updates in one range + inserts far above the table's
     max stretch an envelope over every file). ``envelope`` ({key: (lo,
     hi)}) is the fallback past the collect cap. Conservative

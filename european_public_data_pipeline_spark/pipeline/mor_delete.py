@@ -66,6 +66,7 @@ from european_public_data_pipeline_spark.pipeline.fs_util import (
     hadoop_fs,
 )
 from european_public_data_pipeline_spark.pipeline.manifest import (
+    KEY_BATCH_CAP,
     ConcurrentPublishError,
     PurgeInFlightError,
     _changelog_stage_dir,
@@ -77,16 +78,27 @@ from european_public_data_pipeline_spark.pipeline.manifest import (
     _stage_dir,
     prune_candidates,
     prune_files,
+    profile_key_batch,
     read_changelog,
-    refuse_null_keys,
     versions,
 )
 from european_public_data_pipeline_spark.session import local_frame
 
-# Sidecars are broadcast on EVERY read until the next compact (see
-# _read_files_live) — both MOR writers bound them to this many rows.
-_SIDECAR_CAP = 262144
 
+def _read_head(spark: SparkSession, table_path: str) -> tuple:
+    """The highest committed version, its manifest, the read time (the
+    purge fence's TTL) and the schema the commit carries — a legacy
+    (pre-schema-era) table derives it from one footer, like
+    append_version: the manifest owns a schema from here on."""
+    vs = versions(spark, table_path)
+    if not vs:
+        raise FileNotFoundError(f"no committed manifests at {table_path}")
+    t_read = time.time()
+    m = _read_json(spark, f"{table_path}/manifest/{vs[-1]:08d}.json")
+    schema = m.get("schema")
+    if schema is None and m["files"]:
+        schema = spark.read.parquet(m["files"][0]).schema.json()
+    return vs[-1], m, t_read, schema
 
 def delete_rows_mor(
     spark: SparkSession,
@@ -107,40 +119,31 @@ def delete_rows_mor(
     NULL delete keys are refused loudly (a NULL key matches nothing —
     same guard as ``merge_into_manifest``). Like every writer here, the
     commit chains off the highest committed version."""
-    vs = versions(spark, table_path)
-    if not vs:
-        raise FileNotFoundError(f"no committed manifests at {table_path}")
-    t_read = time.time()
-    head = vs[-1]
-    m = _read_json(spark, f"{table_path}/manifest/{head:08d}.json")
-    carried_schema = m.get("schema")
-    if carried_schema is None and m["files"]:
-        # Legacy table (pre-schema-era): derive from one footer, like
-        # append_version — the manifest must own a schema from here on.
-        carried_schema = spark.read.parquet(m["files"][0]).schema.json()
+    head, m, t_read, carried_schema = _read_head(spark, table_path)
 
-    dkeys = deletes.select(*keys).distinct().localCheckpoint()
-    refuse_null_keys(dkeys, keys, "delete_rows_mor: delete batch")
-
-    # Zone-map pruning, intersected across keys (shared with the COW
-    # merge): the counting scan below touches only files that CAN hold
-    # a deleted key. The batch is bounded by the collect cap — a
-    # committed sidecar is read back as an UNCONDITIONAL broadcast on
-    # every subsequent scan (_read_files_live), so a past-cap batch is
-    # refused outright: MOR is the shape for scattered SMALL deletes,
-    # and a multi-GB sidecar would OOM every reader until the next
-    # compact. Bulk deletes belong to the COW merge or purge_rows.
-    cap = _SIDECAR_CAP
-    tuple_rows = dkeys.limit(cap + 1).collect()
-    if len(tuple_rows) > cap:
+    batch = profile_key_batch(keys, deletes=deletes)
+    batch.refuse("null_del", "delete_rows_mor: delete batch carries NULL merge keys")
+    # A sidecar is read back as an UNCONDITIONAL broadcast on every scan
+    # (_read_files_live) until the next compact: past the cap a batch is
+    # refused — a multi-GB sidecar would OOM every reader.
+    if batch.rows is None:
         raise ValueError(
-            f"delete_rows_mor: delete batch exceeds {cap} distinct key "
-            "tuples — a sidecar this large would force a huge broadcast "
+            f"delete_rows_mor: delete batch exceeds {KEY_BATCH_CAP} distinct "
+            "key tuples — a sidecar this large would force a huge broadcast "
             "on EVERY read until the next compact; use "
             "merge_into_manifest(deletes=...) (copy-on-write rewrite) "
             "or purge_rows for bulk deletes"
         )
-    candidates = prune_candidates(m, keys, key_tuples=tuple_rows)
+    # Zone-map pruning: the counting scan touches only files that CAN
+    # hold a deleted key.
+    candidates = prune_candidates(m, keys, key_tuples=batch.rows)
+    # The probe and the sidecar are the profile's rows: what is committed
+    # is what was validated, and the batch is not evaluated again.
+    dkeys = local_frame(
+        spark,
+        [tuple(r[k] for k in keys) for r in batch.rows],
+        batch.relation.select(*keys).schema,
+    )
     probe = F.broadcast(dkeys)
 
     n = head + 1
@@ -272,15 +275,7 @@ def delete_where_mor(
     predicate commits nothing. ``persist_changelog`` stages the matched
     rows' old images at weight -1 (keeps ``refresh_mv`` incremental
     across the delete, like the equality flavor)."""
-    vs = versions(spark, table_path)
-    if not vs:
-        raise FileNotFoundError(f"no committed manifests at {table_path}")
-    t_read = time.time()
-    head = vs[-1]
-    m = _read_json(spark, f"{table_path}/manifest/{head:08d}.json")
-    carried_schema = m.get("schema")
-    if carried_schema is None and m["files"]:
-        carried_schema = spark.read.parquet(m["files"][0]).schema.json()
+    head, m, t_read, carried_schema = _read_head(spark, table_path)
 
     cond = F.expr(condition)
     if prune_col is not None:
@@ -317,13 +312,13 @@ def delete_where_mor(
         spark, m, candidates, keep_positions=True
     ).filter(cond).persist()
     try:
-        matched = matches.limit(_SIDECAR_CAP + 1).count()
+        matched = matches.limit(KEY_BATCH_CAP + 1).count()
         if matched == 0:
             return out
-        if matched > _SIDECAR_CAP:
+        if matched > KEY_BATCH_CAP:
             raise ValueError(
                 f"delete_where_mor: predicate matched over the sidecar "
-                f"cap ({_SIDECAR_CAP} rows); a sidecar this large would "
+                f"cap ({KEY_BATCH_CAP} rows); a sidecar this large would "
                 "force a huge broadcast on EVERY read until the next "
                 "compact. Rewrite filtered (publish_version of the "
                 "surviving rows) or purge_rows instead"
@@ -432,51 +427,38 @@ def upsert_rows_mor(
     Returns ``{"version", "rows_updated", "rows_inserted",
     "files_pruned", "files_scanned", "sidecar_files", "changelog"?}``;
     an empty batch commits nothing."""
-    vs = versions(spark, table_path)
-    if not vs:
-        raise FileNotFoundError(f"no committed manifests at {table_path}")
-    t_read = time.time()
-    head = vs[-1]
-    m = _read_json(spark, f"{table_path}/manifest/{head:08d}.json")
-    carried_schema = m.get("schema")
-    if carried_schema is None and m["files"]:
-        carried_schema = spark.read.parquet(m["files"][0]).schema.json()
+    head, m, t_read, carried_schema = _read_head(spark, table_path)
 
-    # Pin the batch BEFORE any validation: the batch is read several
-    # times (the guards below, key collect, image write, changelog
-    # write) and may carry expensive or NON-DETERMINISTIC lineage — a
-    # guard that validated one evaluation while a different evaluation
-    # got committed would be worse than no guard (a NULL key could pass
-    # refuse_null_keys yet land in the sidecar). localCheckpoint also
-    # severs the streaming micro-batch lineage the CDC sink hands us.
+    # Pin the batch BEFORE validating it: it is read several times and
+    # may carry expensive or NON-DETERMINISTIC lineage — a NULL key could
+    # pass the profile of one evaluation yet land in the sidecar written
+    # from another. localCheckpoint also severs the streaming
+    # micro-batch lineage the CDC sink hands us.
     updates = updates.localCheckpoint()
     if dedupe_updates_by:
         from european_public_data_pipeline_spark.pipeline.merge import (
             resolve_latest_wins,
         )
 
-        # Re-pin the deduped result: downstream reads it ~6 times (the
-        # guards, key collect, probe scan, changelog and data writes) —
-        # without this pin each would re-run the dedupe window shuffle.
-        # Determinism is already guaranteed by the pinned INPUT plus the
-        # tie refusal, so the second checkpoint is purely a cost move.
+        # Re-pin the deduped result: downstream reads it ~5 times (the
+        # profile, probe scan, changelog and data writes) — without this
+        # pin each would re-run the dedupe window shuffle. Determinism is
+        # already guaranteed by the pinned INPUT plus the tie refusal, so
+        # the second checkpoint is purely a cost move.
         updates = resolve_latest_wins(
             updates, keys, dedupe_updates_by, "upsert_rows_mor"
         ).localCheckpoint()
-    refuse_null_keys(updates, keys, "upsert_rows_mor: update batch")
-
-    # ONE bounded collect answers three needs: the per-key row counts
-    # expose intra-batch duplicates (refused — nondeterministic winner),
-    # the distinct tuples drive zone-map pruning, and their count is the
-    # sidecar-cap check.
-    cap = _SIDECAR_CAP
-    key_rows = (
-        updates.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .limit(cap + 1)
-        .collect()
-    )
-    if not key_rows:
+    batch = profile_key_batch(keys, updates)
+    batch.refuse("null_upd", "upsert_rows_mor: update batch carries NULL merge keys")
+    if batch.rows is None:
+        raise ValueError(
+            f"upsert_rows_mor: update batch exceeds {KEY_BATCH_CAP} distinct "
+            "key tuples — a sidecar this large would force a huge broadcast "
+            "on EVERY read until the next compact; use "
+            "merge_into_manifest (copy-on-write rewrite) for bulk "
+            "upserts"
+        )
+    if not batch.rows:
         return {
             "version": head,
             "rows_updated": 0,
@@ -485,26 +467,13 @@ def upsert_rows_mor(
             "files_scanned": 0,
             "sidecar_files": 0,
         }
-    if len(key_rows) > cap:
-        raise ValueError(
-            f"upsert_rows_mor: update batch exceeds {cap} distinct key "
-            "tuples — a sidecar this large would force a huge broadcast "
-            "on EVERY read until the next compact; use "
-            "merge_into_manifest (copy-on-write rewrite) for bulk "
-            "upserts"
-        )
-    dups = [r for r in key_rows if r["__n"] > 1]
-    if dups:
-        raise ValueError(
-            f"upsert_rows_mor: update batch carries duplicate key "
-            f"tuples (first offenders: "
-            + ", ".join(
-                str(tuple(r[k] for k in keys)) for r in dups[:3]
-            )
-            + ") — pass dedupe_updates_by=<ordering column> or resolve "
-            "upstream; an arbitrary winner would be nondeterministic"
-        )
-    candidates = prune_candidates(m, keys, key_tuples=key_rows)
+    batch.refuse(
+        "dup",
+        "upsert_rows_mor: update batch carries duplicate key tuples",
+        "pass dedupe_updates_by=<ordering column> or resolve upstream; an "
+        "arbitrary winner would be nondeterministic",
+    )
+    candidates = prune_candidates(m, keys, key_tuples=batch.rows)
     probe_keys = updates.select(*keys).distinct()
 
     # Which target rows does the batch replace? One PRUNED live scan
@@ -630,7 +599,7 @@ def upsert_rows_mor(
     out = {
         "version": version,
         "rows_updated": int(matched_rows),
-        "rows_inserted": len(key_rows) - len(matched_key_rows),
+        "rows_inserted": len(batch.rows) - len(matched_key_rows),
         "files_pruned": len(m["files"]) - len(candidates),
         "files_scanned": len(candidates),
         "sidecar_files": 1 if matched_rows else 0,

@@ -58,6 +58,7 @@ SLOW_TESTS: dict[str, set[str]] = {
     "test_cow_merge.py": {
         "test_cow_merge_changelog_folds_into_mv",
         "test_cow_merge_delete_clause_and_changelog",
+        "test_cow_merge_refusal_order_within_and_past_the_key_cap",
         "test_push_pull_interleave_no_double_apply",
     },
     "test_curate.py": {
@@ -137,6 +138,7 @@ SLOW_TESTS: dict[str, set[str]] = {
         "test_mor_upsert_commit_writes_o_batch_bytes",
         "test_mor_upsert_dup_keys_and_latest_wins",
         "test_mor_upsert_end_state_and_fold",
+        "test_mor_refusal_order_past_the_key_cap",
     },
     "test_mv_refresh.py": {
         "test_dirty_recompute_drops_refresh_anchor",

@@ -6,6 +6,9 @@ recompute."""
 
 from __future__ import annotations
 
+import re
+
+import pytest
 from pyspark.sql import functions as F
 
 import european_public_data_pipeline_spark.pipeline.manifest as M
@@ -378,3 +381,78 @@ def test_push_pull_interleave_no_double_apply(spark, tmp_path):
         .collect()
     }
     assert got == want, "merge delta double-applied or append dropped"
+
+
+def test_cow_merge_empty_batch_commits_nothing(spark, tmp_path):
+    """A batch with no update rows and no delete keys leaves the head
+    as it was: no empty file for every later read to open, and no
+    changelog-less ``overwrite`` commit for ``refresh_mv`` to treat as a
+    full-recompute hazard."""
+    t = str(tmp_path / "tbl")
+    _seed(spark, t, n=100, files=2)
+    empty = spark.createDataFrame([], "k long, v long")
+    out = merge_into_manifest(spark, t, empty, keys=["k"])
+    assert out == {
+        "version": 1,
+        "files_rewritten": 0,
+        "files_carried": 0,
+        "files_pruned": 0,
+        "rows_matched": 0,
+        "rows_deleted": 0,
+    }
+    no_keys = spark.createDataFrame([], "k long")
+    for flag in ("emit_changelog", "persist_changelog"):
+        out = merge_into_manifest(
+            spark, t, empty, keys=["k"], deletes=no_keys, **{flag: True}
+        )
+        assert out["version"] == 1
+        assert out["changelog"].columns == ["k", "v", "__w"]
+        assert out["changelog"].count() == 0
+    history = M.table_history(spark, t).select("version", "n_files", "row_count")
+    assert [tuple(r) for r in history.collect()] == [(1, 2, 100)]
+
+
+_FAULT_ROWS = {  # fault: (its extra update rows, its extra delete keys)
+    "dup": ([(5, 0)], []),
+    "null_upd": ([(None, 0)], []),
+    "null_del": ([], [(None,)]),
+    "overlap": ([], [(7,)]),
+}
+
+
+def _faulty_batch(spark, n, faults):
+    """Update keys 0..n-1 and the absent delete key 10**9, plus the rows
+    of every named fault."""
+    upd = spark.range(n).select(F.col("id").alias("k"), F.col("id").alias("v"))
+    upd = upd.unionByName(
+        spark.createDataFrame(
+            [r for f in faults for r in _FAULT_ROWS[f][0]], "k long, v long"
+        )
+    )
+    dels = spark.createDataFrame(
+        [(10**9,)] + [r for f in faults for r in _FAULT_ROWS[f][1]], "k long"
+    )
+    return upd, dels
+
+
+def test_cow_merge_refusal_order_within_and_past_the_key_cap(spark, tmp_path):
+    """A batch with several faults is refused for the first one in the
+    merge's order — duplicate update keys, NULL update keys, NULL delete
+    keys, keys in both clauses — naming its offender, whether the key
+    tuples fit under the collect cap or not (past it the merge prunes by
+    envelopes, which must not let any fault through)."""
+    t = str(tmp_path / "tbl")
+    _seed(spark, t, n=10, files=1)
+    order = [
+        ("dup", "update batch carries duplicate merge keys", 5),
+        ("null_upd", "update batch carries NULL merge keys", None),
+        ("null_del", "delete batch carries NULL merge keys", None),
+        ("overlap", "keys present in BOTH updates and deletes", 7),
+    ]
+    for n in (20, 262_146):
+        for i, (_fault, what, key) in enumerate(order):
+            upd, dels = _faulty_batch(spark, n, [f for f, _w, _k in order[i:]])
+            message = re.escape(f"{what} (first offenders: {(key,)})")
+            with pytest.raises(ValueError, match=message):
+                merge_into_manifest(spark, t, upd, keys=["k"], deletes=dels)
+    assert M.versions(spark, t) == [1]

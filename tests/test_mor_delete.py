@@ -7,6 +7,7 @@ holds — a MOR commit writes O(batch) bytes while COW rewrites files."""
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -784,3 +785,69 @@ def test_maintain_folds_sidecar_pressure_and_small_files(spark, tmp_path):
             spark, f"{t}/manifest/{M.current_version(spark, t):08d}.json"
         )["files"]
     ) <= 2
+
+
+def test_mor_refusal_order_past_the_key_cap(spark, tmp_path):
+    """Both MOR writers refuse a NULL key before they look at the key
+    cap, within it and past it; the upsert checks the cap before
+    duplicate keys, so a past-cap batch with one duplicate reads as past
+    the cap."""
+    from european_public_data_pipeline_spark.pipeline.mor_delete import (
+        upsert_rows_mor,
+    )
+
+    t = str(tmp_path / "tbl")
+    _seed(spark, t, n=10, files=1)
+    null_message = re.escape("NULL merge keys (first offenders: (None,))")
+    for n in (20, 262_146):
+        keys = spark.range(n).select(F.col("id").alias("k"))
+        null_key = keys.unionByName(spark.createDataFrame([(None,)], "k long"))
+        with pytest.raises(ValueError, match=null_message):
+            delete_rows_mor(spark, t, null_key, ["k"])
+        ups = keys.select("k", F.col("k").alias("v"))
+        dup = ups.unionByName(spark.createDataFrame([(5, 0)], "k long, v long"))
+        null_and_dup = dup.unionByName(
+            spark.createDataFrame([(None, 0)], "k long, v long")
+        )
+        with pytest.raises(ValueError, match=null_message):
+            upsert_rows_mor(spark, t, null_and_dup, ["k"])
+        with pytest.raises(
+            ValueError, match="duplicate key tuples" if n == 20 else "exceeds"
+        ):
+            upsert_rows_mor(spark, t, dup, ["k"])
+    assert M.versions(spark, t) == [1]
+
+
+def test_keyed_writers_validate_their_batch_in_one_action(
+    spark, tmp_path, spark_jobs
+):
+    """One bounded action profiles a keyed batch: the merge collects it,
+    its counting scan and its commit's stats aggregate; the MOR delete
+    collects the profile alone (its counting scan is a count). Parquet
+    keys are nullable, so no NULL check is planned away."""
+    from european_public_data_pipeline_spark.pipeline.cow_merge import (
+        merge_into_manifest,
+    )
+
+    t = str(tmp_path / "tbl")
+    _seed(spark, t)
+    upd, dels, more = (str(tmp_path / d) for d in ("upd", "dels", "more"))
+    spark.createDataFrame(
+        [(k, k + 1) for k in range(10, 20)], "k long, v long"
+    ).write.parquet(upd)
+    _dk(spark, 30, 31).write.parquet(dels)
+    _dk(spark, 40, 41).write.parquet(more)
+
+    def collect_sites(jobs):
+        return {j.name for j in jobs if j.name.startswith("collect at")}
+
+    with spark_jobs() as jobs:
+        merge_into_manifest(
+            spark, t, spark.read.parquet(upd), ["k"], deletes=spark.read.parquet(dels)
+        )
+    assert len(collect_sites(jobs)) == 3, collect_sites(jobs)
+    with spark_jobs() as jobs:
+        out = delete_rows_mor(spark, t, spark.read.parquet(more), ["k"])
+    assert len(collect_sites(jobs)) == 1, collect_sites(jobs)
+    assert out["rows_deleted"] == 2
+    assert M.read_version(spark, t).count() == 396
