@@ -79,6 +79,7 @@ from european_public_data_pipeline_spark.pipeline.manifest import (
     read_changelog,
     versions,
 )
+from european_public_data_pipeline_spark.session import local_frame
 
 
 def merge_into_manifest(
@@ -207,12 +208,23 @@ def merge_into_manifest(
     # hint is applied only when the profile — FULL tuples, not keys[0],
     # whose low cardinality could hide a huge probe — fit under the key
     # cap: a hint on a 100M-key batch would force a multi-GB broadcast
-    # build instead of letting the join shuffle.
+    # build instead of letting the join shuffle. Within the cap the
+    # probe is the profile's collected rows, so none of its three
+    # broadcasts evaluates the batch again.
     probe = batch.relation.select(
         *keys,
         F.when(F.col("__n") > 0, 1).alias("__mu"),
         F.when(F.col("__d"), 1).alias("__md"),
     )
+    if small_batch:
+        probe = local_frame(
+            spark,
+            [
+                (*r[: len(keys)], 1 if r["__n"] > 0 else None, 1 if r["__d"] else None)
+                for r in batch.rows
+            ],
+            probe.schema,
+        )
     key_set = F.broadcast(probe) if small_batch else probe
     affected: list[str] = []
     by_key: dict[str, tuple[int, int, int]] = {}

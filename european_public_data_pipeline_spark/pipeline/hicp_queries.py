@@ -138,10 +138,11 @@ def p01_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     "p02_hicp_mom_yoy",
     category="pipeline",
     doc="Flagship end-to-end silver pipeline: JSON-stat hypercube (sparse "
-    "envelope fixture) -> distributed unpivot -> Eurostat period-code parse "
-    "-> canonical projection/sort -> MoM and YoY inflation via lag windows. "
-    "Covers R1-R3, F1-F3, P1, O1, §2.9 in one plan; the oracle recomputes "
-    "from a VALUES literal built by the same pure formula.",
+    "envelope fixture) -> the JVM JSON-stat decoder's unpivot -> Eurostat "
+    "period-code parse -> canonical projection/sort -> MoM and YoY "
+    "inflation via lag windows. Covers R1-R3, F1-F3, P1, O1, §2.9 in one "
+    "plan; the oracle recomputes from a VALUES literal built by the same "
+    "pure formula.",
     oracle=f"""
 WITH raw(geo, time, raw_value) AS (VALUES
   {_fixture_values_sql()}

@@ -336,8 +336,10 @@ def _read_files_live(
         i = _bisect.bisect_right(evs, a)  # entries[i:] apply (dv > a)
         buckets.setdefault(i, []).append(f)
     # One key frame per ENTRY, reused across buckets — rebuilding it
-    # inside the bucket loop would re-open every sidecar's footers and
-    # re-plan its distinct once per bucket. The unconditional broadcast
+    # inside the bucket loop would re-open every sidecar's footers once
+    # per bucket. Sidecars are read as written, with no distinct: an
+    # anti join ignores duplicates on its build side, and every writer
+    # commits distinct key tuples anyway. The unconditional broadcast
     # is safe because the MOR writers REFUSE batches past their collect
     # caps (262k tuples/positions ≈ a few MB) — every committed sidecar
     # is broadcast-sized by construction.
@@ -358,7 +360,7 @@ def _read_files_live(
             reader = spark.read
             if e.get("schema"):
                 reader = reader.schema(StructType.fromJson(json.loads(e["schema"])))
-            dk = reader.parquet(*e["files"]).select(*e["keys"]).distinct()
+            dk = reader.parquet(*e["files"]).select(*e["keys"])
             dks.append((list(e["keys"]), dk, False))
     out: DataFrame | None = None
     for i in sorted(buckets):

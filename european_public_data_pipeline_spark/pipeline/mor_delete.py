@@ -474,7 +474,11 @@ def upsert_rows_mor(
         "arbitrary winner would be nondeterministic",
     )
     candidates = prune_candidates(m, keys, key_tuples=batch.rows)
-    probe_keys = updates.select(*keys).distinct()
+    # The probe is the profile's rows: the batch is not aggregated again.
+    key_schema = updates.select(*keys).schema
+    probe_keys = local_frame(
+        spark, [tuple(r[k] for k in keys) for r in batch.rows], key_schema
+    )
 
     # Which target rows does the batch replace? One PRUNED live scan
     # (earlier sidecars applied — a row already dead is an insert, not
@@ -533,7 +537,6 @@ def upsert_rows_mor(
         sidecar_dir = (
             f"{table_path}/deletes/v{n_next:08d}-{uuid.uuid4().hex[:12]}"
         )
-        key_schema = updates.select(*keys).schema
         local_frame(
             spark,
             [tuple(r[k] for k in keys) for r in matched_key_rows],

@@ -12,45 +12,42 @@ Semantics match the reference's pandas implementation
   ingestion_hicp_raw.py:63-71) is unwrapped transparently;
 - dense payloads must satisfy ``len(value) == prod(size)`` (R3).
 
-Spark-first architecture — two scale paths, chosen by data shape:
+Spark-first architecture — one decoder, Catalyst expressions over
+``(src_path, text)`` rows, whatever the input's shape:
 
-1. ``jsonstat_to_dataframe``: ONE payload -> DataFrame. The cell grid is
-   ``spark.range(n_cells)`` (parallel, no driver materialization); each
-   dimension code is decoded from the flat index with stride arithmetic and
-   ``element_at`` over a literal code array — pure Catalyst expressions in
-   whole-stage codegen. Values land via a left join on the flat index, so
-   sparse cells become NULLs exactly like the reference's ``.get(i)``.
-   A 10^9-cell cube never touches the driver.
+- ``read_jsonstat_files``: MANY payload files -> DataFrame. Real Eurostat
+  volume is thousands of small-to-medium cubes, so parallelism belongs
+  ACROSS payloads: a ``binaryFile`` scan distributes whole payloads to
+  executors and Catalyst expressions parse each one — ``from_json``,
+  per-payload codes/strides/checks, then ``inline`` over the cells — so
+  no Python worker starts. One task per file, no shuffle, lineage column
+  ``src_path`` for free (the reference's ``raw_blob`` column,
+  process_hicp_silver.py:139). The expressions are built as SQL text:
+  through the Column API their py4j calls alone took 0.67 s per call.
+  As ``selectExpr`` text, on 64 enveloped payloads of 96 months (noop
+  sink, ``local[2]``, 4-core host, median of 7 warm calls, 5 alternating
+  process pairs) they build in 0.22–0.24 s and run in 0.29–0.32 s; the
+  pandas-UDF parser they replaced built in 0.09–0.12 s and ran in
+  0.37–0.42 s, and kept Python workers resident beside the JVM.
+- ``jsonstat_to_dataframe``: ONE in-memory payload -> DataFrame, through
+  the same expressions over a one-row ``LocalTableScan`` of its text.
 
-2. ``read_jsonstat_files``: MANY payload files -> DataFrame. Real Eurostat
-   volume is thousands of small-to-medium cubes, so parallelism belongs
-   ACROSS payloads: a ``binaryFile`` scan distributes whole payloads to
-   executors and Catalyst expressions parse each one — ``from_json``,
-   per-payload codes/strides/checks, then ``inline`` over the cells — so
-   no Python worker starts. One task per file, no shuffle, lineage column
-   ``src_path`` for free (the reference's ``raw_blob`` column,
-   process_hicp_silver.py:139). The expressions are built as SQL text:
-   through the Column API their py4j calls alone took 0.67 s per call.
-   As ``selectExpr`` text, on 64 enveloped payloads of 96 months (noop
-   sink, ``local[2]``, 4-core host, median of 7 warm calls, 5 alternating
-   process pairs) they build in 0.22–0.24 s and run in 0.29–0.32 s; the
-   pandas-UDF parser they replaced built in 0.09–0.12 s and ran in
-   0.37–0.42 s, and kept Python workers resident beside the JVM.
+``parse_payload`` and ``_iter_rows`` are the Python statement of the
+semantics: the tests compare the decoder against them, and the decoder's
+error messages are theirs word for word.
 """
 
 from __future__ import annotations
 
+import json
 import math
-from collections.abc import Iterable, Iterator
+from collections.abc import Iterator
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-# Above this many cells, the single-payload reader switches from a direct
-# Arrow createDataFrame to the distributed range-based unpivot.
-_DISTRIBUTED_THRESHOLD = 100_000
+from european_public_data_pipeline_spark.session import local_frame
 
 # Above this many input paths, Spark lists files with a distributed job.
 _DISCOVERY_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
@@ -141,53 +138,24 @@ def _strides(sizes: list[int]) -> list[int]:
     return strides
 
 
-def schema_for(dims: Iterable[str], value_column: str = "value") -> T.StructType:
-    fields = [T.StructField(d, T.StringType(), True) for d in dims]
-    fields.append(T.StructField(value_column, T.DoubleType(), True))
-    return T.StructType(fields)
-
-
 def jsonstat_to_dataframe(
     spark: SparkSession,
     payload: dict[str, Any],
     value_column: str = "value",
-    method: str = "auto",
 ) -> DataFrame:
-    """Unpivot one JSON-stat hypercube into a tidy DataFrame.
+    """Unpivot one JSON-stat hypercube into a tidy DataFrame with the
+    columns ``[*id, value_column]``.
 
-    ``method``: ``"distributed"`` (range + stride decode + value join),
-    ``"driver"`` (direct Arrow batch — fastest for small cubes), or
-    ``"auto"`` (driver below 100k cells).
+    The payload goes to the JVM as one ``LocalTableScan`` row of its JSON
+    text and is decoded by ``read_jsonstat_files``' expressions, so no
+    Python worker starts and the rows equal ``_iter_rows(*parse_payload(
+    payload))``. Nothing is checked at call time: a malformed payload
+    fails the first action with ``parse_payload``'s message, raised by
+    ``raise_error`` in the query rather than as a ``JsonStatError``.
     """
-    dims, categories, values, n_cells = parse_payload(payload)
-    if method not in ("auto", "driver", "distributed"):
-        raise ValueError(f"unknown method {method!r}")
-    if method == "auto":
-        method = "driver" if n_cells < _DISTRIBUTED_THRESHOLD else "distributed"
-
-    if method == "driver":
-        rows = _iter_rows(dims, categories, values, n_cells)
-        return spark.createDataFrame(rows, schema=schema_for(dims, value_column))
-
-    sizes = [len(categories[d]) for d in dims]
-    strides = _strides(sizes)
-    grid = spark.range(n_cells).withColumnRenamed("id", "_cell_idx")
-    for d, size, stride in zip(dims, sizes, strides):
-        pos = (F.col("_cell_idx") / F.lit(stride)).cast("long") % F.lit(size)
-        codes = F.array(*[F.lit(c) for c in categories[d]])
-        grid = grid.withColumn(d, F.element_at(codes, (pos + 1).cast("int")))
-    vals = spark.createDataFrame(
-        list(values.items()),
-        schema=T.StructType(
-            [
-                T.StructField("_cell_idx", T.LongType(), False),
-                T.StructField(value_column, T.DoubleType(), True),
-            ]
-        ),
-    )
-    return grid.join(vals, "_cell_idx", "left").drop("_cell_idx").select(
-        *dims, value_column
-    )
+    dims = tuple(unwrap_envelope(payload).get("id") or ())
+    doc = local_frame(spark, [("", json.dumps(payload))], _DOC_ROW)
+    return _decode(doc, dims, value_column).drop("src_path")
 
 
 def _iter_rows(
@@ -232,6 +200,11 @@ _PAYLOAD = (
     "value: STRING"
 )
 _DOC_SCHEMA = f"STRUCT<{_PAYLOAD}, data: STRUCT<{_PAYLOAD}>>"
+
+# What the decoder reads: a payload's JSON text and where it came from.
+_DOC_ROW = T.StructType(
+    [T.StructField("src_path", T.StringType()), T.StructField("text", T.StringType())]
+)
 
 # decode_category over a dimension spec ``s``: a dict index sorted by
 # position (array_sort is stable, as sorted() is), a list index as it is,
@@ -357,19 +330,25 @@ def read_jsonstat_files(
             spark.conf.unset(_DISCOVERY_THRESHOLD)
         else:
             spark.conf.set(_DISCOVERY_THRESHOLD, prev)
+    return _decode(
+        files.selectExpr("path AS src_path", "CAST(content AS STRING) AS text"),
+        dims,
+        value_column,
+    )
 
+
+def _decode(docs: DataFrame, dims: tuple[str, ...], value_column: str) -> DataFrame:
+    """The cells of every ``(src_path, text)`` row's payload, as
+    ``[*dims, value_column, src_path]``: see ``read_jsonstat_files``."""
     names = f"array({', '.join(_literal(d) for d in dims)})"
     coords = [
         f"element_at(_dims[{k}].codes, CAST((c.i DIV _dims[{k}].stride) % _dims[{k}].size "
         f"AS INT) + 1) AS {_ident(d)}"
         for k, d in enumerate(dims)
     ]
-    cell = f"struct({', '.join(coords)}, c.v AS {_ident(value_column)})"
+    cell = f"struct({', '.join([*coords, f'c.v AS {_ident(value_column)}'])})"
     return (
-        files.selectExpr(
-            "path AS src_path",
-            f"from_json(CAST(content AS STRING), '{_DOC_SCHEMA}') AS _e",
-        )
+        docs.selectExpr("src_path", f"from_json(text, '{_DOC_SCHEMA}') AS _e")
         .selectExpr(
             "src_path",
             "CASE WHEN _e.id IS NULL AND _e.data IS NOT NULL THEN _e.data "

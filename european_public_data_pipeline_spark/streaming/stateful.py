@@ -68,75 +68,6 @@ def _update_user_totals(
     )
 
 
-def running_user_totals_tws(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
-    """Same running totals on the Spark 4 ``transformWithStateInPandas``
-    API: a ``StatefulProcessor`` with typed ``ValueState`` — finer-grained
-    state (per-variable TTL, timers, multiple state variables per key)
-    than the single-tuple ``applyInPandasWithState`` model above. Both are
-    kept: the processor API is the forward path, the legacy API is what
-    most deployed pipelines still run.
-
-    Runtime requirements: the RocksDB state store provider
-    (``spark.sql.streaming.stateStore.providerClass``) and the
-    ``protobuf`` package for the worker protocol — the test skips where
-    protobuf is unavailable (as in this container).
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    state_schema = T.StructType(
-        [
-            T.StructField("n_events", T.LongType(), True),
-            T.StructField("total_value", T.DoubleType(), True),
-        ]
-    )
-
-    class RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self.totals = handle.getValueState("totals", state_schema)
-
-        def handleInputRows(self, key, rows, timerValues):
-            import pandas as pd
-
-            n_events, total_value = (
-                self.totals.get() if self.totals.exists() else (0, 0.0)
-            )
-            for pdf in rows:
-                n_events += len(pdf)
-                total_value += float(pdf["value"].sum())
-            self.totals.update((n_events, total_value))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n_events],
-                    "total_value": [total_value],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    out_schema = T.StructType(
-        [
-            T.StructField("user_id", T.LongType(), True),
-            T.StructField("n_events", T.LongType(), True),
-            T.StructField("total_value", T.DoubleType(), True),
-        ]
-    )
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            RunningTotals(),
-            outputStructType=out_schema,
-            outputMode="Update",
-            timeMode="None",
-        )
-    )
-
-
 def running_user_totals(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
     """Per-user cumulative totals as a custom stateful operator.
 

@@ -74,9 +74,6 @@ SLOW_TESTS: dict[str, set[str]] = {
         "test_stream_equals_batch_fold",
         "test_time_travel_shows_admission_history",
     },
-    "test_jsonstat_datasource.py": {
-        "test_matches_read_jsonstat_files",
-    },
     "test_manifest.py": {
         "test_all_null_zone_is_unmatchable",
         "test_append_fences_against_pending_purge_tombstone",

@@ -100,34 +100,13 @@ def test_multi_dim_cartesian_order(spark):
     }
 
 
-def test_distributed_matches_driver(spark):
-    p = {
-        "id": ["geo", "time"],
-        "size": [3, 5],
-        "dimension": {
-            "geo": {"category": {"index": {"LU": 0, "DE": 1, "FR": 2}}},
-            "time": {"category": {"index": [f"T{i}" for i in range(5)]}},
-        },
-        "value": {str(i): float(i) for i in range(15) if i % 3 != 0},
-    }
-    a = sorted(map(tuple, jsonstat_to_dataframe(spark, p, method="driver").collect()))
-    b = sorted(map(tuple, jsonstat_to_dataframe(spark, p, method="distributed").collect()))
-    assert a == b
-    assert len(a) == 15
-
-
-def test_distributed_path_at_scale(spark):
-    """The stride-decode path on a cube big enough to exercise real
-    parallelism (40x50x120 = 240k cells): spot-check exact coordinates,
-    NULL count for the sparse encoding, and that no driver-side row
-    materialization happens (the grid is spark.range)."""
+def _cube_240k() -> dict:
+    """40x50x120 = 240k cells, sparse: every 7th cell present, its value
+    its flat index."""
     geos = [f"G{i:02d}" for i in range(40)]
     items = [f"I{i:02d}" for i in range(50)]
     times = [f"T{i:03d}" for i in range(120)]
-    n_cells = 40 * 50 * 120
-    # sparse: every 7th cell present, value = its flat index
-    values = {str(i): float(i) for i in range(0, n_cells, 7)}
-    payload = {
+    return {
         "id": ["geo", "item", "time"],
         "size": [40, 50, 120],
         "dimension": {
@@ -135,11 +114,18 @@ def test_distributed_path_at_scale(spark):
             "item": {"category": {"index": {c: i for i, c in enumerate(items)}}},
             "time": {"category": {"index": {t: i for i, t in enumerate(times)}}},
         },
-        "value": values,
+        "value": {str(i): float(i) for i in range(0, 40 * 50 * 120, 7)},
     }
-    df = jsonstat_to_dataframe(spark, payload, method="distributed")
+
+
+def test_distributed_path_at_scale(spark):
+    """A 240k-cell cube decodes in the JVM: spot-check exact coordinates
+    and the NULL count of the sparse encoding."""
+    payload = _cube_240k()
+    n_cells = 40 * 50 * 120
+    df = jsonstat_to_dataframe(spark, payload)
     assert df.count() == n_cells
-    assert df.filter("value IS NOT NULL").count() == len(values)
+    assert df.filter("value IS NOT NULL").count() == len(payload["value"])
     # flat index 7 -> coords (0, 0, 7); index 6000*3+50*120*0... pick i=13337:
     # geo = 13337 // 6000 = 2, item = (13337 % 6000) // 120 = 27, time = 13337 % 120 = 17
     row = df.filter("geo = 'G02' AND item = 'I27' AND time = 'T017'").collect()
@@ -400,3 +386,31 @@ def test_read_jsonstat_files_keeps_every_check(spark, tmp_path, case):
     with pytest.raises(Exception) as reader_error:
         df.count()
     assert str(decoder_error.value) in str(reader_error.value)
+    # The in-memory reader runs the same decoder: it fails at the action.
+    df = jsonstat_to_dataframe(spark, payload)
+    with pytest.raises(Exception) as reader_error:
+        df.count()
+    assert str(decoder_error.value) in str(reader_error.value)
+
+
+# --- jsonstat_to_dataframe equals the Python decoder -------------------------
+
+
+def _payloads() -> list[dict]:
+    sparse = base_payload()
+    sparse["value"] = {"0": 101.2, "2": 102.4}
+    listed = base_payload()
+    listed["dimension"]["time"]["category"]["index"] = ["2024M01", "2024M02"]
+    listed["size"] = [1, 1, 1, 1, 2]
+    listed["value"] = [99.0, 100.0]
+    parity = [json.loads(text) for text in _parity_fixtures().values()]
+    return [base_payload(), sparse, listed, *parity, _cube_240k()]
+
+
+@pytest.mark.parametrize("case", range(len(_payloads())))
+def test_jsonstat_to_dataframe_equals_the_python_decoder(spark, case):
+    payload = _payloads()[case]
+    dims, cats, vals, n = parse_payload(payload)
+    df = jsonstat_to_dataframe(spark, payload)
+    assert df.columns == [*dims, "value"]
+    assert Counter(map(tuple, df.collect())) == Counter(_iter_rows(dims, cats, vals, n))

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 import european_public_data_pipeline_spark.pipeline.manifest as M
 from european_public_data_pipeline_spark.pipeline.mor_delete import (
     delete_rows_mor,
+    upsert_rows_mor,
 )
 
 
@@ -851,3 +852,36 @@ def test_keyed_writers_validate_their_batch_in_one_action(
     assert len(collect_sites(jobs)) == 1, collect_sites(jobs)
     assert out["rows_deleted"] == 2
     assert M.read_version(spark, t).count() == 396
+
+
+def test_keyed_writers_probe_with_the_profile_rows(spark, tmp_path, spark_jobs):
+    """Within the key cap the merge's three broadcasts and the upsert's
+    probe are the profile's collected rows, so the batch is aggregated
+    once; a live read applies a sidecar as written (an anti join needs no
+    distinct). Job budgets on a fresh 8-file table with zone maps."""
+    from european_public_data_pipeline_spark.pipeline.cow_merge import (
+        merge_into_manifest,
+    )
+
+    t = str(tmp_path / "tbl")
+    _seed(spark, t)
+    upd, dels, ups = (str(tmp_path / d) for d in ("upd", "dels", "ups"))
+    spark.range(10, 20).selectExpr("id AS k", "id + 1 AS v").write.parquet(upd)
+    spark.range(100, 130).selectExpr("id AS k").write.parquet(dels)
+    spark.range(200, 210).selectExpr("id AS k", "id + 2 AS v").write.parquet(ups)
+
+    with spark_jobs() as jobs:
+        out = merge_into_manifest(spark, t, spark.read.parquet(upd), ["k"])
+    assert out["rows_matched"] == 10
+    assert len(jobs) == 11, [j.name for j in jobs]
+    delete_rows_mor(spark, t, spark.read.parquet(dels), ["k"])
+    with spark_jobs() as jobs:
+        M.read_version(spark, t).write.format("noop").mode("overwrite").save()
+    assert len(jobs) == 2, [j.name for j in jobs]
+    with spark_jobs() as jobs:
+        out = upsert_rows_mor(spark, t, spark.read.parquet(ups), ["k"])
+    assert out["rows_updated"] == 10
+    assert len(jobs) == 12, [j.name for j in jobs]
+    got = {r["k"]: r["v"] for r in M.read_version(spark, t).collect()}
+    assert len(got) == 370
+    assert got[15] == 16 and got[205] == 207 and 110 not in got

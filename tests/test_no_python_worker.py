@@ -12,11 +12,14 @@ from __future__ import annotations
 
 from py4j.protocol import Py4JJavaError
 
+from european_public_data_pipeline_spark import plans
 from european_public_data_pipeline_spark.pipeline import cow_merge, manifest, mor_delete
+from european_public_data_pipeline_spark.pipeline.hicp_queries import hicp_fixture_payload
 from european_public_data_pipeline_spark.pipeline.run_hicp import run_pipeline
+from european_public_data_pipeline_spark.sources.jsonstat import jsonstat_to_dataframe
+from tests.conftest import SF0001
 from tests.test_run_hicp import _scrambled_transport, _sql_executions_since
 from tests.test_shingles import _PYTHON_NODE, _plan_node_names
-
 
 
 def _rdd_names(spark, job_id: int) -> list[str]:
@@ -92,3 +95,19 @@ def _pipeline_and_lakehouse_cycle(spark, tmp_path) -> None:
     assert manifest.read_version(spark, t).count() == 50
     manifest.compact(spark, t, target_files=1, cluster_by="k")
     assert manifest.table_history(spark, t).count() == 6
+
+
+def test_in_memory_jsonstat_and_p02_plan_no_python_scan(spark, spark_jobs):
+    """An in-memory payload reaches the JVM as a ``LocalTableScan`` of its
+    text: neither ``jsonstat_to_dataframe`` nor p02, the silver query built
+    on it, plans a Python node or a Python-RDD scan."""
+    p02 = plans.all_specs()["p02_hicp_mom_yoy"].builder
+    before = max((e.executionId() for e in _sql_executions_since(spark, -1)), default=-1)
+    with spark_jobs() as jobs:
+        assert jsonstat_to_dataframe(spark, hicp_fixture_payload()).count() == 72
+        assert len(p02(spark, SF0001).collect()) == 72
+
+    nodes = [n for e in _sql_executions_since(spark, before) for n in _plan_node_names(spark, e)]
+    assert "LocalTableScan" in nodes
+    assert [n for n in nodes if _PYTHON_NODE.search(n) or "ExistingRDD" in n] == []
+    assert [j.name for j in jobs if "PythonRDD" in _rdd_names(spark, j.id)] == []

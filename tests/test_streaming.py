@@ -12,10 +12,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from european_public_data_pipeline_spark.streaming.stateful import (
-    running_user_totals,
-    running_user_totals_tws,
-)
+from european_public_data_pipeline_spark.streaming.stateful import running_user_totals
 from european_public_data_pipeline_spark.streaming.windows import (
     dedup_stream,
     enrich_stream,
@@ -111,34 +108,6 @@ def test_stream_static_enrichment_equals_batch(spark, sf_small, events_dir):
     cols = ["event_id", "ts", "user_id", "event_type", "value", "c_name", "c_nationkey", "c_mktsegment"]
     assert _rows(got, cols) == _rows(want, cols)
     assert len(_rows(got, cols)) > 0
-
-
-def test_transform_with_state_matches_batch(spark, events_dir):
-    # The transformWithState Python worker needs google.protobuf, which
-    # this container does not ship (no installs allowed) — skip when
-    # absent; the operator itself is import-clean either way.
-    pytest.importorskip("google.protobuf.descriptor")
-    # transformWithState requires the RocksDB state store provider
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        stream = read_events_stream(spark, events_dir)
-        got = run_available_now(
-            running_user_totals_tws(stream), "t_tws", output_mode="update"
-        )
-    finally:
-        if prev:
-            spark.conf.set(key, prev)
-        else:
-            spark.conf.unset(key)
-    batch = spark.read.parquet(events_dir)
-    want = batch.groupBy("user_id").agg(F.count(F.lit(1)).alias("n_events"))
-    final = got.groupBy("user_id").agg(F.max("n_events").alias("n_events"))
-    assert _rows(final, ["user_id", "n_events"]) == _rows(want, ["user_id", "n_events"])
 
 
 def test_exactly_once_sink_resumes_from_checkpoint(spark, events_dir, tmp_path):
