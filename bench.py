@@ -58,6 +58,9 @@ def calibrate(spark) -> float:
     return round(min(once() for _ in range(3)), 1)
 
 
+PASSES = 3
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
@@ -80,48 +83,7 @@ def main() -> None:
 
     specs = [s for s in plans.all_specs().values() if s.bench]
 
-    # Warm-up: touch every input file once so OS page cache and Spark's
-    # codegen are warm (steady-state throughput is what we benchmark).
-    for spec in specs:
-        spec.builder(spark, sf_dir).limit(1).collect()
-
-    # Builders .cache() intermediates for WITHIN-query reuse, but Spark's
-    # CacheManager matches cache entries by logical plan, so an identical
-    # plan rebuilt later — the same query on a later pass, or a sibling
-    # query sharing a subtree (d04 rebuilds d03's shingle relation) —
-    # silently reuses the materialized InMemoryRelation. Min-of-N would
-    # then report warm-cache timings that never touch the parquet inputs
-    # (VERDICT r13 #1). Clearing the CacheManager after every timed
-    # execution makes each sample compute fully from the inputs; the
-    # within-run cache reuse a single query's plan performs is still
-    # (correctly) part of its own timing.
-    def run_once(spec) -> float:
-        t0 = time.perf_counter()
-        df = spec.builder(spark, sf_dir)
-        # Execute fully: the noop sink materializes every column of every
-        # row and discards it (guide §1.4) — times the computation, not
-        # the driver transfer of the result set.
-        df.write.format("noop").mode("overwrite").save()
-        elapsed = time.perf_counter() - t0
-        spark.catalog.clearCache()
-        return elapsed
-
-    # The warm-up's limit(1) probes may have part-materialized cached
-    # subtrees; drop them so pass 1 starts cold like every other pass.
-    spark.catalog.clearCache()
-
-    # Three timed passes, INTERLEAVED (pass 1 all queries, pass 2 all,
-    # pass 3 all), report the per-query min: back-to-back repeats of one
-    # query land both samples inside the same transient load spike, which
-    # produced 24% cross-round swings the 1-task calibration probe cannot
-    # see (memory-bandwidth/neighbor contention — VERDICT r8). Interleaving
-    # decorrelates each query's samples from any one spike; min-of-3 is
-    # the repo's PLANS.md measurement discipline applied to the artifact.
-    PASSES = 3
-    samples: dict[str, list[float]] = {s.name: [] for s in specs}
-    for _ in range(PASSES):
-        for spec in specs:
-            samples[spec.name].append(run_once(spec))
+    samples = time_queries(spark, specs, sf_dir, PASSES)
     timings = {name: round(min(ts), 4) for name, ts in samples.items()}
 
     total = round(sum(timings.values()), 4)
@@ -144,6 +106,58 @@ def main() -> None:
             }
         )
     )
+
+
+def time_queries(
+    spark, specs, sf_dir: str, passes: int = PASSES
+) -> dict[str, list[float]]:
+    """Warm up, then time ``passes`` interleaved passes over ``specs``:
+    each sample builds the query and runs it through the noop sink.
+    Returns every sample per query name, in seconds."""
+    # Warm-up: touch every input file once so OS page cache and Spark's
+    # codegen are warm (steady-state throughput is what we benchmark).
+    for spec in specs:
+        spec.builder(spark, sf_dir).limit(1).collect()
+
+    # Builders .cache() intermediates for WITHIN-query reuse, but Spark's
+    # CacheManager matches cache entries by logical plan, so an identical
+    # plan rebuilt later — the same query on a later pass, or a sibling
+    # query sharing a subtree (d04 rebuilds d03's shingle relation) —
+    # silently reuses the materialized InMemoryRelation. Min-of-N would
+    # then report warm-cache timings that never touch the parquet inputs
+    # (VERDICT r13 #1). Clearing the CacheManager after every timed
+    # execution makes each sample compute fully from the inputs; the
+    # within-run cache reuse a single query's plan performs is still
+    # (correctly) part of its own timing.
+    def run_once(spec) -> float:
+        spark.sparkContext.setJobDescription(spec.name)
+        t0 = time.perf_counter()
+        df = spec.builder(spark, sf_dir)
+        # Execute fully: the noop sink materializes every column of every
+        # row and discards it (guide §1.4) — times the computation, not
+        # the driver transfer of the result set.
+        df.write.format("noop").mode("overwrite").save()
+        elapsed = time.perf_counter() - t0
+        spark.catalog.clearCache()
+        spark.sparkContext.setJobDescription(None)
+        return elapsed
+
+    # The warm-up's limit(1) probes may have part-materialized cached
+    # subtrees; drop them so pass 1 starts cold like every other pass.
+    spark.catalog.clearCache()
+
+    # Timed passes, INTERLEAVED (pass 1 all queries, pass 2 all, ...);
+    # callers report the per-query min: back-to-back repeats of one
+    # query land both samples inside the same transient load spike, which
+    # produced 24% cross-round swings the 1-task calibration probe cannot
+    # see (memory-bandwidth/neighbor contention — VERDICT r8). Interleaving
+    # decorrelates each query's samples from any one spike; min-of-N is
+    # the repo's PLANS.md measurement discipline applied to the artifact.
+    samples: dict[str, list[float]] = {s.name: [] for s in specs}
+    for _ in range(passes):
+        for spec in specs:
+            samples[spec.name].append(run_once(spec))
+    return samples
 
 
 if __name__ == "__main__":

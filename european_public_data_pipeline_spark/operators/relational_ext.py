@@ -1891,14 +1891,15 @@ def q106_zonemap_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     "downstream aggregate O(delta) per refresh instead of re-scanning "
     "the corpus: a base snapshot publishes as v1, the day's arrivals "
     "APPEND as v2 (O(batch) data + KB manifest, prior files carried by "
-    "reference), and read_incremental diffs the two manifests' file "
-    "lists driver-side to plan ONLY the appended files. The builder "
-    "aggregates the incremental slice; the oracle states the same "
-    "aggregate over the arrival predicate directly — equal because "
-    "append commits make the file diff exactly the new rows. At 100 TB "
-    "this is how a q96-style MV maintains itself from a manifest log "
-    "without a transaction server. tests/test_manifest.py pins the "
-    "file-diff semantics (appends exact, empty delta, rewrite caveat).",
+    "reference), and read_appended walks the v1..v2 commit chain "
+    "driver-side (manifest.chain_links) to plan ONLY the appended "
+    "files. The builder aggregates the incremental slice; the oracle "
+    "states the same aggregate over the arrival predicate directly — "
+    "equal because an append commit's new files are exactly the new "
+    "rows. At 100 TB this is how a q96-style MV maintains itself from "
+    "a manifest log without a transaction server. tests/test_manifest.py "
+    "pins the chain semantics (appends exact, empty delta, overwrite "
+    "and changelog refusal).",
     oracle="""
 SELECT o_orderpriority,
        CAST(COUNT(*) AS BIGINT) AS n_orders,
@@ -1923,7 +1924,7 @@ def q107_incremental_version_scan(spark: SparkSession, sf_dir: str) -> DataFrame
     manifest.append_version(
         o.filter(F.col("o_orderdate").cast("date") >= cutoff), path
     )
-    inc = manifest.read_incremental(spark, path, 1, 2)
+    inc = manifest.read_appended(spark, path, 1, 2)
     return (
         inc.groupBy("o_orderpriority")
         .agg(
@@ -3625,12 +3626,12 @@ def q128_changelog_minmax_targeted(spark: SparkSession, sf_dir: str) -> DataFram
     "q129_read_appended_through_compact",
     category="scan-filter-project",
     doc="Incremental reads that look THROUGH row-preserving rewrites — "
-    "read_appended (pipeline/manifest.py), the op-kind upgrade of "
-    "q107's read_incremental and the public API behind q127's MV "
-    "engine (Iceberg's incremental scan, which skips `replace` "
-    "snapshots): publish a base of orders, append a slice, COMPACT "
-    "(renames every file — the endpoint file-diff read_incremental "
-    "uses would return the WHOLE table as 'new'), append another "
+    "read_appended (pipeline/manifest.py), q107's incremental read "
+    "over a chain that holds a rewrite, walked by the same "
+    "manifest.chain_links as q127's MV engine (Iceberg's incremental "
+    "scan, which skips `replace` snapshots): publish a base of orders, "
+    "append a slice, COMPACT (renames every file — an endpoint file "
+    "diff would return the WHOLE table as 'new'), append another "
     "slice, then read the rows appended since the base version. The "
     "chain walk collects only the two append commits' files, skipping "
     "the compact; the oracle states exactly the two appended slices "
@@ -3926,7 +3927,7 @@ def q131_merge_emitted_changelog_mv(spark: SparkSession, sf_dir: str) -> DataFra
     "gap (Delta CDF materialized by the writer: cow_merge "
     "persist_changelog=True writes the weighted images under "
     "{table}/changelog/ and the manifest records them atomically; "
-    "manifest.change_chain_links + mv_refresh._chain_changelog fold "
+    "manifest.chain_links + mv_refresh._chain_changelog fold "
     "them): the builder publishes two-thirds of customers as a "
     "clustered manifest table, refreshes the MV (full), APPENDS the "
     "held-out third (incremental refresh), then COW-merges a batch "

@@ -180,7 +180,7 @@ def read_point(
     m = _read_json(spark, f"{table_path}/manifest/{v:08d}.json")
     if not m["files"]:
         # A file-less version (possible after purge_rows emptied it) has
-        # no schema source — fail descriptively, like read_incremental.
+        # no schema source — fail descriptively, like read_appended.
         raise ValueError(
             f"read_point: version {v} of {table_path} references no "
             f"files — no schema to derive"

@@ -345,11 +345,11 @@ def _read_files_live(
     # is broadcast-sized by construction.
     # Entries below every bucket's first applicable index are never
     # joined — building their frames would still eagerly read sidecar
-    # footers driver-side on every such read (e.g. read_incremental of
-    # files all newer than an old sidecar). Frames are planned with a
-    # known schema, never a footer-inference job: position sidecars have
-    # a fixed one, equality entries record theirs (entries committed
-    # before that still infer).
+    # footers driver-side on every such read (e.g. a read_where that
+    # keeps only files newer than an old sidecar). Frames are planned
+    # with a known schema, never a footer-inference job: position
+    # sidecars have a fixed one, equality entries record theirs
+    # (entries committed before that still infer).
     first_needed = min(buckets)
     dks: list = [None] * first_needed
     for e in entries[first_needed:]:
@@ -1442,151 +1442,87 @@ def read_version(
     return _read_files_live(spark, m)
 
 
-def read_incremental(
-    spark: SparkSession,
-    table_path: str,
-    from_version: int,
-    to_version: int | None = None,
-) -> DataFrame:
-    """Read only the rows ADDED between two committed versions — the
-    Iceberg-style incremental scan that lets a downstream consumer keep
-    up with an append-only table by reading O(delta) instead of
-    re-scanning the corpus: the file lists of two KB-sized manifests are
-    diffed driver-side and only the new files are planned. File-level
-    semantics: exact for append commits (every prior file is carried by
-    reference, so the diff IS the new rows); a full rewrite
-    (publish_version / compact) shows up as its entire file set — detect
-    that case by checking the versions' file overlap before trusting the
-    delta as row-level changes (q97/q100 derive row-level changelogs
-    when the table rewrites in place)."""
-    to_v = to_version if to_version is not None else current_version(spark, table_path)
-    old = set(
-        _read_json(spark, f"{table_path}/manifest/{from_version:08d}.json")["files"]
-    )
-    m_to = _read_json(spark, f"{table_path}/manifest/{to_v:08d}.json")
-    new = m_to["files"]
-    added = [f for f in new if f not in old]
-    if not added:
-        from pyspark.sql import functions as F
-
-        # Schema source for the empty result: any file either version
-        # names (a version can be file-less, e.g. after purge_rows
-        # emptied it).
-        schema_file = next(iter(new or sorted(old)), None)
-        if schema_file is None:
-            raise ValueError(
-                f"read_incremental: versions {from_version}..{to_v} of "
-                f"{table_path} reference no files — no schema to derive"
-            )
-        return _read_files(spark, m_to, [schema_file]).where(F.lit(False))
-    return _read_files_live(spark, m_to, added)
-
-
-def append_chain_segments(
+def chain_links(
     spark: SparkSession, table_path: str, from_version: int, to_version: int
-) -> list[tuple[int, list[str]]] | None:
+) -> list[tuple[str, int, list[str]]] | None:
     """Walk the commit chain ``from_version+1 .. to_version`` by
-    operation kind and return the appended rows' files as ``(version,
-    new_files)`` segments — or ``None`` when the chain is not
-    append-exact and the consumer must fall back (full recompute,
-    changelog derivation). ``append`` contributes its new files;
-    ``replace`` (compact/widen — rows preserved value-for-value)
-    contributes NOTHING and is skipped; ``overwrite`` or an unreadable
-    intermediate manifest (expired by retention GC) disqualifies the
-    chain. A chain containing any pre-op-era manifest falls back to the
-    legacy endpoint-containment rule (the from-version's files all
-    carried into the head ⇒ the delta is the head's new files), which
-    is exactly ``read_incremental``'s semantics. Driver-side KB-manifest
-    reads only — O(chain length), never a data scan."""
+    operation kind and return its row-level changes as ordered links —
+    the one walk every incremental consumer decides from:
+    ``("append", v, new_files)`` for an append commit, ``("changelog",
+    v, changelog_files)`` for an ``overwrite`` or ``delete`` commit that
+    PERSISTED its row-level delta (a COW MERGE or MOR delete with
+    ``persist_changelog=True``). A ``replace`` commit (compact/widen —
+    rows preserved value-for-value) contributes no link. Returns
+    ``None`` — the delta is not derivable from metadata, so the consumer
+    must refuse or full-recompute — on an opaque overwrite or delete, an
+    untagged pre-op-era manifest (read as ``overwrite``, as
+    ``version_op`` does), or an unreadable (expired) manifest.
+    Driver-side KB-manifest reads only, O(chain length), never a data
+    scan: on an object store each link is one metadata round-trip."""
     try:
         prev = _read_json(spark, f"{table_path}/manifest/{from_version:08d}.json")
     except Exception:
         return None
-    segments: list[tuple[int, list[str]]] = []
+    links: list[tuple[str, int, list[str]]] = []
     for v in range(from_version + 1, to_version + 1):
         try:
             m = _read_json(spark, f"{table_path}/manifest/{v:08d}.json")
         except Exception:
             return None  # expired/unreadable intermediate: chain broken
-        op = m.get("op")
+        op = m.get("op", "overwrite")
         if op == "append":
             prev_set = set(prev["files"])
-            segments.append((v, [f for f in m["files"] if f not in prev_set]))
-        elif op == "replace":
-            pass  # rows preserved under new files — nothing appended
-        elif op is None:
-            # Pre-op-era manifest in the chain: the legacy containment
-            # rule over the ENDPOINTS (sound: containment can only hold
-            # across a chain of effective appends — EXCEPT a merge-on-
-            # read delete, which removes rows while leaving the file
-            # list intact; the sidecar-count check below closes that).
-            from_m = _read_json(
-                spark, f"{table_path}/manifest/{from_version:08d}.json"
-            )
-            old = set(from_m["files"])
-            head = _read_json(
-                spark, f"{table_path}/manifest/{to_version:08d}.json"
-            )
-            if len(head.get("delete_files") or []) != len(
-                from_m.get("delete_files") or []
-            ):
-                return None  # a MOR delete hides inside the chain
-            if old <= set(head["files"]):
-                return [
-                    (to_version, [f for f in head["files"] if f not in old])
-                ]
-            return None
-        else:  # 'overwrite' / unknown kind: no row-preservation guarantee
-            return None
+            links.append(("append", v, [f for f in m["files"] if f not in prev_set]))
+        elif op in ("overwrite", "delete") and m.get("changelog_files"):
+            links.append(("changelog", v, list(m["changelog_files"])))
+        elif op != "replace":
+            return None  # no row-preservation guarantee, no recorded delta
         prev = m
-    return segments
+    return links
 
 
-def read_appended(
-    spark: SparkSession,
-    table_path: str,
-    from_version: int,
-    to_version: int | None = None,
-    segments: list[tuple[int, list[str]]] | None = None,
-) -> DataFrame:
-    """Read exactly the rows APPENDED between two committed versions,
-    looking THROUGH row-preserving rewrites — the op-kind upgrade of
-    ``read_incremental`` (Iceberg's incremental scan, which skips
-    ``replace`` snapshots): a compaction or widen between the two
-    versions renames every file, so the endpoint file-diff would
-    return the whole table as "new"; the chain walk instead collects
-    only the ``append`` commits' files. Each segment is read with its
-    own version's manifest schema and conformed to the head's
-    (explicit lossless casts + NULL backfill — a post-widen head says
-    BIGINT while a pre-widen segment's files hold INT32, and older
-    segments may predate evolved columns). Raises ``ValueError`` when
-    the chain contains an ``overwrite`` commit or an expired
-    intermediate manifest — appended rows are then not derivable from
-    file metadata; derive a row-level changelog (q97/q100) or re-read
-    the table. At 100 TB the plan is O(appended files): two KB
-    manifests per chain link decide everything driver-side. A caller
-    that already walked the chain (``refresh_mv`` decides
-    incrementality with ``append_chain_segments`` first) passes
-    ``segments`` to skip the second walk — on an object store each
-    chain link is a per-request metadata round-trip."""
+def _conformed(df: DataFrame, schema: StructType) -> list:
+    """``df``'s columns conformed to ``schema``: explicit lossless casts
+    (a post-widen head says BIGINT while older files hold INT32) and
+    NULL backfill for columns that predate a later evolution."""
     from pyspark.sql import functions as F
 
-    to_v = to_version if to_version is not None else current_version(spark, table_path)
-    if segments is None:
-        segments = append_chain_segments(spark, table_path, from_version, to_v)
-    if segments is None:
-        raise ValueError(
-            f"read_appended: versions {from_version}..{to_v} of "
-            f"{table_path} are not an append-exact chain (an overwrite "
-            f"commit or expired manifest breaks it) — derive a row-level "
-            f"changelog or re-read the table"
-        )
+    return [
+        (
+            F.col(f.name).cast(f.dataType)
+            if f.name in df.columns
+            else F.lit(None).cast(f.dataType)
+        ).alias(f.name)
+        for f in schema.fields
+    ]
+
+
+def _appended_rows(
+    spark: SparkSession,
+    table_path: str,
+    to_v: int,
+    links: list[tuple[str, int, list[str]]],
+) -> DataFrame:
+    """The rows of ``links``' append links, each read with its own
+    version's manifest schema and conformed to version ``to_v``'s.
+    Other link kinds are not read.
+
+    Plain ``_read_files``, not ``_read_files_live``: a delete sidecar
+    committed at version ``dv`` applies only to files added before
+    ``dv``. A sidecar committed before the chain therefore never touches
+    an append link's files; one committed inside it belongs to a delete
+    or upsert commit, which ``read_appended`` refuses and ``refresh_mv``
+    either folds as that commit's persisted -1 images or recomputes
+    in full."""
+    from pyspark.sql import functions as F
+
+    appends = [(v, files) for kind, v, files in links if kind == "append" and files]
     m_head = _read_json(spark, f"{table_path}/manifest/{to_v:08d}.json")
     sj = m_head.get("schema")
     if sj is None:
-        # Legacy head without a recorded schema: segments are
+        # Legacy head without a recorded schema: appended files are
         # homogeneous by construction — plan them directly.
-        flat = [f for _v, files in segments for f in files]
+        flat = [f for _v, files in appends for f in files]
         if not flat:
             if not m_head["files"]:
                 raise ValueError(
@@ -1599,27 +1535,52 @@ def read_appended(
         return _read_files(spark, m_head, flat)
     head_schema = StructType.fromJson(json.loads(sj))
     out: DataFrame | None = None
-    for v, files in segments:
-        if not files:
-            continue
+    for v, files in appends:
         m = _read_json(spark, f"{table_path}/manifest/{v:08d}.json")
         seg = _read_files(spark, m, files)
-        conformed = seg.select(
-            *[
-                (
-                    F.col(f.name).cast(f.dataType)
-                    if f.name in seg.columns
-                    else F.lit(None).cast(f.dataType)
-                ).alias(f.name)
-                for f in head_schema.fields
-            ]
-        )
-        out = conformed if out is None else out.unionByName(conformed)
+        seg = seg.select(*_conformed(seg, head_schema))
+        out = seg if out is None else out.unionByName(seg)
     if out is None:
         # Replace-only (or empty) chain: nothing appended — an empty
         # result AT the head schema.
         return local_frame(spark, [], head_schema)
     return out
+
+
+def read_appended(
+    spark: SparkSession,
+    table_path: str,
+    from_version: int,
+    to_version: int | None = None,
+) -> DataFrame:
+    """Read exactly the rows APPENDED between two committed versions,
+    looking THROUGH row-preserving rewrites (Iceberg's incremental scan,
+    which skips ``replace`` snapshots): a compaction or widen between
+    the two versions renames every file, so an endpoint file-diff would
+    return the whole table as "new"; ``chain_links`` instead collects
+    only the ``append`` commits' files. Each appended batch is read with
+    its own version's manifest schema and conformed to the head's
+    (explicit lossless casts + NULL backfill). Raises ``ValueError``
+    when the chain holds anything but appends and replaces — an
+    overwrite or delete (even one that persisted its changelog), an
+    untagged pre-op-era manifest, or an expired intermediate manifest:
+    appended rows are then not derivable from file metadata; derive a
+    row-level changelog (q97/q100) or re-read the table. An untagged
+    manifest is refused rather than diffed at the endpoints: without a
+    kind, the walk cannot tell an append from a rewrite. At 100 TB the
+    plan is O(appended files): two KB manifests per chain link decide
+    everything driver-side."""
+    to_v = to_version if to_version is not None else current_version(spark, table_path)
+    links = chain_links(spark, table_path, from_version, to_v)
+    if links is None or any(kind != "append" for kind, _v, _f in links):
+        raise ValueError(
+            f"read_appended: versions {from_version}..{to_v} of "
+            f"{table_path} are not an append-exact chain (an overwrite "
+            f"or delete commit, an untagged manifest or an expired "
+            f"manifest breaks it) — derive a row-level changelog or "
+            f"re-read the table"
+        )
+    return _appended_rows(spark, table_path, to_v, links)
 
 
 def _changelog_stage_dir(table_path: str, n: int) -> str:
@@ -1650,54 +1611,6 @@ def read_changelog(
     if not files:
         return None
     return spark.read.parquet(*files)
-
-
-def change_chain_links(
-    spark: SparkSession, table_path: str, from_version: int, to_version: int
-) -> list[tuple[str, int, list[str]]] | None:
-    """Walk the commit chain ``from_version+1 .. to_version`` and return
-    its row-level changes as ordered links — the superset of
-    ``append_chain_segments`` that looks through PERSISTED CHANGELOGS:
-    ``("append", v, new_files)`` for append commits, ``("changelog", v,
-    changelog_files)`` for overwrite commits that persisted their
-    row-level delta (a COW MERGE with ``persist_changelog=True``),
-    row-preserving replaces skipped. Returns ``None`` — consumer must
-    full-recompute — when any link is an overwrite WITHOUT a persisted
-    changelog, a pre-op-era manifest, or an unreadable (expired)
-    intermediate. Driver-side KB-manifest reads only, O(chain length).
-
-    This is what makes a routine daily MERGE into a 100 TB curated
-    corpus maintainable downstream: ``refresh_mv`` folds the appends as
-    +1 images and the merge's persisted delta as-is, at O(delta + |MV|)
-    instead of the O(source) rebuild an opaque overwrite forces."""
-    segments: list[tuple[str, int, list[str]]] = []
-    try:
-        prev = _read_json(spark, f"{table_path}/manifest/{from_version:08d}.json")
-    except Exception:
-        return None
-    for v in range(from_version + 1, to_version + 1):
-        try:
-            m = _read_json(spark, f"{table_path}/manifest/{v:08d}.json")
-        except Exception:
-            return None  # expired/unreadable intermediate: chain broken
-        op = m.get("op")
-        if op == "append":
-            prev_set = set(prev["files"])
-            segments.append(
-                ("append", v, [f for f in m["files"] if f not in prev_set])
-            )
-        elif op == "replace":
-            pass  # rows preserved under new files — nothing changed
-        elif op in ("overwrite", "delete") and m.get("changelog_files"):
-            # A COW merge or a merge-on-read delete that persisted its
-            # row-level delta: foldable.
-            segments.append(("changelog", v, list(m["changelog_files"])))
-        else:
-            # Opaque overwrite/delete / legacy pre-op manifest / unknown
-            # kind: the row-level delta is not derivable.
-            return None
-        prev = m
-    return segments
 
 
 def prune_files(
@@ -1890,7 +1803,7 @@ def read_where(
         # Preserve schema with an empty result: read one manifest file's
         # schema and filter everything out (no file can match). A
         # file-less version (possible after purge_rows emptied it) has
-        # no schema source — fail descriptively, like read_incremental.
+        # no schema source — fail descriptively, like read_appended.
         if not m["files"]:
             raise ValueError(
                 f"read_where: version {v} of {table_path} references no "

@@ -29,8 +29,8 @@ a sidecar committed at version ``dv`` applies only to files ADDED
 before ``dv`` — a row re-inserted by a later append or merge stays
 alive. Manifests carry the cumulative sidecar list (``delete_files``)
 and the per-file add-version map (``file_added``); every read path
-(``read_version``, ``read_where``, ``read_incremental``, Bloom
-``read_point``) applies the sidecars via ``_read_files_live``, so
+(``read_version``, ``read_where``, Bloom ``read_point``) applies the
+sidecars via ``_read_files_live``, so
 zone-map or Bloom pruning can never resurrect a deleted row, and time
 travel to a pre-delete version shows the rows (that version's manifest
 lists no such sidecar). ``compact``/``widen_column`` FOLD the sidecars
@@ -39,11 +39,12 @@ into their rewrite and the new version carries none.
 The commit itself is pure metadata + the sidecar: ``_commit`` with
 ``data_dir=None`` — purge-fenced, concurrent-publisher-safe, op kind
 ``delete`` (file-level incremental consumers must NOT treat it as an
-append; ``append_chain_segments`` refuses across it). With
+append; ``read_appended`` refuses across it). With
 ``persist_changelog=True`` the matched rows' old images are also
-materialized at weight -1 (Delta CDF), which keeps ``refresh_mv``'s
-chain walk incremental across the delete exactly like a persisted
-merge changelog (q132's path).
+materialized at weight -1 (Delta CDF); ``manifest.chain_links`` then
+returns the commit as a changelog link, which keeps ``refresh_mv``
+incremental across the delete exactly like a persisted merge
+changelog (q132's path).
 
 ``row_count`` stays EXACT: one key-column counting scan over the
 zone-map-pruned candidates (net of earlier sidecars, so a twice-deleted

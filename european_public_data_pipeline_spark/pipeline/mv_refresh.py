@@ -4,11 +4,11 @@ manifest log — the scheduled-job twin of ``streaming/mv_maintenance``
 
 A warehouse MV is usually refreshed by a scheduler, not a resident
 stream: at each run, diff the source's manifest log since the last
-APPLIED version (``read_appended`` — O(delta) files planned from KB
-manifests), aggregate only the delta to the algebraic partial state,
-merge it with the stored MV (two aggregate-sized relations — history is
-never re-scanned), and commit the new MV version with the applied source
-version in manifest ``meta``. Crash-safe and idempotent for free: the
+APPLIED version (``manifest.chain_links`` — O(delta) files planned
+from KB manifests), aggregate only the delta to the algebraic partial
+state, merge it with the stored MV (two aggregate-sized relations —
+history is never re-scanned), and commit the new MV version with the
+applied source version in manifest ``meta``. Crash-safe and idempotent for free: the
 MV commit is the versioned-manifest protocol (a crash mid-refresh leaves
 the prior MV version intact and readable), and a re-run reads the
 applied watermark from the committed meta, so refreshing twice is a
@@ -35,17 +35,16 @@ rows are already absorbed — without the tag, a routine nightly
 compaction would force an O(source) MV rebuild at 100 TB). An
 ``overwrite`` commit that PERSISTED its row-level changelog (a COW
 MERGE with ``persist_changelog=True`` — Delta CDF materialized by the
-writer) stays incremental too: the chain walk falls back from
-``append_chain_segments`` to ``change_chain_links`` and folds appends
-(+1 images) and persisted changelogs through the shared weighted-fold
-engine. Two rewrite hazards still force a FULL recompute (correct,
-just not incremental; q97/q100's changelogs are the row-level
-alternative):
+writer) stays incremental too: ``chain_links`` returns it as a
+changelog link, and the refresh folds appends (+1 images) and
+persisted changelogs through the shared weighted-fold engine. Two
+rewrite hazards still force a FULL recompute (correct, just not
+incremental; q97/q100's changelogs are the row-level alternative):
 
-1. An OPAQUE ``overwrite`` commit anywhere in the chain (full publish,
-   or a merge that did not persist its changelog — no row-preservation
-   guarantee and no recorded delta), or a pre-op-era chain that fails
-   the legacy file-containment check.
+1. An OPAQUE ``overwrite`` or ``delete`` commit anywhere in the chain
+   (full publish, or a merge or delete that did not persist its
+   changelog — no row-preservation guarantee and no recorded delta),
+   or an untagged pre-op-era manifest, which reads as an overwrite.
 2. ``purge_rows``, which rewrites history IN PLACE without bumping any
    version: the chain walk can't see it (every manifest was remapped
    consistently), so the MV meta additionally stores an md5 of the
@@ -67,12 +66,12 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from european_public_data_pipeline_spark.pipeline.manifest import (
+    _appended_rows,
+    _conformed,
     _read_json,
-    append_chain_segments,
-    change_chain_links,
+    chain_links,
     current_version,
     publish_version,
-    read_appended,
     read_version,
     version_meta,
     versions,
@@ -84,9 +83,9 @@ _META_FILES_MD5 = "applied_src_files_md5"
 _META_MODE = "refresh_mode"
 
 # The re-aggregable kinds: each partial state merges with the SAME
-# associative fold, which is what lets ``_merge`` combine the stored MV
-# with a delta partial without ever re-scanning history. (count merges
-# by sum — a count of counts is meaningless.)
+# associative fold, which is what lets ``MVSpec.merge`` combine the
+# stored MV with a delta partial without ever re-scanning history.
+# (count merges by sum — a count of counts is meaningless.)
 _MERGE_FN = {"count": F.sum, "sum": F.sum, "min": F.min, "max": F.max}
 
 
@@ -205,10 +204,6 @@ def _partial(events: DataFrame) -> DataFrame:
     return EVENT_SUMMARY_SPEC.partial(events)
 
 
-def _merge(mv: DataFrame, partial: DataFrame) -> DataFrame:
-    return EVENT_SUMMARY_SPEC.merge(mv, partial)
-
-
 def refresh_mv(
     spark: SparkSession, src_path: str, mv_path: str, spec: MVSpec
 ) -> int:
@@ -228,9 +223,12 @@ def refresh_mv(
       Needs a count measure (the group refcount that retires emptied
       groups); min/max measures re-aggregate only tying-delete groups
       from the source head.
-    - ``full`` — anything else (opaque overwrite, purged history,
-      expired intermediate manifests): recompute from the source head.
-      Correct, just not incremental."""
+    - ``full`` — anything else (opaque overwrite, an untagged pre-op-era
+      manifest — without a kind, its commit may have rewritten rows —
+      purged history, expired intermediate manifests): recompute from
+      the source head. Correct, just not incremental.
+
+    The mode is decided from one ``chain_links`` walk."""
     src_v = current_version(spark, src_path)
     meta = version_meta(spark, mv_path) if versions(spark, mv_path) else {}
     applied = int(meta.get(_META_KEY, 0))
@@ -280,42 +278,37 @@ def refresh_mv(
     if applied >= src_v and history_intact:
         return applied  # nothing new — idempotent no-op
 
-    segments = None
-    links = None
-    if applied > 0 and history_intact:
-        segments = append_chain_segments(spark, src_path, applied, src_v)
-        if segments is None and any(
-            m.kind == "count" for m in spec.measures
-        ):
-            # Not append-exact — but a chain whose overwrites all
-            # persisted changelogs is still foldable. (Without a count
-            # measure there is no refcount to retire emptied groups —
-            # the fold would be unsound, so full recompute instead.)
-            links = change_chain_links(spark, src_path, applied, src_v)
-    mode = (
-        "incremental"
-        if segments is not None
-        else ("changelog" if links is not None else "full")
+    links = (
+        chain_links(spark, src_path, applied, src_v)
+        if applied > 0 and history_intact
+        else None
     )
+    if links is None:
+        mode = "full"
+    elif all(kind == "append" for kind, _v, _f in links):
+        mode = "incremental"
+    elif any(m.kind == "count" for m in spec.measures):
+        # Persisted changelogs in the chain are still foldable — but
+        # only with a count measure, the refcount that retires emptied
+        # groups; without one the fold would be unsound.
+        mode = "changelog"
+    else:
+        mode = "full"
 
     caches: list[DataFrame] = []
     n_dirty = 0
     try:
         if mode == "incremental":
             mv_now = read_version(spark, mv_path)
-            if any(files for _v, files in segments):
-                delta = read_appended(
-                    spark, src_path, applied, src_v, segments=segments
-                )
+            if any(files for _k, _v, files in links):
+                delta = _appended_rows(spark, src_path, src_v, links)
                 merged = spec.merge(mv_now, spec.partial(delta))
             else:
                 # replace-only chain: state unchanged, advance watermark
                 merged = mv_now
         elif mode == "changelog":
             stored = read_version(spark, mv_path)
-            changelog = _chain_changelog(
-                spark, src_path, applied, src_v, links, prior_cl
-            )
+            changelog = _chain_changelog(spark, src_path, src_v, links, prior_cl)
             if changelog is None:
                 mode = "full"  # weight-column collision: fold unsound
             else:
@@ -369,13 +362,12 @@ def refresh_mv(
 def _chain_changelog(
     spark: SparkSession,
     src_path: str,
-    applied: int,
     src_v: int,
     links: list[tuple[str, int, list[str]]],
     prior_cl=None,
 ) -> DataFrame | None:
     """Assemble one weighted changelog for the whole chain: append
-    links' rows as +1 images (via ``read_appended``, conformed to the
+    links' rows as +1 images (via ``_appended_rows``, conformed to the
     head schema), each persisted changelog conformed likewise with its
     weight column normalized to ``__w``. Order-independence holds by
     construction — count/sum fold commutatively, and min/max are
@@ -409,11 +401,8 @@ def _chain_changelog(
     if head_schema is not None and "__w" in head_schema.names:
         return None
     parts: list[DataFrame] = []
-    append_segs = [(v, files) for kind, v, files in links if kind == "append"]
-    if any(files for _v, files in append_segs):
-        appended = read_appended(
-            spark, src_path, applied, src_v, segments=append_segs
-        )
+    if any(files for kind, _v, files in links if kind == "append"):
+        appended = _appended_rows(spark, src_path, src_v, links)
         parts.append(appended.select("*", F.lit(1).alias("__w")))
     for kind, v, files in links:
         if kind != "changelog":
@@ -428,15 +417,7 @@ def _chain_changelog(
             # later evolution lacks the new columns; lossless casts for
             # widened ones) + the normalized weight column.
             cl = cl.select(
-                *[
-                    (
-                        F.col(f.name).cast(f.dataType)
-                        if f.name in cl.columns
-                        else F.lit(None).cast(f.dataType)
-                    ).alias(f.name)
-                    for f in head_schema.fields
-                ],
-                F.col(wcol).cast("int").alias("__w"),
+                *_conformed(cl, head_schema), F.col(wcol).cast("int").alias("__w")
             )
         elif wcol != "__w":
             cl = cl.withColumnRenamed(wcol, "__w")
@@ -551,7 +532,7 @@ def _fold_changelog(
 ) -> tuple[DataFrame | None, int, list[DataFrame]]:
     """The one weighted-fold engine shared by ``apply_changelog_mv``
     (caller-supplied changelogs) and ``refresh_mv``'s chain walk
-    (persisted merge changelogs + append segments as +1 images): fold
+    (persisted merge changelogs + append links as +1 images): fold
     ``changelog`` into ``stored`` (``None`` = first build — the
     changelog IS the state so far) and return ``(merged, n_dirty,
     caches)``. ``merged`` is ``None`` when the changelog's delta is

@@ -1,15 +1,15 @@
 #!/usr/bin/env python
-"""Per-query timing + plan capture mirroring bench.py methodology.
+"""Per-query timing + plan capture through bench.py's timing loop.
 
 Usage: python scripts/qtime.py [--passes N] [--plan OUTDIR] q01_pricing_summary d03_...
-Times each named query through the noop sink, clearCache after every run,
-min-of-N over interleaved passes. With --plan <dir>, writes
-<dir>/<name>.txt explain("formatted") captures.
+Times each named query with ``bench.time_queries`` (warm-up, then the
+noop sink with clearCache after every run), min-of-N over interleaved
+passes. With --plan <dir>, writes <dir>/<name>.txt explain("formatted")
+captures before timing.
 """
 import argparse
 import os
 import sys
-import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
@@ -21,6 +21,7 @@ p.add_argument("--sf", type=str, default="/root/testdata/sf0.1")
 p.add_argument("names", nargs="+")
 args = p.parse_args()
 
+from bench import time_queries  # noqa: E402
 from european_public_data_pipeline_spark import plans  # noqa: E402
 from european_public_data_pipeline_spark.session import get_spark  # noqa: E402
 
@@ -30,10 +31,6 @@ spark.sparkContext.setLogLevel("ERROR")
 
 specs = plans.all_specs()
 sel = [specs[n] for n in args.names]
-
-for s in sel:
-    s.builder(spark, args.sf).limit(1).collect()
-spark.catalog.clearCache()
 
 if args.plan:
     os.makedirs(args.plan, exist_ok=True)
@@ -51,15 +48,7 @@ if args.plan:
         print(f"plan written: {out}")
     spark.catalog.clearCache()
 
-samples = {s.name: [] for s in sel}
-for _ in range(args.passes):
-    for s in sel:
-        spark.sparkContext.setJobDescription(s.name)
-        t0 = time.perf_counter()
-        s.builder(spark, args.sf).write.format("noop").mode("overwrite").save()
-        samples[s.name].append(time.perf_counter() - t0)
-        spark.catalog.clearCache()
-        spark.sparkContext.setJobDescription(None)
+samples = time_queries(spark, sel, args.sf, args.passes)
 
 for name, ts in samples.items():
     if ts:

@@ -106,9 +106,9 @@ SLOW_TESTS: dict[str, set[str]] = {
         "test_purge_rows_erases_key_from_all_versions",
         "test_purge_rows_erases_persisted_changelogs",
         "test_purge_tombstone_replay_reclaims_orphans",
+        "test_read_appended_diffs_append_commits",
         "test_read_appended_refuses_expired_intermediate",
         "test_read_appended_skips_replace_and_refuses_overwrite",
-        "test_read_incremental_diffs_append_commits",
         "test_read_point_falls_back_without_index",
         "test_rebuild_index_covers_every_indexed_version",
         "test_stats_recorded_and_read_where_prunes",

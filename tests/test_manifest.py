@@ -362,30 +362,24 @@ def test_failed_stats_commit_reclaims_staged_dir(spark, tmp_path):
     assert leaked == []
 
 
-def test_read_incremental_diffs_append_commits(spark, tmp_path):
+def test_read_appended_diffs_append_commits(spark, tmp_path):
     from european_public_data_pipeline_spark.pipeline.manifest import (
         append_version,
-        publish_version,
-        read_incremental,
+        read_appended,
     )
 
     t = str(tmp_path / "tbl")
     append_version(_ranged(spark, 0, 4), t)
     append_version(_ranged(spark, 5, 7), t)
     append_version(_ranged(spark, 8, 9), t)
-    inc = sorted(r["k"] for r in read_incremental(spark, t, 1, 2).collect())
+    inc = sorted(r["k"] for r in read_appended(spark, t, 1, 2).collect())
     assert inc == [5, 6, 7]
     # Default to_version = current pointer.
-    inc2 = sorted(r["k"] for r in read_incremental(spark, t, 1).collect())
+    inc2 = sorted(r["k"] for r in read_appended(spark, t, 1).collect())
     assert inc2 == [5, 6, 7, 8, 9]
     # Empty delta: same version twice -> zero rows, schema preserved.
-    empty = read_incremental(spark, t, 2, 2)
+    empty = read_appended(spark, t, 2, 2)
     assert empty.columns == ["k", "v"] and empty.count() == 0
-    # Rewrite caveat: a publish replaces the file set, so the file-level
-    # delta is the rewrite's entire output (documented, not row-level).
-    publish_version(_ranged(spark, 0, 9), t)
-    rewritten = read_incremental(spark, t, 3, 4)
-    assert rewritten.count() == 10
 
 
 def test_purge_rows_erases_key_from_all_versions(spark, tmp_path):
@@ -1074,7 +1068,7 @@ def test_manifest_schema_evolution_additive(spark, tmp_path):
     # Time travel to v1 serves v1's OWN (pre-evolution) schema.
     assert M.read_version(spark, t, 1).columns == ["k", "v"]
     # Incremental delta between v1 and v2 carries the evolved schema.
-    inc = M.read_incremental(spark, t, 1, 2)
+    inc = M.read_appended(spark, t, 1, 2)
     assert inc.columns == ["k", "v", "src"]
     assert sorted(r["k"] for r in inc.collect()) == [10, 11]
     # Zone-pruned read on k over the mixed files serves the union schema.
@@ -1746,7 +1740,8 @@ def test_read_appended_skips_replace_and_refuses_overwrite(spark, tmp_path):
     """read_appended collects only append commits' rows across a
     compact (which renames every file), conforms pre-widen segments to
     the head type, returns an empty head-schema result for a
-    replace-only chain, and refuses an overwrite chain loudly."""
+    replace-only chain, and refuses an overwrite chain loudly — also a
+    merge that persisted its changelog: its rows are not appends."""
     import pytest
 
     import european_public_data_pipeline_spark.pipeline.manifest as M
@@ -1783,6 +1778,17 @@ def test_read_appended_skips_replace_and_refuses_overwrite(spark, tmp_path):
     M.publish_version(_ri(0, 5), t)                  # v7
     with pytest.raises(ValueError, match="append-exact"):
         M.read_appended(spark, t, 1)
+    # A persisted-changelog merge is a changelog link, not an append.
+    t2 = str(tmp_path / "merged")
+    _k_table(spark, t2)                              # v1
+    M.append_version(
+        spark.createDataFrame([(100, 1000)], "k long, v long"), t2
+    )                                                # v2
+    _cl_merge(spark, t2, [(3, 33)])                  # v3
+    assert M.read_changelog(spark, t2, 3) is not None
+    assert [r["k"] for r in M.read_appended(spark, t2, 1, 2).collect()] == [100]
+    with pytest.raises(ValueError, match="append-exact"):
+        M.read_appended(spark, t2, 1)
 
 
 def test_read_appended_refuses_expired_intermediate(spark, tmp_path):

@@ -147,9 +147,9 @@ def test_mor_pruned_reads_never_resurrect(spark, tmp_path):
     # Bloom sidecar indexes physical rows; the live read filters.
     assert read_point(spark, t, "k", 200).count() == 0
     assert read_point(spark, t, "k", 201).count() == 1
-    # read_incremental across an append after the delete.
+    # read_appended across an append after the delete.
     M.append_version(spark.createDataFrame([(900, 9)], "k long, v long"), t)
-    inc = {r["k"] for r in M.read_incremental(spark, t, 2).collect()}
+    inc = {r["k"] for r in M.read_appended(spark, t, 2).collect()}
     assert inc == {900}
 
 

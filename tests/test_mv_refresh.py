@@ -1095,3 +1095,55 @@ def test_foreign_and_source_watermarks_guard_independently(spark, tmp_path):
         for r in read_version(spark, mv).collect()
     }
     assert got == {"a": (1, 15), "b": (1, 5)}, "merge push falsely no-opped"
+
+
+def test_untagged_manifest_in_chain_refreshes_full(spark, tmp_path):
+    """A manifest without an ``op`` tag (written before commits carried
+    a kind) reads as an overwrite: the chain walk cannot tell its append
+    from a rewrite, so refresh_mv recomputes in full (equal to a direct
+    recompute) and read_appended refuses the chain."""
+    import json
+    import os
+
+    import pytest
+
+    from european_public_data_pipeline_spark.pipeline.manifest import (
+        read_appended,
+        read_version,
+    )
+    from european_public_data_pipeline_spark.pipeline.mv_refresh import (
+        Measure,
+        MVSpec,
+        refresh_mv,
+    )
+
+    spec = MVSpec(
+        group_keys=("g",),
+        measures=(Measure("n", "count"), Measure("s", "sum", "v")),
+    )
+    rows = spark.range(30).select(
+        (F.col("id") % 3).alias("g"), F.col("id").alias("v")
+    )
+    src = str(tmp_path / "src")
+    mv = str(tmp_path / "mv")
+    append_version(rows.filter("v < 20"), src)   # v1
+    refresh_mv(spark, src, mv, spec)
+    append_version(rows.filter("v >= 20"), src)  # v2: 10 rows, untagged below
+    mp = f"{src}/manifest/00000002.json"
+    with open(mp) as f:
+        m = json.load(f)
+    del m["op"]
+    with open(mp, "w") as f:
+        json.dump(m, f)
+    os.remove(f"{src}/manifest/.00000002.json.crc")  # raw edit broke the crc
+
+    with pytest.raises(ValueError, match="append-exact"):
+        read_appended(spark, src, 1)
+    assert refresh_mv(spark, src, mv, spec) == 2
+    assert version_meta(spark, mv)["refresh_mode"] == "full"
+    got = {r["g"]: (r["n"], r["s"]) for r in read_version(spark, mv).collect()}
+    want = {
+        r["g"]: (r["n"], r["s"])
+        for r in spec.partial(read_version(spark, src)).collect()
+    }
+    assert got == want
