@@ -2993,14 +2993,12 @@ def q122_vacuum_orphans(spark: SparkSession, sf_dir: str) -> DataFrame:
     # v1/v2 manifests already deleted, their exclusively-owned bytes
     # (v3's compaction rewrote everything, so nothing is shared) left.
     for v in (1, 2):
-        os.remove(f"{path}/manifest/{v:08d}.json")
+        os.remove(manifest._manifest_file(path, v))
     # Backdate every unreferenced file past the fence (the crashes
     # happened "long ago"); the decoy staged AFTER this stays young.
     live = {
         manifest._path_key(f)
-        for f in manifest._read_json(spark, f"{path}/manifest/{3:08d}.json")[
-            "files"
-        ]
+        for f in manifest._read_manifest(spark, path, 3)["files"]
     }
     stale_ts = _time.time() - 7200.0
     for root, _dirs, files in os.walk(f"{path}/data"):
@@ -4112,9 +4110,7 @@ def q133_mor_delete_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         stats_cols=("k",),
     )                                                           # v1
     n_base = manifest.read_version(spark, path).count()
-    m1_files = set(
-        manifest._read_json(spark, f"{path}/manifest/00000001.json")["files"]
-    )
+    m1_files = set(manifest._read_manifest(spark, path, 1)["files"])
     d1 = delete_rows_mor(
         spark, path, c.filter(F.col("k") % 17 == 0).select("k"), ["k"]
     )                                                           # v2
@@ -4122,9 +4118,7 @@ def q133_mor_delete_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     d2 = delete_rows_mor(
         spark, path, c.filter(F.col("k") % 23 == 0).select("k"), ["k"]
     )                                                           # v3
-    m3 = manifest._read_json(
-        spark, f"{path}/manifest/{d2['version']:08d}.json"
-    )
+    m3 = manifest._read_manifest(spark, path, d2["version"])
     metadata_only = set(m3["files"]) == m1_files  # zero data files written
     manifest.append_version(
         c.filter((F.col("k") % 17 == 0) & (F.col("k") % 2 == 0)).withColumn(
@@ -4227,9 +4221,9 @@ def q134_mor_position_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         .count()
     )
     out1 = delete_where_mor(spark, path, "bal < 0")             # v2
-    kind = manifest._read_json(
-        spark, f"{path}/manifest/{out1['version']:08d}.json"
-    )["delete_files"][-1].get("kind", "?")
+    kind = manifest._read_manifest(spark, path, out1["version"])[
+        "delete_files"
+    ][-1].get("kind", "?")
     manifest.append_version(
         c.filter(F.col("k") % 100 == 0).withColumn(
             "bal", F.lit(-50.0)
@@ -4483,9 +4477,7 @@ def q136_mor_upsert_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         stats_cols=("k",),
     )                                                           # v1
     n_base = manifest.read_version(spark, path).count()
-    m1_files = set(
-        manifest._read_json(spark, f"{path}/manifest/00000001.json")["files"]
-    )
+    m1_files = set(manifest._read_manifest(spark, path, 1)["files"])
     refresh_mv(spark, path, mv, spec)                           # full build
     mx = c.agg(F.max("k")).collect()[0][0]
     # Upsert A (v2): +100 bumps on k%19 keys + far-key inserts.
@@ -4520,9 +4512,7 @@ def q136_mor_upsert_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).withColumn("bal", F.col("bal") + 300)
     )
     o_b = upsert_rows_mor(spark, path, up_b, ["k"], persist_changelog=True)
-    m4 = manifest._read_json(
-        spark, f"{path}/manifest/{o_b['version']:08d}.json"
-    )
+    m4 = manifest._read_manifest(spark, path, o_b["version"])
     mor_shape = (
         m1_files <= set(m4["files"])             # v1 files never rewritten
         and o_a["rows_updated"] > 0

@@ -37,8 +37,10 @@ from pyspark.sql import functions as F
 from european_public_data_pipeline_spark.pipeline.manifest import (
     _path_key,
     _read_files,
+    _manifest_file,
     _read_files_live,
     _read_json,
+    _read_manifest,
     _write_json,
     current_version,
 )
@@ -86,7 +88,7 @@ def build_bloom_index(
     filters (re-choosing could shrink the width after a purge and
     recompute every filter with a different hash range)."""
     v = version if version is not None else current_version(spark, table_path)
-    m = _read_json(spark, f"{table_path}/manifest/{v:08d}.json")
+    m = _read_manifest(spark, table_path, v)
     if not m["files"]:
         raise ValueError(
             f"build_bloom_index: version {v} of {table_path} references "
@@ -177,7 +179,7 @@ def read_point(
             f"analytic IN-lists"
         )
     v = version if version is not None else current_version(spark, table_path)
-    m = _read_json(spark, f"{table_path}/manifest/{v:08d}.json")
+    m = _read_manifest(spark, table_path, v)
     if not m["files"]:
         # A file-less version (possible after purge_rows emptied it) has
         # no schema source — fail descriptively, like read_appended.
@@ -292,9 +294,7 @@ def rebuild_index(
         if not m or m.group(2) != col:
             continue
         v = int(m.group(1))
-        mpath = jvm.org.apache.hadoop.fs.Path(
-            f"{table_path}/manifest/{v:08d}.json"
-        )
+        mpath = jvm.org.apache.hadoop.fs.Path(_manifest_file(table_path, v))
         if not fs.exists(mpath):
             # A sidecar orphaned by a crash inside expire_versions
             # (manifests are deleted before index dirs): its version no
@@ -306,7 +306,7 @@ def rebuild_index(
             # propagate, not destroy a valid sidecar.
             fs.delete(st.getPath(), True)
             continue
-        mf = _read_json(spark, f"{table_path}/manifest/{v:08d}.json")
+        mf = _read_manifest(spark, table_path, v)
         if not mf["files"]:
             # The purge emptied this version entirely: nothing to index,
             # and build_bloom_index would (rightly) refuse. Drop the

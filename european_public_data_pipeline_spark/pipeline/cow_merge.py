@@ -41,9 +41,12 @@ batch write):
    matched rows against the broadcast batch profile. Files with zero
    matches join the carried set.
 3. Affected files' surviving rows (anti join on the keys) UNION the
-   full update batch are written as the staged batch; the new manifest
-   is carried files + staged files (``_commit`` — concurrent-publisher
-   safe, purge-fenced, schema-merged additively).
+   full update batch are written as the staged batch. ``_commit``
+   (concurrent-publisher safe, purge-fenced) is told only the untouched
+   files to keep and the rewritten files' row count; it derives the
+   rest of the new version from the head the merge read — schema
+   (merged additively with the batch's), zone maps, meta and the
+   merge-on-read state.
 
 Changelog emission (``emit_changelog=True``): old images of matched
 rows at weight -1 (read lazily from the PRIOR version's affected files,
@@ -55,29 +58,20 @@ invariant.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from european_public_data_pipeline_spark.pipeline.fs_util import (
-    delete_path,
-    hadoop_fs,
-)
 from european_public_data_pipeline_spark.pipeline.manifest import (
-    ConcurrentPublishError,
-    PurgeInFlightError,
-    _list_parquet,
     _changelog_stage_dir,
     _commit,
     _path_key,
     _read_files_live,
-    _read_json,
+    _read_head,
     _stage_dir,
+    _tracked_stats_cols,
     prune_candidates,
     profile_key_batch,
     read_changelog,
-    versions,
 )
 from european_public_data_pipeline_spark.session import local_frame
 
@@ -124,10 +118,16 @@ def merge_into_manifest(
     version, not the LATEST pointer — after a ``rollback`` the next
     manifest number is already taken, and a pointer-based merge would
     collide with it forever; compact first if resurrecting the
-    rolled-back-from rows is not intended."""
-    vs = versions(spark, table_path)
-    if not vs:
+    rolled-back-from rows is not intended.
+
+    On a legacy table whose manifest records no schema, the merge takes
+    the table schema from one file's footer, like every carrying writer,
+    so a batch lacking a table column keeps it in the new version: the
+    carried files keep their values, the batch's rows read NULL."""
+    head = _read_head(spark, table_path)
+    if head is None:
         raise FileNotFoundError(f"no committed manifests at {table_path}")
+    m = head.m
     # ONE stable snapshot of the batch for its many uses (profile,
     # counting scan, staged write, post-commit changelog images): a
     # non-deterministic or expensive updates plan would otherwise
@@ -153,10 +153,9 @@ def merge_into_manifest(
         "merge_into_manifest: keys present in BOTH updates and deletes",
         "one clause per key; resolve the intent upstream",
     )
-    head = vs[-1]
     if batch.rows == []:
         out = {
-            "version": head,
+            "version": head.version,
             "files_rewritten": 0,
             "files_carried": 0,
             "files_pruned": 0,
@@ -166,8 +165,6 @@ def merge_into_manifest(
         if emit_changelog or persist_changelog:
             out["changelog"] = updates.select("*", F.lit(1).alias("__w"))
         return out
-    t_read = time.time()  # carried-list read time (purge-fence TTL)
-    m = _read_json(spark, f"{table_path}/manifest/{head:08d}.json")
 
     # 1. Zone-map pruning on EVERY merge key with recorded stats,
     # candidate sets intersected: a file survives only if, for each such
@@ -286,7 +283,7 @@ def merge_into_manifest(
         staged_df = survivors.unionByName(updates, allowMissingColumns=True)
     else:
         staged_df = updates
-    n = head + 1
+    n = head.version + 1
     data_dir = _stage_dir(table_path, n)
     staged_df.write.mode("overwrite").parquet(data_dir)
 
@@ -311,13 +308,12 @@ def merge_into_manifest(
         else:
             changelog_df = new_images
 
-    extra_payload = None
     cl_dir = None
     if persist_changelog:
         # Staged BEFORE the manifest commit so the commit can reference
-        # it atomically; uuid-prefixed, so a lost commit race (cleaned
-        # up below) or a crash (reclaimed age-fenced by vacuum_orphans)
-        # never collides with the winner's changelog.
+        # it atomically; uuid-prefixed, so a lost commit race (reclaimed
+        # by _commit) or a crash (reclaimed age-fenced by
+        # vacuum_orphans) never collides with the winner's changelog.
         cl_dir = _changelog_stage_dir(table_path, n)
         # A bounded batch's changelog is KB-to-MB scale but inherits the
         # update batch's partitioning (measured: a 9k-image changelog
@@ -328,71 +324,25 @@ def merge_into_manifest(
         if small_batch:
             changelog_df = changelog_df.coalesce(4)
         changelog_df.write.mode("overwrite").parquet(cl_dir)
-        jvm, fs, _ = hadoop_fs(spark, cl_dir)
-        cl_files = _list_parquet(jvm, fs, cl_dir)
-        extra_payload = {
-            "changelog_files": cl_files,
-            "changelog_weight_col": "__w",
-        }
 
-    carried_rows = int(m["row_count"]) - sum(
-        by_key.get(_path_key(f), (0, 0, 0))[0] for f in affected
+    # Untouched files carry their zone maps, add-versions and applicable
+    # sidecars (the rewritten files' deletes were folded above). The
+    # staged files get zone maps for every column the prior version
+    # tracked (compact's discipline) — without this, stats coverage
+    # decays monotonically on merge-heavy tables and the NEXT merge's
+    # prune degrades file by file.
+    version = _commit(
+        spark,
+        table_path,
+        n,
+        data_dir,
+        staged_df.schema,
+        head=head,
+        keep=carried,
+        rows_removed=sum(by_key.get(_path_key(f), (0, 0, 0))[0] for f in affected),
+        stats_cols=_tracked_stats_cols(m),
+        changelog_dir=cl_dir,
     )
-    carried_stats = None
-    stat_cols: set[str] = set()
-    if m.get("file_stats"):
-        carried_set = {_path_key(f) for f in carried}
-        carried_stats = {
-            k: v for k, v in m["file_stats"].items() if k in carried_set
-        }
-        # Zone maps for the STAGED files too, for every column the
-        # prior version tracked (compact's discipline) — without this,
-        # stats coverage decays monotonically on merge-heavy tables and
-        # the NEXT merge's prune degrades file by file.
-        stat_cols = {
-            c for per_file in m["file_stats"].values() for c in per_file
-        }
-    try:
-        version = _commit(
-            spark,
-            table_path,
-            n,
-            data_dir,
-            staged_df.schema,
-            carried_files=tuple(carried),
-            carried_rows=carried_rows,
-            meta=m.get("meta"),
-            stats_cols=tuple(sorted(stat_cols)),
-            carried_stats=carried_stats,
-            carried_schema=m.get("schema"),
-            carried_read_at=t_read,
-            op="overwrite",
-            extra_payload=extra_payload,
-            # Merge-on-read state carries: untouched files keep their
-            # applicable sidecars (entries skip the rewritten files
-            # naturally — their file_added is the NEW version, past
-            # every recorded sidecar, and their deletes were folded).
-            carried_delete_entries=m.get("delete_files"),
-            # Always a dict (not None) when sidecars exist: _commit then
-            # records the staged files at the NEW version — without it,
-            # the rewrites would default to version 0 and every sidecar
-            # would re-apply to them.
-            carried_file_added=(
-                {
-                    k: v
-                    for k, v in (m.get("file_added") or {}).items()
-                    if k in {_path_key(f) for f in carried}
-                }
-                if m.get("delete_files") or m.get("file_added")
-                else None
-            ),
-        )
-    except (ConcurrentPublishError, PurgeInFlightError):
-        # _commit already reclaimed OUR staged data dir; the staged
-        # changelog is equally ours-and-unreferenced — reclaim it too.
-        if cl_dir is not None:
-            delete_path(spark, cl_dir)
-        raise
     out = {
         "version": version,
         "files_rewritten": len(affected),

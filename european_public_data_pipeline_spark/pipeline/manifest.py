@@ -129,6 +129,16 @@ def _read_json(spark: SparkSession, path_str: str) -> dict:
         stream.close()
 
 
+def _manifest_file(table_path: str, v: int) -> str:
+    """Where version ``v``'s manifest lives: the one spelling of the
+    on-disk layout ``{table}/manifest/<v, eight digits>.json``."""
+    return f"{table_path}/manifest/{v:08d}.json"
+
+
+def _read_manifest(spark: SparkSession, table_path: str, v: int) -> dict:
+    return _read_json(spark, _manifest_file(table_path, v))
+
+
 def versions(spark: SparkSession, table_path: str) -> list[int]:
     """Committed manifest versions, ascending (empty for a fresh path)."""
     jvm, fs, _ = hadoop_fs(spark, table_path)
@@ -570,6 +580,48 @@ def _remap_manifest_payload(m: dict, removed: dict, remap: dict) -> bool:
     return True
 
 
+class Head(NamedTuple):
+    """The committed version a writer builds on (``_read_head``):
+    ``version``, its manifest ``m``, ``read_at`` (when the manifest was
+    read: the purge fences' anchor; with ``None`` the erasure fence
+    counts every visible purge plan as a hazard and the existence sweep
+    is skipped) and ``schema``, the recorded schema JSON or, for a
+    legacy table, one footer's."""
+
+    version: int
+    m: dict
+    read_at: float | None
+    schema: str | None
+
+
+def _read_head(spark: SparkSession, table_path: str) -> Head | None:
+    """The highest committed version as a ``Head`` — every carrying
+    writer chains off it (not the LATEST pointer), so after a
+    ``rollback`` the next version number is still free. ``None`` on a
+    fresh path. A legacy table (committed before schemas were
+    recorded) derives its schema from one file's footer — homogeneous
+    by construction, any file serves — so a commit carrying its files
+    records the schema from then on and an evolving batch cannot orphan
+    the prior columns."""
+    vs = versions(spark, table_path)
+    if not vs:
+        return None
+    read_at = time.time()
+    m = _read_manifest(spark, table_path, vs[-1])
+    schema = m.get("schema")
+    if schema is None and m["files"]:
+        schema = spark.read.parquet(m["files"][0]).schema.json()
+    return Head(vs[-1], m, read_at, schema)
+
+
+def _tracked_stats_cols(m: dict) -> tuple[str, ...]:
+    """The columns a version keeps zone maps for, sorted — what a
+    rewrite re-records so pruning survives it."""
+    return tuple(
+        sorted({c for per_file in m.get("file_stats", {}).values() for c in per_file})
+    )
+
+
 def _commit(
     spark: SparkSession,
     table_path: str,
@@ -577,73 +629,53 @@ def _commit(
     data_dir: str | None,
     schema: StructType | None = None,
     *,
-    carried_files: tuple[str, ...] = (),
-    carried_rows: int = 0,
+    head: Head | None = None,
+    keep: list[str] | None = None,
+    rows_removed: int = 0,
     meta: dict | None = None,
     stats_cols: tuple[str, ...] = (),
-    carried_stats: dict | None = None,
-    carried_schema: str | None = None,
-    carried_read_at: float | None = None,
     op: str = "overwrite",
-    extra_payload: dict | None = None,
-    carried_delete_entries: list | None = None,
-    carried_file_added: dict | None = None,
+    delete_entry: dict | None = None,
+    changelog_dir: str | None = None,
 ) -> int:
     """The shared commit tail: list the staged files, write the immutable
-    manifest, swap LATEST. If another publisher claimed version ``n``
-    first, deletes OUR staged directory (uniquely ours — see
-    ``_stage_dir``) and raises ``ConcurrentPublishError``; the winner's
-    committed files are untouched. ``carried_files`` (append commits)
-    are referenced, never re-listed or re-counted — the new manifest is
-    prior files + staged files. ``meta`` is an arbitrary small JSON dict
-    stored in the manifest — O(1) to read back via ``version_meta``,
-    which is how streaming state keeps an applied-batch watermark
-    without scanning data. ``stats_cols`` adds per-file min/max zone
-    maps; ``carried_stats`` (append commits) carries prior files' zone
-    maps by reference.
+    manifest ``n``, swap LATEST. A writer says only what it changed; the
+    version inherits the rest from ``head``, the version the writer read
+    (``_read_head``; ``None`` for a full publish, which inherits nothing):
+    the ``keep`` files (default all — the COW merge keeps its untouched
+    ones) with their zone maps, ``row_count`` minus ``rows_removed``,
+    the schema (merged additively with the batch's, ``_merge_schemas``),
+    ``meta`` unless given (a small dict ``version_meta`` reads back —
+    stream watermarks), and ``delete_files``: the head's sidecars plus
+    ``delete_entry``, the one this commit adds (a ``_delete_entries``
+    entry without its version, its files in one staged directory).
+    While any sidecar is carried, ``file_added`` maps each kept file to
+    its recorded add-version (0 when unrecorded: every sidecar applies)
+    and each staged file to ``n``, which no carried sidecar postdates,
+    so a re-inserted key stays alive; otherwise the field is absent.
 
-    ``schema`` is the schema the staged batch was WRITTEN with (the
-    writer's ``df.schema``), required whenever ``data_dir`` is given: the
-    staged files are read with it instead of inferring it from their
-    footers (file sources read every column nullable, so the recorded
-    schema equals what inference would give). The staged row count then
-    rides the zone-map aggregation (``_file_stats``), and a commit
-    without ``stats_cols`` pays one ``count()``, which parquet answers
-    from row-group metadata.
+    ``data_dir`` holds the staged batch, read with ``schema``, the schema
+    it was WRITTEN with (required; never footer-inferred); its row count
+    rides the ``stats_cols`` zone-map aggregate, else one ``count()``
+    answered from row-group metadata. ``data_dir=None`` is a
+    pure-metadata commit (a merge-on-read delete) and takes the head's
+    schema. ``changelog_dir`` is a staged row-level changelog, listed
+    here and recorded as ``changelog_files`` (weights in ``__w``).
 
-    ``op`` is the commit's OPERATION KIND, recorded as a top-level
-    manifest field (Iceberg's snapshot ``operation``) so incremental
-    consumers can classify commits without diffing file lists:
-    ``append`` (prior rows untouched, staged rows new), ``replace``
-    (prior rows preserved value-for-value under new files — compact,
-    widen), ``overwrite`` (no row-preservation guarantee — full
-    publish, MERGE-style rewrites; also the conservative default and
-    what a pre-op-era manifest reads as), ``delete`` (a merge-on-read
-    sidecar commit: rows logically removed, every file carried —
-    ``mor_delete``). A scheduled compaction tagged
-    ``replace`` is what lets ``refresh_mv`` skip it instead of paying an
-    O(source) rebuild. Deliberately NOT in ``meta``: appends/compacts
-    carry meta forward for consumer watermarks, while the op kind is a
-    per-commit fact that must never be inherited.
+    ``op`` is the commit's OPERATION KIND (Iceberg's snapshot
+    ``operation``), a per-commit fact never inherited, like the
+    changelog: ``append`` (prior rows untouched), ``replace`` (prior
+    rows preserved value for value under new files — compact, widen;
+    ``refresh_mv`` skips it), ``overwrite`` (no row-preservation
+    guarantee — publish, MERGE-style rewrites; what a pre-op-era
+    manifest reads as) or ``delete`` (a merge-on-read sidecar commit).
 
-    ``extra_payload``: additional top-level manifest fields recorded
-    atomically with the commit (the persisted-changelog pointer
-    ``changelog_files``/``changelog_weight_col`` rides here) — like
-    ``op``, per-commit facts, never inherited by later commits.
-
-    ``data_dir=None`` is a PURE-METADATA commit (a merge-on-read delete:
-    nothing staged, every file carried) — ``carried_schema`` is then
-    required, since there is no batch to derive one from.
-
-    ``carried_delete_entries`` / ``carried_file_added``: the
-    merge-on-read state that IS inherited down append chains (unlike
-    ``extra_payload``): the cumulative equality-delete sidecar list and
-    the per-file add-version map sidecar applicability is decided by.
-    Staged files enter ``file_added`` at version ``n`` (no existing
-    sidecar applies to them — every recorded ``dv`` <= head < n), so an
-    append re-inserting a deleted key stays alive. Full rewrites
-    (publish/compact/widen) pass neither: they FOLD deletes into the
-    rewrite and the state resets."""
+    A commit that fails before its manifest lands — another publisher
+    claimed ``n`` first (``ConcurrentPublishError``; the winner is
+    untouched), a purge fence refused it (``PurgeInFlightError``), a
+    stats column is bad or a carried file vanished — reclaims every
+    directory it was handed (batch, changelog, sidecar): staging
+    prefixes are uuid-unique, so nothing else ever would."""
     jvm, fs, _ = hadoop_fs(spark, table_path)
     if data_dir is not None:
         if schema is None:
@@ -653,12 +685,41 @@ def _commit(
             )
         staged = _list_parquet(jvm, fs, data_dir)
     else:
-        if carried_schema is None:
+        if head is None or head.schema is None:
             raise ValueError(
                 "_commit: a pure-metadata commit (data_dir=None) needs "
-                "carried_schema — there is no staged batch to derive one"
+                "the head's schema — there is no staged batch to derive one"
             )
         staged = []
+    hpath = jvm.org.apache.hadoop.fs.Path
+    staged_dirs = [hpath(d) for d in (data_dir, changelog_dir) if d is not None]
+    if delete_entry is not None:
+        staged_dirs.append(hpath(delete_entry["files"][0]).getParent())
+
+    def _reclaim() -> None:
+        for d in staged_dirs:
+            fs.delete(d, True)
+
+    hm = head.m if head is not None else {"files": [], "row_count": 0}
+    carried_files = tuple(hm["files"] if keep is None else keep)
+    carried_rows = int(hm["row_count"]) - rows_removed
+    carried_stats = hm.get("file_stats")
+    if keep is not None and carried_stats:
+        kept = {_path_key(f) for f in keep}
+        carried_stats = {k: v for k, v in carried_stats.items() if k in kept}
+    if meta is None:
+        meta = hm.get("meta")
+    delete_entries = list(hm.get("delete_files") or [])
+    if delete_entry is not None:
+        delete_entries.append({**delete_entry, "version": n})
+    carried_file_added = None
+    if delete_entries:
+        fa = hm.get("file_added") or {}
+        carried_file_added = {k: fa.get(k, 0) for k in map(_path_key, carried_files)}
+    changelog_files = (
+        _list_parquet(jvm, fs, changelog_dir) if changelog_dir is not None else None
+    )
+    carried_read_at = head.read_at if head is not None else None
 
     def _purge_fence() -> tuple[tuple[str, ...], int, dict | None]:
         # Writer fence against a racing purge_rows: this commit may have
@@ -716,23 +777,21 @@ def _commit(
         # evolution, with a loud error on a same-name type conflict
         # (_merge_schemas).
         version_schema = _merge_schemas(
-            carried_schema, staged_df.schema
+            head.schema if head is not None else None, staged_df.schema
         ).json()
         if stats_cols:
             try:
                 staged_stats, staged_rows = _file_stats(staged_df, stats_cols)
             except Exception:
                 # A bad stats column (typo, schema drift) aborts the
-                # commit AFTER the batch was written; the uuid-named
-                # staged dir is referenced by no manifest and would
-                # otherwise leak forever — reclaim it before propagating
-                # (same class as the gated-publish failed-audit cleanup).
-                fs.delete(jvm.org.apache.hadoop.fs.Path(data_dir), True)
+                # commit AFTER the batch was written (same class as the
+                # gated-publish failed-audit cleanup).
+                _reclaim()
                 raise
         else:
             staged_rows = staged_df.count()
     else:
-        version_schema = carried_schema
+        version_schema = head.schema
     if carried_files:
         # Fence LAST — after the staged-batch scans above, which are the
         # seconds-long part of a commit; a purge starting during them is
@@ -762,8 +821,7 @@ def _commit(
                 if not fs.exists(jvm.org.apache.hadoop.fs.Path(f))
             ]
             if missing:
-                if data_dir is not None:
-                    fs.delete(jvm.org.apache.hadoop.fs.Path(data_dir), True)
+                _reclaim()
                 raise RuntimeError(
                     f"append to {table_path} carried {len(missing)} file(s) "
                     f"that no longer exist (a purge completed and its plan "
@@ -777,31 +835,28 @@ def _commit(
     # races THIS commit landing one mid-purge — a sidecar's key tuples
     # and a changelog's row images hold table values BY VALUE, which a
     # purge plan's file remap can never rewrite, so the purged values
-    # would survive invisibly. A commit ADDS such a payload when its
-    # extra_payload persists a changelog or its carried delete entries
-    # include one minted at THIS version (inherited entries all predate
-    # it — and a table that had any would have refused the purge
-    # upfront anyway). Refuse while a pending tombstone exists; the
-    # post-write re-check below closes the residual fence->write gap.
-    adds_erasure = bool((extra_payload or {}).get("changelog_files")) or any(
-        int(e.get("version", -1)) == n
-        for e in (carried_delete_entries or [])
-    )
+    # would survive invisibly. A commit ADDS such a payload when it
+    # persists a changelog or adds a delete entry (inherited entries
+    # all predate it — and a table that had any would have refused the
+    # purge upfront anyway). Refuse while a pending tombstone exists;
+    # the post-write re-check below closes the residual fence->write
+    # gap.
+    adds_erasure = bool(changelog_files) or delete_entry is not None
     # The writer's exposure window starts at its MANIFEST READ, not at
     # this fence: the sidecar keys / changelog images were computed from
     # the pre-purge snapshot during the seconds-long staging phase, so a
     # purge that COMPLETED inside the read->gap is just as fatal
     # as a pending one — its plan never saw values that are about to be
-    # committed. Anchor on carried_read_at; a caller that did not record
-    # one gets the conservative treatment (any visible plan is a
-    # hazard). completed_at is stamped by the PURGE driver's clock while
-    # carried_read_at comes from the writer's — a raw comparison is only
-    # sound on one shared clock, so the boundary carries a skew
-    # allowance: any plan that completed less than the allowance before
-    # the read (or any time after it) is treated as a hazard. The cost
-    # is benign — a sidecar/changelog commit whose read fell within the
-    # allowance of a rare purge retries once with a fresh read; the
-    # pending-tombstone half needs no clocks at all.
+    # committed. Anchor on the head's read time; a head without one gets
+    # the conservative treatment (any visible plan is a hazard).
+    # completed_at is stamped by the PURGE driver's clock while the read
+    # time comes from the writer's — a raw comparison is only sound on
+    # one shared clock, so the boundary carries a skew allowance: any
+    # plan that completed less than the allowance before the read (or
+    # any time after it) is treated as a hazard. The cost is benign — a
+    # sidecar/changelog commit whose read fell within the allowance of a
+    # rare purge retries once with a fresh read; the pending-tombstone
+    # half needs no clocks at all.
     read_anchor = carried_read_at if carried_read_at is not None else 0.0
 
     def _is_erasure_hazard(p: dict) -> bool:
@@ -815,8 +870,7 @@ def _commit(
         plans0 = _purge_plans(spark, table_path)
         pre_plan_ids = {p["__plan_id"] for p in plans0}
         if any(_is_erasure_hazard(p) for p in plans0):
-            if data_dir is not None:
-                fs.delete(jvm.org.apache.hadoop.fs.Path(data_dir), True)
+            _reclaim()
             raise PurgeInFlightError(
                 f"commit to {table_path} carries a merge-on-read delete "
                 f"sidecar or persisted changelog while a purge is in "
@@ -834,24 +888,17 @@ def _commit(
         "schema": version_schema,
         "op": op,
     }
-    if extra_payload:
-        clash = set(extra_payload) & set(payload) | {"meta", "file_stats"} & set(
-            extra_payload
-        )
-        if clash:
-            raise ValueError(
-                f"_commit: extra_payload must not shadow core manifest "
-                f"fields ({sorted(clash)})"
-            )
-        payload.update(extra_payload)
+    if changelog_files is not None:
+        payload["changelog_files"] = changelog_files
+        payload["changelog_weight_col"] = "__w"
     if meta:
         payload["meta"] = meta
     stats = dict(carried_stats or {})
     stats.update(staged_stats)
     if stats:
         payload["file_stats"] = stats
-    if carried_delete_entries:
-        payload["delete_files"] = carried_delete_entries
+    if delete_entries:
+        payload["delete_files"] = delete_entries
     if carried_file_added is not None:
         payload["file_added"] = {
             **carried_file_added,
@@ -859,14 +906,10 @@ def _commit(
         }
     try:
         _write_json(
-            spark,
-            f"{table_path}/manifest/{n:08d}.json",
-            payload,
-            overwrite=False,
+            spark, _manifest_file(table_path, n), payload, overwrite=False
         )
     except ConcurrentPublishError:
-        if data_dir is not None:
-            fs.delete(jvm.org.apache.hadoop.fs.Path(data_dir), True)
+        _reclaim()
         raise
     _write_json(spark, f"{table_path}/LATEST.json", {"version": n}, overwrite=True)
     if carried_files:
@@ -926,10 +969,7 @@ def _commit(
             if not changed:
                 break
             _write_json(
-                spark,
-                f"{table_path}/manifest/{n:08d}.json",
-                payload,
-                overwrite=True,
+                spark, _manifest_file(table_path, n), payload, overwrite=True
             )
         else:
             raise RuntimeError(
@@ -1031,47 +1071,22 @@ def append_version(
     carried forward — an append extends the prior version, so its
     watermarks remain true."""
     spark = df.sparkSession
-    vs = versions(spark, table_path)
-    if not vs:
+    head = _read_head(spark, table_path)
+    if head is None:
         return publish_version(df, table_path, meta=meta, stats_cols=stats_cols)
-    t_read = time.time()  # when the carried file list was read (fence TTL)
-    prior = _read_json(spark, f"{table_path}/manifest/{vs[-1]:08d}.json")
-    n = vs[-1] + 1
+    n = head.version + 1
     data_dir = _stage_dir(table_path, n)
     df.write.mode("overwrite").parquet(data_dir)
-    carried_schema = prior.get("schema")
-    if carried_schema is None and prior["files"]:
-        # Legacy table (committed before schemas were recorded): derive
-        # the carried schema from one prior file's footer so an evolving
-        # append cannot orphan the prior columns. Homogeneous by
-        # construction — any file serves.
-        carried_schema = spark.read.parquet(prior["files"][0]).schema.json()
     return _commit(
         spark,
         table_path,
         n,
         data_dir,
         df.schema,
-        carried_files=tuple(prior["files"]),
-        carried_rows=int(prior["row_count"]),
-        meta=meta if meta is not None else prior.get("meta"),
+        head=head,
+        meta=meta,
         stats_cols=stats_cols,
-        carried_stats=prior.get("file_stats"),
-        carried_schema=carried_schema,
-        carried_read_at=t_read,
         op="append",
-        # Merge-on-read state is inherited down append chains: carried
-        # files keep their applicable delete sidecars; the staged batch
-        # enters file_added at the new version, so no existing sidecar
-        # can kill a re-inserted key. The map is forced non-None when
-        # sidecars exist — an unrecorded appended file would default to
-        # version 0 and every sidecar would wrongly apply to it.
-        carried_delete_entries=prior.get("delete_files"),
-        carried_file_added=(
-            prior.get("file_added")
-            if not prior.get("delete_files")
-            else (prior.get("file_added") or {})
-        ),
     )
 
 
@@ -1081,7 +1096,7 @@ def version_meta(
     """The ``meta`` dict committed with ``version`` (default: current) —
     an O(1) manifest read, no data scan."""
     v = version if version is not None else current_version(spark, table_path)
-    return _read_json(spark, f"{table_path}/manifest/{v:08d}.json").get("meta", {})
+    return _read_manifest(spark, table_path, v).get("meta", {})
 
 
 def version_op(
@@ -1096,7 +1111,7 @@ def version_op(
     that special-case the stronger kinds degrade to exactly the
     behavior they had before tags. O(1) manifest read, no data scan."""
     v = version if version is not None else current_version(spark, table_path)
-    return _read_json(spark, f"{table_path}/manifest/{v:08d}.json").get(
+    return _read_manifest(spark, table_path, v).get(
         "op", "overwrite"
     )
 
@@ -1174,7 +1189,7 @@ def compact(
     if not vs:
         raise FileNotFoundError(f"nothing to compact at {table_path}")
     head = vs[-1]
-    prior = _read_json(spark, f"{table_path}/manifest/{head:08d}.json")
+    prior = _read_manifest(spark, table_path, head)
     # Live read: merge-on-read delete sidecars FOLD into the rewrite —
     # the compacted files carry only surviving rows, and the new
     # manifest carries no delete state (publish_version resets it), so
@@ -1191,14 +1206,12 @@ def compact(
     # stats for every column the prior version tracked — readers keep
     # their read_where pruning across compactions without the scheduler
     # having to remember which columns were indexed.
-    stat_cols = {
-        c for per_file in prior.get("file_stats", {}).values() for c in per_file
-    }
+    stat_cols = _tracked_stats_cols(prior)
     if cluster_by is not None:
         # The whole point of a clustered rewrite is selective read_where
         # pruning on the clustering key — recording no zone map for it
         # (table never indexed) would silently waste the rewrite.
-        stat_cols.add(cluster_by)
+        stat_cols = tuple(sorted({*stat_cols, cluster_by}))
     # ``replace``: every prior row survives value-for-value under new
     # files — the tag that lets an incremental MV consumer skip this
     # commit instead of full-recomputing (refresh_mv).
@@ -1206,7 +1219,7 @@ def compact(
         df,
         table_path,
         meta=prior.get("meta") or None,
-        stats_cols=tuple(sorted(stat_cols)),
+        stats_cols=stat_cols,
         op="replace",
     )
     # Bloom sidecars describe FILES, like zone maps — rebuild every
@@ -1256,7 +1269,7 @@ def maintain(
     vs = versions(spark, table_path)
     if not vs:
         raise FileNotFoundError(f"nothing to maintain at {table_path}")
-    m = _read_json(spark, f"{table_path}/manifest/{vs[-1]:08d}.json")
+    m = _read_manifest(spark, table_path, vs[-1])
     n_entries = len(_delete_entries(m))
     small = 0
     if max_small_files is not None and m["files"]:
@@ -1365,7 +1378,7 @@ def widen_column(
     if not vs:
         raise FileNotFoundError(f"no committed manifests at {table_path}")
     head = vs[-1]
-    prior = _read_json(spark, f"{table_path}/manifest/{head:08d}.json")
+    prior = _read_manifest(spark, table_path, head)
     # Live read: like compact, the rewrite folds merge-on-read deletes
     # (rows the current version already serves as deleted must not be
     # resurrected into the widened files).
@@ -1385,9 +1398,6 @@ def widen_column(
             f"integral up-chain, float->double, <=int->double and "
             f"decimal precision/scale growth are sanctioned"
         )
-    stat_cols = {
-        c for per_file in prior.get("file_stats", {}).values() for c in per_file
-    }
     # ``replace``: lossless cast — every row's VALUES are preserved (the
     # widened column compares equal at the wider type), so sums/mins/
     # maxes over it are unchanged and incremental MV consumers may skip
@@ -1396,7 +1406,7 @@ def widen_column(
         df.withColumn(col, F.col(col).cast(new_dt)),
         table_path,
         meta=prior.get("meta") or None,
-        stats_cols=tuple(sorted(stat_cols)),
+        stats_cols=_tracked_stats_cols(prior),
         op="replace",
     )
     # EVERY column indexed on the prior head gets its sidecar rebuilt on
@@ -1438,7 +1448,7 @@ def read_version(
     through every read path, including time travel (each version's
     manifest lists exactly the sidecars committed at or before it)."""
     v = version if version is not None else current_version(spark, table_path)
-    m = _read_json(spark, f"{table_path}/manifest/{v:08d}.json")
+    m = _read_manifest(spark, table_path, v)
     return _read_files_live(spark, m)
 
 
@@ -1460,13 +1470,13 @@ def chain_links(
     Driver-side KB-manifest reads only, O(chain length), never a data
     scan: on an object store each link is one metadata round-trip."""
     try:
-        prev = _read_json(spark, f"{table_path}/manifest/{from_version:08d}.json")
+        prev = _read_manifest(spark, table_path, from_version)
     except Exception:
         return None
     links: list[tuple[str, int, list[str]]] = []
     for v in range(from_version + 1, to_version + 1):
         try:
-            m = _read_json(spark, f"{table_path}/manifest/{v:08d}.json")
+            m = _read_manifest(spark, table_path, v)
         except Exception:
             return None  # expired/unreadable intermediate: chain broken
         op = m.get("op", "overwrite")
@@ -1517,7 +1527,7 @@ def _appended_rows(
     from pyspark.sql import functions as F
 
     appends = [(v, files) for kind, v, files in links if kind == "append" and files]
-    m_head = _read_json(spark, f"{table_path}/manifest/{to_v:08d}.json")
+    m_head = _read_manifest(spark, table_path, to_v)
     sj = m_head.get("schema")
     if sj is None:
         # Legacy head without a recorded schema: appended files are
@@ -1536,7 +1546,7 @@ def _appended_rows(
     head_schema = StructType.fromJson(json.loads(sj))
     out: DataFrame | None = None
     for v, files in appends:
-        m = _read_json(spark, f"{table_path}/manifest/{v:08d}.json")
+        m = _read_manifest(spark, table_path, v)
         seg = _read_files(spark, m, files)
         seg = seg.select(*_conformed(seg, head_schema))
         out = seg if out is None else out.unionByName(seg)
@@ -1606,7 +1616,7 @@ def read_changelog(
     hands back, a persisted changelog is a self-contained copy — it
     survives the prior version's expiry and replays identically."""
     v = version if version is not None else current_version(spark, table_path)
-    m = _read_json(spark, f"{table_path}/manifest/{v:08d}.json")
+    m = _read_manifest(spark, table_path, v)
     files = m.get("changelog_files")
     if not files:
         return None
@@ -1797,7 +1807,7 @@ def read_where(
     from pyspark.sql import functions as F
 
     v = version if version is not None else current_version(spark, table_path)
-    m = _read_json(spark, f"{table_path}/manifest/{v:08d}.json")
+    m = _read_manifest(spark, table_path, v)
     keep, _total = prune_files(m, col, lo, hi)
     if not keep:
         # Preserve schema with an empty result: read one manifest file's
@@ -1878,7 +1888,7 @@ def table_history(spark: SparkSession, table_path: str) -> DataFrame:
     cur = current_version(spark, table_path)
     rows = []
     for v in vs:
-        m = _read_json(spark, f"{table_path}/manifest/{v:08d}.json")
+        m = _read_manifest(spark, table_path, v)
         rows.append(
             (v, m["row_count"], len(m["files"]), float(m["published_at"]), v == cur)
         )
@@ -1900,7 +1910,7 @@ def _referenced_files(
     refs = {
         _path_key(f)
         for v in vs
-        for f in _read_json(spark, f"{table_path}/manifest/{v:08d}.json")["files"]
+        for f in _read_manifest(spark, table_path, v)["files"]
     }
     pdir = jvm.org.apache.hadoop.fs.Path(f"{table_path}/purge")
     if fs.exists(pdir):
@@ -1969,24 +1979,21 @@ def expire_versions(
     retained_del = {
         _path_key(f)
         for v in sorted(keep)
-        for e in _delete_entries(
-            _read_json(spark, f"{table_path}/manifest/{v:08d}.json")
-        )
+        for e in _delete_entries(_read_manifest(spark, table_path, v))
         for f in e["files"]
     }
     doomed: dict[str, str] = {}  # path_key -> original path string
     doomed_cl: list[str] = []  # expired versions' persisted changelogs
     doomed_del: dict[str, str] = {}  # expired-only delete sidecars
     for v in expired:
-        mj = _read_json(spark, f"{table_path}/manifest/{v:08d}.json")
+        mj = _read_manifest(spark, table_path, v)
         for f in mj["files"]:
             k = _path_key(f)
             if k not in retained_refs:
                 doomed.setdefault(k, f)
-        # Persisted changelogs are per-commit facts, never inherited by
-        # later manifests (_commit's extra_payload contract) — an
-        # expired version's changelog files are referenced by nothing
-        # retained and go with it.
+        # Persisted changelogs are per-commit facts ``_commit`` never
+        # carries into later manifests — an expired version's changelog
+        # files are referenced by nothing retained and go with it.
         doomed_cl += mj.get("changelog_files") or []
         for e in _delete_entries(mj):
             for f in e["files"]:
@@ -1996,10 +2003,7 @@ def expire_versions(
     # 1. Manifests first: after this, the doomed files are referenced by
     #    nothing and time travel to expired versions fails descriptively.
     for v in expired:
-        fs.delete(
-            jvm.org.apache.hadoop.fs.Path(f"{table_path}/manifest/{v:08d}.json"),
-            False,
-        )
+        fs.delete(jvm.org.apache.hadoop.fs.Path(_manifest_file(table_path, v)), False)
     # 2. Exclusively-owned bytes.
     n_files = 0
     for f in doomed.values():
@@ -2080,10 +2084,7 @@ def vacuum_orphans(
     # written.
     n_cl = 0
     live_vs = versions(spark, table_path)
-    live_ms = [
-        _read_json(spark, f"{table_path}/manifest/{v:08d}.json")
-        for v in live_vs
-    ]
+    live_ms = [_read_manifest(spark, table_path, v) for v in live_vs]
     for subdir, refs in (
         (
             "changelog",
@@ -2148,11 +2149,8 @@ def vacuum_orphans(
             # ever built for already-committed manifests, so one manifest
             # existence probe right before the delete closes the race
             # exactly — if the manifest exists now, the version is live.
-            if fs.exists(
-                jvm.org.apache.hadoop.fs.Path(
-                    f"{table_path}/manifest/{v:08d}.json"
-                )
-            ):
+            mpath = jvm.org.apache.hadoop.fs.Path(_manifest_file(table_path, v))
+            if fs.exists(mpath):
                 live_versions.add(v)
                 continue
             fs.delete(st.getPath(), True)
@@ -2199,7 +2197,7 @@ def _drop_persisted_changelogs(spark: SparkSession, table_path: str) -> None:
     jvm, fs, _ = hadoop_fs(spark, table_path)
     doomed: list[str] = []
     for v in versions(spark, table_path):
-        mpath = f"{table_path}/manifest/{v:08d}.json"
+        mpath = _manifest_file(table_path, v)
         mm = _read_json(spark, mpath)
         if mm.get("changelog_files"):
             doomed += mm["changelog_files"]
@@ -2258,7 +2256,7 @@ def _apply_purge_plan(
     for _attempt in range(5):
         vs = versions(spark, table_path)
         for v in vs:
-            mpath = f"{table_path}/manifest/{v:08d}.json"
+            mpath = _manifest_file(table_path, v)
             m = _read_json(spark, mpath)
             if _remap_manifest_payload(m, removed, remap):
                 _write_json(spark, mpath, m, overwrite=True)
@@ -2431,9 +2429,7 @@ def purge_rows(
     # persisted plan) so this purge plans against consistent manifests.
     _replay_pending_purges(spark, table_path)
 
-    manifests = {
-        v: _read_json(spark, f"{table_path}/manifest/{v:08d}.json") for v in vs
-    }
+    manifests = {v: _read_manifest(spark, table_path, v) for v in vs}
     mor_versions = [v for v, m in manifests.items() if m.get("delete_files")]
     if mor_versions:
         # A purge's file remap adjusts row counts by PHYSICAL matches,
@@ -2594,9 +2590,7 @@ def purge_rows(
         # of declaring the erasure complete.
         def _changelogs_present() -> bool:
             return any(
-                _read_json(
-                    spark, f"{table_path}/manifest/{v:08d}.json"
-                ).get("changelog_files")
+                _read_manifest(spark, table_path, v).get("changelog_files")
                 for v in versions(spark, table_path)
             )
 
@@ -2620,9 +2614,7 @@ def purge_rows(
         mor_after = [
             v
             for v in versions(spark, table_path)
-            if _read_json(
-                spark, f"{table_path}/manifest/{v:08d}.json"
-            ).get("delete_files")
+            if _read_manifest(spark, table_path, v).get("delete_files")
         ]
         if mor_after:
             raise RuntimeError(

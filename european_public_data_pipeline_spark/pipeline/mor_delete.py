@@ -28,13 +28,14 @@ Semantics (Iceberg v2 sequence-number rule, carried by ``file_added``):
 a sidecar committed at version ``dv`` applies only to files ADDED
 before ``dv`` — a row re-inserted by a later append or merge stays
 alive. Manifests carry the cumulative sidecar list (``delete_files``)
-and the per-file add-version map (``file_added``); every read path
+and the per-file add-version map (``file_added``); ``_commit`` owns
+both — a writer hands it only the one sidecar it adds. Every read path
 (``read_version``, ``read_where``, Bloom ``read_point``) applies the
-sidecars via ``_read_files_live``, so
-zone-map or Bloom pruning can never resurrect a deleted row, and time
-travel to a pre-delete version shows the rows (that version's manifest
-lists no such sidecar). ``compact``/``widen_column`` FOLD the sidecars
-into their rewrite and the new version carries none.
+sidecars via ``_read_files_live``, so zone-map or Bloom pruning can
+never resurrect a deleted row, and time travel to a pre-delete version
+shows the rows (that version's manifest lists no such sidecar).
+``compact``/``widen_column`` FOLD the sidecars into their rewrite and
+the new version carries none.
 
 The commit itself is pure metadata + the sidecar: ``_commit`` with
 ``data_dir=None`` — purge-fenced, concurrent-publisher-safe, op kind
@@ -56,7 +57,6 @@ give up exact row counts for pure metadata commits.
 
 from __future__ import annotations
 
-import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -68,38 +68,38 @@ from european_public_data_pipeline_spark.pipeline.fs_util import (
 )
 from european_public_data_pipeline_spark.pipeline.manifest import (
     KEY_BATCH_CAP,
-    ConcurrentPublishError,
-    PurgeInFlightError,
+    Head,
     _changelog_stage_dir,
     _commit,
     _list_parquet,
-    _path_key,
     _read_files_live,
-    _read_json,
+    _read_head,
     _stage_dir,
+    _tracked_stats_cols,
     prune_candidates,
     prune_files,
     profile_key_batch,
     read_changelog,
-    versions,
 )
 from european_public_data_pipeline_spark.session import local_frame
 
 
-def _read_head(spark: SparkSession, table_path: str) -> tuple:
-    """The highest committed version, its manifest, the read time (the
-    purge fence's TTL) and the schema the commit carries — a legacy
-    (pre-schema-era) table derives it from one footer, like
-    append_version: the manifest owns a schema from here on."""
-    vs = versions(spark, table_path)
-    if not vs:
+def _head(spark: SparkSession, table_path: str) -> Head:
+    head = _read_head(spark, table_path)
+    if head is None:
         raise FileNotFoundError(f"no committed manifests at {table_path}")
-    t_read = time.time()
-    m = _read_json(spark, f"{table_path}/manifest/{vs[-1]:08d}.json")
-    schema = m.get("schema")
-    if schema is None and m["files"]:
-        schema = spark.read.parquet(m["files"][0]).schema.json()
-    return vs[-1], m, t_read, schema
+    return head
+
+
+def _stage_sidecar(df: DataFrame, table_path: str, n: int) -> list[str]:
+    """Write a delete sidecar for version ``n`` as one file under a
+    uuid-unique ``deletes/`` prefix (a loser's sidecar never collides
+    with the winner's); returns its files."""
+    sidecar_dir = f"{table_path}/deletes/v{n:08d}-{uuid.uuid4().hex[:12]}"
+    df.coalesce(1).write.mode("overwrite").parquet(sidecar_dir)
+    jvm, fs, _ = hadoop_fs(df.sparkSession, sidecar_dir)
+    return _list_parquet(jvm, fs, sidecar_dir)
+
 
 def delete_rows_mor(
     spark: SparkSession,
@@ -120,7 +120,8 @@ def delete_rows_mor(
     NULL delete keys are refused loudly (a NULL key matches nothing —
     same guard as ``merge_into_manifest``). Like every writer here, the
     commit chains off the highest committed version."""
-    head, m, t_read, carried_schema = _read_head(spark, table_path)
+    head = _head(spark, table_path)
+    m = head.m
 
     batch = profile_key_batch(keys, deletes=deletes)
     batch.refuse("null_del", "delete_rows_mor: delete batch carries NULL merge keys")
@@ -147,10 +148,8 @@ def delete_rows_mor(
     )
     probe = F.broadcast(dkeys)
 
-    n = head + 1
-    jvm, fs, _ = hadoop_fs(spark, table_path)
+    n = head.version + 1
     cl_dir = None
-    extra_payload = None
     if candidates and persist_changelog:
         # ONE pruned live scan serves both needs: stage the old images
         # first, then answer the matched count from the staged parquet's
@@ -177,7 +176,7 @@ def delete_rows_mor(
     else:
         matched = 0
     out = {
-        "version": head,
+        "version": head.version,
         "rows_deleted": int(matched),
         "files_pruned": len(m["files"]) - len(candidates),
         "files_scanned": len(candidates),
@@ -187,53 +186,24 @@ def delete_rows_mor(
         if cl_dir is not None:
             delete_path(spark, cl_dir)  # staged images of nothing
         return out
-    if cl_dir is not None:
-        extra_payload = {
-            "changelog_files": _list_parquet(jvm, fs, cl_dir),
-            "changelog_weight_col": "__w",
-        }
 
-    sidecar_dir = f"{table_path}/deletes/v{n:08d}-{uuid.uuid4().hex[:12]}"
     # KB-scale by design: one file of distinct key tuples.
-    dkeys.coalesce(1).write.mode("overwrite").parquet(sidecar_dir)
-    sidecar_files = _list_parquet(jvm, fs, sidecar_dir)
-    entries = list(m.get("delete_files") or []) + [
-        {
-            "version": n,
+    sidecar_files = _stage_sidecar(dkeys, table_path, n)
+    version = _commit(
+        spark,
+        table_path,
+        n,
+        None,  # pure-metadata commit: nothing staged
+        head=head,
+        rows_removed=int(matched),
+        op="delete",
+        delete_entry={
             "files": sidecar_files,
             "keys": list(keys),
             "schema": dkeys.schema.json(),
-        }
-    ]
-    # Seed the add-version map on the first delete: every current file
-    # predates this sidecar (version 0 = all sidecars apply), and from
-    # here on _commit records each staged file's true version.
-    file_added = m.get("file_added") or {
-        _path_key(f): 0 for f in m["files"]
-    }
-
-    try:
-        version = _commit(
-            spark,
-            table_path,
-            n,
-            None,  # pure-metadata commit: nothing staged
-            carried_files=tuple(m["files"]),
-            carried_rows=int(m["row_count"]) - int(matched),
-            meta=m.get("meta"),
-            carried_stats=m.get("file_stats"),
-            carried_schema=carried_schema,
-            carried_read_at=t_read,
-            op="delete",
-            extra_payload=extra_payload,
-            carried_delete_entries=entries,
-            carried_file_added=file_added,
-        )
-    except (ConcurrentPublishError, PurgeInFlightError):
-        delete_path(spark, sidecar_dir)
-        if cl_dir is not None:
-            delete_path(spark, cl_dir)
-        raise
+        },
+        changelog_dir=cl_dir,
+    )
     out["version"] = version
     out["sidecar_files"] = len(sidecar_files)
     if persist_changelog:
@@ -276,7 +246,8 @@ def delete_where_mor(
     predicate commits nothing. ``persist_changelog`` stages the matched
     rows' old images at weight -1 (keeps ``refresh_mv`` incremental
     across the delete, like the equality flavor)."""
-    head, m, t_read, carried_schema = _read_head(spark, table_path)
+    head = _head(spark, table_path)
+    m = head.m
 
     cond = F.expr(condition)
     if prune_col is not None:
@@ -291,7 +262,7 @@ def delete_where_mor(
     else:
         candidates = list(m["files"])
     out = {
-        "version": head,
+        "version": head.version,
         "rows_deleted": 0,
         "files_pruned": len(m["files"]) - len(candidates),
         "files_scanned": len(candidates),
@@ -300,8 +271,7 @@ def delete_where_mor(
     if not candidates:
         return out
 
-    n = head + 1
-    jvm, fs, _ = hadoop_fs(spark, table_path)
+    n = head.version + 1
 
     # ONE live scan: physical identity captured AT SCAN (the reader's
     # keep_positions), earlier sidecars applied (a row already dead
@@ -324,54 +294,28 @@ def delete_where_mor(
                 "compact. Rewrite filtered (publish_version of the "
                 "surviving rows) or purge_rows instead"
             )
-        sidecar_dir = (
-            f"{table_path}/deletes/v{n:08d}-{uuid.uuid4().hex[:12]}"
+        sidecar_files = _stage_sidecar(
+            matches.select("__pf", "__pr"), table_path, n
         )
-        matches.select("__pf", "__pr").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(sidecar_dir)
         cl_dir = None
-        extra_payload = None
         if persist_changelog:
             cl_dir = _changelog_stage_dir(table_path, n)
             matches.drop("__pf", "__pr").select(
                 "*", F.lit(-1).alias("__w")
             ).coalesce(4).write.mode("overwrite").parquet(cl_dir)
-            extra_payload = {
-                "changelog_files": _list_parquet(jvm, fs, cl_dir),
-                "changelog_weight_col": "__w",
-            }
     finally:
         matches.unpersist()
-    sidecar_files = _list_parquet(jvm, fs, sidecar_dir)
-    entries = list(m.get("delete_files") or []) + [
-        {"version": n, "files": sidecar_files, "kind": "position"}
-    ]
-    file_added = m.get("file_added") or {
-        _path_key(f): 0 for f in m["files"]
-    }
-    try:
-        version = _commit(
-            spark,
-            table_path,
-            n,
-            None,
-            carried_files=tuple(m["files"]),
-            carried_rows=int(m["row_count"]) - int(matched),
-            meta=m.get("meta"),
-            carried_stats=m.get("file_stats"),
-            carried_schema=carried_schema,
-            carried_read_at=t_read,
-            op="delete",
-            extra_payload=extra_payload,
-            carried_delete_entries=entries,
-            carried_file_added=file_added,
-        )
-    except (ConcurrentPublishError, PurgeInFlightError):
-        delete_path(spark, sidecar_dir)
-        if cl_dir is not None:
-            delete_path(spark, cl_dir)
-        raise
+    version = _commit(
+        spark,
+        table_path,
+        n,
+        None,
+        head=head,
+        rows_removed=int(matched),
+        op="delete",
+        delete_entry={"files": sidecar_files, "kind": "position"},
+        changelog_dir=cl_dir,
+    )
     out["version"] = version
     out["rows_deleted"] = int(matched)
     out["sidecar_files"] = len(sidecar_files)
@@ -428,7 +372,8 @@ def upsert_rows_mor(
     Returns ``{"version", "rows_updated", "rows_inserted",
     "files_pruned", "files_scanned", "sidecar_files", "changelog"?}``;
     an empty batch commits nothing."""
-    head, m, t_read, carried_schema = _read_head(spark, table_path)
+    head = _head(spark, table_path)
+    m = head.m
 
     # Pin the batch BEFORE validating it: it is read several times and
     # may carry expensive or NON-DETERMINISTIC lineage — a NULL key could
@@ -461,7 +406,7 @@ def upsert_rows_mor(
         )
     if not batch.rows:
         return {
-            "version": head,
+            "version": head.version,
             "rows_updated": 0,
             "rows_inserted": 0,
             "files_pruned": 0,
@@ -487,10 +432,8 @@ def upsert_rows_mor(
     # per-key aggregate is bounded by the batch's key count (<= cap),
     # so collecting it is driver-safe, and it answers both the exact
     # row accounting and the matched-key set the sidecar needs.
-    n_next = head + 1
-    jvm, fs, _ = hadoop_fs(spark, table_path)
+    n_next = head.version + 1
     cl_dir = None
-    extra_payload = None
     matched_rows = 0
     matched_key_rows: list = []
     new_images = updates.select("*", F.lit(1).alias("__w"))
@@ -524,82 +467,42 @@ def upsert_rows_mor(
         # No candidate file can hold a batch key: pure inserts.
         cl_dir = _changelog_stage_dir(table_path, n_next)
         new_images.coalesce(4).write.mode("overwrite").parquet(cl_dir)
-    if cl_dir is not None:
-        extra_payload = {
-            "changelog_files": _list_parquet(jvm, fs, cl_dir),
-            "changelog_weight_col": "__w",
-        }
 
-    entries = list(m.get("delete_files") or [])
-    sidecar_dir = None
+    delete_entry = None
     if matched_rows:
         # Sidecar of MATCHED keys only — inserts match nothing and
         # would be pure broadcast rent on every read until compact.
-        sidecar_dir = (
-            f"{table_path}/deletes/v{n_next:08d}-{uuid.uuid4().hex[:12]}"
-        )
-        local_frame(
-            spark,
-            [tuple(r[k] for k in keys) for r in matched_key_rows],
-            key_schema,
-        ).coalesce(1).write.mode("overwrite").parquet(sidecar_dir)
-        entries.append(
-            {
-                "version": n_next,
-                "files": _list_parquet(jvm, fs, sidecar_dir),
-                "keys": list(keys),
-                "schema": key_schema.json(),
-            }
-        )
+        delete_entry = {
+            "files": _stage_sidecar(
+                local_frame(
+                    spark,
+                    [tuple(r[k] for k in keys) for r in matched_key_rows],
+                    key_schema,
+                ),
+                table_path,
+                n_next,
+            ),
+            "keys": list(keys),
+            "schema": key_schema.json(),
+        }
 
-    # Stage the new images — the ONLY data write, O(batch) bytes.
+    # Stage the new images — the ONLY data write, O(batch) bytes. The
+    # staged images enter file_added at THIS version, so no sidecar —
+    # this commit's own included — kills the upserted rows at scan.
     data_dir = _stage_dir(table_path, n_next)
     updates.coalesce(4).write.mode("overwrite").parquet(data_dir)
-
-    # file_added must ride along whenever ANY sidecar exists: without an
-    # entry the staged images would read as version 0 and every sidecar
-    # — including this commit's own — would apply to them, killing the
-    # upserted rows at scan.
-    file_added = None
-    if entries:
-        file_added = m.get("file_added") or {
-            _path_key(f): 0 for f in m["files"]
-        }
-
-    carried_stats = None
-    stat_cols: set[str] = set()
-    if m.get("file_stats"):
-        carried_stats = dict(m["file_stats"])
-        stat_cols = {
-            c for per_file in m["file_stats"].values() for c in per_file
-        }
-    try:
-        version = _commit(
-            spark,
-            table_path,
-            n_next,
-            data_dir,
-            updates.schema,
-            carried_files=tuple(m["files"]),
-            carried_rows=int(m["row_count"]) - int(matched_rows),
-            meta=m.get("meta"),
-            stats_cols=tuple(sorted(stat_cols)),
-            carried_stats=carried_stats,
-            carried_schema=carried_schema,
-            carried_read_at=t_read,
-            op="overwrite",
-            extra_payload=extra_payload,
-            carried_delete_entries=entries or None,
-            carried_file_added=file_added,
-        )
-    except (ConcurrentPublishError, PurgeInFlightError):
-        # _commit reclaimed OUR staged data dir; the sidecar and staged
-        # changelog are equally ours-and-unreferenced.
-        if sidecar_dir is not None:
-            delete_path(spark, sidecar_dir)
-        if cl_dir is not None:
-            delete_path(spark, cl_dir)
-        raise
+    version = _commit(
+        spark,
+        table_path,
+        n_next,
+        data_dir,
+        updates.schema,
+        head=head,
+        rows_removed=int(matched_rows),
+        stats_cols=_tracked_stats_cols(m),
+        delete_entry=delete_entry,
+        changelog_dir=cl_dir,
+    )
     out = {
         "version": version,
         "rows_updated": int(matched_rows),

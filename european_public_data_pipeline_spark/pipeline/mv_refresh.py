@@ -68,7 +68,7 @@ from pyspark.sql import functions as F
 from european_public_data_pipeline_spark.pipeline.manifest import (
     _appended_rows,
     _conformed,
-    _read_json,
+    _read_manifest,
     chain_links,
     current_version,
     publish_version,
@@ -194,7 +194,7 @@ def _files_md5(spark: SparkSession, table_path: str, version: int) -> str:
     import hashlib
     import json as _json
 
-    files = _read_json(spark, f"{table_path}/manifest/{version:08d}.json")["files"]
+    files = _read_manifest(spark, table_path, version)["files"]
     return hashlib.md5(_json.dumps(sorted(files)).encode()).hexdigest()
 
 
@@ -393,7 +393,7 @@ def _chain_changelog(
 
     from pyspark.sql.types import StructType
 
-    head_m = _read_json(spark, f"{src_path}/manifest/{src_v:08d}.json")
+    head_m = _read_manifest(spark, src_path, src_v)
     sj = head_m.get("schema")
     head_schema = (
         StructType.fromJson(_json.loads(sj)) if sj else None
@@ -409,7 +409,7 @@ def _chain_changelog(
             continue
         if prior_cl is not None and v <= int(prior_cl):
             continue  # already folded by a direct apply of this merge
-        m_v = _read_json(spark, f"{src_path}/manifest/{v:08d}.json")
+        m_v = _read_manifest(spark, src_path, v)
         wcol = m_v.get("changelog_weight_col", "__w")
         cl = spark.read.parquet(*files)
         if head_schema is not None:

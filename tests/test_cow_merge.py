@@ -412,6 +412,34 @@ def test_cow_merge_empty_batch_commits_nothing(spark, tmp_path):
     assert [tuple(r) for r in history.collect()] == [(1, 2, 100)]
 
 
+def test_cow_merge_on_schemaless_table_keeps_unbatched_columns(spark, tmp_path):
+    """A table whose manifest records no schema (committed before schemas
+    were recorded) takes its schema from a footer, as every carrying
+    writer does: an insert-only batch lacking ``extra`` must not narrow
+    the new version's schema and hide ``extra`` in the carried files."""
+    import json
+    import os
+
+    t = str(tmp_path / "tbl")
+    seed = spark.createDataFrame(
+        [(1, 10, "a"), (2, 20, "b")], "k long, v long, extra string"
+    )
+    M.publish_version(seed, t)
+    mp = f"{t}/manifest/00000001.json"
+    m = json.load(open(mp))
+    del m["schema"]
+    json.dump(m, open(mp, "w"))
+    os.remove(f"{t}/manifest/.00000001.json.crc")  # raw edit broke the crc
+    merge_into_manifest(
+        spark, t, spark.createDataFrame([(3, 30)], "k long, v long"), keys=["k"]
+    )
+    got = M.read_version(spark, t)
+    assert got.columns == ["k", "v", "extra"]
+    assert sorted(tuple(r) for r in got.collect()) == [
+        (1, 10, "a"), (2, 20, "b"), (3, 30, None)
+    ]
+
+
 _FAULT_ROWS = {  # fault: (its extra update rows, its extra delete keys)
     "dup": ([(5, 0)], []),
     "null_upd": ([(None, 0)], []),

@@ -1400,9 +1400,7 @@ def test_post_commit_fence_repairs_append_that_raced_a_whole_purge(
     batch.write.mode("overwrite").parquet(data_dir)
     M._commit(
         spark, t, 2, data_dir, batch.schema,
-        carried_files=tuple(prior["files"]),
-        carried_rows=int(prior["row_count"]),
-        carried_schema=prior.get("schema"),
+        head=M.Head(1, prior, None, prior.get("schema")),
     )
     assert calls["n"] >= 2  # the post-commit fence actually re-checked
     m2 = M._read_json(spark, f"{t}/manifest/00000002.json")
@@ -1487,9 +1485,7 @@ def test_post_commit_fence_applies_chained_purge_plans_in_order(
     batch.write.mode("overwrite").parquet(data_dir)
     M._commit(
         spark, t, 2, data_dir, batch.schema,
-        carried_files=tuple(prior["files"]),
-        carried_rows=int(prior["row_count"]),
-        carried_schema=prior.get("schema"),
+        head=M.Head(1, prior, None, prior.get("schema")),
     )
     m2 = M._read_json(spark, f"{t}/manifest/00000002.json")
     for f in m2["files"]:
@@ -1524,11 +1520,13 @@ def test_long_stage_existence_sweep_fails_loudly_not_silently(
     with pytest.raises(RuntimeError, match="no longer exist"):
         M._commit(
             spark, t, 2, data_dir, batch.schema,
-            carried_files=tuple(prior["files"]),
-            carried_rows=int(prior["row_count"]),
-            carried_schema=prior.get("schema"),
-            carried_read_at=__import__("time").time()
-            - M.COMPLETED_PLAN_TTL_S,  # stale read, past the sweep gate
+            head=M.Head(
+                1,
+                prior,
+                __import__("time").time()
+                - M.COMPLETED_PLAN_TTL_S,  # stale read, past the sweep gate
+                prior.get("schema"),
+            ),
         )
     assert versions(spark, t) == [1]  # nothing committed
     assert not os.path.exists(data_dir)  # staged data reclaimed
