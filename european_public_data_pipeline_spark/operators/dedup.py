@@ -2392,7 +2392,7 @@ def d26_span_excision_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     "joined to the hot set. Per-round cost after round 1: O(rewritten-"
     "doc tokens) delta + index-keyed merges — never a corpus re-scan "
     "(at warehouse scale the index/counts persist as manifest tables "
-    "and the merges are pipeline/merge.py keyed MERGEs). Islands stay "
+    "and the merges are pipeline/cow_merge.py keyed MERGEs). Islands stay "
     "doc-partitioned, re-assembly doc-bounded, localCheckpoint "
     "truncates per-round lineage; tokens strictly decrease every round "
     "so rounds are bounded (2-3 in practice).",
@@ -2607,7 +2607,7 @@ def d27_excision_fixpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     "into the count relation. The delta relation is O(rewritten-doc "
     "tokens), the merge is index-keyed (h) — vs a recount's full "
     "corpus scan + full re-shuffle; at warehouse scale the counts "
-    "live as a manifest table and the merge is pipeline/merge.py's "
+    "live as a manifest table and the merge is pipeline/cow_merge.py's "
     "keyed MERGE. Certified EXACTLY: the oracle recomputes the counts "
     "from the post-excision corpus directly (the shared island CTE + "
     "kept-token rebuild), and the output includes a checksum over the "

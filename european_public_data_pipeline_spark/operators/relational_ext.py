@@ -2269,18 +2269,19 @@ def q112_clustered_compact_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q113_merge_upsert",
     category="join",
     doc="Transactional-MERGE semantics under the driver contract "
-    "(pipeline/merge.py merge_by_key): the scratch target starts as "
-    "the shared CDC snapshot A (q97/q100/q104's 'yesterday'), snapshot "
-    "B upserts into it — key-matched rows replaced (the %7 balance "
-    "shifts), new keys appended (the %13 gap rows), unmatched target "
-    "rows preserved (B's %11 'deletes' do NOT delete in a MERGE "
-    "without WHEN NOT MATCHED BY SOURCE — they simply stay, which the "
-    "oracle's FULL OUTER COALESCE states exactly). Duplicate-update "
-    "detection, partition-scoped rewrites, moved-key handling and "
-    "schema evolution stay pytest-pinned (tests/test_merge.py); the "
-    "driver hash certifies the end state row-for-row. At 100 TB "
-    "merge_by_key rewrites only the partitions the update batch "
-    "touches — O(touched partitions), not O(table).",
+    "(pipeline/cow_merge.py merge_into_manifest): the scratch target "
+    "publishes as the shared CDC snapshot A (q97/q100/q104's "
+    "'yesterday'), snapshot B merges into it — key-matched rows "
+    "replaced (the %7 balance shifts), new keys appended (the %13 gap "
+    "rows), unmatched target rows preserved (B's %11 'deletes' do NOT "
+    "delete in a MERGE without WHEN NOT MATCHED BY SOURCE — they simply "
+    "stay, which the oracle's FULL OUTER COALESCE states exactly). "
+    "Duplicate-update refusal, zone-map file pruning and additive "
+    "schema evolution stay pytest-pinned (tests/test_cow_merge.py, "
+    "tests/test_merge.py); the driver hash certifies the end state "
+    "row-for-row. At 100 TB, with zone maps on the key, the merge "
+    "rewrites only the files that can hold an update key — O(touched "
+    "files), not O(table).",
     oracle="""
 WITH a AS (
   SELECT c_custkey, CAST(c_acctbal AS DOUBLE) AS bal
@@ -2299,7 +2300,10 @@ ORDER BY c_custkey
 """,
 )
 def q113_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from european_public_data_pipeline_spark.pipeline.merge import merge_by_key
+    from european_public_data_pipeline_spark.pipeline import manifest
+    from european_public_data_pipeline_spark.pipeline.cow_merge import (
+        merge_into_manifest,
+    )
 
     a = _cdc_snapshot_a(spark, sf_dir).select(
         F.col("a_key").alias("c_custkey"),
@@ -2310,9 +2314,9 @@ def q113_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("new_bal").cast("double").alias("bal"),
     )
     path = _scratch_table_path("merge_customer", sf_dir)
-    a.write.mode("overwrite").parquet(path)
-    merge_by_key(spark, path, b, keys=["c_custkey"])
-    return spark.read.parquet(path).select("c_custkey", "bal").orderBy(
+    manifest.publish_version(a, path)
+    merge_into_manifest(spark, path, b, keys=["c_custkey"])
+    return manifest.read_version(spark, path).select("c_custkey", "bal").orderBy(
         "c_custkey"
     )
 
@@ -2623,8 +2627,8 @@ def q117_bloom_stale_sidecar_purge(spark: SparkSession, sf_dir: str) -> DataFram
     "partition_col; measured 9.16s -> 3.14s with 2/80 sub-partitions "
     "rewritten, PLANS.md): the same two-snapshot history as q114, but "
     "the table sub-partitions current AND history by kb (a bucket "
-    "derived from the key — a stable function, merge_by_key's "
-    "keys_stay_in_partition contract), and the day-2 batch touches "
+    "derived from the key — a stable function, scd2_apply's "
+    "partition_col contract), and the day-2 batch touches "
     "ONLY buckets b1/b3. The apply must scope its change detection and "
     "current-row replace to those two sub-partitions; the oracle "
     "restates the COMPLETE history — including every untouched "
@@ -3695,8 +3699,8 @@ def q129_read_appended_through_compact(
     category="join",
     doc="Copy-on-write MERGE INTO a versioned-manifest table "
     "(pipeline/cow_merge.py merge_into_manifest) — Iceberg's COW MERGE "
-    "on the repo's manifest format, the third write-path next to q113's "
-    "partition-scoped merge and the manifest append/compact family: "
+    "on the repo's manifest format, the keyed write next to the "
+    "manifest append/compact family (q113 runs the same merge unpruned): "
     "the builder publishes customers range-clustered on the key with "
     "zone maps, then merges a batch that updates a BOUNDED key range "
     "(the bottom quarter's %7 keys get a balance bump) plus inserts "

@@ -1,13 +1,13 @@
 """Copy-on-write MERGE INTO a versioned-manifest table (SURVEY.md §2.7
 scaled onto §2.1 S11) — Iceberg's COW ``MERGE INTO`` on this repo's
-manifest format, completing the write-side triangle:
+manifest format, the engine's one copy-on-write keyed write:
 
-- ``pipeline/merge.py merge_by_key``: row-level MERGE on plain
-  partitioned parquet (partition-scoped rewrites, q113).
 - ``pipeline/manifest.py``: versioned manifests with snapshot isolation,
   appends that carry files by reference, and commit-kind tags.
-- THIS module: MERGE against a manifest table that rewrites ONLY the
-  files containing matched keys — every untouched file is carried by
+- ``pipeline/mor_delete.py``: the merge-on-read keyed writes (equality
+  and position deletes, upserts) on the same manifests.
+- THIS module: MERGE against a manifest table (q113, q130) that
+  rewrites ONLY the files containing matched keys — every untouched file is carried by
   reference into the new version — and can hand back the row-level
   changelog the merge implies, which ``apply_changelog_mv`` folds into
   downstream MVs at O(changelog + |MV|).
@@ -132,8 +132,7 @@ def merge_into_manifest(
     # counting scan, staged write, post-commit changelog images): a
     # non-deterministic or expensive updates plan would otherwise
     # re-evaluate per use — the staged write could commit different rows
-    # than the changelog reports (the hazard merge.py handles the same
-    # way). Eager, batch-sized.
+    # than the changelog reports. Eager, batch-sized.
     updates = updates.localCheckpoint()
     if deletes is not None:
         deletes = deletes.select(*keys).localCheckpoint()

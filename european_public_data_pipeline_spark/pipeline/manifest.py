@@ -1454,7 +1454,7 @@ def read_version(
 
 def chain_links(
     spark: SparkSession, table_path: str, from_version: int, to_version: int
-) -> list[tuple[str, int, list[str]]] | None:
+) -> tuple[list[tuple[str, int, list[str]]] | None, dict[int, dict]]:
     """Walk the commit chain ``from_version+1 .. to_version`` by
     operation kind and return its row-level changes as ordered links —
     the one walk every incremental consumer decides from:
@@ -1462,33 +1462,36 @@ def chain_links(
     v, changelog_files)`` for an ``overwrite`` or ``delete`` commit that
     PERSISTED its row-level delta (a COW MERGE or MOR delete with
     ``persist_changelog=True``). A ``replace`` commit (compact/widen —
-    rows preserved value-for-value) contributes no link. Returns
+    rows preserved value-for-value) contributes no link. ``links`` is
     ``None`` — the delta is not derivable from metadata, so the consumer
     must refuse or full-recompute — on an opaque overwrite or delete, an
     untagged pre-op-era manifest (read as ``overwrite``, as
     ``version_op`` does), or an unreadable (expired) manifest.
-    Driver-side KB-manifest reads only, O(chain length), never a data
-    scan: on an object store each link is one metadata round-trip."""
-    try:
-        prev = _read_manifest(spark, table_path, from_version)
-    except Exception:
-        return None
+    Driver-side KB-manifest reads only, each manifest once, never a data
+    scan: on an object store each link is one metadata round-trip.
+    Returns ``(links, manifests)``: ``manifests`` maps every version the
+    walk read to its manifest (``from_version`` first; through
+    ``to_version`` whenever ``links`` is not ``None``), so the consumer
+    reads none of them again."""
+    manifests: dict[int, dict] = {}
     links: list[tuple[str, int, list[str]]] = []
-    for v in range(from_version + 1, to_version + 1):
+    for v in range(from_version, to_version + 1):
         try:
             m = _read_manifest(spark, table_path, v)
         except Exception:
-            return None  # expired/unreadable intermediate: chain broken
+            return None, manifests  # expired/unreadable: chain broken
+        manifests[v] = m
+        if v == from_version:
+            continue
         op = m.get("op", "overwrite")
         if op == "append":
-            prev_set = set(prev["files"])
+            prev_set = set(manifests[v - 1]["files"])
             links.append(("append", v, [f for f in m["files"] if f not in prev_set]))
         elif op in ("overwrite", "delete") and m.get("changelog_files"):
             links.append(("changelog", v, list(m["changelog_files"])))
         elif op != "replace":
-            return None  # no row-preservation guarantee, no recorded delta
-        prev = m
-    return links
+            return None, manifests  # no row-preservation guarantee, no recorded delta
+    return links, manifests
 
 
 def _conformed(df: DataFrame, schema: StructType) -> list:
@@ -1512,10 +1515,12 @@ def _appended_rows(
     table_path: str,
     to_v: int,
     links: list[tuple[str, int, list[str]]],
+    manifests: dict[int, dict],
 ) -> DataFrame:
     """The rows of ``links``' append links, each read with its own
-    version's manifest schema and conformed to version ``to_v``'s.
-    Other link kinds are not read.
+    version's manifest schema and conformed to version ``to_v``'s; the
+    manifests are the ones ``chain_links`` read with the links. Other
+    link kinds are not read.
 
     Plain ``_read_files``, not ``_read_files_live``: a delete sidecar
     committed at version ``dv`` applies only to files added before
@@ -1527,7 +1532,7 @@ def _appended_rows(
     from pyspark.sql import functions as F
 
     appends = [(v, files) for kind, v, files in links if kind == "append" and files]
-    m_head = _read_manifest(spark, table_path, to_v)
+    m_head = manifests[to_v]
     sj = m_head.get("schema")
     if sj is None:
         # Legacy head without a recorded schema: appended files are
@@ -1546,8 +1551,7 @@ def _appended_rows(
     head_schema = StructType.fromJson(json.loads(sj))
     out: DataFrame | None = None
     for v, files in appends:
-        m = _read_manifest(spark, table_path, v)
-        seg = _read_files(spark, m, files)
+        seg = _read_files(spark, manifests[v], files)
         seg = seg.select(*_conformed(seg, head_schema))
         out = seg if out is None else out.unionByName(seg)
     if out is None:
@@ -1578,10 +1582,10 @@ def read_appended(
     row-level changelog (q97/q100) or re-read the table. An untagged
     manifest is refused rather than diffed at the endpoints: without a
     kind, the walk cannot tell an append from a rewrite. At 100 TB the
-    plan is O(appended files): two KB manifests per chain link decide
+    plan is O(appended files): one KB manifest per chain link decides
     everything driver-side."""
     to_v = to_version if to_version is not None else current_version(spark, table_path)
-    links = chain_links(spark, table_path, from_version, to_v)
+    links, manifests = chain_links(spark, table_path, from_version, to_v)
     if links is None or any(kind != "append" for kind, _v, _f in links):
         raise ValueError(
             f"read_appended: versions {from_version}..{to_v} of "
@@ -1590,7 +1594,7 @@ def read_appended(
             f"manifest breaks it) — derive a row-level changelog or "
             f"re-read the table"
         )
-    return _appended_rows(spark, table_path, to_v, links)
+    return _appended_rows(spark, table_path, to_v, links, manifests)
 
 
 def _changelog_stage_dir(table_path: str, n: int) -> str:
@@ -1859,8 +1863,6 @@ def publish_version_gated(df: DataFrame, suite, table_path: str) -> int:
         # here; the gate's exception already carries the failed checks.
         delete_path(spark, data_dir)
         raise
-    finally:
-        checks.unpersist()
     return _commit(spark, table_path, n, data_dir, df.schema)
 
 

@@ -59,7 +59,7 @@ from __future__ import annotations
 
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from european_public_data_pipeline_spark.pipeline.fs_util import (
@@ -324,6 +324,34 @@ def delete_where_mor(
     return out
 
 
+def resolve_latest_wins(
+    updates: DataFrame,
+    keys: list[str],
+    order_col: str,
+    caller: str,
+) -> DataFrame:
+    """Resolve duplicate merge keys inside one update batch: per key the
+    row with the greatest ``order_col`` (a version/event-time column)
+    wins — one window shuffle on the key. Ties on (keys, order_col)
+    still raise: the winner would be nondeterministic, which is the bug
+    this resolver exists to prevent, not to hide. Shared by
+    ``upsert_rows_mor`` and the streaming CDC sink, whose
+    ``availableNow`` trigger routinely coalesces a backlog holding
+    several revisions of one key into a single micro-batch."""
+    w_u = Window.partitionBy(*keys).orderBy(F.col(order_col).desc())
+    ranked = updates.withColumn("_urn", F.row_number().over(w_u)).withColumn(
+        "_utie",
+        F.count(F.lit(1)).over(Window.partitionBy(*keys, order_col)),
+    )
+    if ranked.filter((F.col("_urn") == 1) & (F.col("_utie") > 1)).limit(1).count():
+        raise ValueError(
+            f"{caller}: updates contain rows tied on "
+            f"({', '.join(keys)}, {order_col}); the winner would "
+            "be nondeterministic — use a unique ordering column"
+        )
+    return ranked.filter(F.col("_urn") == 1).drop("_urn", "_utie")
+
+
 def upsert_rows_mor(
     spark: SparkSession,
     table_path: str,
@@ -382,10 +410,6 @@ def upsert_rows_mor(
     # micro-batch lineage the CDC sink hands us.
     updates = updates.localCheckpoint()
     if dedupe_updates_by:
-        from european_public_data_pipeline_spark.pipeline.merge import (
-            resolve_latest_wins,
-        )
-
         # Re-pin the deduped result: downstream reads it ~5 times (the
         # profile, probe scan, changelog and data writes) — without this
         # pin each would re-run the dedupe window shuffle. Determinism is

@@ -68,6 +68,7 @@ from pyspark.sql import functions as F
 from european_public_data_pipeline_spark.pipeline.manifest import (
     _appended_rows,
     _conformed,
+    _read_files_live,
     _read_manifest,
     chain_links,
     current_version,
@@ -190,12 +191,11 @@ ORDER_TOTALS_SPEC = MVSpec(
 )
 
 
-def _files_md5(spark: SparkSession, table_path: str, version: int) -> str:
+def _files_md5(m: dict) -> str:
     import hashlib
     import json as _json
 
-    files = _read_manifest(spark, table_path, version)["files"]
-    return hashlib.md5(_json.dumps(sorted(files)).encode()).hexdigest()
+    return hashlib.md5(_json.dumps(sorted(m["files"])).encode()).hexdigest()
 
 
 def _partial(events: DataFrame) -> DataFrame:
@@ -228,9 +228,16 @@ def refresh_mv(
       purged history, expired intermediate manifests): recompute from
       the source head. Correct, just not incremental.
 
-    The mode is decided from one ``chain_links`` walk."""
+    The mode is decided from one ``chain_links`` walk, and each
+    manifest is read once: the MV's head and the source's applied
+    through current versions (N + 2 reads for an N-link chain)."""
     src_v = current_version(spark, src_path)
-    meta = version_meta(spark, mv_path) if versions(spark, mv_path) else {}
+    mv_m = (
+        _read_manifest(spark, mv_path, current_version(spark, mv_path))
+        if versions(spark, mv_path)
+        else {}
+    )
+    meta = mv_m.get("meta", {})
     applied = int(meta.get(_META_KEY, 0))
     # The changelog replay watermark (apply_changelog_mv's guard) must
     # survive refresh_mv commits too: dropping it would let a later
@@ -266,23 +273,22 @@ def refresh_mv(
     # EXISTS (expire_versions retention GC dropped it) is the same
     # signal: the watermark's anchor is gone, so fall back to a full
     # recompute instead of failing every refresh forever.
-    if applied == 0:
-        history_intact = True
-    else:
-        try:
-            history_intact = meta.get(_META_FILES_MD5) == _files_md5(
-                spark, src_path, applied
-            )
-        except Exception:
-            history_intact = False  # applied version expired/unreadable
+    # The walk starts at the applied version, so it reads that manifest
+    # even when a rollback left the source head below it.
+    links, manifests = (
+        chain_links(spark, src_path, applied, max(applied, src_v))
+        if applied
+        else (None, {})
+    )
+    history_intact = applied == 0 or (
+        applied in manifests  # absent: applied version expired/unreadable
+        and meta.get(_META_FILES_MD5) == _files_md5(manifests[applied])
+    )
     if applied >= src_v and history_intact:
         return applied  # nothing new — idempotent no-op
-
-    links = (
-        chain_links(spark, src_path, applied, src_v)
-        if applied > 0 and history_intact
-        else None
-    )
+    if not history_intact:
+        links = None
+    src_m = manifests.get(src_v) or _read_manifest(spark, src_path, src_v)
     if links is None:
         mode = "full"
     elif all(kind == "append" for kind, _v, _f in links):
@@ -299,16 +305,18 @@ def refresh_mv(
     n_dirty = 0
     try:
         if mode == "incremental":
-            mv_now = read_version(spark, mv_path)
+            mv_now = _read_files_live(spark, mv_m)
             if any(files for _k, _v, files in links):
-                delta = _appended_rows(spark, src_path, src_v, links)
+                delta = _appended_rows(spark, src_path, src_v, links, manifests)
                 merged = spec.merge(mv_now, spec.partial(delta))
             else:
                 # replace-only chain: state unchanged, advance watermark
                 merged = mv_now
         elif mode == "changelog":
-            stored = read_version(spark, mv_path)
-            changelog = _chain_changelog(spark, src_path, src_v, links, prior_cl)
+            stored = _read_files_live(spark, mv_m)
+            changelog = _chain_changelog(
+                spark, src_path, src_v, links, manifests, prior_cl
+            )
             if changelog is None:
                 mode = "full"  # weight-column collision: fold unsound
             else:
@@ -323,16 +331,16 @@ def refresh_mv(
                     stored,
                     changelog,
                     "__w",
-                    read_version(spark, src_path, src_v),
+                    _read_files_live(spark, src_m),
                 )
                 caches += fold_caches
                 if merged is None:
                     merged = stored  # empty delta: advance watermark only
         if mode == "full":
-            merged = spec.partial(read_version(spark, src_path, src_v))
+            merged = spec.partial(_read_files_live(spark, src_m))
         new_meta = {
             _META_KEY: src_v,
-            _META_FILES_MD5: _files_md5(spark, src_path, src_v),
+            _META_FILES_MD5: _files_md5(src_m),
             # Which branch produced this MV version — auditable from the
             # committed meta (q116 pins the hazard detector through the
             # driver hash by emitting these as result columns).
@@ -364,6 +372,7 @@ def _chain_changelog(
     src_path: str,
     src_v: int,
     links: list[tuple[str, int, list[str]]],
+    manifests: dict[int, dict],
     prior_cl=None,
 ) -> DataFrame | None:
     """Assemble one weighted changelog for the whole chain: append
@@ -393,8 +402,7 @@ def _chain_changelog(
 
     from pyspark.sql.types import StructType
 
-    head_m = _read_manifest(spark, src_path, src_v)
-    sj = head_m.get("schema")
+    sj = manifests[src_v].get("schema")
     head_schema = (
         StructType.fromJson(_json.loads(sj)) if sj else None
     )
@@ -402,15 +410,14 @@ def _chain_changelog(
         return None
     parts: list[DataFrame] = []
     if any(files for kind, _v, files in links if kind == "append"):
-        appended = _appended_rows(spark, src_path, src_v, links)
+        appended = _appended_rows(spark, src_path, src_v, links, manifests)
         parts.append(appended.select("*", F.lit(1).alias("__w")))
     for kind, v, files in links:
         if kind != "changelog":
             continue
         if prior_cl is not None and v <= int(prior_cl):
             continue  # already folded by a direct apply of this merge
-        m_v = _read_manifest(spark, src_path, v)
-        wcol = m_v.get("changelog_weight_col", "__w")
+        wcol = manifests[v].get("changelog_weight_col", "__w")
         cl = spark.read.parquet(*files)
         if head_schema is not None:
             # Conform to the head schema (a changelog written before a

@@ -38,7 +38,13 @@ from pyspark.sql import types as T
 from european_public_data_pipeline_spark.functions.timeparse import parse_time_code
 from european_public_data_pipeline_spark.pipeline.gold import ensure_table, load_gold
 from european_public_data_pipeline_spark.pipeline.silver_io import write_partitioned
-from european_public_data_pipeline_spark.quality.checks import CheckSuite, check_suite, gate
+from european_public_data_pipeline_spark.quality.checks import (
+    RESULT_SCHEMA,
+    CheckSuite,
+    check_suite,
+    gate,
+)
+from european_public_data_pipeline_spark.session import local_frame
 from european_public_data_pipeline_spark.sources.eurostat import (
     Transport,
     _urllib_transport,
@@ -156,14 +162,13 @@ def run_pipeline(
     bronze_paths = bronze_ingest(root, dataset, series, transport=transport)
     latest = latest_payload_per_partition(root, dataset)
     silver = silver_transform(spark, latest, f"{root}/silver/{dataset}")
-    checks = hicp_suite(silver).to_dataframe(spark)
-    checks_rows = checks.cache()
-    gate(checks_rows)  # raises QualityGateError -> gold never runs
+    # raises QualityGateError -> gold never runs
+    checks_rows = gate(hicp_suite(silver).to_dataframe(spark))
     gold_rows = gold_load(spark, silver, gold_table, location=gold_location)
     return PipelineResult(
         bronze_paths=bronze_paths,
         # The gold load already counted this same silver DataFrame.
         silver_rows=gold_rows,
-        checks=checks_rows,
+        checks=local_frame(spark, checks_rows, RESULT_SCHEMA),
         gold_rows=gold_rows,
     )

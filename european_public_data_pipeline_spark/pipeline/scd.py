@@ -72,8 +72,7 @@ def scd2_apply(
 
     ``partition_col`` (optional) sub-partitions BOTH current and history
     by a column the batch carries that is a STABLE FUNCTION of the
-    business key (an order's month, a customer's region) — the same
-    contract as ``merge_by_key(keys_stay_in_partition=True)``; a key
+    business key (an order's month, a customer's region); a key
     whose partition value changed between applies would escape the
     scoped match and duplicate its current row. With it, an apply scopes
     the change-detection join AND the current-partition replace to the

@@ -28,7 +28,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from european_public_data_pipeline_spark.quality.checks import CheckSuite, gate
+from european_public_data_pipeline_spark.quality.checks import (
+    RESULT_SCHEMA,
+    CheckSuite,
+    gate,
+)
+from european_public_data_pipeline_spark.session import local_frame
 
 
 def write_partitioned(
@@ -66,8 +71,6 @@ def quality_gated_write(
     the report alongside the data, mirroring the reference's quality-report
     blob (check_hicp_quality.py:142-152).
     """
-    checks = suite.to_dataframe(df.sparkSession)
-    checks_rows = checks.cache()
-    gate(checks_rows)
+    checks_rows = gate(suite.to_dataframe(df.sparkSession))
     write_partitioned(df, path, partition_cols)
-    return checks_rows
+    return local_frame(df.sparkSession, checks_rows, RESULT_SCHEMA)

@@ -46,7 +46,8 @@ def stage_with_audit(df: DataFrame, suite: CheckSuite, staging: str) -> DataFram
     """The W+A core, reusable by any publish mechanism: write ``df`` ONCE
     to ``staging`` with the suite's row-level constraints attached to the
     same job as observed metrics, run keyed checks column-pruned on the
-    staged batch, and return the cached constraint table. The caller
+    staged batch, and return the constraint table, collected once into a
+    ``LocalTableScan`` (gating and reporting it re-run nothing). The caller
     decides what "publish" means (partition overwrite here; a manifest
     commit in ``pipeline/manifest.publish_version_gated``)."""
     spark = df.sparkSession
@@ -109,9 +110,7 @@ def stage_with_audit(df: DataFrame, suite: CheckSuite, staging: str) -> DataFram
     checks = parts[0]
     for p in parts[1:]:
         checks = checks.unionByName(p)
-    checks = checks.cache()
-    checks.count()
-    return checks
+    return local_frame(spark, checks.collect(), RESULT_SCHEMA)
 
 
 def write_audit_publish(

@@ -124,6 +124,7 @@ _MODIFIED_SINCE_VERDICT: tuple[str, ...] = (
     "q135_streaming_cdc_upsert_mv",  # its streamed merge commits take the writer's schema
     "q136_mor_upsert_merge",  # reads the upsert's equality sidecar by its recorded schema
     "p02_hicp_mom_yoy",  # its payload is a LocalTableScan through the JVM JSON-stat decoder
+    "q113_merge_upsert",  # publishes and merges through the manifest writers, reads read_version
 )
 
 

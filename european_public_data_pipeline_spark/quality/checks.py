@@ -25,7 +25,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -212,14 +212,19 @@ def check_suite(df: DataFrame) -> CheckSuite:
     return CheckSuite(df)
 
 
-def gate(checks: DataFrame) -> None:
-    """Quality gate: raise unless every check passed (W3).
+def gate(checks: DataFrame) -> list[Row]:
+    """Quality gate: raise unless every check passed (W3); returns the
+    constraint table's rows, collected once.
 
     The reference encodes PASS/FAIL in a report filename and refuses the
     warehouse load on FAIL (load_hicp_to_sql.py:25-26); here the gate is a
-    driver-side precondition over the constraint table.
+    driver-side precondition over the constraint table. Callers hand the
+    rows back as ``local_frame(spark, rows, RESULT_SCHEMA)`` — a report
+    that re-reads nothing, where caching the table would cost a job.
     """
-    failed = [r for r in checks.collect() if not r["passed"]]
+    rows = checks.collect()
+    failed = [r for r in rows if not r["passed"]]
     if failed:
         detail = ", ".join(f"{r['check']} ({r['violations']} violations)" for r in failed)
         raise QualityGateError(f"quality gate failed: {detail}")
+    return rows

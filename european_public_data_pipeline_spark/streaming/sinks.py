@@ -53,48 +53,6 @@ def write_stream_exactly_once(
     return q
 
 
-def upsert_stream(
-    stream_df: DataFrame,
-    target_path: str,
-    checkpoint_path: str,
-    keys: list[str],
-    dedupe_updates_by: str,
-    partition_col: str | None = None,
-    await_termination: bool = True,
-):
-    """Streaming UPSERT sink: each micro-batch merges into the target by
-    key (latest ``dedupe_updates_by`` wins) via ``pipeline.merge
-    .merge_by_key`` — the foreachBatch + MERGE landing pattern for CDC-like
-    streams where rows are revisions, not events.
-
-    Exactly-once composition: the checkpoint deduplicates INPUT (a restarted
-    query never re-reads committed files) and the merge deduplicates OUTPUT
-    (a batch retried after a mid-write crash rewrites the same keys to the
-    same values — idempotent), so replays cannot double-apply.
-    """
-    from european_public_data_pipeline_spark.pipeline.merge import merge_by_key
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        merge_by_key(
-            batch_df.sparkSession,
-            target_path,
-            batch_df,
-            keys,
-            partition_col=partition_col,
-            dedupe_updates_by=dedupe_updates_by,
-        )
-
-    q = (
-        stream_df.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if await_termination:
-        q.awaitTermination()
-    return q
-
-
 def upsert_stream_manifest(
     stream_df: DataFrame,
     table_path: str,
@@ -106,9 +64,10 @@ def upsert_stream_manifest(
     await_termination: bool = True,
 ):
     """Streaming CDC upsert into a VERSIONED-MANIFEST table — the
-    lakehouse upgrade of ``upsert_stream``: each micro-batch lands as
-    ONE commit (zone-map pruned, snapshot-isolated, time-travelable),
-    and with ``persist_changelog`` every commit materializes its
+    foreachBatch + MERGE landing pattern for streams whose rows are
+    revisions, not events: each micro-batch lands as ONE commit
+    (zone-map pruned, snapshot-isolated, time-travelable), and with
+    ``persist_changelog`` every commit materializes its
     row-level delta, so a downstream MV maintained by ``refresh_mv``
     keeps folding at O(delta + |MV|) across the stream's merges instead
     of full-recomputing per commit — the end-to-end CDC shape: stream ->
@@ -143,10 +102,8 @@ def upsert_stream_manifest(
     from european_public_data_pipeline_spark.pipeline.cow_merge import (
         merge_into_manifest,
     )
-    from european_public_data_pipeline_spark.pipeline.merge import (
-        resolve_latest_wins,
-    )
     from european_public_data_pipeline_spark.pipeline.mor_delete import (
+        resolve_latest_wins,
         upsert_rows_mor,
     )
 

@@ -46,11 +46,6 @@ SLOW_TESTS: dict[str, set[str]] = {
     "test_cms_maintenance.py": {
         "test_streamed_cells_equal_batch_cells_exactly",
     },
-    "test_compact.py": {
-        "test_compaction_reduces_files_preserves_rows",
-        "test_compaction_skips_already_compact_partitions",
-        "test_partition_file_stats",
-    },
     "test_components.py": {
         "test_long_chain_converges",
         "test_star_cc_matches_propagation_on_chain_and_isolates",
@@ -123,7 +118,6 @@ SLOW_TESTS: dict[str, set[str]] = {
     },
     "test_merge.py": {
         "test_merge_is_idempotent",
-        "test_merge_schema_evolution",
     },
     "test_merge_properties.py": {
         "test_merge_matches_dict_model",
@@ -179,18 +173,22 @@ def pytest_collection_modifyitems(config, items):
         if func in SLOW_TESTS.get(fname, ()):
             item.add_marker(pytest.mark.slow)
             matched[fname].add(func)
-    # A stale entry (renamed or deleted test) would silently drop out of the
-    # slow lane. Only whole collected files can vouch for their entries: a
-    # file narrowed to single tests by node id is not checked.
+    # A stale entry (renamed or deleted test, or a deleted file) would
+    # silently drop out of the slow lane. Only whole collected files can
+    # vouch for their entries: a file narrowed to single tests by node id
+    # is not checked; a file gone from tests/ makes all its entries stale.
     narrowed = {Path(a.split("::")[0]).name for a in config.args if "::" in a}
-    stale = sorted(
-        f"{fname}::{func}"
-        for fname, funcs in SLOW_TESTS.items()
-        if fname in matched and fname not in narrowed
-        for func in funcs - matched[fname]
-    )
+    tests_dir = Path(__file__).resolve().parent
+    stale: list[str] = []
+    for fname, funcs in SLOW_TESTS.items():
+        if not (tests_dir / fname).exists():
+            stale += [f"{fname}::{func}" for func in funcs]
+        elif fname in matched and fname not in narrowed:
+            stale += [f"{fname}::{func}" for func in funcs - matched[fname]]
     if stale:
-        raise pytest.UsageError(f"SLOW_TESTS entries match no collected test: {stale}")
+        raise pytest.UsageError(
+            f"SLOW_TESTS entries match no collected test: {sorted(stale)}"
+        )
 
 
 @pytest.fixture(scope="session")

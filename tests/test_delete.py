@@ -1,21 +1,15 @@
-"""Keyed hard delete (right-to-erasure primitive): partition-scoped rewrite,
-physical preservation of unaffected partitions, emptied-partition removal,
-audit statistics, idempotency.
-"""
+"""Keyed hard delete (right-to-erasure primitive) through the manifest
+writer ``delete_rows_mor``: audit statistics and idempotency."""
 
 from __future__ import annotations
 
-import os
-
-from european_public_data_pipeline_spark.pipeline.merge import (
-    delete_by_key,
-    merge_by_key,
-)
+import european_public_data_pipeline_spark.pipeline.manifest as M
+from european_public_data_pipeline_spark.pipeline.mor_delete import delete_rows_mor
 
 
 def _rows(spark, path):
     return {
-        (r["k"], r["lang"]): r["v"] for r in spark.read.parquet(path).collect()
+        (r["k"], r["lang"]): r["v"] for r in M.read_version(spark, path).collect()
     }
 
 
@@ -24,7 +18,7 @@ def _seed(spark, path):
         [(1, "en", "a"), (2, "en", "b"), (3, "de", "c"), (4, "de", "d"), (5, "fr", "e")],
         "k long, lang string, v string",
     )
-    merge_by_key(spark, path, df, keys=["k"], partition_col="lang")
+    M.publish_version(df, path, stats_cols=("k",))
 
 
 def _keys(spark, ks):
@@ -34,147 +28,18 @@ def _keys(spark, ks):
 def test_delete_removes_rows_and_reports_stats(spark, tmp_path):
     path = str(tmp_path / "t")
     _seed(spark, path)
-    stats = delete_by_key(spark, path, _keys(spark, [2, 4]), ["k"], "lang")
-    assert stats == {"deleted": 2, "partitions_rewritten": 2, "partitions_removed": 0}
+    out = delete_rows_mor(spark, path, _keys(spark, [2, 4]), ["k"])
+    assert out["version"] == 2
+    assert out["rows_deleted"] == 2 and out["sidecar_files"] == 1
     assert _rows(spark, path) == {(1, "en"): "a", (3, "de"): "c", (5, "fr"): "e"}
-
-
-def test_delete_never_opens_unaffected_partitions(spark, tmp_path):
-    path = str(tmp_path / "t")
-    _seed(spark, path)
-    de_dir = os.path.join(path, "lang=de")
-    before = {
-        f: os.path.getmtime(os.path.join(de_dir, f))
-        for f in os.listdir(de_dir)
-        if f.endswith(".parquet")
-    }
-    delete_by_key(spark, path, _keys(spark, [1]), ["k"], "lang")
-    after = {
-        f: os.path.getmtime(os.path.join(de_dir, f))
-        for f in os.listdir(de_dir)
-        if f.endswith(".parquet")
-    }
-    assert before == after  # de partition files physically untouched
-
-
-def test_delete_removes_emptied_partition_dir(spark, tmp_path):
-    path = str(tmp_path / "t")
-    _seed(spark, path)
-    stats = delete_by_key(spark, path, _keys(spark, [5]), ["k"], "lang")
-    assert stats == {"deleted": 1, "partitions_rewritten": 0, "partitions_removed": 1}
-    assert not os.path.exists(os.path.join(path, "lang=fr"))
-    assert _rows(spark, path) == {
-        (1, "en"): "a",
-        (2, "en"): "b",
-        (3, "de"): "c",
-        (4, "de"): "d",
-    }
 
 
 def test_delete_missing_keys_is_noop_and_idempotent(spark, tmp_path):
     path = str(tmp_path / "t")
     _seed(spark, path)
-    stats = delete_by_key(spark, path, _keys(spark, [99]), ["k"], "lang")
-    assert stats == {"deleted": 0, "partitions_rewritten": 0, "partitions_removed": 0}
-    delete_by_key(spark, path, _keys(spark, [2]), ["k"], "lang")
-    again = delete_by_key(spark, path, _keys(spark, [2]), ["k"], "lang")
-    assert again["deleted"] == 0
+    out = delete_rows_mor(spark, path, _keys(spark, [99]), ["k"])
+    assert out["rows_deleted"] == 0 and out["version"] == 1  # nothing committed
+    delete_rows_mor(spark, path, _keys(spark, [2]), ["k"])
+    again = delete_rows_mor(spark, path, _keys(spark, [2]), ["k"])
+    assert again["rows_deleted"] == 0
     assert _rows(spark, path) == {(1, "en"): "a", (3, "de"): "c", (4, "de"): "d", (5, "fr"): "e"}
-
-
-def test_delete_unpartitioned_table(spark, tmp_path):
-    path = str(tmp_path / "t")
-    df = spark.createDataFrame(
-        [(1, "x", "a"), (2, "y", "b")], "k long, lang string, v string"
-    )
-    merge_by_key(spark, path, df, keys=["k"])
-    stats = delete_by_key(spark, path, _keys(spark, [1]), ["k"])
-    assert stats["deleted"] == 1
-    assert _rows(spark, path) == {(2, "y"): "b"}
-
-
-def test_delete_emptied_partition_with_escaped_value(spark, tmp_path):
-    """Partition values Spark Hive-escapes on write (':' '/' '%') — the
-    emptied directory name must be derived with the SAME escaping, or the
-    erased rows' stale files survive (ADVICE r4, merge.py)."""
-    path = str(tmp_path / "t")
-    df = spark.createDataFrame(
-        [(1, "a:b/c%d", "x"), (2, "a:b/c%d", "y"), (3, "plain", "z")],
-        "k long, lang string, v string",
-    )
-    merge_by_key(spark, path, df, keys=["k"], partition_col="lang")
-    # The escaped dir exists on disk, not the raw name.
-    assert os.path.exists(os.path.join(path, "lang=a%3Ab%2Fc%25d"))
-    stats = delete_by_key(spark, path, _keys(spark, [1, 2]), ["k"], "lang")
-    assert stats == {"deleted": 2, "partitions_rewritten": 0, "partitions_removed": 1}
-    assert not os.path.exists(os.path.join(path, "lang=a%3Ab%2Fc%25d"))
-    assert _rows(spark, path) == {(3, "plain"): "z"}
-
-
-def test_delete_emptied_date_partition(spark, tmp_path):
-    """Non-string partition column: dir names must render the value as the
-    writer renders it (Spark cast-to-string), not Python str()."""
-    import datetime
-
-    path = str(tmp_path / "t")
-    df = spark.createDataFrame(
-        [
-            (1, datetime.date(2024, 1, 2), "a"),
-            (2, datetime.date(2024, 3, 4), "b"),
-        ],
-        "k long, d date, v string",
-    )
-    merge_by_key(spark, path, df, keys=["k"], partition_col="d")
-    stats = delete_by_key(spark, path, _keys(spark, [1]), ["k"], "d")
-    assert stats == {"deleted": 1, "partitions_rewritten": 0, "partitions_removed": 1}
-    assert not os.path.exists(os.path.join(path, "d=2024-01-02"))
-    assert {r["k"] for r in spark.read.parquet(path).collect()} == {2}
-
-
-def test_merge_emptied_escaped_partition_is_removed(spark, tmp_path):
-    """Same latent pattern in merge_by_key: a key moving OUT of an escaped
-    partition must remove that partition's directory."""
-    path = str(tmp_path / "t")
-    df = spark.createDataFrame(
-        [(1, "a:b", "x"), (2, "plain", "y")], "k long, lang string, v string"
-    )
-    merge_by_key(spark, path, df, keys=["k"], partition_col="lang")
-    moved = spark.createDataFrame([(1, "plain", "x2")], "k long, lang string, v string")
-    merge_by_key(spark, path, moved, keys=["k"], partition_col="lang")
-    assert not os.path.exists(os.path.join(path, "lang=a%3Ab"))
-    assert _rows(spark, path) == {(1, "plain"): "x2", (2, "plain"): "y"}
-
-
-def test_delete_in_null_partition_preserves_other_null_rows(spark, tmp_path):
-    """isin() is NULL-blind: deleting one key from the NULL partition must
-    rewrite that partition (keeping its other rows), not silently remove
-    the whole __HIVE_DEFAULT_PARTITION__ directory (code-review r5)."""
-    path = str(tmp_path / "t")
-    df = spark.createDataFrame(
-        [(1, None, "a"), (2, None, "b"), (3, "fr", "c")],
-        "k long, lang string, v string",
-    )
-    merge_by_key(spark, path, df, keys=["k"], partition_col="lang")
-    stats = delete_by_key(spark, path, _keys(spark, [1]), ["k"], "lang")
-    assert stats == {"deleted": 1, "partitions_rewritten": 1, "partitions_removed": 0}
-    assert _rows(spark, path) == {(2, None): "b", (3, "fr"): "c"}
-    # Emptying the null partition removes exactly its directory.
-    stats = delete_by_key(spark, path, _keys(spark, [2]), ["k"], "lang")
-    assert stats == {"deleted": 1, "partitions_rewritten": 0, "partitions_removed": 1}
-    assert not os.path.exists(os.path.join(path, "lang=__HIVE_DEFAULT_PARTITION__"))
-    assert _rows(spark, path) == {(3, "fr"): "c"}
-
-
-def test_merge_into_null_partition_preserves_other_null_rows(spark, tmp_path):
-    """Same NULL-blindness in merge_by_key's scoped read: updating one key
-    in the NULL partition must keep that partition's other rows."""
-    path = str(tmp_path / "t")
-    df = spark.createDataFrame(
-        [(1, None, "a"), (2, None, "b"), (3, "fr", "c")],
-        "k long, lang string, v string",
-    )
-    merge_by_key(spark, path, df, keys=["k"], partition_col="lang")
-    upd = spark.createDataFrame([(1, None, "a2")], "k long, lang string, v string")
-    stats = merge_by_key(spark, path, upd, keys=["k"], partition_col="lang")
-    assert stats == {"inserted": 0, "updated": 1, "unchanged_in_scope": 1}
-    assert _rows(spark, path) == {(1, None): "a2", (2, None): "b", (3, "fr"): "c"}

@@ -1,19 +1,24 @@
-"""Row-level MERGE emulation: upsert semantics + partition-scoped rewrite."""
+"""Keyed MERGE (upsert) contract through the manifest writer
+``merge_into_manifest``: updates replace key-matched rows, new keys are
+inserted, unmatched rows survive, duplicate update keys are refused
+unless resolved latest-wins first."""
 
 from __future__ import annotations
 
-import os
-
 import pytest
-from pyspark.sql import functions as F
 
-from european_public_data_pipeline_spark.pipeline.merge import merge_by_key
+import european_public_data_pipeline_spark.pipeline.manifest as M
+from european_public_data_pipeline_spark.pipeline.cow_merge import (
+    merge_into_manifest,
+)
+from european_public_data_pipeline_spark.pipeline.mor_delete import (
+    resolve_latest_wins,
+)
 
 
 def _rows(spark, path):
     return {
-        (r["k"], r["lang"]): r["v"]
-        for r in spark.read.parquet(path).collect()
+        (r["k"], r["lang"]): r["v"] for r in M.read_version(spark, path).collect()
     }
 
 
@@ -22,8 +27,7 @@ def _seed(spark, path):
         [(1, "en", "a"), (2, "en", "b"), (3, "de", "c"), (4, "de", "d")],
         "k long, lang string, v string",
     )
-    merge_by_key(spark, path, df, keys=["k"], partition_col="lang")
-    return df
+    M.publish_version(df, path, stats_cols=("k",))
 
 
 def test_merge_updates_inserts_and_preserves(spark, tmp_path):
@@ -33,14 +37,14 @@ def test_merge_updates_inserts_and_preserves(spark, tmp_path):
         [(2, "en", "B2"), (9, "en", "new"), (7, "fr", "x")],
         "k long, lang string, v string",
     )
-    merge_by_key(spark, path, updates, keys=["k"], partition_col="lang")
+    merge_into_manifest(spark, path, updates, keys=["k"])
     assert _rows(spark, path) == {
         (1, "en"): "a",
         (2, "en"): "B2",  # updated
-        (3, "de"): "c",  # untouched partition preserved
+        (3, "de"): "c",  # unmatched rows preserved
         (4, "de"): "d",
-        (9, "en"): "new",  # inserted into existing partition
-        (7, "fr"): "x",  # new partition created
+        (9, "en"): "new",  # inserted
+        (7, "fr"): "x",
     }
 
 
@@ -50,44 +54,10 @@ def test_merge_is_idempotent(spark, tmp_path):
     updates = spark.createDataFrame(
         [(2, "en", "B2")], "k long, lang string, v string"
     )
-    merge_by_key(spark, path, updates, keys=["k"], partition_col="lang")
+    merge_into_manifest(spark, path, updates, keys=["k"])
     once = _rows(spark, path)
-    merge_by_key(spark, path, updates, keys=["k"], partition_col="lang")
+    merge_into_manifest(spark, path, updates, keys=["k"])
     assert _rows(spark, path) == once
-
-
-def test_merge_does_not_rewrite_untouched_partitions(spark, tmp_path):
-    path = str(tmp_path / "t")
-    _seed(spark, path)
-    de_dir = os.path.join(path, "lang=de")
-    before = {
-        f: os.path.getmtime(os.path.join(de_dir, f))
-        for f in os.listdir(de_dir)
-        if f.endswith(".parquet")
-    }
-    updates = spark.createDataFrame(
-        [(2, "en", "B2")], "k long, lang string, v string"
-    )
-    merge_by_key(spark, path, updates, keys=["k"], partition_col="lang")
-    after = {
-        f: os.path.getmtime(os.path.join(de_dir, f))
-        for f in os.listdir(de_dir)
-        if f.endswith(".parquet")
-    }
-    assert before == after  # de partition files physically untouched
-
-
-def test_merge_unpartitioned_table(spark, tmp_path):
-    path = str(tmp_path / "u")
-    base = spark.createDataFrame(
-        [(1, "x", "a"), (2, "x", "b")], "k long, lang string, v string"
-    )
-    merge_by_key(spark, path, base, keys=["k"])
-    updates = spark.createDataFrame(
-        [(2, "x", "B"), (3, "x", "c")], "k long, lang string, v string"
-    )
-    merge_by_key(spark, path, updates, keys=["k"])
-    assert _rows(spark, path) == {(1, "x"): "a", (2, "x"): "B", (3, "x"): "c"}
 
 
 def test_merge_multi_column_key(spark, tmp_path):
@@ -95,77 +65,12 @@ def test_merge_multi_column_key(spark, tmp_path):
     base = spark.createDataFrame(
         [(1, "en", "a"), (1, "de", "b")], "k long, lang string, v string"
     )
-    merge_by_key(spark, path, base, keys=["k", "lang"], partition_col="lang")
+    M.publish_version(base, path)
     updates = spark.createDataFrame(
         [(1, "en", "A")], "k long, lang string, v string"
     )
-    merge_by_key(spark, path, updates, keys=["k", "lang"], partition_col="lang")
+    merge_into_manifest(spark, path, updates, keys=["k", "lang"])
     assert _rows(spark, path) == {(1, "en"): "A", (1, "de"): "b"}
-
-
-def test_merge_key_moving_between_partitions(spark, tmp_path):
-    # Found by hypothesis: an update that changes the partition value must
-    # delete the old row from its previous partition.
-    path = str(tmp_path / "t")
-    _seed(spark, path)  # (1 en a) (2 en b) (3 de c) (4 de d)
-    updates = spark.createDataFrame(
-        [(1, "fr", "moved")], "k long, lang string, v string"
-    )
-    merge_by_key(spark, path, updates, keys=["k"], partition_col="lang")
-    assert _rows(spark, path) == {
-        (1, "fr"): "moved",
-        (2, "en"): "b",
-        (3, "de"): "c",
-        (4, "de"): "d",
-    }
-
-
-def test_merge_emptied_partition_is_removed(spark, tmp_path):
-    path = str(tmp_path / "t")
-    base = spark.createDataFrame(
-        [(1, "en", "a"), (2, "de", "b")], "k long, lang string, v string"
-    )
-    merge_by_key(spark, path, base, keys=["k"], partition_col="lang")
-    # Move the only en row to de: the en partition is now empty and must
-    # not survive as a stale directory.
-    updates = spark.createDataFrame(
-        [(1, "de", "A")], "k long, lang string, v string"
-    )
-    merge_by_key(spark, path, updates, keys=["k"], partition_col="lang")
-    assert _rows(spark, path) == {(1, "de"): "A", (2, "de"): "b"}
-    assert not os.path.exists(os.path.join(path, "lang=en"))
-
-
-def test_merge_schema_evolution(spark, tmp_path):
-    path = str(tmp_path / "t")
-    _seed(spark, path)
-    # Updates carry a new column; old rows get NULL for it.
-    updates = spark.createDataFrame(
-        [(2, "en", "B2", "extra")], "k long, lang string, v string, note string"
-    )
-    merge_by_key(
-        spark, path, updates, keys=["k"], partition_col="lang",
-        allow_schema_evolution=True,
-    )
-    # Untouched partitions keep the old file schema — readers of an
-    # evolved table need mergeSchema (same contract as Delta's columnMapping-less evolution).
-    tbl = spark.read.option("mergeSchema", "true").parquet(path)
-    rows = {r["k"]: (r["v"], r["note"]) for r in tbl.collect()}
-    assert rows[2] == ("B2", "extra")
-    assert rows[1] == ("a", None)
-    assert set(rows) == {1, 2, 3, 4}
-
-
-def test_merge_schema_mismatch_rejected_by_default(spark, tmp_path):
-    import pytest as _pytest
-
-    path = str(tmp_path / "t")
-    _seed(spark, path)
-    updates = spark.createDataFrame(
-        [(2, "en", "B2", "extra")], "k long, lang string, v string, note string"
-    )
-    with _pytest.raises(Exception):
-        merge_by_key(spark, path, updates, keys=["k"], partition_col="lang")
 
 
 def test_merge_returns_change_stats(spark, tmp_path):
@@ -173,50 +78,45 @@ def test_merge_returns_change_stats(spark, tmp_path):
     base = spark.createDataFrame(
         [(1, "en", "a"), (2, "en", "b")], "k long, lang string, v string"
     )
-    stats0 = merge_by_key(spark, path, base, keys=["k"], partition_col="lang")
-    assert stats0 == {"inserted": 2, "updated": 0, "unchanged_in_scope": 0}
-
+    M.publish_version(base, path)
     updates = spark.createDataFrame(
         [(2, "en", "B"), (3, "en", "c"), (4, "fr", "d")],
         "k long, lang string, v string",
     )
-    stats = merge_by_key(spark, path, updates, keys=["k"], partition_col="lang")
-    # k=2 matched, k=3/k=4 inserted, k=1 preserved in the rewritten scope.
-    assert stats == {"inserted": 2, "updated": 1, "unchanged_in_scope": 1}
+    out = merge_into_manifest(spark, path, updates, keys=["k"])
+    # k=2 matched, k=3/k=4 inserted, k=1 survives.
+    assert out["version"] == 2
+    assert out["rows_matched"] == 1 and out["rows_deleted"] == 0
+    assert out["files_rewritten"] == 1
+    assert M.read_version(spark, path).count() == 4
 
 
 def test_duplicate_source_keys_raise(spark, tmp_path):
     target = str(tmp_path / "t")
-    base = spark.createDataFrame([(1, "a")], "id INT, v STRING")
-    merge_by_key(spark, target, base, ["id"])
+    M.publish_version(spark.createDataFrame([(1, "a")], "id INT, v STRING"), target)
     dup = spark.createDataFrame([(1, "x"), (1, "y")], "id INT, v STRING")
     with pytest.raises(ValueError, match="duplicate merge keys"):
-        merge_by_key(spark, target, dup, ["id"])
+        merge_into_manifest(spark, target, dup, ["id"])
 
 
 def test_dedupe_updates_by_keeps_greatest_version(spark, tmp_path):
     target = str(tmp_path / "t")
     base = spark.createDataFrame([(1, "a", 0)], "id INT, v STRING, ver INT")
-    merge_by_key(spark, target, base, ["id"])
+    M.publish_version(base, target)
     dup = spark.createDataFrame(
         [(1, "old", 1), (1, "new", 2), (2, "only", 1)], "id INT, v STRING, ver INT"
     )
-    stats = merge_by_key(spark, target, dup, ["id"], dedupe_updates_by="ver")
-    rows = {r.id: (r.v, r.ver) for r in spark.read.parquet(target).collect()}
-    assert rows == {1: ("new", 2), 2: ("only", 1)}
-    assert stats == {"inserted": 1, "updated": 1, "unchanged_in_scope": 0}
-
-
-def test_dedupe_updates_by_tie_raises(spark, tmp_path):
-    target = str(tmp_path / "t")
-    merge_by_key(
-        spark,
-        target,
-        spark.createDataFrame([(9, "z", 0)], "id INT, v STRING, ver INT"),
-        ["id"],
+    out = merge_into_manifest(
+        spark, target, resolve_latest_wins(dup, ["id"], "ver", "test"), ["id"]
     )
+    rows = {r.id: (r.v, r.ver) for r in M.read_version(spark, target).collect()}
+    assert rows == {1: ("new", 2), 2: ("only", 1)}
+    assert out["rows_matched"] == 1
+
+
+def test_dedupe_updates_by_tie_raises(spark):
     tied = spark.createDataFrame(
         [(1, "x", 5), (1, "y", 5)], "id INT, v STRING, ver INT"
     )
     with pytest.raises(ValueError, match="tied on"):
-        merge_by_key(spark, target, tied, ["id"], dedupe_updates_by="ver")
+        resolve_latest_wins(tied, ["id"], "ver", "test")

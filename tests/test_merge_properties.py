@@ -15,7 +15,10 @@ import datetime as dt
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from european_public_data_pipeline_spark.pipeline.merge import merge_by_key
+from european_public_data_pipeline_spark.pipeline import manifest as M
+from european_public_data_pipeline_spark.pipeline.cow_merge import (
+    merge_into_manifest,
+)
 from european_public_data_pipeline_spark.pipeline.scd import read_scd2, scd2_apply
 
 # Small domains force key collisions (the interesting case).
@@ -26,8 +29,8 @@ VALS = st.sampled_from(["a", "b", "c"])
 BATCH = st.lists(
     st.tuples(KEYS, LANGS, VALS), min_size=1, max_size=5
 ).map(
-    # One row per key within a batch (merge_by_key is keep-first per key
-    # for same-key update rows; dedupe in the generator to keep the model
+    # One row per key within a batch (merge_into_manifest refuses
+    # same-key update rows; dedupe in the generator to keep the model
     # simple and deterministic).
     lambda rows: list({r[0]: r for r in rows}.values())
 )
@@ -44,12 +47,15 @@ def test_merge_matches_dict_model(spark, tmp_path_factory, batches):
     model: dict[int, tuple] = {}
     for i, batch in enumerate(batches):
         df = spark.createDataFrame(batch, "k long, lang string, v string")
-        merge_by_key(spark, path, df, keys=["k"], partition_col="lang")
+        if i == 0:
+            M.publish_version(df, path, stats_cols=("k",))
+        else:
+            merge_into_manifest(spark, path, df, keys=["k"])
         for k, lang, v in batch:
             model[k] = (k, lang, v)
         got = sorted(
             (r["k"], r["lang"], r["v"])
-            for r in spark.read.parquet(path).collect()
+            for r in M.read_version(spark, path).collect()
         )
         assert got == sorted(model.values()), f"diverged after batch {i}"
 

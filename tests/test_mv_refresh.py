@@ -57,6 +57,40 @@ def test_incremental_refresh_equals_full_recompute(spark, sf_small, tmp_path):
     assert version_meta(spark, mv)["applied_src_version"] == 3
 
 
+def test_refresh_reads_each_manifest_once(spark, sf_small, tmp_path, monkeypatch):
+    """An incremental refresh over a 3-link append chain reads N + 2 = 5
+    manifests: the MV's head, the source's applied version and each
+    link's (the last link is the source head) — none twice."""
+    import european_public_data_pipeline_spark.pipeline.manifest as M
+    import european_public_data_pipeline_spark.pipeline.mv_refresh as MV
+
+    ev = load_table(spark, sf_small, "events").select("event_type", "value", "ts")
+    src = str(tmp_path / "src")
+    mv = str(tmp_path / "mv")
+    quarters = [
+        ev.filter(F.pmod(F.xxhash64("event_type", "value", "ts"), F.lit(4)) == i)
+        for i in range(4)
+    ]
+    append_version(quarters[0], src)
+    refresh_event_summary(spark, src, mv)
+    for q in quarters[1:]:
+        append_version(q, src)
+    reads = []
+    real = M._read_manifest
+
+    def spy(spark_, table_path, v):
+        reads.append((table_path, v))
+        return real(spark_, table_path, v)
+
+    monkeypatch.setattr(M, "_read_manifest", spy)
+    monkeypatch.setattr(MV, "_read_manifest", spy)
+    assert refresh_event_summary(spark, src, mv) == 4
+    monkeypatch.undo()
+    assert sorted(reads) == sorted([(mv, 1)] + [(src, v) for v in (1, 2, 3, 4)])
+    assert version_meta(spark, mv)["refresh_mode"] == "incremental"
+    assert _mv_rows(spark, mv) == _direct(spark, src)
+
+
 def test_source_rewrite_falls_back_to_full_recompute(spark, sf_small, tmp_path):
     from european_public_data_pipeline_spark.pipeline.manifest import (
         publish_version,

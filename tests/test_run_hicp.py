@@ -249,3 +249,26 @@ def test_gold_stage_costs_only_its_insert(spark, tmp_path, spark_jobs):
         assert [j.name.split(" at ")[0] for j in jobs] == ["insertInto"], jobs
     finally:
         spark.sql("DROP TABLE IF EXISTS gold_hicp_jobs")
+
+
+def test_quality_gate_costs_one_collect(spark, tmp_path, spark_jobs):
+    """The gate collects the constraint table once and hands the rows
+    back; with no cache to materialize, hicp_suite's gate runs 7 jobs
+    (8 when its callers cached the table first)."""
+    from european_public_data_pipeline_spark.pipeline.run_hicp import (
+        bronze_ingest,
+        hicp_suite,
+        latest_payload_per_partition,
+        silver_transform,
+    )
+    from european_public_data_pipeline_spark.quality.checks import gate
+
+    series = [{"geo": g, "coicop": c, "unit": "I15"} for g in ("DE", "FR") for c in ("CP00", "CP01")]
+    bronze_ingest(str(tmp_path), "prc_hicp_midx", series, transport=_scrambled_transport)
+    latest = latest_payload_per_partition(str(tmp_path), "prc_hicp_midx")
+    silver = silver_transform(spark, latest, str(tmp_path / "silver"))
+    checks = hicp_suite(silver).to_dataframe(spark)
+    with spark_jobs() as jobs:
+        rows = gate(checks)
+    assert len(jobs) == 7, jobs
+    assert len(rows) == 8 and all(r["passed"] for r in rows)

@@ -163,38 +163,40 @@ def test_stateful_running_totals_accumulates(spark, events_dir):
 
 
 def test_upsert_stream_merges_latest_revision_per_key(spark, tmp_path):
-    from european_public_data_pipeline_spark.streaming.sinks import upsert_stream
+    from european_public_data_pipeline_spark.pipeline import manifest as M
+    from european_public_data_pipeline_spark.streaming.sinks import (
+        upsert_stream_manifest,
+    )
 
     src = str(tmp_path / "upsrc")
     target = str(tmp_path / "uptarget")
     ckpt = str(tmp_path / "upckpt")
     rev = "id INT, v STRING, ver INT"
-    spark.createDataFrame([(1, "a", 1), (2, "b", 1)], rev).write.parquet(src)
+    M.publish_version(spark.createDataFrame([(1, "a", 1), (2, "b", 1)], rev), target)
 
     def run():
         stream = spark.readStream.schema(rev).parquet(src)
-        upsert_stream(stream, target, ckpt, keys=["id"], dedupe_updates_by="ver")
-
-    run()
-    assert {(r.id, r.v) for r in spark.read.parquet(target).collect()} == {
-        (1, "a"),
-        (2, "b"),
-    }
+        upsert_stream_manifest(
+            stream, target, ckpt, keys=["id"], persist_changelog=False,
+            dedupe_updates_by="ver",
+        )
 
     # A revision batch arrives: key 1 revised twice (latest wins), key 3 new.
     spark.createDataFrame(
         [(1, "a2", 2), (1, "a3", 3), (3, "c", 1)], rev
-    ).write.mode("append").parquet(src)
+    ).write.parquet(src)
     run()
-    assert {(r.id, r.v, r.ver) for r in spark.read.parquet(target).collect()} == {
+    assert {(r.id, r.v, r.ver) for r in M.read_version(spark, target).collect()} == {
         (1, "a3", 3),
         (2, "b", 1),
         (3, "c", 1),
     }
+    assert M.current_version(spark, target) == 2
 
     # Restart with the same checkpoint and no new input: nothing re-applies.
     run()
-    assert spark.read.parquet(target).count() == 3
+    assert M.current_version(spark, target) == 2
+    assert M.read_version(spark, target).count() == 3
 
 
 def test_ohlc_stream_equals_batch_and_q62(spark, events_dir):
