@@ -13,6 +13,10 @@ asserts the error bound against the exact count instead.
 
 from __future__ import annotations
 
+import atexit
+import os
+import shutil
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -1466,7 +1470,6 @@ def q97_snapshot_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=_Q97_ORACLE,
 )
 def q104_bucketed_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
     import re
 
     from european_public_data_pipeline_spark.operators.scale_joins import (
@@ -2056,21 +2059,35 @@ def q109_zorder_dual_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     return by_user.unionByName(by_value).orderBy("dim")
 
 
+_SCRATCH_DIRS: set[str] = set()
+
+
+@atexit.register
+def _remove_scratch_dirs() -> None:
+    """Remove this process's scratch tables at interpreter exit (a forked
+    child inherits the set, but its paths name the parent's pid)."""
+    for path in _SCRATCH_DIRS:
+        if path.endswith(f"_{os.getpid()}"):
+            shutil.rmtree(path, ignore_errors=True)
+
+
 def _scratch_table_path(prefix: str, sf_dir: str) -> str:
-    """Deterministic per-sf scratch path for self-published manifest
-    tables (q104's rerun pattern): re-runs replace the one table copy
-    instead of leaking a fresh tempdir per invocation, and the full-path
-    hash keeps two sf_dirs sharing a basename from colliding."""
+    """Deterministic per-process, per-sf scratch path for self-published
+    manifest tables (q104's rerun pattern): re-runs in one process
+    replace the one table copy instead of leaking a fresh tempdir per
+    invocation, the full-path hash keeps two sf_dirs sharing a basename
+    from colliding, and the process id keeps two processes building the
+    same query from deleting each other's tables. The process's paths
+    are removed at interpreter exit."""
     import hashlib
-    import os
     import re
-    import shutil
     import tempfile
 
     tag = re.sub(r"[^0-9a-z]+", "_", os.path.basename(sf_dir.rstrip("/")).lower())
     tag += "_" + hashlib.md5(sf_dir.encode()).hexdigest()[:6]
-    path = os.path.join(tempfile.gettempdir(), f"{prefix}_{tag}")
+    path = os.path.join(tempfile.gettempdir(), f"{prefix}_{tag}_{os.getpid()}")
     shutil.rmtree(path, ignore_errors=True)
+    _SCRATCH_DIRS.add(path)
     return path
 
 
@@ -2972,7 +2989,6 @@ WHERE CAST(ts AS TIMESTAMP) < TIMESTAMP '2024-01-25 00:00:00'
 """,
 )
 def q122_vacuum_orphans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
     import time as _time
 
     from european_public_data_pipeline_spark.functions.exact import dsum
@@ -3128,9 +3144,12 @@ def q123_widen_column_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     "lands the rest, and re-runs with the SAME checkpoint — the second "
     "pass absorbs ONLY the new files as batch 1 and merges two "
     "aggregate-sized relations (history never re-scanned; replayed "
-    "batch ids are no-ops, pytest-pinned in test_mv_maintenance.py). "
+    "batch ids are no-ops through the shared replay-guarded fold, "
+    "streaming/sinks.py fold_batch, pytest-pinned in "
+    "test_mv_maintenance.py). final_batch is the absorbed-batch "
+    "watermark read from the MV head's manifest meta. "
     "The oracle recomputes the aggregate over ALL events directly and "
-    "pins the absorbed-batch watermark as a literal, so the green hash "
+    "pins that watermark as a literal, so the green hash "
     "proves stream-maintained == recompute THROUGH the driver and that "
     "the second pass really was incremental. With q110 (scheduled) and "
     "q121 (second shape) this puts every MV driver on the shared "
@@ -3169,9 +3188,8 @@ def q124_streaming_mv_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame
     maintain_event_summary(read_events_stream(spark, src), mv, ckpt)  # batch 0
     ev.filter(F.col("ts") >= cutoff).write.mode("append").parquet(src)
     maintain_event_summary(read_events_stream(spark, src), mv, ckpt)  # batch 1
-    out = manifest.read_version(spark, mv)
-    final_batch = out.agg(F.max("applied_batch")).collect()[0][0]
-    return out.select(
+    final_batch = manifest.version_meta(spark, mv)["applied_batch"]
+    return manifest.read_version(spark, mv).select(
         "event_type",
         "n_events",
         "sum_value_c",
@@ -3345,7 +3363,6 @@ ORDER BY dim, bucket
 """,
 )
 def q126_lifecycle_grand_tour(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
     import time as _time
 
     from european_public_data_pipeline_spark.functions.exact import dsum

@@ -73,8 +73,6 @@ from european_public_data_pipeline_spark.pipeline.manifest import (
     chain_links,
     current_version,
     publish_version,
-    read_version,
-    version_meta,
     versions,
 )
 from european_public_data_pipeline_spark.session import local_frame
@@ -142,25 +140,14 @@ class MVSpec:
                 aggs.append(_MERGE_FN[m.kind](F.expr(m.expr)).alias(m.name))
         return src.groupBy(*self.group_keys).agg(*aggs)
 
-    def merge(
-        self,
-        mv: DataFrame,
-        partial: DataFrame,
-        extra: tuple[Column, ...] = (),
-    ) -> DataFrame:
+    def merge(self, mv: DataFrame, partial: DataFrame) -> DataFrame:
         """Fold a delta's partial state into the stored MV — two
         aggregate-sized relations, one shuffle on the group keys.
-        (Counts merge by SUM — _MERGE_FN already encodes that.)
-        ``extra``: additional aggregate columns carried by BOTH inputs
-        (bookkeeping like streaming's applied-batch watermark) that
-        merge alongside the measures."""
+        (Counts merge by SUM — _MERGE_FN already encodes that.)"""
         return (
             mv.unionByName(partial)
             .groupBy(*self.group_keys)
-            .agg(
-                *[_MERGE_FN[m.kind](m.name).alias(m.name) for m in self.measures],
-                *extra,
-            )
+            .agg(*[_MERGE_FN[m.kind](m.name).alias(m.name) for m in self.measures])
         )
 
 
@@ -689,7 +676,14 @@ def apply_changelog_mv(
         else _META_APPLIED_FOREIGN_CL
     )
     have = versions(spark, mv_path)
-    mv_meta = version_meta(spark, mv_path) if have else {}
+    # One read of the MV's head: its meta (guards, carried anchors) and
+    # its files (the stored state) come from the same manifest.
+    mv_m = (
+        _read_manifest(spark, mv_path, current_version(spark, mv_path))
+        if have
+        else {}
+    )
+    mv_meta = mv_m.get("meta", {})
     prior_cl = mv_meta.get(guard_key)
     if (
         changelog_id is not None
@@ -746,7 +740,7 @@ def apply_changelog_mv(
     # The fold itself is the shared engine (_fold_changelog): delta
     # aggregation, extremum handling via insert images + the tying-
     # delete dirty-group recompute, and the refcount retirement filter.
-    stored = read_version(spark, mv_path) if have else None
+    stored = _read_files_live(spark, mv_m) if have else None
     caches: list[DataFrame] = []
     try:
         merged, n_dirty, caches = _fold_changelog(

@@ -33,25 +33,14 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.utils import AnalysisException
 
+from european_public_data_pipeline_spark.pipeline.silver_io import write_partitioned
+
 
 def read_scd2(spark: SparkSession, path: str) -> DataFrame:
     """Read the SCD2 table with ``is_current`` restored to boolean
     (partition-value inference does not cover booleans)."""
     tbl = spark.read.parquet(path)
     return tbl.withColumn("is_current", F.col("is_current").cast("boolean"))
-
-
-def _write(
-    df: DataFrame, path: str, mode: str, partition_col: str | None = None
-) -> None:
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    cols = ["is_current"] + ([partition_col] if partition_col else [])
-    try:
-        df.write.partitionBy(*cols).mode(mode).parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
 
 
 def scd2_apply(
@@ -102,10 +91,11 @@ def scd2_apply(
         F.lit(True).alias("is_current"),
     )
 
+    parts = ["is_current", *([partition_col] if partition_col else [])]
     try:
         tbl = read_scd2(spark, path)
     except AnalysisException:
-        _write(fresh, path, "overwrite", partition_col)
+        write_partitioned(fresh, path, parts, "overwrite")
         return
 
     current = tbl.filter(F.col("is_current"))
@@ -173,8 +163,8 @@ def scd2_apply(
     # (dynamic overwrite never touches partitions absent from the
     # output, and every batch partition appears in current_out).
     if closed_out.count() > 0:
-        _write(closed_out, path, "append", partition_col)
-    _write(current_out, path, "overwrite", partition_col)
+        write_partitioned(closed_out, path, parts, "append")
+    write_partitioned(current_out, path, parts, "overwrite")
 
 
 def snapshot_at(spark: SparkSession, path: str, ts) -> DataFrame:

@@ -125,6 +125,7 @@ _MODIFIED_SINCE_VERDICT: tuple[str, ...] = (
     "q136_mor_upsert_merge",  # reads the upsert's equality sidecar by its recorded schema
     "p02_hicp_mom_yoy",  # its payload is a LocalTableScan through the JVM JSON-stat decoder
     "q113_merge_upsert",  # publishes and merges through the manifest writers, reads read_version
+    "q124_streaming_mv_maintenance",  # MV state has no applied_batch column; final_batch from meta
 )
 
 

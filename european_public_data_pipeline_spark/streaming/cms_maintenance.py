@@ -1,16 +1,8 @@
-"""Compacted streaming Count-Min maintenance — the stateful sibling of
-``sketch_sink`` (SURVEY.md §2.11 + §2.12 sketches).
-
-``sketch_sink.cms_stream_sink`` is the append-log form: one cell file
-per micro-batch, merged at READ time — read cost grows O(n_batches).
-This module is the compaction of that log into ONE manifest-versioned
-cell relation updated in place: read cost is a single constant-size
-scan forever, each update costs O(batch + d*w), prior sketch states
-stay time-travelable, and the ``applied_batch`` watermark adds the
-replay idempotence the append-log form gets from the checkpoint alone.
-Production runs both — the landing log for audit, the compacted state
-for serving — exactly as q83 (mergeability proof) pairs with q79 (the
-served sketch).
+"""Compacted streaming Count-Min maintenance (SURVEY.md §2.11 + §2.12
+sketches): ONE manifest-versioned cell relation updated per micro-batch.
+Read cost is a single constant-size scan forever, each update costs
+O(batch + d*w), and prior sketch states stay time-travelable. The
+served sketch pairs with q83's mergeability proof exactly as q79 does.
 
 Unlike the HLL family (where union != direct bit-for-bit, q98), Count-Min
 cell counts are EXACT integers under merge: summing per-batch cell
@@ -21,24 +13,33 @@ asserts exact equality, not a tolerance.
 
 State is the constant-size d*w cell relation (CMS_DEPTH x CMS_WIDTH
 rows regardless of stream volume — the entire point at 100 TB: per-key
-frequency tracking whose stored state never grows), committed through
-``pipeline/manifest``'s versioned protocol with the same crash/replay
-guards as ``mv_maintenance``: immutable versions (a crash mid-merge
-cannot corrupt the current sketch) and an ``applied_batch`` watermark
-(a replayed foreachBatch id is a no-op, so a crash between the state
-commit and the checkpoint commit cannot double-count a batch).
+frequency tracking whose stored state never grows). The cells are an
+``MVSpec`` over ``(hash_id, bucket)`` whose ``cell_count`` merges by
+sum, so a micro-batch folds in through ``mv_maintenance``'s step and
+the shared replay-guarded fold (``streaming.sinks.fold_batch``):
+immutable versions (a crash mid-merge cannot corrupt the current
+sketch) and an ``applied_batch`` watermark in manifest ``meta`` (a
+replayed foreachBatch id is a no-op, so a crash between the state
+commit and the checkpoint commit cannot double-count a batch). The
+stored relation is ``(hash_id, bucket, cell_count)``, directly
+consumable by ``cms_estimate`` through ``manifest.read_version``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
 from european_public_data_pipeline_spark.operators.sketches import cms_cells
-from european_public_data_pipeline_spark.pipeline.manifest import (
-    publish_version,
-    read_version,
-    versions,
+from european_public_data_pipeline_spark.pipeline.mv_refresh import Measure, MVSpec
+from european_public_data_pipeline_spark.streaming.mv_maintenance import (
+    _merge_partial,
+)
+from european_public_data_pipeline_spark.streaming.sinks import _run_available_now
+
+_CELL_SPEC = MVSpec(
+    group_keys=("hash_id", "bucket"),
+    measures=(Measure("cell_count", "sum", "cell_count"),),
 )
 
 
@@ -52,55 +53,19 @@ def merge_cms_state(
     """Merge one micro-batch's cell counts into the sketch state at
     ``state_path`` (idempotent per batch_id, crash-safe via versioned
     commits; see module docstring)."""
-    partial = cms_cells(batch_df.select(key), key).withColumn(
-        "applied_batch", F.lit(batch_id).cast("long")
-    )
-    if not versions(spark, state_path):
-        publish_version(partial, state_path)
-        return
-    # An empty batch contributes no cells AND cannot advance the max()
-    # watermark — merging it would publish an identical version on every
-    # replay forever (code-review r6). Nothing to absorb: return.
-    if partial.limit(1).count() == 0:
-        return
-    state = read_version(spark, state_path)
-    last = state.agg(F.max("applied_batch")).collect()[0][0]
-    if last is not None and last >= batch_id:
-        return  # replayed batch: already absorbed
-    merged = (
-        state.unionByName(partial)
-        .groupBy("hash_id", "bucket")
-        .agg(
-            F.sum("cell_count").alias("cell_count"),
-            F.max("applied_batch").alias("applied_batch"),
-        )
-    )
-    publish_version(merged, state_path)
+    cells = cms_cells(batch_df.select(key), key)
+    _merge_partial(spark, state_path, batch_df, batch_id, _CELL_SPEC, cells)
 
 
 def maintain_cms(
     stream_df: DataFrame, state_path: str, checkpoint_path: str, key: str
-):
+) -> StreamingQuery:
     """Absorb all available input (Trigger.AvailableNow) into the sketch.
     Re-invoking with the same checkpoint absorbs only new files; the
     stored cells always equal ``cms_cells`` over everything committed."""
     spark = stream_df.sparkSession
-    q = (
-        stream_df.writeStream.foreachBatch(
-            lambda df, bid: merge_cms_state(spark, state_path, df, bid, key)
-        )
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
-
-
-def read_cms_state(spark: SparkSession, state_path: str) -> DataFrame:
-    """The current cell relation (manifest-committed view), bookkeeping
-    column dropped — directly consumable by ``cms_estimate``."""
-    return read_version(spark, state_path).select(
-        "hash_id", "bucket", "cell_count"
+    return _run_available_now(
+        stream_df,
+        checkpoint_path,
+        lambda df, bid: merge_cms_state(spark, state_path, df, bid, key),
     )

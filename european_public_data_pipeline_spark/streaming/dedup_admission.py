@@ -45,16 +45,18 @@ costs O(batch) data + one KB-sized manifest at ANY corpus size — the
 shape that survives 100 TB, where a per-batch state rewrite would be a
 corpus-sized write every few seconds.
 
-Crash/replay safety mirrors ``mv_maintenance``: immutable versioned
-commits (a crash mid-append cannot corrupt the current index) and an
-``applied_batch`` watermark stored in the manifest's ``meta`` dict, so
-the replay check is one manifest read, never a corpus scan. Both the
-watermark and the state are read from the HIGHEST COMMITTED manifest —
-the same version ``append_version`` chains off — never the LATEST
-pointer: in the crash window between a manifest commit and the pointer
-swap the pointer lags one version, and a pointer-based read would
-dedup against stale state while appending on top of the new manifest,
-re-admitting the replayed batch's rows as permanent duplicates.
+Crash/replay safety is the shared replay-guarded fold of every stateful
+sink (``streaming.sinks.fold_batch``, which ``mv_maintenance`` and
+``cms_maintenance`` run too): immutable versioned commits (a crash
+mid-append cannot corrupt the current index) and an ``applied_batch``
+watermark stored in the manifest's ``meta`` dict, so the replay check
+is one manifest read, never a corpus scan. Both the watermark and the
+state are read from the HIGHEST COMMITTED manifest — the same version
+``append_version`` chains off — never the LATEST pointer: in the crash
+window between a manifest commit and the pointer swap the pointer lags
+one version, and a pointer-based read would dedup against stale state
+while appending on top of the new manifest, re-admitting the replayed
+batch's rows as permanent duplicates.
 
 ``replay_admission`` is the batch twin: the same per-batch fold applied
 sequentially without streaming machinery. The stream-equals-batch test
@@ -71,6 +73,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
 from european_public_data_pipeline_spark.operators.dedup import (
     JACCARD_THRESHOLD,
@@ -82,12 +85,12 @@ from european_public_data_pipeline_spark.operators.dedup import (
     shingles,
     sig_bands,
 )
-from european_public_data_pipeline_spark.pipeline.manifest import (
-    append_version,
-    read_version,
-    version_meta,
-    versions,
+from european_public_data_pipeline_spark.pipeline.manifest import append_version
+from european_public_data_pipeline_spark.streaming.sinks import (
+    _run_available_now,
+    fold_batch,
 )
+
 
 def _fingerprint() -> F.Column:
     """d02's normalized-text md5 fingerprint."""
@@ -166,55 +169,34 @@ def admit_batch(
 ) -> None:
     """Admit one micro-batch into the index at ``state_path`` (idempotent
     per batch_id, crash-safe, O(batch) committed; see module docstring)."""
-    if batch_df.limit(1).count() == 0:
-        return  # nothing to admit; do not advance the watermark
-    vs = versions(spark, state_path)
-    if vs:
-        # Pin the watermark AND the state to the highest committed
-        # manifest — the version append_version chains off. The LATEST
-        # pointer lags it in the commit-crash window (module docstring).
-        head = vs[-1]
-        last = version_meta(spark, state_path, head).get("applied_batch")
-        if last is not None and last >= batch_id:
-            return  # replayed batch: already absorbed (one manifest read)
-        state_sig = read_version(spark, state_path, head)
-    else:
-        state_sig = None
-    caches: list[DataFrame] = []
-    admitted = _admit_against(_signatures(batch_df), state_sig, caches)
-    try:
-        # An all-rejected batch still commits an empty append: the
-        # watermark must advance or every replay redoes the probe work.
-        append_version(admitted, state_path, meta={"applied_batch": batch_id})
-    finally:
-        for c in caches:
-            c.unpersist()
+
+    def step(state_sig: DataFrame | None, meta: dict) -> None:
+        caches: list[DataFrame] = []
+        admitted = _admit_against(_signatures(batch_df), state_sig, caches)
+        try:
+            # An all-rejected batch still commits an empty append: the
+            # watermark must advance or every replay redoes the probe work.
+            append_version(admitted, state_path, meta=meta)
+        finally:
+            for c in caches:
+                c.unpersist()
+
+    fold_batch(spark, state_path, batch_df, batch_id, step)
 
 
 def ingest_documents(
     stream_df: DataFrame, state_path: str, checkpoint_path: str
-):
+) -> StreamingQuery:
     """Run admission over all available input (Trigger.AvailableNow).
     Re-invoking with the same checkpoint admits ONLY new files; the index
     at ``state_path`` always equals ``replay_admission`` over the same
     batch sequence, and prior index states stay time-travelable."""
     spark = stream_df.sparkSession
-    q = (
-        stream_df.writeStream.foreachBatch(
-            lambda df, bid: admit_batch(spark, state_path, df, bid)
-        )
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    return _run_available_now(
+        stream_df,
+        checkpoint_path,
+        lambda df, bid: admit_batch(spark, state_path, df, bid),
     )
-    q.awaitTermination()
-    return q
-
-
-def read_admitted(spark: SparkSession, state_path: str) -> DataFrame:
-    """The current admitted index (manifest-committed view)."""
-    return read_version(spark, state_path)
 
 
 def replay_admission(

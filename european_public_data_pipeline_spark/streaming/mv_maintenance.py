@@ -16,44 +16,50 @@ between the two (or run both against different sources) without
 re-deriving its merge logic. ``*_event_summary`` are the original shape
 (``EVENT_SUMMARY_SPEC``) expressed through the generic path.
 
-Crash and replay safety — two layers:
-
-1. The MV is stored through ``pipeline/manifest``'s versioned commit
-   protocol, NOT a plain overwrite: each merge writes a NEW immutable
-   data prefix and commits it by manifest + pointer swap. A crash
-   mid-merge therefore cannot corrupt the current MV (the old version's
-   files are never touched) — with a plain ``mode("overwrite")`` a crash
-   after the delete phase would leave the MV unreadable, and the
-   subsequent replay would silently REBUILD it from that one batch,
-   losing all accumulated history (found by round-5 review).
-2. A foreachBatch body can be re-invoked for the SAME batch_id after a
-   crash; the MV carries the highest batch id it has absorbed
-   (``applied_batch``) and a batch at or below it is a no-op —
-   idempotence at batch granularity.
+Crash and replay safety: the MV is stored through ``pipeline/manifest``'s
+versioned commit protocol, so a crash mid-merge cannot corrupt the
+current MV (a plain overwrite crashed after its delete phase would
+leave it unreadable). Every micro-batch goes through the shared
+replay-guarded fold (``streaming.sinks.fold_batch``): each commit
+records the batch id it absorbed as ``meta["applied_batch"]``, and a
+foreachBatch body re-invoked for the SAME batch_id after a crash reads
+that watermark from the head manifest and is a no-op, with no scan of
+the MV. An empty micro-batch commits nothing, the first one included.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
-from european_public_data_pipeline_spark.pipeline.manifest import (
-    publish_version,
-    read_version,
-    versions,
-)
+from european_public_data_pipeline_spark.pipeline.manifest import publish_version
 from european_public_data_pipeline_spark.pipeline.mv_refresh import (
     EVENT_SUMMARY_SPEC,
     MVSpec,
 )
+from european_public_data_pipeline_spark.streaming.sinks import (
+    _run_available_now,
+    fold_batch,
+)
 
 
-def _batch_partial(batch_df: DataFrame, batch_id: int, spec: MVSpec) -> DataFrame:
-    """The spec's algebraic state for one batch, stamped with the batch
-    id (merged by max — the replay watermark)."""
-    return spec.partial(batch_df).withColumn(
-        "applied_batch", F.lit(batch_id).cast("long")
-    )
+def _merge_partial(
+    spark: SparkSession,
+    mv_path: str,
+    batch_df: DataFrame,
+    batch_id: int,
+    spec: MVSpec,
+    partial: DataFrame,
+) -> None:
+    """The MV fold step: publish ``spec.merge(state, partial)`` (or the
+    batch's ``partial`` on a fresh path) through ``fold_batch``, which
+    skips empty and replayed batches."""
+
+    def step(mv: DataFrame | None, meta: dict) -> None:
+        merged = partial if mv is None else spec.merge(mv, partial)
+        publish_version(merged, mv_path, meta=meta)
+
+    fold_batch(spark, mv_path, batch_df, batch_id, step)
 
 
 def merge_mv(
@@ -64,47 +70,25 @@ def merge_mv(
     spec: MVSpec,
 ) -> None:
     """Merge one micro-batch into the MV at ``mv_path`` (idempotent per
-    batch_id, crash-safe via versioned commits; see module docstring)."""
-    partial = _batch_partial(batch_df, batch_id, spec)
-    if not versions(spark, mv_path):
-        publish_version(partial, mv_path)
-        return
-    # An empty batch contributes no groups AND cannot advance the max()
-    # watermark — merging it would publish an identical MV version on
-    # every replay forever (code-review r6). Nothing to absorb: return.
-    if partial.limit(1).count() == 0:
-        return
-    mv = read_version(spark, mv_path)
-    # max() over an EMPTY MV (a zero-row first batch) collects as None —
-    # treat as "nothing absorbed yet", don't compare None >= int.
-    last = mv.agg(F.max("applied_batch")).collect()[0][0]
-    if last is not None and last >= batch_id:
-        return  # replayed batch: already absorbed
-    merged = spec.merge(
-        mv, partial, extra=(F.max("applied_batch").alias("applied_batch"),)
-    )
-    publish_version(merged, mv_path)
+    batch_id, crash-safe via versioned commits; see module docstring).
+    An empty batch commits no version, even on a fresh path: the MV
+    appears with the first non-empty batch."""
+    _merge_partial(spark, mv_path, batch_df, batch_id, spec, spec.partial(batch_df))
 
 
 def maintain_mv(
     stream_df: DataFrame, mv_path: str, checkpoint_path: str, spec: MVSpec
-):
+) -> StreamingQuery:
     """Run the maintenance over all available input (Trigger.AvailableNow).
     Re-invoking with the same checkpoint absorbs ONLY new input; the MV at
     ``mv_path`` always equals a full recompute over everything committed,
     and prior MV states remain time-travelable (manifest versions)."""
     spark = stream_df.sparkSession
-    q = (
-        stream_df.writeStream.foreachBatch(
-            lambda df, bid: merge_mv(spark, mv_path, df, bid, spec)
-        )
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    return _run_available_now(
+        stream_df,
+        checkpoint_path,
+        lambda df, bid: merge_mv(spark, mv_path, df, bid, spec),
     )
-    q.awaitTermination()
-    return q
 
 
 def merge_event_summary(
@@ -114,18 +98,14 @@ def merge_event_summary(
     merge_mv(spark, mv_path, batch_df, batch_id, EVENT_SUMMARY_SPEC)
 
 
-def maintain_event_summary(stream_df: DataFrame, mv_path: str, checkpoint_path: str):
+def maintain_event_summary(
+    stream_df: DataFrame, mv_path: str, checkpoint_path: str
+) -> StreamingQuery:
     return maintain_mv(stream_df, mv_path, checkpoint_path, EVENT_SUMMARY_SPEC)
 
 
-def read_event_summary(spark: SparkSession, mv_path: str) -> DataFrame:
-    """The current MV (manifest-committed view)."""
-    return read_version(spark, mv_path)
-
-
 def recompute_mv(src: DataFrame, spec: MVSpec) -> DataFrame:
-    """The full-recompute twin (what the MV must always equal, minus the
-    bookkeeping column)."""
+    """The full-recompute twin (what the MV must always equal)."""
     return spec.partial(src)
 
 

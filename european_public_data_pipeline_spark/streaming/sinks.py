@@ -1,4 +1,4 @@
-"""Exactly-once streaming sink via foreachBatch + checkpointing
+"""Exactly-once streaming sinks via foreachBatch + checkpointing
 (SURVEY.md §2.11 / §4 "incremental processing").
 
 The reference's incremental model is "re-run on the newest blob"
@@ -15,19 +15,80 @@ checkpointed stream with an idempotent batch writer:
 
 This is the production landing pattern for any file/warehouse sink that
 lacks transactions.
+
+Stateful sinks (``mv_maintenance``, ``cms_maintenance``,
+``dedup_admission``) fold each micro-batch into a manifest-versioned
+state through the one replay-guarded fold, ``fold_batch``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from collections.abc import Callable
+
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import StreamingQuery
+
+from european_public_data_pipeline_spark.pipeline.manifest import (
+    _read_files_live,
+    _read_head,
+)
+
+
+def _run_available_now(
+    stream_df: DataFrame,
+    checkpoint_path: str,
+    body: Callable[[DataFrame, int], None],
+) -> StreamingQuery:
+    """The one stream driver: run ``body`` on every micro-batch of all
+    available input (Trigger.AvailableNow) under ``checkpoint_path`` and
+    wait for it. Re-invoking with the same checkpoint processes only new
+    input."""
+    q = (
+        stream_df.writeStream.foreachBatch(body)
+        .option("checkpointLocation", checkpoint_path)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return q
+
+
+def fold_batch(
+    spark: SparkSession,
+    state_path: str,
+    batch_df: DataFrame,
+    batch_id: int,
+    step: Callable[[DataFrame | None, dict], None],
+) -> None:
+    """Fold one micro-batch into the manifest-versioned state at
+    ``state_path``, at most once per ``batch_id``:
+
+    - an empty micro-batch commits nothing (it would otherwise publish
+      an identical version on every idle trigger and replay);
+    - the watermark and the state come from the HIGHEST committed
+      manifest, read once, never the LATEST pointer: in the crash window
+      between a manifest commit and the pointer swap the pointer lags
+      one version, and a pointer-based guard would re-apply the batch on
+      top of the state that already holds it;
+    - a batch at or below ``meta["applied_batch"]`` is a replay: no-op;
+    - otherwise ``step(state, meta)`` commits the new state (``state`` is
+      ``None`` on a fresh path) with ``meta={"applied_batch": batch_id}``.
+    """
+    if batch_df.isEmpty():
+        return
+    head = _read_head(spark, state_path)
+    if head is None:
+        state = None
+    elif head.m.get("meta", {}).get("applied_batch", -1) >= batch_id:
+        return  # replayed batch: already absorbed
+    else:
+        state = _read_files_live(spark, head.m)
+    step(state, {"applied_batch": batch_id})
 
 
 def write_stream_exactly_once(
-    stream_df: DataFrame,
-    sink_path: str,
-    checkpoint_path: str,
-    await_termination: bool = True,
-):
+    stream_df: DataFrame, sink_path: str, checkpoint_path: str
+) -> StreamingQuery:
     """Run the stream over all available input (Trigger.AvailableNow) into
     a parquet sink with exactly-once semantics. Returns the query handle.
 
@@ -36,21 +97,9 @@ def write_stream_exactly_once(
     """
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.write.mode("overwrite").parquet(
-                f"{sink_path}/batch_id={batch_id}"
-            )
-        )
+        batch_df.write.mode("overwrite").parquet(f"{sink_path}/batch_id={batch_id}")
 
-    q = (
-        stream_df.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if await_termination:
-        q.awaitTermination()
-    return q
+    return _run_available_now(stream_df, checkpoint_path, write_batch)
 
 
 def upsert_stream_manifest(
@@ -61,8 +110,7 @@ def upsert_stream_manifest(
     persist_changelog: bool = True,
     dedupe_updates_by: str | None = None,
     mode: str = "cow",
-    await_termination: bool = True,
-):
+) -> StreamingQuery:
     """Streaming CDC upsert into a VERSIONED-MANIFEST table — the
     foreachBatch + MERGE landing pattern for streams whose rows are
     revisions, not events: each micro-batch lands as ONE commit
@@ -132,12 +180,4 @@ def upsert_stream_manifest(
             persist_changelog=persist_changelog,
         )
 
-    q = (
-        stream_df.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if await_termination:
-        q.awaitTermination()
-    return q
+    return _run_available_now(stream_df, checkpoint_path, merge_batch)

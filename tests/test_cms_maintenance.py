@@ -12,10 +12,10 @@ from european_public_data_pipeline_spark.operators.sketches import (
     cms_cells,
     cms_estimate,
 )
+from european_public_data_pipeline_spark.pipeline.manifest import read_version
 from european_public_data_pipeline_spark.streaming.cms_maintenance import (
     maintain_cms,
     merge_cms_state,
-    read_cms_state,
 )
 from european_public_data_pipeline_spark.streaming.windows import read_events_stream
 
@@ -55,7 +55,7 @@ def test_streamed_cells_equal_batch_cells_exactly(spark, tmp_path):
     batch = cms_cells(
         spark.read.parquet(src).select("user_id"), "user_id"
     )
-    assert _cells(read_cms_state(spark, state)) == _cells(batch)
+    assert _cells(read_version(spark, state)) == _cells(batch)
 
     # Estimates from the streamed state match estimates from the batch
     # sketch, and both respect the never-undercount guarantee.
@@ -63,7 +63,7 @@ def test_streamed_cells_equal_batch_cells_exactly(spark, tmp_path):
     streamed_est = {
         r["user_id"]: r["cms_estimate"]
         for r in cms_estimate(
-            read_cms_state(spark, state), keys, "user_id"
+            read_version(spark, state), keys, "user_id"
         ).collect()
     }
     batch_est = {
@@ -85,12 +85,12 @@ def test_replayed_batch_is_noop_and_state_is_constant_size(spark, tmp_path):
     state = str(tmp_path / "state")
     b0 = spark.createDataFrame(_rows(0, 30, 1), SCHEMA)
     merge_cms_state(spark, state, b0, 0, "user_id")
-    before = _cells(read_cms_state(spark, state))
+    before = _cells(read_version(spark, state))
     # foreachBatch retry: same batch id re-delivered after a crash.
     merge_cms_state(spark, state, b0, 0, "user_id")
-    assert _cells(read_cms_state(spark, state)) == before
+    assert _cells(read_version(spark, state)) == before
     # State is bounded by the sketch geometry, not the stream volume.
-    assert read_cms_state(spark, state).count() <= CMS_DEPTH * CMS_WIDTH
+    assert read_version(spark, state).count() <= CMS_DEPTH * CMS_WIDTH
 
 
 def test_empty_batch_on_existing_state_publishes_no_version(spark, tmp_path):
@@ -103,9 +103,9 @@ def test_empty_batch_on_existing_state_publishes_no_version(spark, tmp_path):
         spark, state, spark.createDataFrame(_rows(0, 10, 5), SCHEMA), 0, "user_id"
     )
     before_v = versions(spark, state)
-    before_c = _cells(read_cms_state(spark, state))
+    before_c = _cells(read_version(spark, state))
     empty = spark.createDataFrame([], SCHEMA)
     merge_cms_state(spark, state, empty, 1, "user_id")
     merge_cms_state(spark, state, empty, 1, "user_id")
     assert versions(spark, state) == before_v
-    assert _cells(read_cms_state(spark, state)) == before_c
+    assert _cells(read_version(spark, state)) == before_c

@@ -11,13 +11,13 @@ import json
 from pyspark.sql import functions as F
 
 from european_public_data_pipeline_spark.pipeline.manifest import (
+    read_version,
     version_meta,
     versions,
 )
 from european_public_data_pipeline_spark.streaming.dedup_admission import (
     admit_batch,
     ingest_documents,
-    read_admitted,
     replay_admission,
 )
 
@@ -66,7 +66,7 @@ def _stream_in_order(spark, tmp_path, upto):
 
 def test_stream_equals_batch_fold(spark, tmp_path):
     state = _stream_in_order(spark, tmp_path, 3)
-    got = read_admitted(spark, state)
+    got = read_version(spark, state)
     want = replay_admission(spark, _batches(spark))
     assert sorted(got.columns) == sorted(want.columns)
     cols = sorted(c for c in want.columns)
@@ -89,7 +89,7 @@ def test_resume_absorbs_only_new_batches(spark, tmp_path):
     stream = spark.readStream.schema(SCHEMA).parquet(src)
     ingest_documents(stream, state, ckpt)
     assert versions(spark, state)[-1] == v_before + 1  # exactly one more commit
-    got = {r["doc_id"] for r in read_admitted(spark, state).collect()}
+    got = {r["doc_id"] for r in read_version(spark, state).collect()}
     assert got == EXPECT_ADMITTED
 
 
@@ -158,7 +158,7 @@ def test_short_docs_take_the_exact_only_path(spark, tmp_path):
     )
     admit_batch(spark, state, b0, 0)
     admit_batch(spark, state, b1, 1)
-    got = {r["doc_id"] for r in read_admitted(spark, state).collect()}
+    got = {r["doc_id"] for r in read_version(spark, state).collect()}
     # 11 within-batch exact dup of 10; 13/14 cross-batch exact dups.
     assert got == {10, 12, 15}
     want = {r["doc_id"] for r in replay_admission(spark, [b0, b1]).collect()}
@@ -175,7 +175,7 @@ def test_compaction_preserves_state_and_replay_guard(spark, tmp_path):
     from european_public_data_pipeline_spark.pipeline.manifest import compact
 
     state = _stream_in_order(spark, tmp_path, 2)
-    before = {r["doc_id"] for r in read_admitted(spark, state).collect()}
+    before = {r["doc_id"] for r in read_version(spark, state).collect()}
     v = compact(spark, state, target_files=1)
     m = _json.loads(
         spark.sparkContext.wholeTextFiles(
@@ -184,14 +184,14 @@ def test_compaction_preserves_state_and_replay_guard(spark, tmp_path):
     )
     assert len(m["files"]) == 1  # the appended file groups became one
     assert m["meta"]["applied_batch"] == 1  # watermark carried forward
-    assert {r["doc_id"] for r in read_admitted(spark, state).collect()} == before
+    assert {r["doc_id"] for r in read_version(spark, state).collect()} == before
     # replayed batch id after compaction: still a no-op
     vs_before = versions(spark, state)
     admit_batch(spark, state, spark.createDataFrame(BATCH1, SCHEMA), 1)
     assert versions(spark, state) == vs_before
     # new batch after compaction: dedups against the compacted state
     admit_batch(spark, state, spark.createDataFrame(BATCH2, SCHEMA), 2)
-    got = {r["doc_id"] for r in read_admitted(spark, state).collect()}
+    got = {r["doc_id"] for r in read_version(spark, state).collect()}
     assert got == EXPECT_ADMITTED
 
 

@@ -5,13 +5,19 @@ new files per pass; a replayed batch_id must be a no-op (exactly-once)."""
 from __future__ import annotations
 
 import datetime as dt
+import os
+import shutil
 
-from pyspark.sql import functions as F
-
+from european_public_data_pipeline_spark.operators.sketches import cms_cells
+from european_public_data_pipeline_spark.pipeline.manifest import (
+    read_version,
+    version_meta,
+    versions,
+)
+from european_public_data_pipeline_spark.streaming.cms_maintenance import maintain_cms
 from european_public_data_pipeline_spark.streaming.mv_maintenance import (
     maintain_event_summary,
     merge_event_summary,
-    read_event_summary,
     recompute_event_summary,
 )
 from european_public_data_pipeline_spark.streaming.windows import read_events_stream
@@ -30,7 +36,7 @@ def _rows(i0, n, etype, val):
 def _mv(spark, path):
     return {
         r["event_type"]: (r["n_events"], r["sum_value_c"], r["first_ts"], r["last_ts"])
-        for r in read_event_summary(spark, path).collect()
+        for r in read_version(spark, path).collect()
     }
 
 
@@ -70,34 +76,49 @@ def test_replayed_batch_is_a_noop(spark, tmp_path):
 
     # Simulate a foreachBatch retry: re-merge an already-absorbed batch id.
     replay = spark.read.parquet(src)
-    last = read_event_summary(spark, mv).agg(F.max("applied_batch")).collect()[0][0]
-    merge_event_summary(spark, mv, replay, int(last))
+    vs = versions(spark, mv)
+    last = version_meta(spark, mv)["applied_batch"]
+    merge_event_summary(spark, mv, replay, last)
     assert _mv(spark, mv) == before  # double-count prevented
+    assert versions(spark, mv) == vs  # and no version committed
 
 
 def test_empty_first_batch_does_not_poison_the_mv(spark, tmp_path):
-    """A zero-row first batch writes an empty MV whose max(applied_batch)
-    is None — later batches must still merge (code-review r5: the None
-    comparison used to kill the query permanently)."""
+    """A zero-row first batch commits nothing — no empty MV version, no
+    watermark — and the next batch still merges (code-review r5: an
+    empty first batch used to leave an MV whose watermark read None)."""
     mv = str(tmp_path / "mv")
     empty = spark.createDataFrame([], SCHEMA)
     merge_event_summary(spark, mv, empty, 0)
-    assert read_event_summary(spark, mv).count() == 0
+    assert versions(spark, mv) == []
     batch = spark.createDataFrame(_rows(0, 3, "view", 2.0), SCHEMA)
     merge_event_summary(spark, mv, batch, 1)
     got = _mv(spark, mv)
     assert got["view"][0] == 3 and got["view"][1] == 600
+    assert version_meta(spark, mv)["applied_batch"] == 1
+
+
+def test_merge_on_existing_mv_job_budget(spark, tmp_path, spark_jobs):
+    """A micro-batch onto an existing MV reads its replay watermark from
+    the head manifest's meta, not by a max() scan of the MV: at most 7
+    Spark jobs (emptiness probe, staged write, commit row count)."""
+    mv = str(tmp_path / "mv")
+    merge_event_summary(
+        spark, mv, spark.createDataFrame(_rows(0, 20, "view", 1.0), SCHEMA), 0
+    )
+    batch = spark.createDataFrame(
+        _rows(20, 20, "view", 2.0) + _rows(40, 10, "click", 0.5), SCHEMA
+    )
+    with spark_jobs() as jobs:
+        merge_event_summary(spark, mv, batch, 1)
+    assert len(jobs) <= 7, jobs
+    assert _mv(spark, mv)["view"][0] == 40
 
 
 def test_mv_history_is_versioned_and_crash_safe(spark, tmp_path):
     """Each merge commits a NEW manifest version: the previous MV state
     stays readable (time travel), so a crash mid-merge can never corrupt
     the committed view — the plain-overwrite failure mode review found."""
-    from european_public_data_pipeline_spark.pipeline.manifest import (
-        read_version,
-        versions,
-    )
-
     mv = str(tmp_path / "mv")
     merge_event_summary(spark, mv, spark.createDataFrame(_rows(0, 2, "view", 1.0), SCHEMA), 0)
     merge_event_summary(spark, mv, spark.createDataFrame(_rows(2, 3, "view", 1.0), SCHEMA), 1)
@@ -107,70 +128,80 @@ def test_mv_history_is_versioned_and_crash_safe(spark, tmp_path):
     assert v1["view"] == 2 and v2["view"] == 5
 
 
+def _crashed_copy(ckpt: str, dst: str) -> str:
+    """A checkpoint image whose batch-0 commit marker is missing: the
+    on-disk state a crash between the state commit and the checkpoint
+    commit leaves behind. (A cloned directory: editing the live one in
+    place trips the same-JVM metadata-log cache's concurrent-use guard,
+    which a genuinely restarted process wouldn't hit.)"""
+    shutil.copytree(ckpt, dst)
+    os.remove(os.path.join(dst, "commits", "0"))
+    crc = os.path.join(dst, "commits", ".0.crc")
+    if os.path.exists(crc):  # Hadoop local-FS checksum shadow of the marker
+        os.remove(crc)
+    return dst
+
+
 def test_crash_between_mv_commit_and_checkpoint_commit_replays_clean(
     spark, tmp_path
 ):
     """End-to-end kill-and-resume (VERDICT r5 #7): the dangerous crash
-    window is AFTER the MV's manifest commit but BEFORE Structured
+    window is AFTER the state's manifest commit but BEFORE Structured
     Streaming records the batch in the checkpoint — on restart the engine
     re-runs the SAME batch_id over the SAME input files, and without the
-    applied_batch guard the MV would double-count it. Simulated exactly:
-    run a pass, then resume from a checkpoint image whose commit marker
-    (the engine's source of truth for 'batch done') is missing — the
-    exact on-disk state a crash in that window leaves behind. (The image
-    is a cloned checkpoint directory: editing the live one in place
-    trips the same-JVM metadata-log cache's concurrent-use guard, which
-    a genuinely restarted process wouldn't hit.) Append new data before
-    resuming. The resumed query replays batch 0 (no-op) then
-    absorbs the new files as batch 1; the MV must equal the batch-side
-    full recompute (q96's merge-equals-recompute algebra, here proven
-    across a crash boundary), with prior states still time-travelable."""
-    import os
-
-    from european_public_data_pipeline_spark.pipeline.manifest import (
-        read_version,
-        versions,
-    )
-
+    applied_batch guard the state would double-count it. Simulated
+    exactly, for the MV and the Count-Min cells alike: run a pass, then
+    resume from a checkpoint image whose commit marker (the engine's
+    source of truth for 'batch done') is missing. Append new data before
+    resuming. The resumed query replays batch 0 (no-op) then absorbs the
+    new files as batch 1; the MV must equal the batch-side full
+    recompute (q96's merge-equals-recompute algebra, here proven across
+    a crash boundary) and the cells the one-pass batch sketch, with prior
+    states still time-travelable."""
     src = str(tmp_path / "src")
     mv = str(tmp_path / "mv")
+    cms = str(tmp_path / "cms")
     ckpt = str(tmp_path / "ckpt")
+    cms_ckpt = str(tmp_path / "cms_ckpt")
+
+    def cells(df):
+        return {(r["hash_id"], r["bucket"]): r["cell_count"] for r in df.collect()}
 
     spark.createDataFrame(
         _rows(0, 4, "view", 1.5) + _rows(4, 2, "purchase", 40.0), SCHEMA
     ).write.parquet(src)
     maintain_event_summary(read_events_stream(spark, src), mv, ckpt)
+    maintain_cms(read_events_stream(spark, src), cms, cms_ckpt, "user_id")
     assert _mv(spark, mv) == _want(spark, src)
     committed_versions = versions(spark, mv)
+    cms_versions = versions(spark, cms)
 
-    # Kill: the MV merge committed, the checkpoint commit did not —
-    # materialized as a checkpoint image missing the commit marker.
-    import shutil
+    # Kill: the state commits landed, the checkpoint commits did not.
+    ckpt2 = _crashed_copy(ckpt, str(tmp_path / "ckpt_after_crash"))
+    cms_ckpt2 = _crashed_copy(cms_ckpt, str(tmp_path / "cms_ckpt_after_crash"))
 
-    ckpt2 = str(tmp_path / "ckpt_after_crash")
-    shutil.copytree(ckpt, ckpt2)
-    os.remove(os.path.join(ckpt2, "commits", "0"))
-    crc = os.path.join(ckpt2, "commits", ".0.crc")
-    if os.path.exists(crc):  # Hadoop local-FS checksum shadow of the marker
-        os.remove(crc)
-
-    # New data lands while "down"; then the query resumes from the
-    # crashed checkpoint — batch 0 is re-delivered with its original
+    # New data lands while "down"; then the queries resume from the
+    # crashed checkpoints — batch 0 is re-delivered with its original
     # file set.
     spark.createDataFrame(
         _rows(6, 3, "view", 2.0) + _rows(9, 1, "click", 0.25), SCHEMA
     ).write.mode("append").parquet(src)
     maintain_event_summary(read_events_stream(spark, src), mv, ckpt2)
+    maintain_cms(read_events_stream(spark, src), cms, cms_ckpt2, "user_id")
 
     # Equals the batch recompute: batch 0 was NOT absorbed twice.
     assert _mv(spark, mv) == _want(spark, src)
     got = _mv(spark, mv)
     assert got["view"][0] == 7 and got["purchase"][0] == 2 and got["click"][0] == 1
-    # The replayed no-op committed no extra MV version; exactly one new
+    batch_cells = cms_cells(spark.read.parquet(src).select("user_id"), "user_id")
+    assert cells(read_version(spark, cms)) == cells(batch_cells)
+    # The replayed no-op committed no extra version; exactly one new
     # version for the genuinely-new batch, and pre-crash state is still
     # time-travelable.
     after = versions(spark, mv)
     assert len(after) == len(committed_versions) + 1
+    assert len(versions(spark, cms)) == len(cms_versions) + 1
+    assert version_meta(spark, cms)["applied_batch"] == 1
     pre_crash = {
         r["event_type"]: r["n_events"]
         for r in read_version(spark, mv, committed_versions[-1]).collect()
@@ -182,8 +213,6 @@ def test_empty_batch_on_existing_mv_publishes_no_version(spark, tmp_path):
     """An empty micro-batch can't advance the max() watermark, so merging
     it would publish an identical MV version on every replay forever —
     it must be a pure no-op (code-review r6)."""
-    from european_public_data_pipeline_spark.pipeline.manifest import versions
-
     mv = str(tmp_path / "mv")
     merge_event_summary(
         spark, mv, spark.createDataFrame(_rows(0, 3, "view", 1.0), SCHEMA), 0
@@ -209,7 +238,6 @@ def test_streaming_maintains_any_spec_shape(spark, tmp_path):
         maintain_mv,
         recompute_mv,
     )
-    from european_public_data_pipeline_spark.pipeline.manifest import read_version
 
     spec = MVSpec(
         group_keys=("user_id", "event_type"),

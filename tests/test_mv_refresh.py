@@ -370,6 +370,35 @@ def _clog_spec():
     )
 
 
+def test_changelog_apply_reads_the_mv_head_once(spark, tmp_path, monkeypatch):
+    """apply_changelog_mv reads the MV's LATEST pointer and its head
+    manifest once each: the replay guard, the carried meta and the stored
+    state all come from that one manifest."""
+    import european_public_data_pipeline_spark.pipeline.manifest as M
+    from european_public_data_pipeline_spark.pipeline.mv_refresh import (
+        apply_changelog_mv,
+    )
+
+    spec = _clog_spec()
+    mv = str(tmp_path / "mv")
+    rows = "g string, v long, __w int"
+    apply_changelog_mv(spark, mv, spark.createDataFrame([("a", 1, 1)], rows), spec)
+    reads = []
+    real = M._read_json
+
+    def spy(spark_, path_str):
+        reads.append(path_str)
+        return real(spark_, path_str)
+
+    monkeypatch.setattr(M, "_read_json", spy)
+    assert apply_changelog_mv(
+        spark, mv, spark.createDataFrame([("a", 2, 1)], rows), spec
+    ) == 2
+    monkeypatch.undo()
+    assert sorted(reads) == [f"{mv}/LATEST.json", f"{mv}/manifest/00000001.json"]
+    assert [(r["n"], r["s"]) for r in M.read_version(spark, mv).collect()] == [(2, 3)]
+
+
 def test_changelog_refuses_non_invertible_and_countless_specs(spark, tmp_path):
     import pytest
 

@@ -249,33 +249,6 @@ def _q62_on(spark, events):
     )
 
 
-def test_streaming_cms_equals_batch(spark, events_dir, tmp_path):
-    """Per-micro-batch CMS cell relations, re-aggregated, must equal the
-    one-pass batch sketch over the same rows (additivity under streaming)."""
-    from european_public_data_pipeline_spark.operators.sketches import cms_cells
-    from european_public_data_pipeline_spark.streaming.sketch_sink import (
-        cms_stream_sink,
-        merged_cms,
-    )
-
-    out = str(tmp_path / "cms_cells")
-    cp = str(tmp_path / "cms_ckpt")
-    stream = read_events_stream(spark, events_dir)
-    q = cms_stream_sink(stream, "user_id", out, cp)
-    q.awaitTermination()
-
-    streamed = {
-        (r["hash_id"], r["bucket"]): r["cell_count"]
-        for r in merged_cms(spark, out).collect()
-    }
-    batch_df = spark.read.parquet(events_dir)
-    batch = {
-        (r["hash_id"], r["bucket"]): r["cell_count"]
-        for r in cms_cells(batch_df.select("user_id"), "user_id").collect()
-    }
-    assert streamed == batch
-
-
 def test_streaming_twap_equals_batch(spark, events_dir):
     """q89's stream twin: the stateful per-key TWAP over an AvailableNow run
     must equal the batch lead()-window aggregate on the same slice —
